@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints formatted physical plans for the named queries (all
   * of them by default) so scan pruning, pushdown, broadcast choices, and
   * whole-stage codegen coverage can be reviewed. Usage:
@@ -11,17 +9,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same extensions as Bench/Probe: without them the asof-native and
-      // session-broadcast plans explain as their un-rewritten fallbacks,
-      // i.e. NOT the plans the bench actually times
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     names.foreach { n =>
       println(s"\n========== $n ==========")
       try SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -31,15 +31,7 @@ object Inflate {
     val dst = if (args.length > 1) args(1) else "/tmp/graft_sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
     val fileCap = if (args.length > 3) args(3).toInt else 32
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      String.valueOf(Runtime.getRuntime.availableProcessors()))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     run(spark, src, dst, factor, fileCap)
     spark.stop()
   }

@@ -44,16 +44,7 @@ object Tables {
       // events.parquet carries INT64 TIMESTAMP(NANOS) which Spark 4 rejects
       // by default; read nanos as long (queries convert when needed).
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val df = spark.read.parquet(s"$sfDir/$name.parquet")
-      // The testdata files are ONE parquet row group each, so a scan cannot
-      // parallelize by byte ranges — optional ingest repartition restores
-      // scan parallelism when the relation is cached (Bench warm path). On
-      // a real deployment parallelism comes from many files/row groups and
-      // this stays unset (0).
-      spark.conf.getOption("graft.table.repartition").map(_.toInt) match {
-        case Some(n) if n > 0 => df.repartition(n)
-        case _ => df
-      }
+      spark.read.parquet(s"$sfDir/$name.parquet")
     })
   }
 

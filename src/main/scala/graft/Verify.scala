@@ -8,7 +8,7 @@ object Verify {
   /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
     * — a tab or CR in builder-authored SQL would otherwise make the
     * driver's json.load fail and silently zero the round's correctness. */
-  private def q(s: String): String = "\"" + s.flatMap {
+  private[graft] def q(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"
@@ -64,14 +64,7 @@ object Verify {
       case Array(s, o) => (s, o, None)
       case Array(s, o, names) => (s, o, Some(names.split(',').toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val queries = only match {
       case None => SparkEntry.queries
       case Some(sel) => SparkEntry.queries.filter(kv => sel.contains(kv._1))

@@ -332,9 +332,9 @@ object CoreQueries {
       .distinct()
   }
 
-  /** The j3 gram-index stores `(buckets, rarest)`, shared by [[j3Bucketed]]
-    * and the Probe candidate-count diagnostics (the 5-gram-lever sizing
-    * runs count the pre-verify join without touching the judged query). */
+  /** The j3 gram-index stores `(buckets, rarest)` behind [[j3Bucketed]];
+    * package-visible so a spec can inspect the store contents per
+    * `graft.j3.maxGram`. */
   private[graft] def j3Stores(spark: org.apache.spark.sql.SparkSession, d: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     val s = Tables.supplier(spark, d)
@@ -342,7 +342,7 @@ object CoreQueries {
     val c = Tables.customer(spark, d)
       .select(col("c_custkey"), regexp_replace(col("c_name"), "^Customer#0*", "").as("cn"))
     // graft.j3.maxGram (default 5, judged path) exists for measured tier
-    // attribution only — Probe sweeps 4 vs 5 on the same data. It is part
+    // attribution only — an A/B of 4 vs 5 on the same data. It is part
     // of every store cache key below (code-review r10): the Persisted
     // relations and the partition-count memo must rebuild when the tier
     // changes mid-session, or an A/B would silently compare a tier

@@ -48,11 +48,8 @@ object GraphQueries {
         |n0 AS (SELECT vec_id, CAST(1000000000 AS BIGINT) AS r FROM embeddings),
         |$cs
         |SELECT vec_id, r AS rank_e9 FROM n$iters""".stripMargin) { (spark, d) =>
-      val tier = spark.conf.getOption("graft.knn.tier").getOrElse("narrow")
-      Seq("narrow", "auto").filter(_ != tier)
-        .foreach(t => graft.Persisted.clear(spark, s"$d#knn_adjacency#$t"))
       val parts = Similarity.storeParts(Similarity.vecCount(spark, d) * 3)
-      val edges = graft.Persisted.of(spark, s"$d#knn_adjacency#$tier") {
+      val edges = graft.Persisted.of(spark, s"$d#knn_adjacency") {
         val e = Similarity.knnEdgesRelation(spark, d).select(col("qid"), col("nid"))
         e.join(e.groupBy("qid").agg(count(lit(1)).as("deg")), "qid")
           // store-sized partitioning on the rank join's key (j3 clamp)
@@ -123,15 +120,6 @@ object GraphQueries {
     * DEGREE (low-degree endpoint first), which bounds wedge fan-out by
     * sqrt(m) per node; id-orientation is the same plan with a different
     * sort key, and on the knn graph out-degree is already capped at k. */
-  /** Session-persisted UNDIRECTED oriented edge store (u < v, distinct)
-    * derived from [[Similarity.knnEdgesRelation]] — shared by the triangle
-    * count and the common-neighbor query. Tier-keyed like the edge store
-    * itself (`graft.knn.tier`): a derived relation must never outlive a
-    * flip of the relation it derives from. */
-  private[graft] def undirectedKnnStore(spark: org.apache.spark.sql.SparkSession,
-                                        d: String): org.apache.spark.sql.DataFrame =
-    undirectedKnn(spark, d)
-
   /** Session-persisted DEGREE-ANNOTATED symmetric adjacency
     * (n, nbr, nbr_deg) — the relation the common-neighbor wedge reads on
     * both join sides. Two store-build choices that each paid measurably on
@@ -144,15 +132,12 @@ object GraphQueries {
     * corpus-sized joins per query. */
   private def adjKnn(spark: org.apache.spark.sql.SparkSession,
                      d: String): org.apache.spark.sql.DataFrame = {
-    val tier = spark.conf.getOption("graft.knn.tier").getOrElse("narrow")
-    Seq("narrow", "auto").filter(_ != tier)
-      .foreach(t => graft.Persisted.clear(spark, s"$d#knn_adj#$t"))
     // parts computed OUTSIDE the Persisted monitor (the j3 lock-scope
     // rule); store-sized partitioning keyed on the wedge join's probe
     // column (the j3 clamp via Similarity.storeParts — see
     // knnEdgesRelation)
     val parts = Similarity.storeParts(Similarity.vecCount(spark, d) * 6)
-    graft.Persisted.of(spark, s"$d#knn_adj#$tier") {
+    graft.Persisted.of(spark, s"$d#knn_adj") {
       degAnnotatedAdj(undirectedKnn(spark, d)).repartition(parts, col("n"))
     }
   }
@@ -166,13 +151,13 @@ object GraphQueries {
       .select("n", "nbr", "nbr_deg")
   }
 
+  /** Session-persisted UNDIRECTED oriented edge store (u < v, distinct)
+    * derived from [[Similarity.knnEdgesRelation]] — shared by the triangle
+    * count and the common-neighbor query. */
   private def undirectedKnn(spark: org.apache.spark.sql.SparkSession,
                             d: String): org.apache.spark.sql.DataFrame = {
-    val tier = spark.conf.getOption("graft.knn.tier").getOrElse("narrow")
-    Seq("narrow", "auto").filter(_ != tier)
-      .foreach(t => graft.Persisted.clear(spark, s"$d#knn_undirected#$t"))
     val parts = Similarity.storeParts(Similarity.vecCount(spark, d) * 3)
-    graft.Persisted.of(spark, s"$d#knn_undirected#$tier") {
+    graft.Persisted.of(spark, s"$d#knn_undirected") {
       Similarity.knnEdgesRelation(spark, d)
         .select(least(col("qid"), col("nid")).as("u"),
           greatest(col("qid"), col("nid")).as("v")).distinct()

@@ -360,28 +360,24 @@ object Multimodal {
       .filter(col("hamming") <= 3)
   }
 
-  /** Gated frame relation: `fr` minus the hot digests — PERSISTED
-    * (semanticHash-keyed, one live entry per input like the simhash batch
-    * stores) because every consumer reads it at least three times (both
-    * self-join sides + the per-doc counts); an un-persisted gate re-runs
-    * the df aggregate and anti-join per consumer — measured 4x on the sf1
-    * incremental probe. */
-  private[graft] def keptFramesStore(spark: org.apache.spark.sql.SparkSession,
-                                     d: String): DataFrame =
-    keptFrames(framesRelation(spark, d), FrameDfGate, "full", frameStoreParts(spark, d))
-
   /** Store-partition width for the frame stores — the j3 clamp
     * (Similarity.storeParts) over an upper frames-per-corpus estimate
     * (docs × 8), memoized doc count, computed outside the Persisted
     * monitor. Round 18: the kept-frame stores inherited 32 cached
     * partitions from shuffle.partitions, so every pair-join map stage ran
     * 32/64 near-empty tasks per action. */
-  private[graft] def frameStoreParts(spark: org.apache.spark.sql.SparkSession,
-                                     d: String): Int =
+  private def frameStoreParts(spark: org.apache.spark.sql.SparkSession,
+                              d: String): Int =
     Similarity.storeParts(Dedup.corpusDocCount(spark, d) * 8)
 
-  private[graft] def keptFrames(fr: DataFrame, dfGate: Int, tag: String,
-                                parts: Int = 0): DataFrame = {
+  /** Gated frame relation: `fr` minus the hot digests — PERSISTED
+    * (semanticHash-keyed, one live entry per input like the simhash batch
+    * stores) because every consumer reads it at least three times (both
+    * self-join sides + the per-doc counts); an un-persisted gate re-runs
+    * the df aggregate and anti-join per consumer — measured 4x on the sf1
+    * incremental probe. */
+  private def keptFrames(fr: DataFrame, dfGate: Int, tag: String,
+                         parts: Int = 0): DataFrame = {
     val spark = fr.sparkSession
     // Eviction is scoped per CONSUMER (`tag`): the full-overlap and
     // incremental queries gate different input plans, and a shared prefix

@@ -39,16 +39,6 @@ object Similarity {
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, x) => acc + x)
 
-  /** Exact decimal dot product — order-independent, oracle-parity path
-    * (kept for reference; the declared queries use the faster quantized-long
-    * variant below). */
-  def dotDec(a: Column, b: Column): Column = {
-    val prod = zip_with(a, b,
-      (x, y) => x.cast("double").cast("decimal(18,9)") * y.cast("double").cast("decimal(18,9)"))
-    aggregate(prod, lit(0).cast("decimal(38,18)"),
-      (acc, x) => (acc + x).cast("decimal(38,18)"))
-  }
-
   /** Quantize a float vector to 1e-8-unit longs: integer arithmetic from here
     * on is exact and order-independent, so Spark and DuckDB agree bit-for-bit.
     * round() is half-away-from-zero in both engines.
@@ -290,10 +280,7 @@ object Similarity {
   val HAWide: Seq[Long] = primesFrom(300000L, 64)
   val HBWide: Seq[Long] = primesFrom(300L, 64)
 
-  /** Package-visible so the occupancy census (graft.Probe) measures the
-    * SAME lanes the production bands use — a re-derived copy would
-    * silently desynchronize if the formula or seeds changed. */
-  private[graft] def hyperplaneW(j: Int): Seq[Long] =
+  private def hyperplaneW(j: Int): Seq[Long] =
     (1 to Dim).map(i => ((HAWide(j) * i + HBWide(j)) % 101) - 50)
 
   /** 16-bit band value b (0..3) of the 64-lane sign sketch: bit t set iff
@@ -964,27 +951,9 @@ object Similarity {
     * materialized graph every graph-analytics consumer derives from
     * (gr_pagerank's degree-attached adjacency, gr_triangles' undirected
     * edges), so the band self-join + top-k window runs once per session,
-    * not once per consumer.
-    *
-    * `graft.knn.tier` (default `narrow`) exists for measured scale
-    * attribution only, the j3 maxGram pattern: the DECLARED graph queries
-    * pin the narrow tier so the oracle gate stays deterministic at every
-    * SF, but past the band-occupancy knee (n >= [[KnnBandKnee]], e.g. the
-    * 200k-vector sf10 probe corpus) the narrow store saturates into
-    * mega-buckets and a graph consumer would measure the saturation, not
-    * the graph stage — `auto` routes the store through [[knnGraphAuto]]'s
-    * knee rule, which is what a production deployment rides. The tier is
-    * part of the cache key, and sibling tiers are evicted on a flip so an
-    * A/B never compares a tier against itself or holds both stores. */
+    * not once per consumer. The declared graph queries pin the narrow
+    * tier so the oracle gate stays deterministic at every SF. */
   def knnEdgesRelation(spark: SparkSession, d: String): DataFrame = {
-    val tier = spark.conf.getOption("graft.knn.tier").getOrElse("narrow")
-    // Fail fast on an unknown tier: a typo (e.g. "wide") would otherwise
-    // silently compute the narrow graph but cache it under the foreign
-    // key, corrupting the A/B attribution the knob exists for (ADVICE r11)
-    require(tier == "narrow" || tier == "auto",
-      s"graft.knn.tier must be 'narrow' or 'auto', got '$tier'")
-    Seq("narrow", "auto").filter(_ != tier)
-      .foreach(t => graft.Persisted.clear(spark, s"$d#knn_edges#$t"))
     // NOTE: this store's cached plan must stay EXACTLY the declared
     // query's plan — Persisted rides Spark's CacheManager, which matches
     // consumers by canonicalized plan, so sim_knn_graph/sim_graph_recall
@@ -993,9 +962,7 @@ object Similarity {
     // broke that match (round 18: sim_knn_graph 0.08 -> 0.46 s warm) —
     // the clamp lives in the DERIVED adjacency stores instead, which are
     // only ever reached through their accessor functions.
-    graft.Persisted.of(spark, s"$d#knn_edges#$tier") {
-      if (tier == "auto") knnGraphAuto(spark, d) else simKnnGraph.fn(spark, d)
-    }
+    graft.Persisted.of(spark, s"$d#knn_edges")(simKnnGraph.fn(spark, d))
   }
 
   /** The j3 store-partition clamp for graph/vocabulary-sized persisted
@@ -1310,23 +1277,6 @@ object Similarity {
         IvfPqCells, 1000000000L)
     }
 
-  /** kc-PARAMETERIZED coarse training + assignment — the occupancy-probe
-    * surface for measuring the cell-count lever (production kc ~ sqrt(n);
-    * the declared queries pin kc = [[IvfPqCells]] for oracle determinism).
-    * Returns the qnorm relation with a `cell` column under a kc-cell
-    * trained book. Seeds = first kc vectors, one Lloyd update — the same
-    * contract as the fixture-scale book, just wider. */
-  def coarseCellsScaled(spark: SparkSession, d: String, kc: Int): DataFrame =
-    withCell(qnormRelation(spark, d),
-      // kc == IvfPqCells is the SAME training run ivfPqCoarseBook holds
-      // (same corpus, seeds, cell count) — share its memo instead of
-      // retraining a duplicate full-corpus book in the session (ADVICE r13)
-      if (kc == IvfPqCells) ivfPqCoarseBook(spark, d)
-      else pqCbMemo.of(spark, s"$d#ivfpq_kcb_k$kc") {
-        lloydBook(qnormRelation(spark, d)
-          .select(col("vec_id"), col("q").as("v")), kc, 1000000000L)
-      })
-
   /** IVF-PQ — the production 100 TB ANN stack, replacing [[simPqAdc]]'s
     * honesty gaps (VERDICT r11 #1, r12 #1): the PQ codebooks are TRAINED
     * (one exact-integer Lloyd update round per subspace), the coarse
@@ -1619,23 +1569,6 @@ object Similarity {
       trainPred = _ % 20 =!= 0, probePred = _ % 20 === 0, tag = "_inc",
       split = true, nprobe = 1)
 
-  /** Fixed-size-batch twin of [[simIvfPqIncremental]] (probe/A-B surface,
-    * not declared): a CONSTANT 1000-probe batch (vec_id % 20 == 0 AND
-    * vec_id < 20000) against the same frozen store-trained books. The
-    * declared variant's proportional mod-20 seeding grows probes ∝ corpus
-    * — right for the oracle gate, but it makes the decade points conflate
-    * batch growth with per-probe cost; a production ingest batch is
-    * rate-fixed, and this twin prices exactly that: per-batch cost ∝
-    * probes × nprobe·corpus/cells with the corpus term isolated. */
-  lazy val simIvfPqIncrementalFixed: QueryDef =
-    ivfPqDef("sim_ivf_pq_inc_fixed",
-      seedCondSql = " AND vec_id % 20 <> 0",
-      trainCondSql = " WHERE v.vec_id % 20 <> 0",
-      probeCondSql = "p.vec_id % 20 = 0 AND p.vec_id < 20000",
-      trainPred = _ % 20 =!= 0,
-      probePred = c => c % 20 === 0 && c < 20000,
-      tag = "_incf", split = true)
-
   /** Recall@3 of the trained IVF-PQ stack against the GLOBAL brute-force
     * top-3 — the end-to-end acceptance number a routed+quantized index
     * quotes (it folds BOTH loss sources: cell routing can exclude a true
@@ -1817,18 +1750,6 @@ object Similarity {
     * corpus — the deployment step a rolling ingest ships with (retraining
     * is an offline event; the stream never moves the books). Returns
     * (coarse book, per-subspace PQ books). */
-  /** [[ivfPqTrain]] with the cell count ROUTED from the training corpus's
-    * own census ([[ivfPqKcRouted]]) — the entry a kc-routed deployment
-    * (and [[graft.streaming.RollingIngest.ivfPqIngest]] callers) trains
-    * with. Returns the routed kc alongside the books so the caller can
-    * record/report the operating point. */
-  def ivfPqTrainRouted(vecs: DataFrame, kcw: Int = 16, m: Int = 4)
-      : (Int, Seq[(Int, Array[Long])], Seq[Seq[(Int, Array[Long])]]) = {
-    val kc = ivfPqKcRouted(vecs.count())
-    val (coarse, books) = ivfPqTrain(vecs, kc, kcw, m)
-    (kc, coarse, books)
-  }
-
   def ivfPqTrain(vecs: DataFrame, kc: Int = IvfPqCells, kcw: Int = 16,
                  m: Int = 4): (Seq[(Int, Array[Long])], Seq[Seq[(Int, Array[Long])]]) =
     ivfPqTrainQ(vecs.select(col("vec_id"), qvec(col("embedding")).as("q")),

@@ -255,8 +255,6 @@ case class SessionBroadcastReuseRule(session: SparkSession) extends Rule[SparkPl
     if (!session.conf.get("graft.broadcast.sessionReuse", "true").toBoolean) plan
     else plan.transformUp {
       case BroadcastExchangeExec(mode, child) if sessionStatic(child) =>
-        if (sys.env.contains("GRAFT_BC_DEBUG"))
-          System.err.println(s"[bc] rule fired on ${child.nodeName}")
         SessionCachedBroadcastExec(mode, child)
     }
 }

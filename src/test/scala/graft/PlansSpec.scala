@@ -502,8 +502,8 @@ class PlansSpec extends SparkSpec {
 
   test("graft_scrub_words is linear, not quadratic, in covered positions (smoke)") {
     // the VERDICT r15 watch item: a 10k-word fully-duplicated document.
-    // This is a correctness smoke at that shape (the timing probe lives in
-    // graft.Probe scrub_longdoc); here we pin the result on a long doc.
+    // This is a correctness smoke at that shape (timing belongs to
+    // graft.Bench and perfbench); here we pin the result on a long doc.
     import spark.implicits._
     val n = 10000
     val ws = Seq.tabulate(n)(j => s"t$j")

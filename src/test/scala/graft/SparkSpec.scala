@@ -11,15 +11,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .getOrCreate()
+  lazy val session: SparkSession = Session.local(4, Map(
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft_wh").toString))
 }

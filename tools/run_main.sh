@@ -1,7 +1,7 @@
 #!/bin/bash
 # Run a graft main directly against compiled classes (bypasses the sbt
-# build lock so probes can run while sbt test is busy). Usage:
-#   tools/run_main.sh graft.Probe /tmp/graft_sf1_bench o1_topk
+# build lock so a main can run while sbt test is busy). Usage:
+#   tools/run_main.sh graft.Bench /tmp/graft_sf1 o1_topk
 CLS="$1"; shift
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
