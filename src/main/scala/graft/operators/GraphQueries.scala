@@ -48,12 +48,11 @@ object GraphQueries {
         |n0 AS (SELECT vec_id, CAST(1000000000 AS BIGINT) AS r FROM embeddings),
         |$cs
         |SELECT vec_id, r AS rank_e9 FROM n$iters""".stripMargin) { (spark, d) =>
-      val parts = Similarity.storeParts(Similarity.vecCount(spark, d) * 3)
-      val edges = graft.Persisted.of(spark, s"$d#knn_adjacency") {
+      // sized on the rank join's key
+      val edges = graft.Persisted.sized(spark, s"$d#knn_adjacency", "qid")(
+          Similarity.vecCount(spark, d) * 3) {
         val e = Similarity.knnEdgesRelation(spark, d).select(col("qid"), col("nid"))
         e.join(e.groupBy("qid").agg(count(lit(1)).as("deg")), "qid")
-          // store-sized partitioning on the rank join's key (j3 clamp)
-          .repartition(parts, col("qid"))
       }
       val nodes = Tables.embeddings(spark, d).select("vec_id")
       pagerank(edges, nodes, iters).select(col("rvid").as("vec_id"),
@@ -132,14 +131,9 @@ object GraphQueries {
     * corpus-sized joins per query. */
   private def adjKnn(spark: org.apache.spark.sql.SparkSession,
                      d: String): org.apache.spark.sql.DataFrame = {
-    // parts computed OUTSIDE the Persisted monitor (the j3 lock-scope
-    // rule); store-sized partitioning keyed on the wedge join's probe
-    // column (the j3 clamp via Similarity.storeParts — see
-    // knnEdgesRelation)
-    val parts = Similarity.storeParts(Similarity.vecCount(spark, d) * 6)
-    graft.Persisted.of(spark, s"$d#knn_adj") {
-      degAnnotatedAdj(undirectedKnn(spark, d)).repartition(parts, col("n"))
-    }
+    // sized on the wedge join's probe column
+    graft.Persisted.sized(spark, s"$d#knn_adj", "n")(
+      Similarity.vecCount(spark, d) * 6)(degAnnotatedAdj(undirectedKnn(spark, d)))
   }
 
   /** (n, nbr, nbr_deg) from an oriented (u < v) edge list. */
@@ -156,12 +150,11 @@ object GraphQueries {
     * count and the common-neighbor query. */
   private def undirectedKnn(spark: org.apache.spark.sql.SparkSession,
                             d: String): org.apache.spark.sql.DataFrame = {
-    val parts = Similarity.storeParts(Similarity.vecCount(spark, d) * 3)
-    graft.Persisted.of(spark, s"$d#knn_undirected") {
+    graft.Persisted.sized(spark, s"$d#knn_undirected", "u")(
+        Similarity.vecCount(spark, d) * 3) {
       Similarity.knnEdgesRelation(spark, d)
         .select(least(col("qid"), col("nid")).as("u"),
           greatest(col("qid"), col("nid")).as("v")).distinct()
-        .repartition(parts, col("u"))
     }
   }
 

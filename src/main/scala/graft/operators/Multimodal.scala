@@ -360,24 +360,14 @@ object Multimodal {
       .filter(col("hamming") <= 3)
   }
 
-  /** Store-partition width for the frame stores — the j3 clamp
-    * (Similarity.storeParts) over an upper frames-per-corpus estimate
-    * (docs × 8), memoized doc count, computed outside the Persisted
-    * monitor. Round 18: the kept-frame stores inherited 32 cached
-    * partitions from shuffle.partitions, so every pair-join map stage ran
-    * 32/64 near-empty tasks per action. */
-  private def frameStoreParts(spark: org.apache.spark.sql.SparkSession,
-                              d: String): Int =
-    Similarity.storeParts(Dedup.corpusDocCount(spark, d) * 8)
-
   /** Gated frame relation: `fr` minus the hot digests — PERSISTED
     * (semanticHash-keyed, one live entry per input like the simhash batch
     * stores) because every consumer reads it at least three times (both
     * self-join sides + the per-doc counts); an un-persisted gate re-runs
     * the df aggregate and anti-join per consumer — measured 4x on the sf1
-    * incremental probe. */
+    * incremental probe. Sized at `parts` on the pair join's key. */
   private def keptFrames(fr: DataFrame, dfGate: Int, tag: String,
-                         parts: Int = 0): DataFrame = {
+                         parts: Int): DataFrame = {
     val spark = fr.sparkSession
     // Eviction is scoped per CONSUMER (`tag`): the full-overlap and
     // incremental queries gate different input plans, and a shared prefix
@@ -387,7 +377,7 @@ object Multimodal {
     val prefix = s"mm_frames_kept_$tag#"
     val key = prefix + fr.queryExecution.analyzed.semanticHash() + ":" + dfGate + ":" + parts
     graft.Persisted.clearExcept(spark, prefix, key)
-    graft.Persisted.of(spark, key) {
+    graft.Persisted.atWidth(spark, key, "frame_md5")(parts) {
       val hot = fr.groupBy("frame_md5").agg(count(lit(1)).as("df"))
         .filter(col("df") > dfGate).select("frame_md5")
       val gated = fr.join(broadcast(hot), Seq("frame_md5"), "left_anti")
@@ -399,10 +389,7 @@ object Multimodal {
       // sf0.1; at 100 TB the post-aggregation pair relation never joins
       // back to a per-doc relation at all)
       val cnt = gated.groupBy("doc_id").agg(count(lit(1)).as("nf"))
-      val annotated = gated.join(cnt, "doc_id").select("doc_id", "frame_md5", "nf")
-      // store-sized layout on the pair join's key (parts = 0 keeps the
-      // legacy build — the spec fixtures don't pass a width)
-      if (parts > 0) annotated.repartition(parts, col("frame_md5")) else annotated
+      gated.join(cnt, "doc_id").select("doc_id", "frame_md5", "nf")
     }
   }
 
@@ -421,9 +408,9 @@ object Multimodal {
     * is one broadcast anti-join above the store scan; per-doc frame
     * counts are over KEPT frames (shared ⊆ kept keeps overlap_ppm a true
     * fraction, and a doc of only boilerplate frames simply pairs with
-    * nothing). */
-  def frameOverlap(fr: DataFrame, dfGate: Int = FrameDfGate,
-                   parts: Int = 0): DataFrame = {
+    * nothing). `parts` is the gated store's width. */
+  def frameOverlap(fr: DataFrame, parts: Int,
+                   dfGate: Int = FrameDfGate): DataFrame = {
     val kept = keptFrames(fr, dfGate, "full", parts)
     // per-doc kept counts ride the store rows (count-annotated at build),
     // so the pair aggregate needs no post-join — (nfa, nfb) are
@@ -470,19 +457,19 @@ object Multimodal {
         |  n_shared * 1000000 // least(ca.nf, cb.nf) AS overlap_ppm
         |FROM pairs JOIN cnt ca ON ca.doc_id = doc_a JOIN cnt cb ON cb.doc_id = doc_b
         |WHERE n_shared >= 2""".stripMargin) { (spark, d) =>
-      frameOverlap(framesRelation(spark, d), FrameDfGate,
-        frameStoreParts(spark, d))
+      val fr = framesRelation(spark, d)
+      frameOverlap(fr, graft.Persisted.widthOf(fr), FrameDfGate)
     }
 
   /** Session frame-fingerprint store (doc_id, frame_md5 — distinct),
-    * shared by the declared overlap query and the incremental twin. */
-  def framesRelation(spark: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    val parts = frameStoreParts(spark, d) // outside the Persisted monitor
-    graft.Persisted.of(spark, s"$d#mm_frames") {
+    * shared by the declared overlap query and the incremental twin; sized
+    * on frame_md5 over an upper frames-per-corpus estimate (docs × 8),
+    * and the gated stores derived from it take its width. */
+  def framesRelation(spark: org.apache.spark.sql.SparkSession, d: String): DataFrame =
+    graft.Persisted.sized(spark, s"$d#mm_frames", "frame_md5")(
+        Dedup.corpusDocCount(spark, d) * 8) {
       mmFrameSample.fn(spark, d).select("doc_id", "frame_md5").distinct()
-        .repartition(parts, col("frame_md5"))
     }
-  }
 
   /** Incremental frame-store overlap: pairs touching a NEW batch of media
     * — (batch x store) plus (batch x batch) — without recomputing stored
@@ -495,8 +482,8 @@ object Multimodal {
     * superseded store-side (left_anti), and the digest-level distinct
     * collapses the double emission of batch-batch pairs. */
   def frameOverlapIncremental(storeFr: DataFrame, batchFr: DataFrame,
-                              dfGate: Int = FrameDfGate,
-                              parts: Int = 0): DataFrame = {
+                              parts: Int,
+                              dfGate: Int = FrameDfGate): DataFrame = {
     val live = storeFr.select("doc_id", "frame_md5")
       .join(batchFr.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
     val corpus = live.unionByName(batchFr.select("doc_id", "frame_md5"))
@@ -551,7 +538,7 @@ object Multimodal {
         fr.filter(col("doc_id") % 4 =!= 0)
       }
       frameOverlapIncremental(store, fr.filter(col("doc_id") % 4 === 0),
-        FrameDfGate, frameStoreParts(spark, d))
+        graft.Persisted.widthOf(fr), FrameDfGate)
     }
 
   /** 4x16-bit pigeonhole bands over an ahash relation, carrying the band

@@ -953,24 +953,10 @@ object Similarity {
     * edges), so the band self-join + top-k window runs once per session,
     * not once per consumer. The declared graph queries pin the narrow
     * tier so the oracle gate stays deterministic at every SF. */
-  def knnEdgesRelation(spark: SparkSession, d: String): DataFrame = {
-    // NOTE: this store's cached plan must stay EXACTLY the declared
-    // query's plan — Persisted rides Spark's CacheManager, which matches
-    // consumers by canonicalized plan, so sim_knn_graph/sim_graph_recall
-    // (which build the bare graph plan themselves) hit this cache only
-    // while the plans are identical. A store-sizing repartition here
-    // broke that match (round 18: sim_knn_graph 0.08 -> 0.46 s warm) —
-    // the clamp lives in the DERIVED adjacency stores instead, which are
-    // only ever reached through their accessor functions.
+  def knnEdgesRelation(spark: SparkSession, d: String): DataFrame =
+    // a DECLARED store: its plan is sim_knn_graph's, so it stays unsized
+    // (Persisted.of); the sized stores are the adjacencies derived from it
     graft.Persisted.of(spark, s"$d#knn_edges")(simKnnGraph.fn(spark, d))
-  }
-
-  /** The j3 store-partition clamp for graph/vocabulary-sized persisted
-    * relations: ceil(rows/256k) in [4, 4096] — an unclamped shuffle-built
-    * store inherits 32 cached partitions and taxes every downstream stage
-    * with ~32 task floors per action on near-empty partitions (round 18). */
-  def storeParts(rows: Long): Int =
-    math.max(4, math.min(4096, (rows / 262144L).toInt + 1))
 
   /** Band-occupancy knee for the graph tier rule: expected candidates per
     * node are b*n/space — narrow n/128, wide n/16384. The wide tier only

@@ -1253,47 +1253,36 @@ object TextAnalysis {
   }
 
   /** Per-doc bigram-type store (doc_id, w1, w2, tf) — the Heap's-law-
-    * sublinear relation the bigram family rides, formed map-side. */
-  /** Store-partition width shared by the two bigram stores: the j3 clamp
-    * over an upper estimate of the bigram-TYPE rows (docs × ~40 types),
-    * memoized doc count, computed OUTSIDE the Persisted monitor. BOTH
-    * stores hash-partition by (w1, w2) at this width, so taBigramLm's
-    * dbg ⋈ big join reads two aligned in-memory stores and skips both of
-    * its exchanges — the j3 aligned-IMR pattern (round 18; an unclamped
-    * build inherited 32 near-empty cached partitions that taxed every
-    * consumer stage with task floors). */
-  private def bigramParts(spark: org.apache.spark.sql.SparkSession, d: String): Int =
-    Similarity.storeParts(Dedup.corpusDocCount(spark, d) * 40)
-
-  def bigramTfRelation(spark: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    val parts = bigramParts(spark, d)
-    graft.Persisted.of(spark, s"$d#bigram_tf") {
+    * sublinear relation the bigram family rides, formed map-side; sized on
+    * (w1, w2) over an upper estimate of its rows (docs × ~40 types). */
+  def bigramTfRelation(spark: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
+    graft.Persisted.sized(spark, s"$d#bigram_tf", "w1", "w2")(
+        Dedup.corpusDocCount(spark, d) * 40) {
       Tables.documents(spark, d)
         .select(col("doc_id"), bigramPairs(col("text")).as("bg"))
         .select(col("doc_id"), explode(col("bg")).as("p"))
         .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
         .groupBy("doc_id", "w1", "w2").agg(count(lit(1)).as("tf"))
-        .repartition(parts, col("w1"), col("w2"))
     }
-  }
 
   /** Corpus bigram counts MARGINAL-ANNOTATED at store build
     * (w1, w2, c12, c1, c2) — the count-annotated-store pattern (round 14,
     * same as the knn adjacency and kept-frames stores): the two marginal
     * aggregates + joins run once per session instead of once per consumer
     * action, and the collocation query becomes a pure filter+projection of
-    * this relation. Vocabulary²-sized, exactly like `big` was. */
-  def bigramCorpusRelation(spark: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    val parts = bigramParts(spark, d)
-    graft.Persisted.of(spark, s"$d#bigram_corpus") {
+    * this relation. Vocabulary²-sized, exactly like `big` was. It takes
+    * the width [[bigramTfRelation]] got, so taBigramLm's dbg ⋈ big join
+    * reads two aligned in-memory stores and skips both of its exchanges
+    * — the j3 aligned-IMR pattern. */
+  def bigramCorpusRelation(spark: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
+    graft.Persisted.atWidth(spark, s"$d#bigram_corpus", "w1", "w2")(
+        graft.Persisted.widthOf(bigramTfRelation(spark, d))) {
       val big = bigramTfRelation(spark, d)
         .groupBy("w1", "w2").agg(sum("tf").as("c12"))
       val m1 = big.groupBy("w1").agg(sum("c12").as("c1"))
       val m2 = big.groupBy("w2").agg(sum("c12").as("c2"))
       big.join(m1, "w1").join(m2, "w2").select("w1", "w2", "c12", "c1", "c2")
-        .repartition(parts, col("w1"), col("w2"))
     }
-  }
 
   val taBigramLm: QueryDef = QueryDef("ta_bigram_lm",
     """WITH t AS (SELECT doc_id, string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ') AS ws FROM documents),

@@ -134,7 +134,7 @@ class OperatorsSpec extends SparkSpec {
       (3L, "r3"), (3L, "r4"), (3L, "r5"), (4L, "r3"), (4L, "r4"), // pair (3,4)
       (4L, "r6"))
     val fr = (hotRows ++ genuine).toDF("doc_id", "frame_md5")
-    val got = graft.operators.Multimodal.frameOverlap(fr, dfGate = 100)
+    val got = graft.operators.Multimodal.frameOverlap(fr, 4, dfGate = 100)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     // the hot digest feeds NO pairs (ungated it alone would put ~500k
     // rows through the self-join); kept-frame counts exclude it too
@@ -143,7 +143,7 @@ class OperatorsSpec extends SparkSpec {
       (3L, 4L, 2L, 666666L)))          // 2 shared / min(3, 3) kept frames
     // n_shared counts only INFORMATIVE digests: with the gate off, the
     // hot digest inflates every genuine pair's count and ppm
-    val ungated = graft.operators.Multimodal.frameOverlap(fr, dfGate = 100000)
+    val ungated = graft.operators.Multimodal.frameOverlap(fr, 4, dfGate = 100000)
       .filter($"doc_a" === 1 && $"doc_b" === 2).collect()
     assert(ungated.head.getLong(2) === 3L)  // HOT leaked into n_shared
   }
@@ -153,15 +153,15 @@ class OperatorsSpec extends SparkSpec {
     val fr = graft.operators.Multimodal.framesRelation(spark, sf0001)
     val store = fr.filter($"doc_id" % 4 =!= 0)
     val batch = fr.filter($"doc_id" % 4 === 0)
-    val inc = graft.operators.Multimodal.frameOverlapIncremental(store, batch)
+    val inc = graft.operators.Multimodal.frameOverlapIncremental(store, batch, 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val full = graft.operators.Multimodal.frameOverlap(fr)
+    val full = graft.operators.Multimodal.frameOverlap(fr, 4)
       .filter($"doc_a" % 4 === 0 || $"doc_b" % 4 === 0)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     assert(inc === full)
     // supersede: a re-ingested id pairs off its FRESH frames only
     val store2 = store.unionByName(Seq((4L, "stale")).toDF("doc_id", "frame_md5"))
-    val inc2 = graft.operators.Multimodal.frameOverlapIncremental(store2, batch)
+    val inc2 = graft.operators.Multimodal.frameOverlapIncremental(store2, batch, 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     assert(inc2 === inc)
   }
@@ -512,29 +512,6 @@ class OperatorsSpec extends SparkSpec {
     assert(got(4L) == ((false, "too_short")), "earlier rule must outrank 'duplicate'")
     assert(got(5L) == ((false, "stopword_ratio")))
     assert(got(6L) == ((false, "too_short")), "NULL text must be rejected")
-  }
-
-  test("j3 gram stores rebuild when graft.j3.maxGram changes mid-session") {
-    import org.apache.spark.sql.functions._
-    // the conf is part of the store cache keys (code-review r10): an A/B in
-    // ONE session must never serve the other tier's cached index. sf0.01:
-    // its 4-digit customer names carry 4-grams but sf0.001's (<= 3 chars)
-    // carry none, so the 3-vs-4 ceiling discriminates the store contents.
-    val sf001 = "/root/testdata/sf0.01"
-    def gram4Count(): Long = {
-      val (buckets, _) = graft.operators.CoreQueries.j3Stores(spark, sf001)
-      buckets.filter(length(col("g")) === 4).count()
-    }
-    // the whole sweep is finally-guarded: a failure mid-A/B must not leak
-    // a non-default tier into the shared session for later suites
-    val (g3, g4) = try {
-      spark.conf.set("graft.j3.maxGram", "3")
-      val a = gram4Count()
-      spark.conf.set("graft.j3.maxGram", "4")
-      (a, gram4Count())
-    } finally spark.conf.unset("graft.j3.maxGram")
-    assert(g3 === 0L, "maxGram=3 store must hold no 4-gram entries")
-    assert(g4 > 0L, "maxGram=4 store must hold 4-gram entries")
   }
 
   test("ta_shard_pack: two-level prefix equals the sequential fill; corpus window partitions by bucket") {

@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
   * editing the allowed set here, in view of review. */
 class OptionCensusSpec extends AnyFunSuite {
   private val allowedEnv = Set("SPARK_GRAFT_CPUS")
-  private val allowedConf = Set("graft.broadcast.sessionReuse", "graft.j3.maxGram")
+  private val allowedConf = Set("graft.broadcast.sessionReuse")
 
   private lazy val sources: Seq[(String, String)] = {
     val root = java.nio.file.Paths.get("src/main/scala")
