@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Plain timing sweep over the declared queries. Usage:
   *   runMain graft.Bench [sfDir] [query ...]
   * (all declared queries by default). Every query is timed [[Samples]]
@@ -62,16 +64,19 @@ object Bench {
     val spark = Session.local()
 
     val warmDir = "/root/testdata/sf0.001"
-    names.foreach(n => try runNoop(spark, n, warmDir) catch { case _: Throwable => () })
-    Tables.names.foreach { n =>
-      try Tables.t(spark, sfDir, n).count() catch { case _: Throwable => () }
-    }
+    // warm-up failures do not stop the sweep, but they carry their cause
+    def warm(what: String)(body: => Unit): Unit =
+      try body catch {
+        case NonFatal(e) => System.err.println(s"[bench] warm-up $what failed: ${cause(e)}")
+      }
+    names.foreach(n => warm(n)(runNoop(spark, n, warmDir)))
+    Tables.names.foreach(n => warm(s"scan $n")(Tables.t(spark, sfDir, n).count(): Unit))
 
     val timings = names.map { name =>
       val samples = (1 to Samples).map { _ =>
         val t0 = System.nanoTime()
         try { runNoop(spark, name, sfDir); Left((System.nanoTime() - t0) / 1e9) }
-        catch { case e: Throwable => Right(cause(e)) }
+        catch { case NonFatal(e) => Right(cause(e)) }
       }
       val t = Timing(samples.collect { case Left(s) => s }, samples.collect { case Right(c) => c })
       if (t.secs.nonEmpty)

@@ -15,9 +15,12 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   /** One resolved relation per (session, dir, table) — what a catalog gives
-    * a real deployment. Re-running `spark.read.parquet` per query call
-    * re-lists files and re-reads footers on the driver (~50 ms/table), which
-    * at 100 TB scale is exactly the metadata work a metastore amortizes.
+    * a real deployment. Opening a table lists its files and reads one
+    * footer for the schema; `spark.read.parquet` would read that footer in
+    * a one-task Spark job, so the schema is read on the driver instead
+    * ([[ParquetSchema]]) and the open starts no job. Re-opening per query
+    * call would repeat that listing and footer read, which at 100 TB scale
+    * is exactly the metadata work a metastore amortizes.
     *
     * Scoped per SparkSession; a cached DataFrame strongly references its
     * session, so weak keys could never collect an entry — instead, entries
@@ -42,9 +45,10 @@ object Tables {
     }
     perSession.computeIfAbsent((sfDir, name), { _ =>
       // events.parquet carries INT64 TIMESTAMP(NANOS) which Spark 4 rejects
-      // by default; read nanos as long (queries convert when needed).
+      // by default; read nanos as long (queries convert when needed). Set
+      // before the footer is converted: the conversion reads it.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      spark.read.parquet(s"$sfDir/$name.parquet")
+      ParquetSchema.read(spark, s"$sfDir/$name.parquet")
     })
   }
 

@@ -827,7 +827,7 @@ object Dedup {
     minhashNativeDF(docs).write.mode("overwrite").parquet(path)
 
   def readSignatureStore(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    graft.ParquetSchema.read(spark, path)
 
   /** Incremental LSH: candidate pairs touching a NEW batch of documents —
     * (new x store) plus (new x new) — without recomputing stored sketches.

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ParquetSchema
 import graft.operators.{Dedup, Similarity}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession, Row}
 import org.apache.spark.sql.expressions.Window
@@ -72,8 +73,8 @@ import org.apache.spark.sql.types.StructType
   * batch's own route values — so the cell-routed candidate pruning has
   * its storage-layout counterpart: a probe or an external reader touches
   * only the cells present in the batch (partition pruning, pinned by
-  * RollingIngestSpec). Store reads disable partition-column type
-  * inference and cast back to the band schema, so string route values
+  * RollingIngestSpec). Store reads type the partition columns from the
+  * band schema ([[graft.ParquetSchema.read]]), so string route values
   * that LOOK numeric (cell "01") round-trip unchanged instead of being
   * inferred as int 1 and silently mis-matching the supersede anti-join.
   */
@@ -150,25 +151,18 @@ object RollingIngest {
       keep(new org.apache.hadoop.fs.Path(p).getName) }
       .foreach { case (_, p) => delete(spark, p) }
 
-  /** Read one store directory back to the band schema. Partition-column
-    * type inference is disabled for the read (then every column is cast
-    * to its band-schema type): inference would turn a numeric-looking
-    * STRING route value (cell "01") into int 1, silently changing the
-    * column — with inference off the raw partition string survives, and
-    * the cast is exact for genuinely numeric route columns. */
+  /** Read one store directory back to the band schema, with no Spark
+    * job: the element's own data columns (its footer, read on the
+    * driver) plus its partition columns typed from the band schema —
+    * inference would turn a numeric-looking STRING route value (cell
+    * "01") into int 1, silently changing the column. Every column is then
+    * cast to its band-schema type, and a band column the element lacks
+    * fails the read instead of reading as null. */
   private def readBands(spark: SparkSession, path: String,
-                        schema: StructType): DataFrame = {
-    val key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    val prev = spark.conf.get(key, "true")
-    // schema resolution (file listing + partition discovery) is eager at
-    // read time, so the conf toggle is scoped to this call
-    val raw = try {
-      spark.conf.set(key, "false")
-      spark.read.parquet(path)
-    } finally spark.conf.set(key, prev)
-    raw.select(schema.fields.toSeq.map(f =>
-      col(f.name).cast(f.dataType).as(f.name)): _*)
-  }
+                        schema: StructType): DataFrame =
+    ParquetSchema.read(spark, path, schema)
+      .select(schema.fields.toSeq.map(f =>
+        col(f.name).cast(f.dataType).as(f.name)): _*)
 
   /** Supersede-resolved union of delta relations (each tagged with its
     * batch id in `__b`): per id, only the rows of its NEWEST batch
@@ -492,8 +486,8 @@ object RollingIngest {
     val newest = els.filter(e => e._1 == "base" || e._1 == "d")
       .maxByOption(_._2)
     newest.flatMap { case (kind, v) =>
-      val wide = spark.read.parquet(s"$storeDir/$kind$v")
-        .columns.contains("sig_hi")
+      val wide = ParquetSchema.of(spark, s"$storeDir/$kind$v")
+        .fieldNames.contains("sig_hi")
       val emptyDocs = spark.createDataFrame(
         spark.sparkContext.emptyRDD[Row],
         StructType(Seq(StructField("doc_id", LongType),
@@ -592,9 +586,9 @@ object RollingIngest {
     *     leftovers, superseded bases/deltas/ledger elements not retained
     *     by a pin), and unrecognized directory names.
     *
-    * The read cost is one listing plus one footer open per element —
-    * metadata-cheap at any store size; run it before trusting a store
-    * handed over from another owner.
+    * The read cost is one listing plus one footer open per part file,
+    * all on the driver — metadata-cheap at any store size; run it before
+    * trusting a store handed over from another owner.
     *
     * One shape deliberately NOT flagged: `books<v>` at v equal to the
     * base version is the NORMAL post-retrain layout, and the
@@ -649,19 +643,18 @@ object RollingIngest {
           else "superseded and unpinned; reclaimable by any commit or vacuumStore"))
       }
     // element integrity: every element (tier markers included) is parquet
-    // and must open
+    // and every one of its part files must open — schema inference reads
+    // only the first, so a corrupt later part would otherwise surface as a
+    // failed data read. toString: a truncated footer commonly throws a
+    // message-less EOFException, which the diagnostic must still report.
     els.foreach { case (n, _, _) =>
-      try spark.read.parquet(s"$storeDir/$n").schema
-      catch {
-        // NonFatal + toString: a truncated footer commonly throws
-        // message-less EOFException — the diagnostic must report it, not
-        // NPE on it; and an OOM must propagate, not read as corruption
-        case scala.util.control.NonFatal(e) =>
+      ParquetSchema.unreadable(spark, s"$storeDir/$n").headOption
+        .foreach { case (file, e) =>
           out += (("error", n,
-            s"element does not open as parquet (${e.toString.take(160)}) — " +
+            s"element does not open as parquet ($file: ${e.toString.take(160)}) — " +
               "a partial write outside the tmp+rename contract; restore it " +
               "or roll the store back to a pinned snapshot"))
-      }
+        }
     }
     // pins: every referenced element must exist
     pins.foreach { case (name, names) =>
@@ -793,7 +786,7 @@ object RollingIngest {
 
   private[graft] def readBooks(spark: SparkSession, path: String)
       : (Seq[(Int, Array[Long])], Seq[Seq[(Int, Array[Long])]]) = {
-    val rows = spark.read.parquet(path)
+    val rows = ParquetSchema.read(spark, path)
       .select("kind", "s", "ord", "cw", "cv").collect()
     def book(rs: Seq[org.apache.spark.sql.Row]) = rs.sortBy(_.getInt(2))
       .map(r => (r.getInt(3), r.getSeq[Long](4).toArray)).toSeq
@@ -932,7 +925,7 @@ object RollingIngest {
       }
       // ---- census (cumulative appended rows; metadata-cheap re-derive) ----
       if (census < 0)
-        census = liveDirs.map { case (_, p) => spark.read.parquet(p).count() }.sum
+        census = liveDirs.map { case (_, p) => ParquetSchema.read(spark, p).count() }.sum
       // ---- resume a crashed re-encode: books newer than the base ----
       val baseVer0 = dirs(spark, storeDir, "base").lastOption.map(_._1).getOrElse(-1L)
       val needResume = booksVer >= 0 && booksVer > baseVer0 &&
@@ -1068,7 +1061,7 @@ object RollingIngest {
             "store mid-event. Re-run RollingIngest.migrateDedupTier with " +
             "the keeper corpus to resume (idempotent from any crash " +
             "point), then restart the stream.")
-        spark.read.parquet(p).select("wide").collect()(0).getBoolean(0)
+        ParquetSchema.read(spark, p).select("wide").collect()(0).getBoolean(0)
     }
 
   /** Doc-count CENSUS trigger for [[migrateDedupTier]]: true when the
@@ -1088,8 +1081,8 @@ object RollingIngest {
         dirs(spark, storeDir, "d").filter(_._1 > baseVer)
     }
     live.nonEmpty && !resolvedTier(spark, storeDir, bootstrapWide = false) &&
-      !spark.read.parquet(live.head._2).columns.contains("sig_hi") &&
-      live.map { case (_, p) => spark.read.parquet(p).count() }.sum / 4 >= knee
+      !ParquetSchema.of(spark, live.head._2).fieldNames.contains("sig_hi") &&
+      live.map { case (_, p) => ParquetSchema.read(spark, p).count() }.sum / 4 >= knee
   }
 
   /** OFFLINE narrow→wide tier migration for a rolling dedup store
@@ -1124,7 +1117,7 @@ object RollingIngest {
     val live = dirs(spark, storeDir, "base") ++ dirs(spark, storeDir, "d")
     require(live.nonEmpty, s"$storeDir: empty store — bootstrap the stream " +
       "with wideSig=true instead of migrating")
-    require(!spark.read.parquet(live.maxBy(_._1)._2).columns.contains("sig_hi"),
+    require(!ParquetSchema.of(spark, live.maxBy(_._1)._2).fieldNames.contains("sig_hi"),
       s"$storeDir: store is already on the wide tier")
     val v = live.map(_._1).max
     writeTier(spark, storeDir, v, wide = true)
@@ -1551,7 +1544,7 @@ object RollingIngest {
   private def ledgerOf(spark: SparkSession,
                        paths: Seq[String]): Seq[(Long, Long)] =
     paths.flatMap { p =>
-      spark.read.parquet(p).collect().map(r => (r.getLong(0), r.getLong(1)))
+      ParquetSchema.read(spark, p).collect().map(r => (r.getLong(0), r.getLong(1)))
     }
 
   /** Iterative path-halving find over a parent map (the [[Dedup]]

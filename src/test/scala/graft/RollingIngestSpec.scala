@@ -4,6 +4,7 @@ import graft.operators.Similarity
 import graft.streaming.RollingIngest
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** The delta-store contract of [[RollingIngest]] (VERDICT r8 #1): per-batch
   * writes scale with the BATCH, compaction amortizes the corpus-sized write,
@@ -129,6 +130,77 @@ class RollingIngestSpec extends SparkSpec {
     // supersede matched id 0 across the string cell: exactly 2 band rows
     assert(eff.filter($"vec_id" === 0L).count() == 2)
     assert(eff.select("vec_id").distinct().count() == 9)
+  }
+
+  test("storeView over a base plus 2 deltas starts no Spark job at definition") {
+    // compactEvery 2 over four batches: batch 2 folds d0+d1 -> base1,
+    // batch 3 appends; the store is base1 + d2 + d3
+    val batches = (0 until 4).map(b =>
+      (b * 10 until (b + 1) * 10).map(i => (i.toLong, vec(i))))
+    val (dir, _) = runAnn(batches, compactEvery = 2)
+    val names = new java.io.File(dir).listFiles().map(_.getName).sorted.toSeq
+    assert(names == Seq("base1", "d2", "d3"), names.mkString(","))
+    val (view, jobs) = org.apache.spark.graftspec.JobCount(spark.sparkContext) {
+      RollingIngest.storeView(spark, dir, annSchema, "vec_id").get
+    }
+    assert(jobs == 0)
+    assert(view.select("vec_id").distinct().count() == 40)
+  }
+
+  test("a band column the element lacks fails the read") {
+    // a narrow (64-bit) dedup store read with the wide (128-bit) band
+    // schema must throw, never read sig_lo/sig_hi as nulls
+    implicit val sc = spark.sqlContext
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val dir = Files.createTempDirectory("graft_ri_narrow").toString + "/store"
+    val in = MemoryStream[(Long, String)]
+    val q = RollingIngest.dedupIngest(in.toDF().toDF("doc_id", "text"), dir) {
+      (p, _) => p.collect(): Unit
+    }
+    try { in.addData((0L until 6L).map(i => (i, s"doc $i token k$i"))); q.processAllAvailable() }
+    finally q.stop()
+    val wide = graft.operators.Dedup.simhash128Bands(
+      Seq.empty[(Long, String)].toDF("doc_id", "text")).schema
+    intercept[org.apache.spark.sql.AnalysisException] {
+      RollingIngest.storeView(spark, dir, wide, "doc_id").get.collect()
+    }
+  }
+
+  test("an ingest and its store reads leave partitionColumnTypeInference untouched") {
+    // store reads type partition columns themselves; they must not flip a
+    // setting of the shared session that concurrent queries read — a
+    // watcher thread samples it through an ingest (which runs on the
+    // stream's own session) and through direct store reads on this one
+    val key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    val before = spark.conf.getOption(key)
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[Option[String]]()
+    @volatile var watching = true
+    val watcher = new Thread(() => while (watching) {
+      seen.add(spark.conf.getOption(key)); Thread.sleep(1)
+    })
+    watcher.setDaemon(true)
+    watcher.start()
+    implicit val sc = spark.sqlContext
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val dir = Files.createTempDirectory("graft_ri_conf").toString + "/store"
+    val in = MemoryStream[(Long, String, Seq[Float])]
+    val q = RollingIngest.annIngest(in.toDF().toDF("vec_id", "cell", "embedding"),
+      dir, routeCols = Seq("cell"), compactEvery = 2) { (nbrs, _) => nbrs.collect(): Unit }
+    val schema = Similarity.hyperBands(
+      Seq.empty[(Long, String, Seq[Float])].toDF("vec_id", "cell", "embedding")).schema
+    try {
+      (0 until 3).foreach { b =>
+        in.addData((b * 5L until (b + 1) * 5L).map(i => (i, s"0$b", vec(i.toInt))))
+        q.processAllAvailable()
+      }
+      (0 until 5).foreach { _ =>
+        val cells = RollingIngest.storeView(spark, dir, schema, "vec_id").get
+          .select("cell").distinct().as[String].collect().toSet
+        assert(cells == Set("00", "01", "02"))
+      }
+    } finally { q.stop(); watching = false; watcher.join() }
+    seen.add(spark.conf.getOption(key))
+    assert(seen.asScala.toSet == Set(before), s"the setting took the values $seen")
   }
 
   test("rolling IVF-PQ ingest: frozen-book encode, routed probe, cell-partitioned store, replay equivalence") {

@@ -322,6 +322,26 @@ class RollingSnapshotSpec extends SparkSpec {
       t._3.contains("NOT reproducible")))
   }
 
+  test("fsckStore: a truncated second part file is an error, though the element's schema opens") {
+    val dir = Files.createTempDirectory("graft_fsck_part").toString + "/store"
+    spark.range(0, 300).repartition(3).selectExpr("id as vec_id", "id * 2 as v")
+      .write.parquet(s"$dir/d0")
+    assert(RollingIngest.fsckStore(spark, dir).isEmpty)
+    val parts = new java.io.File(s"$dir/d0").listFiles()
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getPath)
+    assert(parts.length == 3)
+    val second = parts(1).toPath
+    java.nio.file.Files.write(second,
+      java.util.Arrays.copyOf(java.nio.file.Files.readAllBytes(second),
+        (parts(1).length / 2).toInt))
+    // inference reads only the first part's footer: the schema still
+    // opens, only a data read would fail
+    assert(spark.read.parquet(s"$dir/d0").schema.fieldNames.toSeq == Seq("vec_id", "v"))
+    val found = RollingIngest.fsckStore(spark, dir)
+    assert(found.exists(t => t._1 == "error" && t._2 == "d0" &&
+      t._3.contains(parts(1).getName) && t._3.contains("tmp+rename")), found)
+  }
+
   test("a manually deleted pinned element fails the snapshot read loudly") {
     implicit val sc = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
