@@ -13,7 +13,7 @@ object Explain {
     names.foreach { n =>
       println(s"\n========== $n ==========")
       try SparkEntry.queries(n)(spark, sfDir).explain("formatted")
-      catch { case e: Throwable => println(s"explain failed: ${e.getMessage}") }
+      catch { case scala.util.control.NonFatal(e) => println(s"explain failed: ${e.getMessage}") }
     }
     spark.stop()
   }

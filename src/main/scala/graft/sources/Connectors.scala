@@ -18,14 +18,15 @@ object Connectors {
 
   /** Exponential backoff: base^attempt delays, like the reference's
     * `backoff ** attempt` sleep (helper_functions.py:29-37). The sleeper is
-    * injectable so tests don't wait. */
+    * injectable so tests don't wait. Only non-fatal failures are retried:
+    * an interrupt or a fatal JVM error propagates at once. */
   def withRetry[T](maxRetries: Int = 5, baseDelayMs: Long = 1000,
                    sleep: Long => Unit = Thread.sleep)(f: () => T): T = {
     var attempt = 0
     while (true) {
       try return f()
       catch {
-        case e: Throwable if attempt < maxRetries =>
+        case scala.util.control.NonFatal(_) if attempt < maxRetries =>
           sleep(baseDelayMs * (1L << attempt)) // base-2 exponential
           attempt += 1
       }

@@ -80,18 +80,59 @@ import org.apache.spark.sql.types.StructType
   */
 object RollingIngest {
 
-  /** Store directories under `storeDir` with the given prefix, as
-    * (version, path), oldest first. */
-  private def dirs(spark: SparkSession, storeDir: String,
-                   prefix: String): Seq[(Long, String)] = {
+  /** One store element: its kind (a [[parseEl]] prefix), version and path. */
+  private final case class El(kind: String, v: Long, path: String) {
+    def name: String = new org.apache.hadoop.fs.Path(path).getName
+  }
+
+  /** One listing of a store directory — the one place the element
+    * contract's layout questions are answered. `els` are the directories
+    * [[parseEl]] recognizes, oldest first; `tmp` the `.tmp_*` leftovers of
+    * crashed writes; `unknown` every other visible directory name. */
+  private final case class Listing(els: Seq[El], tmp: Seq[String],
+                                   unknown: Seq[String]) {
+    def of(kind: String): Seq[El] = els.filter(_.kind == kind)
+    def newest(kind: String): Option[El] = of(kind).lastOption
+
+    /** The newest base strictly below `upTo`. */
+    def base(upTo: Long = Long.MaxValue): Option[El] =
+      of("base").filter(_.v < upTo).lastOption
+    def baseVer(upTo: Long = Long.MaxValue): Long = base(upTo).fold(-1L)(_.v)
+
+    /** The live deltas (`d`) or ledger elements (`m`) before `upTo`: those
+      * above the newest base below `upTo`. */
+    def live(kind: String, upTo: Long = Long.MaxValue): Seq[El] = {
+      val b = baseVer(upTo)
+      of(kind).filter(e => e.v > b && e.v < upTo)
+    }
+
+    /** The superseded elements — the one rule every sweep and fsck apply:
+      * bases older than the newest base, deltas and ledger elements at or
+      * below it (folded into it), and books/tier markers older than their
+      * newest one. No live read touches any of them. */
+    def superseded: Seq[El] = {
+      val b = baseVer()
+      els.filter { e =>
+        e.kind match {
+          case "base"    => e.v < b
+          case "d" | "m" => e.v <= b
+          case k         => newest(k).exists(_.v > e.v)
+        }
+      }
+    }
+  }
+
+  private def listing(spark: SparkSession, storeDir: String): Listing = {
     val path = new org.apache.hadoop.fs.Path(storeDir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) Seq.empty
-    else fs.listStatus(path).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
-      .flatMap(s => s.getPath.getName.drop(prefix.length).toLongOption
-        .map(_ -> s.getPath.toString))
-      .sortBy(_._1)
+    val entries = if (!fs.exists(path)) Seq.empty else fs.listStatus(path).toSeq
+    val dirNames = entries.filter(_.isDirectory).map(_.getPath.getName)
+      .filterNot(_.startsWith("."))
+    Listing(
+      dirNames.flatMap(n => parseEl(n).map { case (k, v) => El(k, v, s"$storeDir/$n") })
+        .sortBy(_.v),
+      entries.map(_.getPath.getName).filter(_.startsWith(".tmp_")),
+      dirNames.filter(parseEl(_).isEmpty))
   }
 
   private def delete(spark: SparkSession, path: String): Unit = {
@@ -101,7 +142,7 @@ object RollingIngest {
 
   /** Commit `df` as the store element at `path` via a hidden temp dir +
     * rename: a crash mid-write must never leave a PARTIALLY-visible
-    * element — [[dirs]] lists by directory existence, so a half-written
+    * element — [[listing]] lists by directory existence, so a half-written
     * `base<v>` would otherwise read as the live base (breaking storeView
     * on unreadable footers, and worse, letting housekeeping sweep the
     * deltas it was meant to replace — silent data loss on the one crash
@@ -129,27 +170,22 @@ object RollingIngest {
     require(fs.rename(tmp, dst), s"rename $tmp -> $dst failed")
   }
 
-  /** Sweep `.tmp_*` leftovers of a crashed [[writeElement]] (idempotent;
-    * readers never see them — hygiene only). */
-  private def sweepTmp(spark: SparkSession, storeDir: String): Unit = {
-    val path = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path)) fs.listStatus(path).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(".tmp_"))
-      .foreach(s => fs.delete(s.getPath, true))
+  /** The one sweep: delete every [[Listing.superseded]] element EXCEPT
+    * those named by a pin manifest, plus the `.tmp_*` leftovers of a
+    * crashed [[writeElement]]. Commit housekeeping, compaction, the
+    * retrain, the tier migration and [[vacuumStore]] all go through it, so
+    * a pinned snapshot's retention ([[pinSnapshot]]) is enforced
+    * uniformly: an element referenced by any live pin survives until its
+    * last pin is dropped. Idempotent; it deletes only what the live read
+    * path already ignores. Returns the listing of what remains. */
+  private def reclaim(spark: SparkSession, storeDir: String): Listing = {
+    val l = listing(spark, storeDir)
+    val keep = pinnedNames(spark, storeDir)
+    val gone = l.superseded.filterNot(e => keep(e.name)).toSet
+    gone.foreach(e => delete(spark, e.path))
+    l.tmp.foreach(n => delete(spark, s"$storeDir/$n"))
+    l.copy(els = l.els.filterNot(gone), tmp = Nil)
   }
-
-  /** Delete the given store elements EXCEPT those named in `keep` — the
-    * one primitive every sweep site goes through, so a pinned snapshot's
-    * retention ([[pinSnapshot]]) is enforced uniformly: an element
-    * referenced by any live pin manifest survives housekeeping,
-    * compaction, retrain and migration sweeps until its last pin is
-    * dropped. */
-  private def sweepEls(spark: SparkSession, els: Seq[(Long, String)],
-                       keep: Set[String]): Unit =
-    els.filterNot { case (_, p) =>
-      keep(new org.apache.hadoop.fs.Path(p).getName) }
-      .foreach { case (_, p) => delete(spark, p) }
 
   /** Read one store directory back to the band schema, with no Spark
     * job: the element's own data columns (its footer, read on the
@@ -223,11 +259,9 @@ object RollingIngest {
                                schema: StructType, idCol: String,
                                upTo: Long = Long.MaxValue,
                                routeFilter: Option[Column] = None): Option[DataFrame] = {
-    val baseOpt = dirs(spark, storeDir, "base").filter(_._1 < upTo).lastOption
-    val baseVer = baseOpt.map(_._1).getOrElse(-1L)
-    val live = dirs(spark, storeDir, "d")
-      .filter { case (v, _) => v > baseVer && v < upTo }
-    resolveView(spark, baseOpt.map(_._2), live, schema, idCol, routeFilter)
+    val l = listing(spark, storeDir)
+    resolveView(spark, l.base(upTo).map(_.path),
+      l.live("d", upTo).map(e => (e.v, e.path)), schema, idCol, routeFilter)
   }
 
   /** Deterministic one-row-per-id pick: min xxhash64 over every column.
@@ -252,8 +286,8 @@ object RollingIngest {
     * deterministically), which is strictly safer than the silent
     * empty-store probe + overwrite a fresh-stream mixup would get. */
   private def guardHistory(spark: SparkSession, storeDir: String, id: Long): Unit = {
-    val els = (dirs(spark, storeDir, "base") ++ dirs(spark, storeDir, "d"))
-      .map(_._1).sorted
+    val l = listing(spark, storeDir)
+    val els = (l.of("base") ++ l.of("d")).map(_.v).sorted
     require(els.isEmpty || (els.head < id && !els.exists(_ > id)),
       s"$storeDir holds versions [${els.mkString(",")}] not " +
         s"strictly older than batch $id — this stream did not build " +
@@ -264,49 +298,36 @@ object RollingIngest {
   }
 
   /** Write batch `bands` as delta `d<id>` under `storeDir`, then run the
-    * housekeeping + compaction contract (see the object doc): sweep stale
-    * leftovers, fold deltas strictly older than this batch into a new base
-    * once `compactEvery` have accumulated. Every step is idempotent and
-    * replay-safe — a replayed batch (which reads only elements < id)
-    * rebuilds the identical delta and sees the identical effective store. */
+    * housekeeping + compaction contract ([[commit]]), the compacted base
+    * being the effective store before this batch. */
   private[graft] def commitDelta(spark: SparkSession, storeDir: String,
                           bands: DataFrame, schema: StructType, idCol: String,
                           partitionCols: Seq[String], compactEvery: Int,
-                          id: Long): Unit = {
-    def emptyBands: DataFrame = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], schema)
-    // the delta write is the ONLY per-batch store write: bytes ∝ batch.
-    // writeElement clusters partitioned writes (one file per populated
-    // cell — the 16k-tiny-files remedy, pinned by RollingIngestSpec) and
-    // commits via tmp+rename so no crash point leaves a partial element.
-    writeElement(spark, s"$storeDir/d$id", bands, partitionCols)
-    // housekeeping — every step idempotent and replay-safe; every delete
-    // spares elements retained by a pin manifest (snapshot retention):
-    // (1) sweep stale leftovers of a mid-compaction crash (the read
-    //     path already ignores them)
-    sweepTmp(spark, storeDir)
-    val keep = pinnedNames(spark, storeDir)
-    val baseVer = dirs(spark, storeDir, "base").lastOption.map(_._1).getOrElse(-1L)
-    sweepEls(spark, dirs(spark, storeDir, "base").dropRight(1), keep)
-    sweepEls(spark, dirs(spark, storeDir, "d").filter(_._1 <= baseVer), keep)
-    // (2) compact deltas STRICTLY OLDER than this batch once K have
-    //     accumulated: fold them + the base into base<newest folded
-    //     delta>, amortizing the corpus-sized write to corpus/K per
-    //     batch. This batch's own delta is never folded, so a replay
-    //     (which reads only elements < id) sees the same store.
-    val pending = dirs(spark, storeDir, "d")
-      .filter { case (v, _) => v > baseVer && v < id }
+                          id: Long): Unit =
+    commit(spark, storeDir, bands, partitionCols, compactEvery, id)(
+      storeView(spark, storeDir, schema, idCol, upTo = id)
+        .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)))
+
+  /** The one commit (see the object doc): write `delta` as `d<id>`,
+    * [[reclaim]] superseded elements, and once `compactEvery` deltas
+    * STRICTLY OLDER than this batch have accumulated, write `compacted` —
+    * the effective store before `id` — as base<newest folded delta> and
+    * reclaim what it folded. That amortizes the corpus-sized write to
+    * corpus/K per batch. This batch's own delta is never folded, so a
+    * replay (which reads only elements < id) sees the same store; every
+    * step is idempotent and replay-safe. Both writes go through
+    * [[writeElement]]: clustered (one file per populated cell — the
+    * 16k-tiny-files remedy, pinned by RollingIngestSpec) and committed via
+    * tmp+rename, so no crash point exposes a partial element (a partial
+    * base would let the sweep destroy the deltas it was folding). */
+  private def commit(spark: SparkSession, storeDir: String, delta: DataFrame,
+                     partitionCols: Seq[String], compactEvery: Int, id: Long)
+                    (compacted: => DataFrame): Unit = {
+    writeElement(spark, s"$storeDir/d$id", delta, partitionCols)
+    val pending = reclaim(spark, storeDir).live("d", upTo = id)
     if (pending.size >= compactEvery) {
-      val compactTo = pending.map(_._1).max
-      val compacted = storeView(spark, storeDir, schema, idCol, upTo = id, None)
-        .getOrElse(emptyBands)
-      // same clustering + atomic commit as the delta write: a crash mid-
-      // compaction must never expose a partial base (whose presence would
-      // let the delta sweep below destroy the rows it was folding)
-      writeElement(spark, s"$storeDir/base$compactTo", compacted, partitionCols)
-      sweepEls(spark, pending, keep)
-      if (baseVer >= 0)
-        sweepEls(spark, Seq((baseVer, s"$storeDir/base$baseVer")), keep)
+      writeElement(spark, s"$storeDir/base${pending.last.v}", compacted, partitionCols)
+      reclaim(spark, storeDir)
     }
   }
 
@@ -318,8 +339,8 @@ object RollingIngest {
   // element contract already gives every commit an immutable identity
   // (elements are written once, never rewritten in place); the only thing
   // destroying history is housekeeping. A PIN is therefore just a manifest
-  // naming the store's live element set; every sweep site spares pinned
-  // elements ([[sweepEls]]), so the snapshot stays readable at zero write
+  // naming the store's live element set; the one sweep spares pinned
+  // elements ([[reclaim]]), so the snapshot stays readable at zero write
   // cost — the write path is unchanged, and retention is ∝ the pinned
   // history (the Iceberg/Delta snapshot-expiry trade, re-derived for this
   // store). Retained elements never leak into live reads: a retained
@@ -404,15 +425,11 @@ object RollingIngest {
     require(!fs.exists(dst),
       s"snapshot '$name' already exists under $storeDir (pins are " +
         "immutable — unpinSnapshot first to re-pin)")
-    val baseVer = dirs(spark, storeDir, "base").lastOption.map(_._1).getOrElse(-1L)
-    val els =
-      dirs(spark, storeDir, "base").lastOption.toSeq ++
-        dirs(spark, storeDir, "d").filter(_._1 > baseVer) ++
-        dirs(spark, storeDir, "m").filter(_._1 > baseVer) ++
-        dirs(spark, storeDir, "books").lastOption.toSeq ++
-        dirs(spark, storeDir, "tier").lastOption.toSeq
+    val l = listing(spark, storeDir)
+    val els = l.base().toSeq ++ l.live("d") ++ l.live("m") ++
+      l.newest("books") ++ l.newest("tier")
     require(els.nonEmpty, s"$storeDir holds no committed elements to pin")
-    val names = els.map { case (_, p) => new org.apache.hadoop.fs.Path(p).getName }
+    val names = els.map(_.name)
     fs.mkdirs(pins)
     val tmp = new org.apache.hadoop.fs.Path(pins, ".tmp_" + name)
     val out = fs.create(tmp, true)
@@ -547,21 +564,15 @@ object RollingIngest {
       .select(col(idCol), col("change"))
   }
 
-  /** Offline reclamation: the same stale-element sweep every commit runs
-    * (superseded bases/deltas/ledger elements, outdated books/tier
-    * markers, `.tmp_*` leftovers), pin-guarded — the call to make after
+  /** Offline reclamation: the same pin-guarded sweep every commit runs
+    * ([[reclaim]] — superseded bases/deltas/ledger elements, outdated
+    * books/tier markers, `.tmp_*` leftovers), plus the `.pins/.tmp_*`
+    * leftovers of a crashed [[pinSnapshot]] — the call to make after
     * [[unpinSnapshot]] when the next commit is far away. Safe on a live
     * store between batches: it deletes only elements the live read path
     * already ignores. */
   def vacuumStore(spark: SparkSession, storeDir: String): Unit = {
-    val keep = pinnedNames(spark, storeDir)
-    val baseVer = dirs(spark, storeDir, "base").lastOption.map(_._1).getOrElse(-1L)
-    sweepEls(spark, dirs(spark, storeDir, "base").dropRight(1), keep)
-    sweepEls(spark, (dirs(spark, storeDir, "d") ++ dirs(spark, storeDir, "m"))
-      .filter(_._1 <= baseVer), keep)
-    sweepEls(spark, dirs(spark, storeDir, "books").dropRight(1), keep)
-    sweepEls(spark, dirs(spark, storeDir, "tier").dropRight(1), keep)
-    sweepTmp(spark, storeDir)
+    reclaim(spark, storeDir)
     // manifest-write leftovers of a crashed pinSnapshot
     val pins = pinsPath(storeDir)
     val fs = pins.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -582,9 +593,11 @@ object RollingIngest {
     *     books newer than the newest base (interrupted re-encode; the
     *     stream resumes it), tier marker newer than the newest base
     *     (interrupted migration; the stream REFUSES until it is re-run);
-    *   - info: reclaimable state housekeeping will sweep (`.tmp_*`
-    *     leftovers, superseded bases/deltas/ledger elements not retained
-    *     by a pin), and unrecognized directory names.
+    *   - info: the state [[reclaim]] sweeps (`.tmp_*` leftovers and every
+    *     [[Listing.superseded]] element — bases/deltas/ledger elements
+    *     below the newest base, outdated books/tier markers — each marked
+    *     as reclaimable or retained by a pin), and unrecognized directory
+    *     names.
     *
     * The read cost is one listing plus one footer open per part file,
     * all on the driver — metadata-cheap at any store size; run it before
@@ -607,50 +620,37 @@ object RollingIngest {
     if (!fs.exists(root)) return Seq(("info", storeDir, "store does not exist"))
     val pins = listSnapshots(spark, storeDir)
     val keep = pins.flatMap(_._2).toSet
-    val entries = fs.listStatus(root).toSeq
-    val dirsByKind = entries.filter(_.isDirectory).map(_.getPath.getName)
-      .filterNot(_.startsWith("."))
-      .map(n => n -> parseEl(n))
-    dirsByKind.collect { case (n, None) =>
-      out += (("info", n, "unrecognized directory name (not a store element)"))
-    }
-    val els = dirsByKind.collect { case (n, Some(kv)) => (n, kv._1, kv._2) }
-    def newest(kind: String): Long =
-      els.filter(_._2 == kind).map(_._3).maxOption.getOrElse(-1L)
-    val baseVer = newest("base")
+    val l = listing(spark, storeDir)
+    l.unknown.foreach(n =>
+      out += (("info", n, "unrecognized directory name (not a store element)")))
+    val baseVer = l.baseVer()
     // crash windows (each names its recovery)
-    entries.filter(_.getPath.getName.startsWith(".tmp_")).foreach(s =>
-      out += (("info", s.getPath.getName,
+    l.tmp.foreach(n =>
+      out += (("info", n,
         "leftover of a crashed element write; swept at the next commit or vacuumStore")))
-    val booksVer = newest("books")
-    if (booksVer >= 0 && booksVer > baseVer &&
-        els.exists(e => e._2 == "d" && e._3 <= booksVer))
-      out += (("warn", s"books$booksVer",
+    l.newest("books").filter(b => b.v > baseVer && l.of("d").exists(_.v <= b.v))
+      .foreach(b => out += (("warn", b.name,
         s"newer than base$baseVer with deltas at or below it — an " +
           "interrupted retrain re-encode; the routed stream resumes it at " +
-          "the next batch"))
-    val tierVer = newest("tier")
-    if (tierVer >= 0 && tierVer > baseVer)
-      out += (("warn", s"tier$tierVer",
+          "the next batch")))
+    l.newest("tier").filter(_.v > baseVer)
+      .foreach(t => out += (("warn", t.name,
         s"newer than base$baseVer — an interrupted tier migration; the " +
-          "stream refuses to start until migrateDedupTier is re-run"))
+          "stream refuses to start until migrateDedupTier is re-run")))
     // reclaimable (pin-aware: retained elements are deliberate)
-    els.filter(e => (e._2 == "base" && e._3 < baseVer) ||
-        ((e._2 == "d" || e._2 == "m") && e._3 <= baseVer))
-      .foreach { case (n, _, _) =>
-        out += (("info", n,
-          if (keep(n)) "superseded but retained by a pin"
-          else "superseded and unpinned; reclaimable by any commit or vacuumStore"))
-      }
+    l.superseded.foreach(e =>
+      out += (("info", e.name,
+        if (keep(e.name)) "superseded but retained by a pin"
+        else "superseded and unpinned; reclaimable by any commit or vacuumStore")))
     // element integrity: every element (tier markers included) is parquet
     // and every one of its part files must open — schema inference reads
     // only the first, so a corrupt later part would otherwise surface as a
     // failed data read. toString: a truncated footer commonly throws a
     // message-less EOFException, which the diagnostic must still report.
-    els.foreach { case (n, _, _) =>
-      ParquetSchema.unreadable(spark, s"$storeDir/$n").headOption
+    l.els.foreach { el =>
+      ParquetSchema.unreadable(spark, el.path).headOption
         .foreach { case (file, e) =>
-          out += (("error", n,
+          out += (("error", el.name,
             s"element does not open as parquet ($file: ${e.toString.take(160)}) — " +
               "a partial write outside the tmp+rename contract; restore it " +
               "or roll the store back to a pinned snapshot"))
@@ -668,15 +668,51 @@ object RollingIngest {
     out.toSeq
   }
 
-  /** The shared micro-batch loop; `sideFor(spark, id)` resolves the
-    * batch's (sketcher, prober) pair AT BATCH START — static sides ignore
-    * (spark, id); the dedup side re-reads the store-owned tier marker so
-    * an offline [[migrateDedupTier]] takes effect at the next batch
-    * boundary. `bandsOf` sketches a deduplicated batch,
-    * `probe(store, batchBands)` computes the batch's result rows. */
+  /** One store side, resolved AT BATCH START: `bandsOf` sketches a
+    * deduplicated batch, `probe(store, batchBands)` computes the batch's
+    * result rows, and `append` sees the persisted batch bands just before
+    * they are committed (the routed IVF-PQ side feeds its census; static
+    * sides ignore it). */
+  private type Side = (DataFrame => DataFrame,
+                       (DataFrame, DataFrame) => DataFrame,
+                       DataFrame => Unit)
+
+  /** The frozen-book IVF-PQ side: encode against (coarse, books), probe
+    * the routed code store at nprobe = 1 (see [[ivfPqIngest]]'s doc). */
+  private def pqSide(coarse: Seq[(Int, Array[Long])],
+                     books: Seq[Seq[(Int, Array[Long])]], k: Int): Side =
+    (v => Similarity.ivfPqEncode(v, coarse, books),
+      (store, codes) => Similarity.ivfPqIncrementalCodes(
+        store, codes, coarse, books, k, nprobe = 1),
+      _ => ())
+
+  /** The store batch `id` probes: the effective store before the batch,
+    * or `empty` when it holds nothing. Routed stores pre-filter the store
+    * read to the batch's own route values — the partition-pruning
+    * counterpart of the routed band join (only the batch's cells are
+    * scanned). The per-column isin is a SUPERSET of the batch's route
+    * tuples, so it is purely a pruning optimization; the band join
+    * enforces exact equality. */
+  private def probedStore(spark: SparkSession, storeDir: String,
+                          schema: StructType, idCol: String,
+                          partitionCols: Seq[String], bands: DataFrame, id: Long)
+                         (empty: => DataFrame): DataFrame = {
+    val routeFilter = if (partitionCols.isEmpty) None else {
+      val vals = bands.select(partitionCols.map(col): _*).distinct().collect()
+      Some(partitionCols.zipWithIndex.map { case (c, i) =>
+        col(c).isin(vals.map(_.get(i)).distinct.toSeq: _*)
+      }.reduce(_ && _))
+    }
+    storeView(spark, storeDir, schema, idCol, upTo = id, routeFilter).getOrElse(empty)
+  }
+
+  /** The single-store micro-batch loop; `sideFor(spark, id)` resolves the
+    * batch's [[Side]] AT BATCH START — static sides ignore (spark, id);
+    * the dedup side re-reads the store-owned tier marker so an offline
+    * [[migrateDedupTier]] takes effect at the next batch boundary, and
+    * the routed IVF-PQ side moves its books ([[RoutedBooks]]). */
   private def ingest(src: DataFrame, storeDir: String, idCol: String,
-                     sideFor: (SparkSession, Long) =>
-                       (DataFrame => DataFrame, (DataFrame, DataFrame) => DataFrame),
+                     sideFor: (SparkSession, Long) => Side,
                      partitionCols: Seq[String], compactEvery: Int,
                      configure: DataStreamWriter[Row] => DataStreamWriter[Row])
                     (sink: (DataFrame, Long) => Unit): StreamingQuery = {
@@ -685,25 +721,14 @@ object RollingIngest {
       if (!b.isEmpty) {
         val spark = b.sparkSession
         guardHistory(spark, storeDir, id)
-        val (bandsOf, probe) = sideFor(spark, id)
+        val (bandsOf, probe, append) = sideFor(spark, id)
         val schema = bandsOf(b.limit(0)).schema
         val bands = bandsOf(dedupDeterministic(b, idCol)).persist()
         try {
-          // Routed stores: pre-filter the store read to the batch's own
-          // route values — the partition-pruning counterpart of the
-          // routed band join (only the batch's cells are scanned). The
-          // per-column isin is a SUPERSET of the batch's route tuples, so
-          // it is purely a pruning optimization; the band join enforces
-          // exact equality.
-          val routeFilter = if (partitionCols.isEmpty) None else {
-            val vals = bands.select(partitionCols.map(col): _*).distinct().collect()
-            Some(partitionCols.zipWithIndex.map { case (c, i) =>
-              col(c).isin(vals.map(_.get(i)).distinct.toSeq: _*)
-            }.reduce(_ && _))
-          }
-          val store = storeView(spark, storeDir, schema, idCol, upTo = id, routeFilter)
-            .getOrElse(bandsOf(b.limit(0)))
+          val store = probedStore(spark, storeDir, schema, idCol,
+            partitionCols, bands, id)(bandsOf(b.limit(0)))
           sink(probe(store, bands), id)
+          append(bands)
           commitDelta(spark, storeDir, bands, schema, idCol,
             partitionCols, compactEvery, id)
         } finally bands.unpersist()
@@ -732,7 +757,8 @@ object RollingIngest {
       (_, _) => (
         if (wideBands) Similarity.hyperBandsWide else Similarity.hyperBands,
         (store, bands) =>
-          Similarity.lshAnnIncrementalBands(store, bands, k, routeCols)),
+          Similarity.lshAnnIncrementalBands(store, bands, k, routeCols),
+        _ => ()),
       routeCols, compactEvery, configure)(sink)
 
   /** Rolling IVF-PQ ingest over a streaming relation of
@@ -756,11 +782,7 @@ object RollingIngest {
                   k: Int = 3, compactEvery: Int = 8,
                   configure: DataStreamWriter[Row] => DataStreamWriter[Row] = identity)
                  (sink: (DataFrame, Long) => Unit): StreamingQuery =
-    ingest(vecs, storeDir, "vec_id",
-      (_, _) => (
-        b => Similarity.ivfPqEncode(b, coarse, books),
-        (store, codes) => Similarity.ivfPqIncrementalCodes(
-          store, codes, coarse, books, k, nprobe = 1)),
+    ingest(vecs, storeDir, "vec_id", (_, _) => pqSide(coarse, books, k),
       partitionCols = Seq("cell"), compactEvery, configure)(sink)
 
   // ---- retrain/re-encode cadence for the rolling IVF-PQ store ----
@@ -837,38 +859,10 @@ object RollingIngest {
                         configure: DataStreamWriter[Row] => DataStreamWriter[Row] = identity,
                         onRetrain: (Int, Int, Long) => Unit = (_, _, _) => ())
                        (sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    require(compactEvery >= 1, "compactEvery must be >= 1")
-    import graft.operators.Similarity
     val rb = new RoutedBooks(storeDir, bootstrapCoarse, bootstrapBooks,
       retrainGridSteps, onRetrain)
-    configure(vecs.writeStream.foreachBatch { (b: DataFrame, id: Long) =>
-      if (!b.isEmpty) {
-        val spark = b.sparkSession
-        guardHistory(spark, storeDir, id)
-        val schema = Similarity.ivfPqEncode(
-          b.limit(0).select("vec_id", "embedding"),
-          bootstrapCoarse, bootstrapBooks).schema
-        val (coarse, books) = rb.forBatch(spark, id, schema)
-        // ---- normal batch: encode, probe, append (ivfPqIngest's loop) ----
-        val codes = Similarity.ivfPqEncode(
-          dedupDeterministic(b, "vec_id").select("vec_id", "embedding"),
-          coarse, books).persist()
-        try {
-          val cells = codes.select("cell").distinct().collect()
-            .map(_.getInt(0)).toSeq
-          val routeFilter = Some(col("cell").isin(cells: _*))
-          val store = storeView(spark, storeDir, schema, "vec_id",
-            upTo = id, routeFilter).getOrElse(
-            Similarity.ivfPqEncode(b.limit(0).select("vec_id", "embedding"),
-              coarse, books))
-          sink(Similarity.ivfPqIncrementalCodes(store, codes, coarse, books,
-            k, nprobe = 1), id)
-          rb.append(codes.count())
-          commitDelta(spark, storeDir, codes, schema, "vec_id",
-            Seq("cell"), compactEvery, id)
-        } finally codes.unpersist()
-      }
-    }).start()
+    ingest(vecs, storeDir, "vec_id", rb.side(_, _, k),
+      partitionCols = Seq("cell"), compactEvery, configure)(sink)
   }
 
   /** Store-owned frozen books with the census-drift retrain/re-encode
@@ -901,35 +895,29 @@ object RollingIngest {
       * census trigger and run the offline retrain event. Call at batch
       * START, before the batch's own encode. `schema` is the
       * (books-independent) code-row shape. */
-    def forBatch(spark: SparkSession, id: Long,
-                 schema: StructType): (Seq[(Int, Array[Long])], Seq[Seq[(Int, Array[Long])]]) = {
+    private def forBatch(spark: SparkSession, id: Long,
+                         schema: StructType): (Seq[(Int, Array[Long])], Seq[Seq[(Int, Array[Long])]]) = {
       // ---- books bootstrap / load ----
-      val bookDirs = dirs(spark, storeDir, "books")
-      val bv = bookDirs.lastOption.map(_._1).getOrElse {
+      val l = listing(spark, storeDir)
+      val newestBooks = l.newest("books")
+      val bv = newestBooks.fold {
         writeBooks(spark, s"$storeDir/books-1", bootstrapCoarse, bootstrapBooks)
         -1L
-      }
+      }(_.v)
       if (cur.forall(_._1 != bv)) {
-        val (c, bks) =
-          if (bookDirs.isEmpty) (bootstrapCoarse, bootstrapBooks)
-          else readBooks(spark, bookDirs.last._2)
+        val (c, bks) = newestBooks.fold((bootstrapCoarse, bootstrapBooks))(
+          b => readBooks(spark, b.path))
         cur = Some((bv, c, bks))
       }
       val booksVer = cur.get._1
       val coarse = cur.get._2
       val books = cur.get._3
-      def liveDirs = {
-        val baseVer = dirs(spark, storeDir, "base").lastOption.map(_._1).getOrElse(-1L)
-        dirs(spark, storeDir, "base").lastOption.toSeq ++
-          dirs(spark, storeDir, "d").filter(_._1 > baseVer)
-      }
+      val liveEls = l.base().toSeq ++ l.live("d")
       // ---- census (cumulative appended rows; metadata-cheap re-derive) ----
       if (census < 0)
-        census = liveDirs.map { case (_, p) => ParquetSchema.read(spark, p).count() }.sum
+        census = liveEls.map(e => ParquetSchema.read(spark, e.path).count()).sum
       // ---- resume a crashed re-encode: books newer than the base ----
-      val baseVer0 = dirs(spark, storeDir, "base").lastOption.map(_._1).getOrElse(-1L)
-      val needResume = booksVer >= 0 && booksVer > baseVer0 &&
-        dirs(spark, storeDir, "d").exists(_._1 <= booksVer)
+      val needResume = booksVer > l.baseVer() && l.of("d").exists(_.v <= booksVer)
       // ---- retrain trigger at batch start (pre-batch census) ----
       // The cumulative census only fires a CHECK: re-ingested ids
       // double-count (appends never decrement), so the event first derives
@@ -942,7 +930,7 @@ object RollingIngest {
       val trainedKc = coarse.size
       val targetKc = Similarity.ivfPqKcRouted(math.max(0L, census))
       val wantRetrain = targetKc >= (trainedKc << retrainGridSteps)
-      val newestEl = liveDirs.map(_._1).maxOption.getOrElse(-1L)
+      val newestEl = liveEls.map(_.v).maxOption.getOrElse(-1L)
       if ((wantRetrain || needResume) && newestEl >= 0 && newestEl < id) {
         val v = newestEl
         val eff = storeView(spark, storeDir, schema, "vec_id", upTo = id).get
@@ -970,14 +958,10 @@ object RollingIngest {
             writeElement(spark, s"$storeDir/base$v",
               Similarity.ivfPqEncodeQNorm(eff.select("vec_id", "q", "norm"), c2, b2),
               Seq("cell"))
-            // sweep superseded elements (idempotent; commitDelta would
-            // also catch deltas <= the new base) — pin-guarded, so a
-            // snapshot pinned before the retrain keeps its codes AND the
-            // books that decode them
-            val keep = pinnedNames(spark, storeDir)
-            sweepEls(spark, dirs(spark, storeDir, "d").filter(_._1 <= v), keep)
-            sweepEls(spark, dirs(spark, storeDir, "base").filter(_._1 < v), keep)
-            sweepEls(spark, dirs(spark, storeDir, "books").filter(_._1 < v), keep)
+            // sweep the folded deltas, old base and old books — pin-
+            // guarded, so a snapshot pinned before the retrain keeps its
+            // codes AND the books that decode them
+            reclaim(spark, storeDir)
             if (!needResume) onRetrain(trainedKc, liveKc, live)
             cur = Some((v, c2, b2))
           }
@@ -986,8 +970,22 @@ object RollingIngest {
       (cur.get._2, cur.get._3)
     }
 
-    /** Feed this batch's appended row count into the census. */
-    def append(n: Long): Unit = census += n
+    /** The batch's [[Side]]: [[pqSide]] under the books [[forBatch]]
+      * resolves, whose append feeds the batch's code-row count into the
+      * census. The code-row schema is books-independent, so it is derived
+      * from the bootstrap books over an empty (vec_id, embedding) relation. */
+    def side(spark: SparkSession, id: Long, k: Int): Side = {
+      import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField}
+      val emptyVecs = spark.createDataFrame(
+        spark.sparkContext.emptyRDD[Row],
+        StructType(Seq(StructField("vec_id", LongType),
+          StructField("embedding", ArrayType(FloatType)))))
+      val schema = Similarity.ivfPqEncode(
+        emptyVecs, bootstrapCoarse, bootstrapBooks).schema
+      val (coarse, books) = forBatch(spark, id, schema)
+      val (encode, probe, _) = pqSide(coarse, books, k)
+      (encode, probe, codes => census += codes.count())
+    }
   }
 
   /** Rolling simhash near-dup ingest over a streaming relation of
@@ -1017,7 +1015,8 @@ object RollingIngest {
       (spark, _) => {
         val (bandsOf, sigCols) = dedupTier(resolvedTier(spark, storeDir, wideSig))
         (bandsOf, (store, bands) =>
-          Dedup.simhashNearDupIncrementalBands(store, bands, maxHamming, sigCols))
+          Dedup.simhashNearDupIncrementalBands(store, bands, maxHamming, sigCols),
+          _ => ())
       },
       Nil, compactEvery, configure)(sink)
 
@@ -1049,12 +1048,12 @@ object RollingIngest {
     * guided — re-run the migration with the keeper corpus. This is the
     * text-side analog of [[RoutedBooks]]' books-newer-than-base rule. */
   private def resolvedTier(spark: SparkSession, storeDir: String,
-                           bootstrapWide: Boolean): Boolean =
-    dirs(spark, storeDir, "tier").lastOption match {
+                           bootstrapWide: Boolean): Boolean = {
+    val l = listing(spark, storeDir)
+    l.newest("tier") match {
       case None => bootstrapWide
-      case Some((v, p)) =>
-        val baseVer = dirs(spark, storeDir, "base").lastOption
-          .map(_._1).getOrElse(-1L)
+      case Some(El(_, v, p)) =>
+        val baseVer = l.baseVer()
         require(baseVer >= v,
           s"$storeDir: tier marker tier$v is newer than the newest base " +
             s"(version $baseVer) — an interrupted tier migration left the " +
@@ -1063,6 +1062,7 @@ object RollingIngest {
             "point), then restart the stream.")
         ParquetSchema.read(spark, p).select("wide").collect()(0).getBoolean(0)
     }
+  }
 
   /** Doc-count CENSUS trigger for [[migrateDedupTier]]: true when the
     * store is still on the narrow tier and its live band rows / 4 (bands
@@ -1074,15 +1074,11 @@ object RollingIngest {
     * back — this helper is the deployment cron's cheap "is it due" check. */
   def dedupTierMigrationDue(spark: SparkSession, storeDir: String,
                             knee: Long = Dedup.SimhashBandKnee): Boolean = {
-    val live = {
-      val baseVer = dirs(spark, storeDir, "base").lastOption
-        .map(_._1).getOrElse(-1L)
-      dirs(spark, storeDir, "base").lastOption.toSeq ++
-        dirs(spark, storeDir, "d").filter(_._1 > baseVer)
-    }
+    val l = listing(spark, storeDir)
+    val live = l.base().toSeq ++ l.live("d")
     live.nonEmpty && !resolvedTier(spark, storeDir, bootstrapWide = false) &&
-      !ParquetSchema.of(spark, live.head._2).fieldNames.contains("sig_hi") &&
-      live.map { case (_, p) => ParquetSchema.read(spark, p).count() }.sum / 4 >= knee
+      !ParquetSchema.of(spark, live.head.path).fieldNames.contains("sig_hi") &&
+      live.map(e => ParquetSchema.read(spark, e.path).count()).sum / 4 >= knee
   }
 
   /** OFFLINE narrow→wide tier migration for a rolling dedup store
@@ -1114,12 +1110,13 @@ object RollingIngest {
   def migrateDedupTier(spark: SparkSession, storeDir: String,
                        corpus: DataFrame): Unit = {
     import org.apache.spark.sql.types.{LongType, StringType, StructField}
-    val live = dirs(spark, storeDir, "base") ++ dirs(spark, storeDir, "d")
-    require(live.nonEmpty, s"$storeDir: empty store — bootstrap the stream " +
+    val l = listing(spark, storeDir)
+    val newest = (l.of("base") ++ l.of("d")).maxByOption(_.v)
+    require(newest.nonEmpty, s"$storeDir: empty store — bootstrap the stream " +
       "with wideSig=true instead of migrating")
-    require(!ParquetSchema.of(spark, live.maxBy(_._1)._2).fieldNames.contains("sig_hi"),
+    require(!ParquetSchema.of(spark, newest.get.path).fieldNames.contains("sig_hi"),
       s"$storeDir: store is already on the wide tier")
-    val v = live.map(_._1).max
+    val v = newest.get.v
     writeTier(spark, storeDir, v, wide = true)
     val narrowSchema = Dedup.simhash64Bands(spark.createDataFrame(
       spark.sparkContext.emptyRDD[Row],
@@ -1140,11 +1137,7 @@ object RollingIngest {
           "with the full keeper corpus).")
       writeElement(spark, s"$storeDir/base$v", wide, partitionCols = Nil)
     } finally wide.unpersist()
-    val keep = pinnedNames(spark, storeDir)
-    sweepEls(spark, dirs(spark, storeDir, "d").filter(_._1 <= v), keep)
-    sweepEls(spark, dirs(spark, storeDir, "base").filter(_._1 < v), keep)
-    sweepEls(spark, dirs(spark, storeDir, "tier").filter(_._1 < v), keep)
-    sweepTmp(spark, storeDir)
+    reclaim(spark, storeDir)
   }
 
   /** COMPOSED rolling dedup-then-index — the streaming twin of the batch
@@ -1206,7 +1199,7 @@ object RollingIngest {
       annSideFor = (_, _) => (vecBandsOf,
         (store, bands) =>
           Similarity.lshAnnIncrementalBands(store, bands, k, routeCols),
-        (_: Long) => ()),
+        _ => ()),
       annPartitionCols = routeCols)(sink)
   }
 
@@ -1235,11 +1228,7 @@ object RollingIngest {
     composedIngest(docs, dedupStoreDir, annStoreDir, maxHamming, compactEvery,
       wideSig, configure, dedupSink,
       vecColsOf = df => df.select(col("doc_id").as("vec_id"), col("embedding")),
-      annSideFor = (_, _) => (
-        v => Similarity.ivfPqEncode(v, coarse, books),
-        (store, codes) => Similarity.ivfPqIncrementalCodes(
-          store, codes, coarse, books, k, nprobe = 1),
-        (_: Long) => ()),
+      annSideFor = (_, _) => pqSide(coarse, books, k),
       annPartitionCols = Seq("cell"))(sink)
 
   /** [[dedupIndexIngestPq]] with the RETRAIN/RE-ENCODE CADENCE on the code
@@ -1263,28 +1252,12 @@ object RollingIngest {
                                dedupSink: (DataFrame, Long) => Unit = (_, _) => (),
                                onRetrain: (Int, Int, Long) => Unit = (_, _, _) => ())
                               (sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    import graft.operators.Similarity
-    import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField}
     val rb = new RoutedBooks(annStoreDir, bootstrapCoarse, bootstrapBooks,
       retrainGridSteps, onRetrain)
     composedIngest(docs, dedupStoreDir, annStoreDir, maxHamming, compactEvery,
       wideSig, configure, dedupSink,
       vecColsOf = df => df.select(col("doc_id").as("vec_id"), col("embedding")),
-      annSideFor = (spark, id) => {
-        // code-row shape is books-independent; an empty (vec_id, embedding)
-        // relation derives it without touching the batch
-        val emptyVecs = spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row],
-          StructType(Seq(StructField("vec_id", LongType),
-            StructField("embedding", ArrayType(FloatType)))))
-        val schema = Similarity.ivfPqEncode(
-          emptyVecs, bootstrapCoarse, bootstrapBooks).schema
-        val (coarse, books) = rb.forBatch(spark, id, schema)
-        (v => Similarity.ivfPqEncode(v, coarse, books),
-          (store, codes) => Similarity.ivfPqIncrementalCodes(
-            store, codes, coarse, books, k, nprobe = 1),
-          (n: Long) => rb.append(n))
-      },
+      annSideFor = rb.side(_, _, k),
       annPartitionCols = Seq("cell"))(sink)
   }
 
@@ -1299,14 +1272,10 @@ object RollingIngest {
                              configure: DataStreamWriter[Row] => DataStreamWriter[Row],
                              dedupSink: (DataFrame, Long) => Unit,
                              vecColsOf: DataFrame => DataFrame,
-                             // (row encoder, store probe, census append) —
                              // resolved PER BATCH so a routed/retraining
                              // ANN side can move its books at batch
                              // boundaries; static sides ignore (spark, id)
-                             annSideFor: (SparkSession, Long) =>
-                               (DataFrame => DataFrame,
-                                (DataFrame, DataFrame) => DataFrame,
-                                Long => Unit),
+                             annSideFor: (SparkSession, Long) => Side,
                              annPartitionCols: Seq[String],
                              // batch-deterministic pre-dedup gate (the
                              // curation funnel's quality/decontam stages);
@@ -1336,8 +1305,8 @@ object RollingIngest {
         val batch = preGate(spark, id, batch0).persist()
         val docBands = docBandsOf(docCols(batch)).persist()
         try {
-          val dedupStore = storeView(spark, dedupStoreDir, dedupSchema, "doc_id",
-            upTo = id).getOrElse(docBandsOf(docCols(b.limit(0))))
+          val dedupStore = probedStore(spark, dedupStoreDir, dedupSchema, "doc_id",
+            Nil, docBands, id)(docBandsOf(docCols(b.limit(0))))
           val pairs = Dedup.simhashNearDupIncrementalBands(
             dedupStore, docBands, maxHamming, sigCols)
           // Components over the batch-touching pairs; labels is at most
@@ -1371,15 +1340,8 @@ object RollingIngest {
             vecColsOf(batch.join(broadcast(keptIds), Seq("doc_id")))).persist()
           try {
             dedupSink(decisions, id)
-            val routeFilter = if (annPartitionCols.isEmpty) None else {
-              val vals = vecBands.select(annPartitionCols.map(col): _*).distinct().collect()
-              Some(annPartitionCols.zipWithIndex.map { case (c, i) =>
-                col(c).isin(vals.map(_.get(i)).distinct.toSeq: _*)
-              }.reduce(_ && _))
-            }
-            val annStore = storeView(spark, annStoreDir, annSchema, "vec_id",
-              upTo = id, routeFilter)
-              .getOrElse(annBandsOf(vecColsOf(b.limit(0))))
+            val annStore = probedStore(spark, annStoreDir, annSchema, "vec_id",
+              annPartitionCols, vecBands, id)(annBandsOf(vecColsOf(b.limit(0))))
             sink(annProbe(annStore, vecBands), id)
             // A batch may dedup away ENTIRELY; an empty partitioned write
             // leaves a schema-less directory readBands cannot open, so a
@@ -1388,7 +1350,7 @@ object RollingIngest {
             if (!keptIds.isEmpty) {
               commitDelta(spark, dedupStoreDir, keeperBands, dedupSchema,
                 "doc_id", Nil, compactEvery, id)
-              annAppend(vecBands.count())
+              annAppend(vecBands)
               commitDelta(spark, annStoreDir, vecBands, annSchema,
                 "vec_id", annPartitionCols, compactEvery, id)
             }
@@ -1445,7 +1407,7 @@ object RollingIngest {
                     curationSink: (DataFrame, Long) => Unit = (_, _) => (),
                     dedupSink: (DataFrame, Long) => Unit = (_, _) => ())
                    (sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    import graft.operators.{Dedup => D, Similarity, TextAnalysis}
+    import graft.operators.{Dedup => D, TextAnalysis}
     // the benchmark dictionary is derived, persisted, counted, and
     // tiered ONCE at construction (a static reference relation, like the
     // routed pipeline's bootstrap books) — per batch the gate pays only
@@ -1500,11 +1462,7 @@ object RollingIngest {
       composedIngest(docs, dedupStoreDir, annStoreDir, maxHamming,
         compactEvery, wideSig, configure, dedupSink,
         vecColsOf = df => df.select(col("doc_id").as("vec_id"), col("embedding")),
-        annSideFor = (_, _) => (
-          v => Similarity.ivfPqEncode(v, coarse, books),
-          (store, codes) => Similarity.ivfPqIncrementalCodes(
-            store, codes, coarse, books, k, nprobe = 1),
-          (_: Long) => ()),
+        annSideFor = (_, _) => pqSide(coarse, books, k),
         annPartitionCols = Seq("cell"), preGate = gate)(sink)
     } catch {
       case e: Throwable => releaseDict(); throw e
@@ -1521,25 +1479,23 @@ object RollingIngest {
     org.apache.spark.sql.types.StructField("label",
       org.apache.spark.sql.types.LongType, nullable = false)))
 
-  /** The merge LEDGER strictly before `upTo`: (from, to) label renames,
-    * collected to the driver. Bounded: every entry retires one label
-    * forever, compaction folds all entries < its fold point into the node
-    * rows and deletes them — so the ledger holds at most one entry per
-    * component merge since the last compaction, the small indirection
-    * that makes a merge O(1) instead of a relabel of the larger side. */
-  /** The live ledger in (`sinceExclusive`, `upTo`): ledger elements at or
+  /** The live merge LEDGER strictly before `upTo`: (from, to) label
+    * renames, collected to the driver. Bounded: every entry retires one
+    * label forever, compaction folds all entries < its fold point into the
+    * node rows and deletes them — so the ledger holds at most one entry
+    * per component merge since the last compaction, the small indirection
+    * that makes a merge O(1) instead of a relabel of the larger side.
+    * Only the [[Listing.live]] elements are read: ledger elements at or
     * below the base version are part of the folded base (their renames
     * are already applied to every row they could touch) — and once pins
-    * can RETAIN folded ledger elements on disk, the floor is what keeps
+    * can RETAIN folded ledger elements on disk, that floor is what keeps
     * them from re-entering live reads. (Re-applying a folded rename is
     * semantically a no-op — a retired label never re-emerges, since a
     * component's min member only decreases — so the floor is a cost
     * bound, not a correctness fix.) */
   private def mergeLedger(spark: SparkSession, storeDir: String,
-                          sinceExclusive: Long,
                           upTo: Long): Seq[(Long, Long)] =
-    ledgerOf(spark, dirs(spark, storeDir, "m")
-      .filter { case (v, _) => v > sinceExclusive && v < upTo }.map(_._2))
+    ledgerOf(spark, listing(spark, storeDir).live("m", upTo).map(_.path))
 
   private def ledgerOf(spark: SparkSession,
                        paths: Seq[String]): Seq[(Long, Long)] =
@@ -1586,50 +1542,9 @@ object RollingIngest {
   /** Every node's component label, resolved through the live ledger —
     * the store's read API. Labels follow the [[Dedup.labelPropagation]]
     * convention (min node id in the component). */
-  def componentLabels(spark: SparkSession, storeDir: String): Option[DataFrame] = {
-    val baseVer = dirs(spark, storeDir, "base").lastOption.map(_._1).getOrElse(-1L)
+  def componentLabels(spark: SparkSession, storeDir: String): Option[DataFrame] =
     storeView(spark, storeDir, labelSchema, "node")
-      .map(resolveLabels(_, mergeLedger(spark, storeDir, baseVer, Long.MaxValue)))
-  }
-
-  /** [[commitDelta]]'s components twin: commit the batch's label delta and
-    * ledger element, then compact with LEDGER FOLDING — the compacted base
-    * is written with every label resolved through the ledger < the batch,
-    * after which those ledger elements are deleted (every row they could
-    * rename is inside the new base; the current batch's own delta carries
-    * only post-resolution labels by construction, so it references no
-    * retired label). The fold writes base<compactTo> as a FRESH element
-    * (tmp+rename, no in-place overwrite of a live base — the one crash
-    * window an in-place rewrite would open). Every step idempotent and
-    * replay-safe under the shared upTo < id read discipline. */
-  private def commitComponents(spark: SparkSession, storeDir: String,
-                               labels: DataFrame, retired: Option[DataFrame],
-                               compactEvery: Int, id: Long): Unit = {
-    writeElement(spark, s"$storeDir/d$id", labels, Nil)
-    retired.foreach(r => writeElement(spark, s"$storeDir/m$id", r, Nil))
-    sweepTmp(spark, storeDir)
-    val keep = pinnedNames(spark, storeDir)
-    val baseVer = dirs(spark, storeDir, "base").lastOption.map(_._1).getOrElse(-1L)
-    sweepEls(spark, dirs(spark, storeDir, "base").dropRight(1), keep)
-    sweepEls(spark, (dirs(spark, storeDir, "d") ++ dirs(spark, storeDir, "m"))
-      .filter(_._1 <= baseVer), keep)
-    val pending = dirs(spark, storeDir, "d")
-      .filter { case (v, _) => v > baseVer && v < id }
-    if (pending.size >= compactEvery) {
-      val compactTo = pending.map(_._1).max
-      val ledger = mergeLedger(spark, storeDir, baseVer, upTo = id)
-      val compacted = resolveLabels(
-        storeView(spark, storeDir, labelSchema, "node", upTo = id)
-          .getOrElse(spark.createDataFrame(
-            spark.sparkContext.emptyRDD[Row], labelSchema)),
-        ledger)
-      writeElement(spark, s"$storeDir/base$compactTo", compacted, Nil)
-      sweepEls(spark, pending, keep)
-      if (baseVer >= 0)
-        sweepEls(spark, Seq((baseVer, s"$storeDir/base$baseVer")), keep)
-      sweepEls(spark, dirs(spark, storeDir, "m").filter(_._1 < id), keep)
-    }
-  }
+      .map(resolveLabels(_, mergeLedger(spark, storeDir, Long.MaxValue)))
 
   /** Rolling connected-components ingest over a streaming relation of
     * undirected edges `(u, v)` — e.g. the near-dup pairs [[dedupIngest]]
@@ -1700,9 +1615,7 @@ object RollingIngest {
       else {
         val touched = eb.select(col("u").as("node"))
           .union(eb.select(col("v").as("node"))).distinct()
-        val ledgerBase = dirs(spark, storeDir, "base")
-          .filter(_._1 < id).lastOption.map(_._1).getOrElse(-1L)
-        val ledger = mergeLedger(spark, storeDir, ledgerBase, upTo = id)
+        val ledger = mergeLedger(spark, storeDir, upTo = id)
         // prior labels of touched nodes: batch-sized result, resolved
         // through the ledger on the driver
         val parent = scala.collection.mutable.Map.empty[Long, Long]
@@ -1734,9 +1647,18 @@ object RollingIngest {
         val retired = prior.values.toSeq.distinct
           .map(l => (l, pathFind(uf)(l))).filter { case (f, t) => f != t }
         val labelsDf = newLabels.toDF("node", "label")
-        commitComponents(spark, storeDir, labelsDf,
-          if (retired.nonEmpty) Some(retired.toDF("from", "to")) else None,
-          compactEvery, id)
+        // the ledger element first, then the one commit: the compacted
+        // base is written with every label resolved through the ledger
+        // < the batch, after which the sweep deletes those ledger
+        // elements (every row they could rename is inside the new base;
+        // this batch's own delta carries only post-resolution labels, so
+        // it references no retired label)
+        if (retired.nonEmpty)
+          writeElement(spark, s"$storeDir/m$id", retired.toDF("from", "to"), Nil)
+        commit(spark, storeDir, labelsDf, Nil, compactEvery, id)(resolveLabels(
+          storeView(spark, storeDir, labelSchema, "node", upTo = id)
+            .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], labelSchema)),
+          mergeLedger(spark, storeDir, upTo = id)))
         labelsDf
       }
     } finally eb.unpersist()

@@ -446,6 +446,30 @@ class RollingIngestSpec extends SparkSpec {
     assert(eff.collect().toSet == want.collect().toSet)
   }
 
+  test("dedupIndexIngest: a batch with keepers starts no count job for the static ANN side") {
+    // only the routed IVF-PQ side feeds a census, so only it may count the
+    // appended rows; the static hyperplane side gets no count job
+    implicit val sc = spark.sqlContext
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    def text(i: Long) = s"job count doc $i on topic${i % 7} with token u$i"
+    val root = Files.createTempDirectory("graft_ddi_jobs").toString
+    val in = MemoryStream[(Long, String, Seq[Float])]
+    val q = RollingIngest.dedupIndexIngest(
+      in.toDF().toDF("doc_id", "text", "embedding"), root + "/dedup", root + "/ann") {
+      (n, _) => n.collect(): Unit
+    }
+    val jobs = try {
+      in.addData((0L until 10L).map(i => (i, text(i), vec(i.toInt))))
+      q.processAllAvailable()
+      org.apache.spark.graftspec.JobCount(spark.sparkContext) {
+        in.addData((10L until 20L).map(i => (i, text(i), vec(i.toInt))))
+        q.processAllAvailable()
+      }._2
+    } finally q.stop()
+    // local[4]: 35 jobs; 37 while the static side still counted its rows
+    assert(jobs <= 35, s"a keeper batch ran $jobs jobs")
+  }
+
   test("dedupIndexIngest: routed ANN side writes cell-partitioned deltas of keepers only") {
     implicit val sc = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

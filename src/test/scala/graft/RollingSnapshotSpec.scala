@@ -151,6 +151,71 @@ class RollingSnapshotSpec extends SparkSpec {
       "snapshot codes must equal the pinned-books encode of the pin-time corpus")
   }
 
+  test("after unpinning, the next commit reclaims the outdated books; fsck reports them until then") {
+    implicit val sc = spark.sqlContext
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val dir = Files.createTempDirectory("graft_snap_unpin").toString + "/store"
+    val seed = (0L until 40L).map(i => (i, vec(i.toInt)))
+    val (c0, b0) = Similarity.ivfPqTrain(seed.toDF("vec_id", "embedding"))
+    val steps = (0 until 4).map(s =>
+      (s * 60L until (s + 1) * 60L).map(i => (i, vec(i.toInt))))
+    val retrains = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Long)]
+    val in = MemoryStream[(Long, Seq[Float])]
+    val q = RollingIngest.ivfPqIngestRouted(
+      in.toDF().toDF("vec_id", "embedding"), dir, c0, b0,
+      retrainGridSteps = 1,
+      onRetrain = (o, n, cz) => retrains += ((o, n, cz))) { (_, _) => () }
+    def findings(name: String) =
+      RollingIngest.fsckStore(spark, dir).filter(_._2 == name)
+    try {
+      steps.zipWithIndex.foreach { case (b, i) =>
+        in.addData(b); q.processAllAvailable()
+        if (i == 0) RollingIngest.pinSnapshot(spark, dir, "pre-retrain")
+      }
+      assert(retrains.size == 1, "harness must cross exactly one retrain")
+      assert(elNames(dir).contains("books-1"), "the pin must retain the bootstrap books")
+      assert(findings("books-1") == Seq(("info", "books-1",
+        "superseded but retained by a pin")))
+      assert(RollingIngest.unpinSnapshot(spark, dir, "pre-retrain"))
+      assert(findings("books-1") == Seq(("info", "books-1",
+        "superseded and unpinned; reclaimable by any commit or vacuumStore")))
+      // one more small batch: no retrain fires, so only the commit sweeps
+      in.addData((240L until 245L).map(i => (i, vec(i.toInt))))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(retrains.size == 1, "the last batch must not retrain (else the sweep is the retrain's)")
+    val books = elNames(dir).filter(_.startsWith("books"))
+    assert(books.size == 1 && !books.contains("books-1"),
+      s"the commit must reclaim the unpinned outdated books, disk has ${elNames(dir)}")
+    assert(RollingIngest.fsckStore(spark, dir).isEmpty)
+  }
+
+  test("fsck reports an unpinned outdated tier marker as reclaimable; the next commit sweeps it") {
+    implicit val sc = spark.sqlContext
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val dir = Files.createTempDirectory("graft_fsck_tier").toString + "/store"
+    def text(i: Long) = s"tier doc $i on topic${i % 5} with token u$i"
+    val in = MemoryStream[(Long, String)]
+    val q = RollingIngest.dedupIngest(in.toDF().toDF("doc_id", "text"),
+      dir, compactEvery = 2) { (_, _) => () }
+    def feed(ids: Seq[Long]): Unit = {
+      in.addData(ids.map(i => (i, text(i)))); q.processAllAvailable()
+    }
+    try {
+      (0 until 3).foreach(b => feed(b * 10L until (b + 1) * 10L))
+      assert(elNames(dir) == Set("base1", "d2"), elNames(dir))
+      // two narrow-tier markers at or below the base: tier0 is outdated
+      Seq(false).toDF("wide").write.parquet(s"$dir/tier0")
+      Seq(false).toDF("wide").write.parquet(s"$dir/tier1")
+      val found = RollingIngest.fsckStore(spark, dir)
+      assert(found == Seq(("info", "tier0",
+        "superseded and unpinned; reclaimable by any commit or vacuumStore")), found)
+      feed(30L until 40L)
+    } finally q.stop()
+    assert(elNames(dir) == Set("base1", "d2", "d3", "tier1"), elNames(dir))
+    assert(RollingIngest.fsckStore(spark, dir).isEmpty)
+  }
+
   test("components: snapshot labels are pin-time labels; later merges and ledger folds stay out") {
     implicit val sc = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

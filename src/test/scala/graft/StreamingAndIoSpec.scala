@@ -46,6 +46,18 @@ class StreamingAndIoSpec extends SparkSpec {
     assert(calls == 3)
   }
 
+  test("withRetry does not retry an interrupt: it propagates with no sleep") {
+    var calls = 0
+    val delays = scala.collection.mutable.ArrayBuffer.empty[Long]
+    intercept[InterruptedException] {
+      Connectors.withRetry(maxRetries = 5, baseDelayMs = 1000, sleep = delays += _) { () =>
+        calls += 1; throw new InterruptedException("stop")
+      }
+    }
+    assert(calls == 1)
+    assert(delays.isEmpty)
+  }
+
   test("probePages enriches with accessibility; F12 extensions always fail") {
     val urls = Seq("https://x.com/portfolio", "https://x.com/report.pdf").toDF("url")
     val out = Connectors.probePages(urls, "url").collect()
