@@ -10,7 +10,12 @@ import org.apache.spark.sql.SparkSession
   *    [[Tables.tsUsSql]] is only a reinterpretation under UTC;
   *  - UI off;
   *  - [[graft.plans.GraftExtensions]] (native rewrites, session broadcast
-  *    reuse, injected functions);
+  *    reuse, injected functions), which also sets
+  *    `spark.sql.codegen.cache.maxEntries` = 1000,
+  *    `spark.sql.artifact.isolation.enabled` = false and
+  *    `spark.sql.codegen.useIdInClassName` = false on the context
+  *    ([[graft.plans.GraftExtensions.SparkSettings]]: each generated class
+  *    is compiled once per JVM);
   *  - WARN logging.
   * `conf` adds caller-specific settings (the test suite's warehouse dir). */
 object Session {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.graftbridge.ContextBridge
 import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** Optimizer rule: rewrite the declarative dot product
@@ -53,12 +54,27 @@ object RewriteDotProduct extends Rule[LogicalPlan] {
     }
 }
 
-/** Session extensions: SQL-callable native functions + the rewrite rule.
-  * Install with `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`
-  * or `SparkSession.builder().withExtensions(new GraftExtensions)`.
+/** Session extensions: SQL-callable native functions, the rewrite rule,
+  * the asof-join strategy, session broadcast reuse, and the Spark settings
+  * of [[GraftExtensions.SparkSettings]] (generated classes compiled once per
+  * JVM).
+  *
+  * Two install routes:
+  *  - `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`, as
+  *    [[graft.Session]] and perfbench do. Spark applies the extension after
+  *    it has started the SparkContext and before it builds the session's SQL
+  *    conf, so `apply` adds the settings to the live context's conf, except
+  *    those the caller configured.
+  *  - `SparkSession.builder().withExtensions(new GraftExtensions)`. The
+  *    builder runs `apply` at the start of `getOrCreate`, before it starts
+  *    a context, so the session gets the functions and rules but not the
+  *    settings (unless a context was already running); set them with
+  *    `.config` on that route. `apply` neither creates a context nor
+  *    throws there.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ContextBridge.setIfMissing(GraftExtensions.SparkSettings)
     ext.injectFunction((
       FunctionIdentifier("graft_dot_q"),
       new ExpressionInfo(classOf[DotProductQ].getName, "graft_dot_q"),
@@ -110,4 +126,33 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => RewriteDotProduct)
     ext.injectQueryStagePrepRule(SessionBroadcastReuseRule)
   }
+}
+
+object GraftExtensions {
+  /** Spark settings a session gets from its extensions, so that each
+    * generated class is compiled once per JVM rather than on every pass:
+    *  - `spark.sql.codegen.cache.maxEntries` (static; default 100). Spark
+    *    keys `CodeGenerator`'s cache by (context class loader, source), and
+    *    in `local[n]` a stage takes one key on the driver (its method-size
+    *    check) and one on the task threads. A warm relational pass over
+    *    perfbench's 11 queries needs about 300 keys and an ingest pass
+    *    about 250, so at 100 entries the LRU evicted every class each pass.
+    *  - `spark.sql.artifact.isolation.enabled` (internal; default true).
+    *    With it on, every SQL execution tags its tasks with the session's
+    *    UUID and the executor builds one class loader per UUID; each
+    *    `writeStream.start()` clones the session, so every stream start
+    *    recompiled the executor-side classes. The engine adds no session
+    *    artifacts (jars, files), so isolation buys it nothing.
+    *  - `spark.sql.codegen.useIdInClassName` (internal; default true). The
+    *    whole-stage codegen stage id is then part of each generated class's
+    *    name, hence of its source and cache key. AQE numbers stages in the
+    *    order it plans them, which varies when two branches read one store
+    *    at once (`a1_consensus`): the same classes then recompile under
+    *    swapped ids. Off, the class is `GeneratedIterator` whatever its
+    *    stage (the id stays in the generated code's comment).
+    */
+  val SparkSettings: Map[String, String] = Map(
+    "spark.sql.codegen.cache.maxEntries" -> "1000",
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    "spark.sql.codegen.useIdInClassName" -> "false")
 }

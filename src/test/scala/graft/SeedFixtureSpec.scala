@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.SeedPipeline
+import graft.streaming.StreamingSeed
 import org.apache.spark.sql.Row
 
 /** Hermetic seed-pipeline coverage: `readLogs → members → peFirms →
@@ -15,7 +16,8 @@ import org.apache.spark.sql.Row
   *  5. AIC member page: Eucalypt (PE), a later Alpha duplicate, Fjord (PE
   *     outside Australia), Gum Tree ("private equity", null Company).
   * Expected rows were derived by hand and cross-checked in DuckDB
-  * (first occurrence per FullName in line order wins). */
+  * (first occurrence per FullName in line order wins). The streaming seed
+  * path (`StreamingSeed.runToMemory`) is checked against the same rows. */
 class SeedFixtureSpec extends SparkSpec {
   private lazy val logs = SeedPipeline.readLogs(spark,
     getClass.getResource("/seed/aic_responses_fixture.jsonl").getPath)
@@ -27,14 +29,26 @@ class SeedFixtureSpec extends SparkSpec {
       "Gum Tree Equity"))
   }
 
+  private val seedRows = Set(
+    ("Alpha Capital Partners", "https://alphacap.example.au"),
+    ("Coral Equity", "https://coral.example.au"),
+    ("Eucalypt Growth Partners", "https://eucalypt.example.au"),
+    ("Gum Tree Equity", "https://gumtree.example.au"))
+
   test("seed projection: both member-type spellings, Australia only, first duplicate wins") {
     val got = SeedPipeline.seedProjection(SeedPipeline.peFirms(logs)).collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
-    assert(got == Set(
-      ("Alpha Capital Partners", "https://alphacap.example.au"),
-      ("Coral Equity", "https://coral.example.au"),
-      ("Eucalypt Growth Partners", "https://eucalypt.example.au"),
-      ("Gum Tree Equity", "https://gumtree.example.au")))
+    assert(got == seedRows)
+  }
+
+  test("streaming seed: runToMemory over the fixture directory yields the seed projection's rows") {
+    val q = StreamingSeed.runToMemory(spark, getClass.getResource("/seed").getPath,
+      "seed_stream_fixture")
+    try {
+      val got = spark.table("seed_stream_fixture").collect()
+        .map(r => (r.getString(0), r.getString(1))).toSeq
+      assert(got.sorted == seedRows.toSeq.sorted) // one row per firm
+    } finally q.stop()
   }
 
   test("detailed projection: the 7 columns of the expected rows, null Company kept") {
