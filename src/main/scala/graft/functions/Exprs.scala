@@ -51,9 +51,6 @@ object Exprs {
   /** Regex variant — identical semantics in DuckDB for the oracle. */
   def urlDomain(c: Column): Column =
     regexp_replace(lower(regexp_extract(c, "https?://([^/?#]+)", 1)), "^www\\.", "")
-  /** Native variant using Spark's parse_url (codegen'd). */
-  def urlDomainNative(c: Column): Column =
-    regexp_replace(lower(parse_url(c, lit("HOST"))), "^www\\.", "")
 
   // ---- X3/X4: year extraction (founded_year.py:79-91) ----
   def extractYears(c: Column): Column =
@@ -73,21 +70,6 @@ object Exprs {
   // ---- F7: year range (founded_year.py:83,91) ----
   def yearInRange(y: Column, curYear: Int = PinnedCurrentYear): Column =
     y.between(1800, curYear)
-
-  // ---- X6: candidate-URL construction (step1_attempt1.py:42-53,
-  // step1_attempt2.py:44-53) ----
-  def joinUrl(base: Column, sub: Column): Column =
-    concat(regexp_replace(base, "/+$", ""), lit("/"), regexp_replace(sub, "^/+", ""))
-  def domainOf(url: Column): Column =
-    regexp_extract(url, "https?://(www\\.)?([^/?#]+)", 2)
-
-  // ---- X10: logo-url coalesce over union-typed field (step3_attempt1.py:77-84)
-  def logoUrl(logoStr: Column, logoUrlField: Column, logoIdField: Column): Column =
-    coalesce(logoUrlField, logoIdField, logoStr)
-
-  // ---- X11: string-or-list normalization (step3_attempt1.py:209-210) ----
-  def asArray(c: Column): Column =
-    when(c.isNull, array().cast("array<string>")).otherwise(c)
 
   // ---- X12: @type normalization with whitelist preference
   // (step3_attempt1.py:211-214) ----
@@ -218,19 +200,8 @@ object Exprs {
   // ---- F12: bad content type by extension (helper_functions.py:91-94) ----
   def badContentUrl(url: Column): Column = url.rlike(BadContentTypeRe)
 
-  // ---- X21: token-overlap card match (step3_attempt1.py:258-260) ----
-  def tokensOverlap(clsTokens: Column, stepTokens: Column): Column =
-    arrays_overlap(clsTokens, stepTokens)
-
   // ---- X17: dynamic key lookup — value whose key matches a pattern
   // (founded_year.py:72-74 iterates keys containing "found") ----
   def foundedValue(m: Column, keyPattern: String = "(?i)found"): Column =
     get(map_values(map_filter(m, (k, _) => k.rlike(keyPattern))), lit(0))
-
-  // ---- helpers for exact numeric parity with the DuckDB oracle ----
-  /** Exact decimal sum cast back to double: decimal addition is
-    * order-independent, so Spark and DuckDB produce bit-identical doubles
-    * regardless of partitioning/shuffle order (SURVEY.md §7.3). */
-  def dsum(c: Column, scale: Int = 2): Column =
-    sum(c.cast(s"decimal(18,$scale)")).cast("double")
 }

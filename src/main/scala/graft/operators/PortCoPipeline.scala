@@ -150,9 +150,6 @@ object PortCoPipeline {
       .when(raw.isNotNull, array(raw))
       .otherwise(array().cast("array<string>"))
 
-  def typesOf(node: Column): Column =
-    typesFromRaw(get_json_object(node, "$['@type']"))
-
   /** X10: logo union type (raw json value) — object with url/@id, or bare
     * string. */
   def logoFromRaw(raw: Column): Column =
@@ -161,17 +158,11 @@ object PortCoPipeline {
       get_json_object(raw, "$['@id']"),
       when(!raw.startsWith("{"), raw))
 
-  def logoOf(node: Column): Column =
-    logoFromRaw(get_json_object(node, "$.logo"))
-
   /** X11: sameAs string-or-list (raw json value) -> array<string>. */
   def sameAsFromRaw(raw: Column): Column =
     when(raw.startsWith("["), from_json(raw, ArrayType(StringType)))
       .when(raw.isNotNull, array(raw))
       .otherwise(array().cast("array<string>"))
-
-  def sameAsOf(node: Column): Column =
-    sameAsFromRaw(get_json_object(node, "$.sameAs"))
 
   /** Entities per firm after F8 (type gate), F10 (non-empty name), F9
     * (self-exclusion) — step3_attempt1.py:364-382.

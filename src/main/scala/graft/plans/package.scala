@@ -60,10 +60,6 @@ package object plans {
   def dotQNative(a: Column, b: Column): Column =
     ColumnBridge.column(DotProductQ(expr(a), expr(b)))
 
-  /** Fused double dot product over `array<float>` embeddings. */
-  def dotFNative(a: Column, b: Column): Column =
-    ColumnBridge.column(DotProductF(expr(a), expr(b)))
-
   /** One-pass n-bit SimHash over a shingle-id array. */
   def simhashSig(wids: Column, seedsA: Seq[Long], seedsB: Seq[Long], p: Long): Column =
     ColumnBridge.column(SimHashSig(expr(wids), seedsA, seedsB, p))

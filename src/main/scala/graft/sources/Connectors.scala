@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.functions._
 
-/** I/O connector layer (SURVEY.md §2.1 S4–S7): the reference's
+/** I/O connector layer (SURVEY.md §2.1 S6): the reference's
   * side-effectful acquisition steps modeled as pluggable per-partition
   * functions, kept OUT of the oracle-checked query set.
   *
@@ -72,39 +72,5 @@ object Connectors {
         () => prober.probe(u)))
     }.toDF("probe_url", "accessible", "final_url")
     df.join(probed, df(urlCol) === col("probe_url"), "left").drop("probe_url")
-  }
-
-  /** S4 page fetch: pluggable fetcher with the same mapPartitions shape.
-    * Production: an HTTP client per partition; here: deterministic fake
-    * HTML derived from the URL (clearly a stub — zero egress). */
-  trait PageFetcher extends Serializable {
-    def fetch(url: String): String
-  }
-
-  object StubFetcher extends PageFetcher {
-    def fetch(url: String): String =
-      s"""<html><body><div class="portfolio card"><a href="$url/investments/item">x</a></div></body></html>"""
-  }
-
-  def fetchPages(df: DataFrame, urlCol: String,
-                 fetcher: PageFetcher = StubFetcher): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val urls = df.select(col(urlCol)).distinct().as[String]
-    val fetched = urls.mapPartitions { it =>
-      it.map(u => (u, fetcher.fetch(u)))
-    }.toDF("fetch_url", "html")
-    df.join(fetched, df(urlCol) === col("fetch_url"), "left").drop("fetch_url")
-  }
-
-  /** S5 search lookup modeled as a table: (query, rank, link) — the
-    * reference's google_search returns ranked links (helper_functions.py:
-    * 14-78). Deterministic stand-in generates the rank structure. */
-  def searchResults(df: DataFrame, queryCol: String, numResults: Int = 10): DataFrame = {
-    df.select(col(queryCol).as("query")).distinct()
-      .select(col("query"), explode(sequence(lit(1), lit(numResults))).as("rank"))
-      .withColumn("link",
-        concat(lit("https://result-"), col("rank"), lit("."),
-          regexp_replace(lower(col("query")), "[^a-z0-9]+", "-"), lit(".example.com")))
   }
 }

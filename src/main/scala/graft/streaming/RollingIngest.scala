@@ -12,7 +12,9 @@ import org.apache.spark.sql.types.StructType
   * the incremental batch-vs-store entry points — the shape a continuously
   * crawled 100 TB corpus actually runs, for BOTH incremental families
   * (ANN neighbors over vectors, simhash near-dup pairs over documents).
-  * Each micro-batch
+  * Every stream runs the one [[loop]] (empty batches skipped, the history
+  * of every store the batch writes guarded at batch start), and each band
+  * store's part of a micro-batch is the one [[storeStep]], which
   *
   *   1. sketches ONCE (the persisted batch band relation serves the probe
   *      and the store append);
@@ -128,12 +130,15 @@ object RollingIngest {
     val entries = if (!fs.exists(path)) Seq.empty else fs.listStatus(path).toSeq
     val dirNames = entries.filter(_.isDirectory).map(_.getPath.getName)
       .filterNot(_.startsWith("."))
-    Listing(
-      dirNames.flatMap(n => parseEl(n).map { case (k, v) => El(k, v, s"$storeDir/$n") })
-        .sortBy(_.v),
+    Listing(elsOf(storeDir, dirNames),
       entries.map(_.getPath.getName).filter(_.startsWith(".tmp_")),
       dirNames.filter(parseEl(_).isEmpty))
   }
+
+  /** The store elements among `names` under `storeDir`, oldest first. */
+  private def elsOf(storeDir: String, names: Seq[String]): Seq[El] =
+    names.flatMap(n => parseEl(n).map { case (k, v) => El(k, v, s"$storeDir/$n") })
+      .sortBy(_.v)
 
   private def delete(spark: SparkSession, path: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -211,9 +216,9 @@ object RollingIngest {
       .select(schema.fields.toSeq.map(f => col(f.name)): _*)
   }
 
-  /** Supersede resolution over an EXPLICIT element set (one optional base
-    * dir + delta dirs with their versions) — the shared core of the live
-    * [[storeView]] and the pinned [[snapshotView]].
+  /** Supersede resolution over the base and live deltas of `l` below
+    * `upTo` — a store [[listing]] or a pin manifest — the shared core of
+    * the live [[storeView]] and the pinned [[snapshotView]].
     *
     * Deltas are read UNFILTERED: supersede winners and the base anti-join
     * id set must see EVERY delta row. Route columns can be pure functions
@@ -225,15 +230,14 @@ object RollingIngest {
     * The corpus-sized base keeps the pruned read (partition pruning at
     * rest): any stale base row is removed by the unfiltered-id anti-join
     * regardless of which partitions were scanned. */
-  private def resolveView(spark: SparkSession, baseDir: Option[String],
-                          deltas: Seq[(Long, String)], schema: StructType,
-                          idCol: String,
+  private def resolveView(spark: SparkSession, l: Listing, upTo: Long,
+                          schema: StructType, idCol: String,
                           routeFilter: Option[Column]): Option[DataFrame] = {
     val filt = (df: DataFrame) => routeFilter.map(df.filter).getOrElse(df)
-    val deltaAll = deltas
-      .map { case (v, p) => readBands(spark, p, schema).withColumn("__b", lit(v)) }
+    val deltaAll = l.live("d", upTo)
+      .map(e => readBands(spark, e.path, schema).withColumn("__b", lit(e.v)))
       .reduceOption(_ unionByName _)
-    (baseDir.map(b => filt(readBands(spark, b, schema))), deltaAll) match {
+    (l.base(upTo).map(b => filt(readBands(spark, b.path, schema))), deltaAll) match {
       case (None, None)       => None
       case (Some(base), None) => Some(base)
       case (None, Some(d))    => Some(filt(resolveDeltas(d, idCol, schema)))
@@ -258,11 +262,8 @@ object RollingIngest {
   private[graft] def storeView(spark: SparkSession, storeDir: String,
                                schema: StructType, idCol: String,
                                upTo: Long = Long.MaxValue,
-                               routeFilter: Option[Column] = None): Option[DataFrame] = {
-    val l = listing(spark, storeDir)
-    resolveView(spark, l.base(upTo).map(_.path),
-      l.live("d", upTo).map(e => (e.v, e.path)), schema, idCol, routeFilter)
-  }
+                               routeFilter: Option[Column] = None): Option[DataFrame] =
+    resolveView(spark, listing(spark, storeDir), upTo, schema, idCol, routeFilter)
 
   /** Deterministic one-row-per-id pick: min xxhash64 over every column.
     * Order-independent, so a checkpoint replay of a batch holding
@@ -361,14 +362,8 @@ object RollingIngest {
   /** Element-dir names retained by any pin manifest under `storeDir` —
     * the set every sweep spares. One small-file read per manifest, once
     * per commit: metadata-cheap at any store size. */
-  private def pinnedNames(spark: SparkSession, storeDir: String): Set[String] = {
-    val pins = pinsPath(storeDir)
-    val fs = pins.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(pins)) Set.empty
-    else fs.listStatus(pins).toSeq
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("."))
-      .flatMap(s => readManifestFile(fs, s.getPath)).toSet
-  }
+  private def pinnedNames(spark: SparkSession, storeDir: String): Set[String] =
+    listSnapshots(spark, storeDir).flatMap(_._2).toSet
 
   private def readManifestFile(fs: org.apache.hadoop.fs.FileSystem,
                                p: org.apache.hadoop.fs.Path): Seq[String] = {
@@ -468,18 +463,13 @@ object RollingIngest {
     * is the one failure mode a reproducibility feature must not have. */
   def snapshotView(spark: SparkSession, storeDir: String, name: String,
                    schema: StructType, idCol: String,
-                   routeFilter: Option[Column] = None): Option[DataFrame] = {
-    val els = manifestEls(spark, storeDir, name)
-    val baseOpt = els.filter(_._1 == "base").map(_._2).maxOption
-      .map(v => s"$storeDir/base$v")
-    val deltas = els.filter(_._1 == "d")
-      .map { case (_, v) => (v, s"$storeDir/d$v") }.sortBy(_._1)
-    resolveView(spark, baseOpt, deltas, schema, idCol, routeFilter)
-  }
+                   routeFilter: Option[Column] = None): Option[DataFrame] =
+    resolveView(spark, manifestListing(spark, storeDir, name), Long.MaxValue,
+      schema, idCol, routeFilter)
 
-  /** Manifest elements as (kind, version), existence-checked. */
-  private def manifestEls(spark: SparkSession, storeDir: String,
-                          name: String): Seq[(String, Long)] = {
+  /** The manifest's elements, existence-checked, as a [[Listing]]. */
+  private def manifestListing(spark: SparkSession, storeDir: String,
+                              name: String): Listing = {
     val names = readManifest(spark, storeDir, name)
     val sp = new org.apache.hadoop.fs.Path(storeDir)
     val fs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -489,7 +479,7 @@ object RollingIngest {
       s"snapshot '$name' of $storeDir references missing elements " +
         s"[${missing.mkString(",")}] — the store was modified outside " +
         "the pin contract; the snapshot is NOT reproducible")
-    names.flatMap(parseEl)
+    Listing(elsOf(storeDir, names), Nil, Nil)
   }
 
   /** [[snapshotView]] for a rolling dedup store, with the band schema
@@ -498,20 +488,10 @@ object RollingIngest {
     * the snapshot name. */
   def snapshotDedupView(spark: SparkSession, storeDir: String,
                         name: String): Option[DataFrame] = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField}
-    val els = manifestEls(spark, storeDir, name)
-    val newest = els.filter(e => e._1 == "base" || e._1 == "d")
-      .maxByOption(_._2)
-    newest.flatMap { case (kind, v) =>
-      val wide = ParquetSchema.of(spark, s"$storeDir/$kind$v")
-        .fieldNames.contains("sig_hi")
-      val emptyDocs = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row],
-        StructType(Seq(StructField("doc_id", LongType),
-          StructField("text", StringType))))
-      val schema = (if (wide) Dedup.simhash128Bands(emptyDocs)
-                    else Dedup.simhash64Bands(emptyDocs)).schema
-      snapshotView(spark, storeDir, name, schema, "doc_id")
+    val l = manifestListing(spark, storeDir, name)
+    (l.of("base") ++ l.of("d")).maxByOption(_.v).flatMap { e =>
+      val wide = ParquetSchema.of(spark, e.path).fieldNames.contains("sig_hi")
+      resolveView(spark, l, Long.MaxValue, dedupBandSchema(spark, wide), "doc_id", None)
     }
   }
 
@@ -521,11 +501,9 @@ object RollingIngest {
     * into the snapshot). */
   def snapshotComponentLabels(spark: SparkSession, storeDir: String,
                               name: String): Option[DataFrame] = {
-    val els = manifestEls(spark, storeDir, name)
-    val ledger = ledgerOf(spark, els.filter(_._1 == "m").map(_._2).sorted
-      .map(v => s"$storeDir/m$v"))
-    snapshotView(spark, storeDir, name, labelSchema, "node")
-      .map(resolveLabels(_, ledger))
+    val l = manifestListing(spark, storeDir, name)
+    resolveView(spark, l, Long.MaxValue, labelSchema, "node", None)
+      .map(resolveLabels(_, ledgerOf(spark, l.of("m").map(_.path))))
   }
 
   /** Lineage between two pins of the same store: one row per id whose
@@ -687,54 +665,83 @@ object RollingIngest {
       _ => ())
 
   /** The store batch `id` probes: the effective store before the batch,
-    * or `empty` when it holds nothing. Routed stores pre-filter the store
-    * read to the batch's own route values — the partition-pruning
-    * counterpart of the routed band join (only the batch's cells are
-    * scanned). The per-column isin is a SUPERSET of the batch's route
-    * tuples, so it is purely a pruning optimization; the band join
-    * enforces exact equality. */
-  private def probedStore(spark: SparkSession, storeDir: String,
-                          schema: StructType, idCol: String,
-                          partitionCols: Seq[String], bands: DataFrame, id: Long)
-                         (empty: => DataFrame): DataFrame = {
+    * or `empty` (which also gives the band schema) when it holds nothing.
+    * Routed stores pre-filter the store read to the batch's own route
+    * values — the partition-pruning counterpart of the routed band join
+    * (only the batch's cells are scanned). The per-column isin is a
+    * SUPERSET of the batch's route tuples, so it is purely a pruning
+    * optimization; the band join enforces exact equality. */
+  private def probedStore(spark: SparkSession, storeDir: String, idCol: String,
+                          partitionCols: Seq[String], bands: DataFrame, id: Long,
+                          empty: DataFrame): DataFrame = {
     val routeFilter = if (partitionCols.isEmpty) None else {
       val vals = bands.select(partitionCols.map(col): _*).distinct().collect()
       Some(partitionCols.zipWithIndex.map { case (c, i) =>
         col(c).isin(vals.map(_.get(i)).distinct.toSeq: _*)
       }.reduce(_ && _))
     }
-    storeView(spark, storeDir, schema, idCol, upTo = id, routeFilter).getOrElse(empty)
+    storeView(spark, storeDir, empty.schema, idCol, upTo = id, routeFilter).getOrElse(empty)
   }
 
-  /** The single-store micro-batch loop; `sideFor(spark, id)` resolves the
-    * batch's [[Side]] AT BATCH START — static sides ignore (spark, id);
-    * the dedup side re-reads the store-owned tier marker so an offline
-    * [[migrateDedupTier]] takes effect at the next batch boundary, and
-    * the routed IVF-PQ side moves its books ([[RoutedBooks]]). */
-  private def ingest(src: DataFrame, storeDir: String, idCol: String,
-                     sideFor: (SparkSession, Long) => Side,
-                     partitionCols: Seq[String], compactEvery: Int,
-                     configure: DataStreamWriter[Row] => DataStreamWriter[Row])
-                    (sink: (DataFrame, Long) => Unit): StreamingQuery = {
+  /** The one micro-batch loop: refuses `compactEvery` < 1, skips empty
+    * batches, and runs [[guardHistory]] over `storeDirs` — every store the
+    * batch writes — at batch START, before any side is resolved or
+    * anything is written. `batch(b, id)` does the rest. */
+  private def loop(src: DataFrame, storeDirs: Seq[String], compactEvery: Int,
+                   configure: DataStreamWriter[Row] => DataStreamWriter[Row])
+                  (batch: (DataFrame, Long) => Unit): StreamingQuery = {
     require(compactEvery >= 1, "compactEvery must be >= 1")
     configure(src.writeStream.foreachBatch { (b: DataFrame, id: Long) =>
       if (!b.isEmpty) {
-        val spark = b.sparkSession
-        guardHistory(spark, storeDir, id)
-        val (bandsOf, probe, append) = sideFor(spark, id)
-        val schema = bandsOf(b.limit(0)).schema
-        val bands = bandsOf(dedupDeterministic(b, idCol)).persist()
-        try {
-          val store = probedStore(spark, storeDir, schema, idCol,
-            partitionCols, bands, id)(bandsOf(b.limit(0)))
-          sink(probe(store, bands), id)
-          append(bands)
-          commitDelta(spark, storeDir, bands, schema, idCol,
-            partitionCols, compactEvery, id)
-        } finally bands.unpersist()
+        storeDirs.foreach(guardHistory(b.sparkSession, _, id))
+        batch(b, id)
       }
     }).start()
   }
+
+  /** One band store's step of batch `id`: sketch `rows` ONCE (persisted
+    * until `use` returns), probe the store before the batch, and hand
+    * `use` the result rows, the bands and the commit — `append` plus
+    * [[commitDelta]] of the bands or of the subset the caller keeps. The
+    * band schema and the empty store are `bandsOf` over `rows.limit(0)`. */
+  private def storeStep[A](storeDir: String, idCol: String, side: Side,
+                           partitionCols: Seq[String], compactEvery: Int,
+                           id: Long, rows: DataFrame)
+                          (use: (DataFrame, DataFrame, DataFrame => Unit) => A): A = {
+    val spark = rows.sparkSession
+    val (bandsOf, probe, append) = side
+    val empty = bandsOf(rows.limit(0))
+    val bands = bandsOf(rows).persist()
+    try {
+      val store = probedStore(spark, storeDir, idCol, partitionCols, bands, id, empty)
+      use(probe(store, bands), bands, { kept =>
+        append(kept)
+        commitDelta(spark, storeDir, kept, empty.schema, idCol,
+          partitionCols, compactEvery, id)
+      })
+    } finally bands.unpersist()
+  }
+
+  /** The single-store stream: one [[storeStep]] per batch, its result
+    * sunk before the commit. `sideFor(spark, id)` resolves the batch's
+    * [[Side]] AT BATCH START — static sides ignore (spark, id); the dedup
+    * side re-reads the store-owned tier marker so an offline
+    * [[migrateDedupTier]] takes effect at the next batch boundary, and the
+    * routed IVF-PQ side moves its books ([[RoutedBooks]]). `sinkStores`
+    * are the stores `sink` itself writes; the loop guards them too. */
+  private def ingest(src: DataFrame, storeDir: String, idCol: String,
+                     sideFor: (SparkSession, Long) => Side,
+                     partitionCols: Seq[String], compactEvery: Int,
+                     configure: DataStreamWriter[Row] => DataStreamWriter[Row],
+                     sinkStores: Seq[String] = Nil)
+                    (sink: (DataFrame, Long) => Unit): StreamingQuery =
+    loop(src, storeDir +: sinkStores, compactEvery, configure) { (b, id) =>
+      storeStep(storeDir, idCol, sideFor(b.sparkSession, id), partitionCols,
+          compactEvery, id, dedupDeterministic(b, idCol)) { (result, bands, commit) =>
+        sink(result, id)
+        commit(bands)
+      }
+    }
 
   /** Rolling ANN ingest over a streaming relation of
     * (vec_id[, routeCols…], embedding). `sink` receives each batch's
@@ -1011,21 +1018,31 @@ object RollingIngest {
                   compactEvery: Int = 8, wideSig: Boolean = false,
                   configure: DataStreamWriter[Row] => DataStreamWriter[Row] = identity)
                  (sink: (DataFrame, Long) => Unit): StreamingQuery =
-    ingest(docs, storeDir, "doc_id",
-      (spark, _) => {
-        val (bandsOf, sigCols) = dedupTier(resolvedTier(spark, storeDir, wideSig))
-        (bandsOf, (store, bands) =>
-          Dedup.simhashNearDupIncrementalBands(store, bands, maxHamming, sigCols),
-          _ => ())
-      },
+    ingest(docs, storeDir, "doc_id", dedupSide(storeDir, wideSig, maxHamming),
       Nil, compactEvery, configure)(sink)
 
-  /** The band tier of the rolling dedup stores: sketch function +
-    * signature columns, narrow (64-bit sigs, 4 x 16-bit bands) or wide
-    * (128-bit sigs, 4 x 32-bit bands). */
-  private def dedupTier(wideSig: Boolean): (DataFrame => DataFrame, Seq[String]) =
-    if (wideSig) (Dedup.simhash128Bands, Seq("sig_lo", "sig_hi"))
-    else (Dedup.simhash64Bands, Seq("simhash"))
+  /** The one rolling dedup [[Side]], resolved at batch start: the store's
+    * own tier ([[resolvedTier]]) sketches narrow (64-bit sigs, 4 x 16-bit
+    * bands) or wide (128-bit sigs, 4 x 32-bit bands) bands, and the probe
+    * is the simhash near-dup join at `maxHamming` on its signature columns. */
+  private def dedupSide(storeDir: String, wideSig: Boolean, maxHamming: Int)
+                       (spark: SparkSession, id: Long): Side = {
+    val (bandsOf, sigCols) =
+      if (resolvedTier(spark, storeDir, wideSig))
+        (Dedup.simhash128Bands _, Seq("sig_lo", "sig_hi"))
+      else (Dedup.simhash64Bands _, Seq("simhash"))
+    (bandsOf, (store, bands) =>
+      Dedup.simhashNearDupIncrementalBands(store, bands, maxHamming, sigCols),
+      _ => ())
+  }
+
+  /** The band schema of the wide or the narrow dedup tier. */
+  private def dedupBandSchema(spark: SparkSession, wide: Boolean): StructType = {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField}
+    val docs = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))))
+    (if (wide) Dedup.simhash128Bands(docs) else Dedup.simhash64Bands(docs)).schema
+  }
 
   // ---- store-owned tier + offline narrow→wide migration (VERDICT r16 #1:
   // the one rolling-store parameter that previously had NO store-local
@@ -1109,7 +1126,6 @@ object RollingIngest {
     * collisions are noise, not near-duplicates. */
   def migrateDedupTier(spark: SparkSession, storeDir: String,
                        corpus: DataFrame): Unit = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField}
     val l = listing(spark, storeDir)
     val newest = (l.of("base") ++ l.of("d")).maxByOption(_.v)
     require(newest.nonEmpty, s"$storeDir: empty store — bootstrap the stream " +
@@ -1118,11 +1134,7 @@ object RollingIngest {
       s"$storeDir: store is already on the wide tier")
     val v = newest.get.v
     writeTier(spark, storeDir, v, wide = true)
-    val narrowSchema = Dedup.simhash64Bands(spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row],
-      StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))).schema
-    val ids = storeView(spark, storeDir, narrowSchema, "doc_id").get
+    val ids = storeView(spark, storeDir, dedupBandSchema(spark, wide = false), "doc_id").get
       .select("doc_id").distinct()
     val docs = dedupDeterministic(corpus.select("doc_id", "text"), "doc_id")
       .join(ids, "doc_id")
@@ -1194,8 +1206,7 @@ object RollingIngest {
       if (wideBands) Similarity.hyperBandsWide else Similarity.hyperBands
     composedIngest(docs, dedupStoreDir, annStoreDir, maxHamming, compactEvery,
       wideSig, configure, dedupSink,
-      vecColsOf = df => df.select(
-        (col("doc_id").as("vec_id") +: routeCols.map(col)) :+ col("embedding"): _*),
+      vecRouteCols = routeCols,
       annSideFor = (_, _) => (vecBandsOf,
         (store, bands) =>
           Similarity.lshAnnIncrementalBands(store, bands, k, routeCols),
@@ -1227,7 +1238,6 @@ object RollingIngest {
                         (sink: (DataFrame, Long) => Unit): StreamingQuery =
     composedIngest(docs, dedupStoreDir, annStoreDir, maxHamming, compactEvery,
       wideSig, configure, dedupSink,
-      vecColsOf = df => df.select(col("doc_id").as("vec_id"), col("embedding")),
       annSideFor = (_, _) => pqSide(coarse, books, k),
       annPartitionCols = Seq("cell"))(sink)
 
@@ -1256,22 +1266,23 @@ object RollingIngest {
       retrainGridSteps, onRetrain)
     composedIngest(docs, dedupStoreDir, annStoreDir, maxHamming, compactEvery,
       wideSig, configure, dedupSink,
-      vecColsOf = df => df.select(col("doc_id").as("vec_id"), col("embedding")),
       annSideFor = rb.side(_, _, k),
       annPartitionCols = Seq("cell"))(sink)
   }
 
-  /** The shared composed micro-batch loop behind [[dedupIndexIngest]] and
-    * [[dedupIndexIngestPq]]: simhash-gate the batch against the keeper
-    * dedup store, then run the parameterized ANN side (row encoder, probe,
-    * partition layout) over the keepers only. See [[dedupIndexIngest]]
-    * for the full step-by-step and semantic contract. */
+  /** The composed stream behind [[dedupIndexIngest]] and its variants: two
+    * [[storeStep]]s per batch. The dedup step ([[dedupIngest]]'s
+    * [[dedupSide]]) gates the batch against the keeper store; the ANN step
+    * runs the parameterized ANN side (row encoder, probe, partition
+    * layout) over the keepers only. See [[dedupIndexIngest]] for the full
+    * step-by-step and semantic contract. */
   private def composedIngest(docs: DataFrame, dedupStoreDir: String,
                              annStoreDir: String, maxHamming: Int,
                              compactEvery: Int, wideSig: Boolean,
                              configure: DataStreamWriter[Row] => DataStreamWriter[Row],
                              dedupSink: (DataFrame, Long) => Unit,
-                             vecColsOf: DataFrame => DataFrame,
+                             // the ANN rows: (doc_id as vec_id, these, embedding)
+                             vecRouteCols: Seq[String] = Nil,
                              // resolved PER BATCH so a routed/retraining
                              // ANN side can move its books at batch
                              // boundaries; static sides ignore (spark, id)
@@ -1285,80 +1296,64 @@ object RollingIngest {
                              // replay rebuilds identical decisions/deltas.
                              preGate: (SparkSession, Long, DataFrame) => DataFrame =
                                (_, _, b) => b)
-                            (sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    require(compactEvery >= 1, "compactEvery must be >= 1")
-    configure(docs.writeStream.foreachBatch { (b: DataFrame, id: Long) =>
-      if (!b.isEmpty) {
-        val spark = b.sparkSession
-        guardHistory(spark, dedupStoreDir, id)
-        guardHistory(spark, annStoreDir, id)
-        // tier re-resolved AT BATCH START (store marker wins over the
-        // bootstrap parameter) — an offline migrateDedupTier between
-        // batches takes effect here, same cadence as the ANN side's books
-        val (docBandsOf, sigCols) =
-          dedupTier(resolvedTier(spark, dedupStoreDir, wideSig))
-        val (annBandsOf, annProbe, annAppend) = annSideFor(spark, id)
-        def docCols(df: DataFrame) = df.select("doc_id", "text")
-        val dedupSchema = docBandsOf(docCols(b.limit(0))).schema
-        val annSchema = annBandsOf(vecColsOf(b.limit(0))).schema
-        val batch0 = dedupDeterministic(b, "doc_id").persist()
-        val batch = preGate(spark, id, batch0).persist()
-        val docBands = docBandsOf(docCols(batch)).persist()
+                            (sink: (DataFrame, Long) => Unit): StreamingQuery =
+    loop(docs, Seq(dedupStoreDir, annStoreDir), compactEvery, configure) { (b, id) =>
+      val spark = b.sparkSession
+      // both sides resolved AT BATCH START: the dedup store's tier (an
+      // offline migrateDedupTier between batches takes effect here), the
+      // ANN side's books
+      val docSide = dedupSide(dedupStoreDir, wideSig, maxHamming)(spark, id)
+      val annSide = annSideFor(spark, id)
+      val batch0 = dedupDeterministic(b, "doc_id").persist()
+      val batch = preGate(spark, id, batch0).persist()
+      try storeStep(dedupStoreDir, "doc_id", docSide, Nil, compactEvery, id,
+          batch.select("doc_id", "text")) { (pairs, docBands, commitDedup) =>
+        // Components over the batch-touching pairs; labels is at most
+        // edge-set-sized (∝ batch), so every derived relation below
+        // broadcasts. Store members need NO store scan: every pair
+        // endpoint is either a batch doc or a LIVE store doc (the probe
+        // already anti-joined superseded store rows), so the labeled
+        // vertices that are not batch ids ARE the store members — the
+        // keeper decision never touches the corpus-sized store again.
+        val labels = Dedup.labelPropagation(pairs.select("doc_a", "doc_b"))
+        val batchIds = batch.select("doc_id")
+        val storeMin = labels.join(broadcast(batchIds), Seq("doc_id"), "left_anti")
+          .groupBy("cluster_id").agg(min("doc_id").as("store_keeper"))
+        val batchMin = labels.join(broadcast(batchIds), "doc_id")
+          .groupBy("cluster_id").agg(min("doc_id").as("batch_keeper"))
+        // first-seen wins: a store member's min id is the keeper when
+        // present; otherwise the component's min batch id
+        val decisions = batchIds
+          .join(broadcast(labels), Seq("doc_id"), "left")
+          .join(broadcast(storeMin), Seq("cluster_id"), "left")
+          .join(broadcast(batchMin), Seq("cluster_id"), "left")
+          .select(col("doc_id"),
+            coalesce(col("store_keeper"), col("batch_keeper"),
+              col("doc_id")).as("keeper_id"))
+          .select(col("doc_id"), col("keeper_id"),
+            (col("keeper_id") === col("doc_id")).as("kept"))
+          .persist()
         try {
-          val dedupStore = probedStore(spark, dedupStoreDir, dedupSchema, "doc_id",
-            Nil, docBands, id)(docBandsOf(docCols(b.limit(0))))
-          val pairs = Dedup.simhashNearDupIncrementalBands(
-            dedupStore, docBands, maxHamming, sigCols)
-          // Components over the batch-touching pairs; labels is at most
-          // edge-set-sized (∝ batch), so every derived relation below
-          // broadcasts. Store members need NO store scan: every pair
-          // endpoint is either a batch doc or a LIVE store doc (the probe
-          // already anti-joined superseded store rows), so the labeled
-          // vertices that are not batch ids ARE the store members — the
-          // keeper decision never touches the corpus-sized store again.
-          val labels = Dedup.labelPropagation(pairs.select("doc_a", "doc_b"))
-          val batchIds = batch.select("doc_id")
-          val storeMin = labels.join(broadcast(batchIds), Seq("doc_id"), "left_anti")
-            .groupBy("cluster_id").agg(min("doc_id").as("store_keeper"))
-          val batchMin = labels.join(broadcast(batchIds), "doc_id")
-            .groupBy("cluster_id").agg(min("doc_id").as("batch_keeper"))
-          // first-seen wins: a store member's min id is the keeper when
-          // present; otherwise the component's min batch id
-          val decisions = batchIds
-            .join(broadcast(labels), Seq("doc_id"), "left")
-            .join(broadcast(storeMin), Seq("cluster_id"), "left")
-            .join(broadcast(batchMin), Seq("cluster_id"), "left")
-            .select(col("doc_id"),
-              coalesce(col("store_keeper"), col("batch_keeper"),
-                col("doc_id")).as("keeper_id"))
-            .select(col("doc_id"), col("keeper_id"),
-              (col("keeper_id") === col("doc_id")).as("kept"))
-            .persist()
           val keptIds = decisions.filter(col("kept")).select("doc_id")
-          val keeperBands = docBands.join(broadcast(keptIds), Seq("doc_id"))
-          val vecBands = annBandsOf(
-            vecColsOf(batch.join(broadcast(keptIds), Seq("doc_id")))).persist()
-          try {
-            dedupSink(decisions, id)
-            val annStore = probedStore(spark, annStoreDir, annSchema, "vec_id",
-              annPartitionCols, vecBands, id)(annBandsOf(vecColsOf(b.limit(0))))
-            sink(annProbe(annStore, vecBands), id)
-            // A batch may dedup away ENTIRELY; an empty partitioned write
-            // leaves a schema-less directory readBands cannot open, so a
-            // keeper-less batch writes no deltas at all — storeView and
-            // guardHistory tolerate version gaps by construction.
-            if (!keptIds.isEmpty) {
-              commitDelta(spark, dedupStoreDir, keeperBands, dedupSchema,
-                "doc_id", Nil, compactEvery, id)
-              annAppend(vecBands)
-              commitDelta(spark, annStoreDir, vecBands, annSchema,
-                "vec_id", annPartitionCols, compactEvery, id)
-            }
-          } finally { vecBands.unpersist(); decisions.unpersist() }
-        } finally { docBands.unpersist(); batch.unpersist(); batch0.unpersist() }
-      }
-    }).start()
-  }
+          dedupSink(decisions, id)
+          storeStep(annStoreDir, "vec_id", annSide, annPartitionCols, compactEvery, id,
+              batch.join(broadcast(keptIds), Seq("doc_id")).select(
+                (col("doc_id").as("vec_id") +: vecRouteCols.map(col)) :+ col("embedding"): _*)) {
+            (neighbors, vecBands, commitAnn) =>
+              sink(neighbors, id)
+              // A batch may dedup away ENTIRELY; an empty partitioned
+              // write leaves a schema-less directory readBands cannot
+              // open, so a keeper-less batch writes no deltas at all —
+              // storeView and guardHistory tolerate version gaps by
+              // construction.
+              if (!keptIds.isEmpty) {
+                commitDedup(docBands.join(broadcast(keptIds), Seq("doc_id")))
+                commitAnn(vecBands)
+              }
+          }
+        } finally decisions.unpersist()
+      } finally { batch.unpersist(); batch0.unpersist() }
+    }
 
   /** The FULL curation funnel as one rolling micro-batch loop — the shape
     * a production LLM-data crawl actually runs. Per batch of
@@ -1461,7 +1456,6 @@ object RollingIngest {
     val query = try {
       composedIngest(docs, dedupStoreDir, annStoreDir, maxHamming,
         compactEvery, wideSig, configure, dedupSink,
-        vecColsOf = df => df.select(col("doc_id").as("vec_id"), col("embedding")),
         annSideFor = (_, _) => pqSide(coarse, books, k),
         annPartitionCols = Seq("cell"), preGate = gate)(sink)
     } catch {
@@ -1518,6 +1512,23 @@ object RollingIngest {
     x
   }
 
+  /** Min-union over a parent map: the larger root goes under the smaller,
+    * so a component's representative stays its min id (the
+    * [[Dedup.labelPropagation]] convention). */
+  private def union(parent: scala.collection.mutable.Map[Long, Long])
+                   (a: Long, b: Long): Unit = {
+    val (ra, rb) = (pathFind(parent)(a), pathFind(parent)(b))
+    if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+  }
+
+  /** The ledger's renames folded into one union-find parent map. */
+  private def ledgerParent(ledger: Seq[(Long, Long)])
+      : scala.collection.mutable.Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    ledger.foreach { case (f, t) => union(parent)(f, t) }
+    parent
+  }
+
   /** Resolve a label DataFrame through the ledger: entries become a
     * broadcast rename map; labels outside it pass through. */
   private def resolveLabels(labels: DataFrame,
@@ -1526,11 +1537,7 @@ object RollingIngest {
     else {
       val spark = labels.sparkSession
       import spark.implicits._
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      ledger.foreach { case (f, t) =>
-        val (rf, rt) = (pathFind(parent)(f), pathFind(parent)(t))
-        if (rf != rt) parent(math.max(rf, rt)) = math.min(rf, rt)
-      }
+      val parent = ledgerParent(ledger)
       val renames = ledger.map(_._1).distinct
         .map(l => (l, pathFind(parent)(l))).toDF("label", "__canon")
       labels.join(broadcast(renames), Seq("label"), "left")
@@ -1581,26 +1588,22 @@ object RollingIngest {
   def componentsIngest(edges: DataFrame, storeDir: String,
                        compactEvery: Int = 8,
                        configure: DataStreamWriter[Row] => DataStreamWriter[Row] = identity)
-                      (sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    require(compactEvery >= 1, "compactEvery must be >= 1")
-    configure(edges.writeStream.foreachBatch { (b0: DataFrame, id: Long) =>
-      if (!b0.isEmpty)
-        sink(componentsBatch(b0.sparkSession, storeDir, b0, compactEvery, id), id)
-    }).start()
-  }
+                      (sink: (DataFrame, Long) => Unit): StreamingQuery =
+    loop(edges, Seq(storeDir), compactEvery, configure) { (b, id) =>
+      sink(componentsBatch(b.sparkSession, storeDir, b, compactEvery, id), id)
+    }
 
   /** One components micro-batch against `storeDir`: update the label store
     * with `edges0` (first two columns = endpoints) under batch `id`,
     * commit, and return the touched nodes' resolved (node, label) rows —
     * the per-batch core of [[componentsIngest]], shared by the composed
-    * [[dedupClustersIngest]]. Empty edge sets short-circuit to an empty
-    * result with no store write (version gaps are tolerated by
-    * construction). */
+    * [[dedupClustersIngest]], whose [[loop]] has already guarded
+    * `storeDir`. Empty edge sets short-circuit to an empty result with no
+    * store write (version gaps are tolerated by construction). */
   private def componentsBatch(spark: SparkSession, storeDir: String,
                               edges0: DataFrame, compactEvery: Int,
                               id: Long): DataFrame = {
     import spark.implicits._
-    guardHistory(spark, storeDir, id)
     val cols = edges0.columns
     val eb = edges0.select(
         org.apache.spark.sql.functions.least(col(cols(0)), col(cols(1))).cast("long").as("u"),
@@ -1615,31 +1618,22 @@ object RollingIngest {
       else {
         val touched = eb.select(col("u").as("node"))
           .union(eb.select(col("v").as("node"))).distinct()
+        // read once: the m<id> element written below is not below id, so
+        // the compaction's resolution reads this same ledger
         val ledger = mergeLedger(spark, storeDir, upTo = id)
         // prior labels of touched nodes: batch-sized result, resolved
         // through the ledger on the driver
-        val parent = scala.collection.mutable.Map.empty[Long, Long]
-        ledger.foreach { case (f, t) =>
-          val (rf, rt) = (pathFind(parent)(f), pathFind(parent)(t))
-          if (rf != rt) parent(math.max(rf, rt)) = math.min(rf, rt)
-        }
+        val parent = ledgerParent(ledger)
         val prior: Map[Long, Long] =
           storeView(spark, storeDir, labelSchema, "node", upTo = id)
             .map(_.join(broadcast(touched), Seq("node"))
               .collect().map(r => r.getLong(0) -> pathFind(parent)(r.getLong(1)))
               .toMap)
             .getOrElse(Map.empty)
-        // driver union-find: batch edges + prior-label bindings.
-        // min-union (attach the larger root under the smaller) keeps the
-        // component representative = min id, the labelPropagation
-        // convention.
+        // driver union-find (min-union): batch edges + prior-label bindings
         val uf = scala.collection.mutable.Map.empty[Long, Long]
-        def union(a: Long, b: Long): Unit = {
-          val (ra, rb) = (pathFind(uf)(a), pathFind(uf)(b))
-          if (ra != rb) uf(math.max(ra, rb)) = math.min(ra, rb)
-        }
-        ePairs.foreach { case (a, b) => union(a, b) }
-        prior.foreach { case (n, l) => union(n, l) }
+        ePairs.foreach { case (a, b) => union(uf)(a, b) }
+        prior.foreach { case (n, l) => union(uf)(n, l) }
         val touchedIds = prior.keySet ++ ePairs.flatMap(p => Seq(p._1, p._2))
         val newLabels = touchedIds.toSeq.sorted
           .map(n => (n, pathFind(uf)(n)))
@@ -1658,7 +1652,7 @@ object RollingIngest {
         commit(spark, storeDir, labelsDf, Nil, compactEvery, id)(resolveLabels(
           storeView(spark, storeDir, labelSchema, "node", upTo = id)
             .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], labelSchema)),
-          mergeLedger(spark, storeDir, upTo = id)))
+          ledger))
         labelsDf
       }
     } finally eb.unpersist()
@@ -1672,17 +1666,18 @@ object RollingIngest {
     * whose cluster membership this batch created or changed; a doc with
     * no near-dup edge is its own implicit singleton (the
     * [[Dedup.labelPropagation]] convention — stores hold edge endpoints
-    * only). Both stores commit under the SAME batch id; a crash between
-    * the two commits replays the batch, which rebuilds both elements
-    * deterministically (pairs are a pure function of store< id + batch,
-    * and [[guardHistory]] admits the half-written replay shape). */
+    * only). Both stores commit under the SAME batch id, and the [[loop]]
+    * guards both at batch start; a crash between the two commits replays
+    * the batch, which rebuilds both elements deterministically (pairs are
+    * a pure function of store< id + batch, and [[guardHistory]] admits the
+    * half-written replay shape). */
   def dedupClustersIngest(docs: DataFrame, dedupStoreDir: String,
                           ccStoreDir: String, maxHamming: Int = 3,
                           compactEvery: Int = 8, wideSig: Boolean = false,
                           configure: DataStreamWriter[Row] => DataStreamWriter[Row] = identity)
                          (sink: (DataFrame, Long) => Unit): StreamingQuery =
-    dedupIngest(docs, dedupStoreDir, maxHamming, compactEvery, wideSig,
-      configure) { (pairs, id) =>
+    ingest(docs, dedupStoreDir, "doc_id", dedupSide(dedupStoreDir, wideSig, maxHamming),
+      Nil, compactEvery, configure, sinkStores = Seq(ccStoreDir)) { (pairs, id) =>
       val spark = pairs.sparkSession
       val p = pairs.select("doc_a", "doc_b").persist()
       try sink(componentsBatch(spark, ccStoreDir, p, compactEvery, id), id)
