@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 /** The confidence rubric as CONFIG, not scattered constants — the
   * externalization the reference planned but never shipped
   * (`configs/confidence_rubric.yaml` is a 0-byte stub; the values live
@@ -9,9 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * step2_attempt1.py:44-58). Every scoring expression reads THIS module
   * ([[Exprs.matchScore]], [[Exprs.classRank]],
   * graft.operators.PortCoPipeline.portcos), so retuning a weight or
-  * threshold is a one-site change, and [[asDF]] renders the active rubric
-  * as a literal DataFrame for introspection, audit dumps, or joining
-  * scores against their weights.
+  * threshold is a one-site change.
   *
   * Values are the reference's own; changing any of them intentionally
   * diverges from the oracle-checked semantics.
@@ -41,24 +37,4 @@ object Rubric {
     Seq("portfolio"), Seq("investment"), Seq("company"))
   val RankSetsC: Seq[Seq[String]] = Seq(
     Seq("item"), Seq("box"), Seq("card"), Seq("logo"))
-
-  /** The active rubric as a literal DataFrame:
-    * (kind, key, words, weight) — weights for the score terms and rank
-    * thresholds, word-sets for the class ranks. */
-  def asDF(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val weights = Seq(
-      ("score_weight", "type_whitelist", Seq.empty[String], TypeWhitelistWeight),
-      ("score_weight", "url_domain_match", Seq.empty[String], UrlDomainWeight),
-      ("score_weight", "logo_domain_match", Seq.empty[String], LogoDomainWeight),
-      ("score_weight", "name_match", Seq.empty[String], NameMatchWeight),
-      ("score_weight", "inside_card", Seq.empty[String], InsideCardWeight),
-      ("rank_threshold", "A", Seq.empty[String], RankA),
-      ("rank_threshold", "B", Seq.empty[String], RankB))
-    val sets =
-      RankSetsA.map(ws => ("class_rank_set", "A", ws, 0.0)) ++
-        RankSetsB.map(ws => ("class_rank_set", "B", ws, 0.0)) ++
-        RankSetsC.map(ws => ("class_rank_set", "C", ws, 0.0))
-    (weights ++ sets).toDF("kind", "key", "words", "weight")
-  }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.QueryDef
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,8 +15,7 @@ import org.apache.spark.sql.functions._
   * |q| ≈ 5.8e7 at unit-ish norm, so k·Σdiff² ≤ 64·(1.2e8)² ≈ 9e17 < 2⁶³)
   * and the argmin is bit-identical on any engine. The UPDATE step's
   * oracle-facing output stays integral too (per-dim Σq serialized, mean
-  * derivable); only the typed [[centroids]] API divides, and the Lloyd
-  * loop re-quantizes those doubles straight back to the long domain.
+  * derivable); only the typed [[centroids]] API divides.
   *
   * Scale shape — the canonical distributed k-means iteration:
   *   - centroids live on the DRIVER (k·dim longs — k-means' defining
@@ -27,8 +26,9 @@ import org.apache.spark.sql.functions._
   *     aggregates — map-side combine collapses every partition to at most
   *     k·dim narrow rows regardless of row count, the classic
   *     reduceByKey-style centroid update;
-  *   - a full Lloyd loop is this step iterated driver-side, re-literalizing
-  *     k·dim numbers per round — the only driver traffic an iteration pays.
+  *   - a full Lloyd loop (`Similarity`'s book training) iterates this step
+  *     driver-side, re-literalizing k·dim numbers per round — the only
+  *     driver traffic an iteration pays.
   */
 object Clustering {
 
@@ -141,42 +141,6 @@ object Clustering {
     * consumes. Same plan as [[simKmeansUpdate]] minus the serialization. */
   def centroids(spark: SparkSession, d: String): DataFrame =
     centroidsOf(assigned(spark, d))
-
-  /** Full Lloyd loop: `iters` assignment+update rounds. Between rounds the
-    * k updated centroids are RE-QUANTIZED to the exact long domain
-    * (round(mean·1e8)) and re-literalized — the k·dim-number driver
-    * round-trip is the ONLY cross-round traffic, which is why Lloyd scales
-    * to any corpus: per-round cost is one zero-shuffle assignment
-    * projection plus one (cluster, dim) partial-agg shuffle, and the
-    * driver never holds anything data-sized. Clusters that lose every
-    * member simply drop out of later rounds (the standard k-means
-    * degeneracy; a production run re-seeds them). */
-  def lloyd(spark: SparkSession, d: String, iters: Int): DataFrame = {
-    require(iters >= 1)
-    var cents = seedCentroids(spark, d)
-    var out: DataFrame = null
-    for (_ <- 1 to iters) {
-      out = centroidsOf(assignedTo(spark, d, cents))
-      cents = quantizedCentroids(out)
-    }
-    out
-  }
-
-  /** Total within-cluster squared distance (quantized units) against the
-    * given centroids — the k-means objective, for convergence monitoring
-    * and the spec's non-increase pin. */
-  def objective(spark: SparkSession, d: String,
-                cents: Seq[(Int, Array[Long])]): Long =
-    assignedTo(spark, d, cents)
-      .agg(sum(col("dist"))).collect()(0).getLong(0)
-
-  /** Centroids as (id, quantized-long vector) pairs, the literal form
-    * [[lloyd]] feeds back into assignment. */
-  def quantizedCentroids(c: DataFrame): Seq[(Int, Array[Long])] =
-    c.select(col("cluster_id"), col("centroid")).collect()
-      .map(r => (r.getLong(0).toInt,
-        r.getSeq[Double](1).map(x => math.round(x * Scale)).toArray))
-      .sortBy(_._1).toSeq
 
   /** SemDeDup (Abbas et al.): semantic deduplication = cluster the
     * embedding space, prune near-duplicates WITHIN each cluster only.

@@ -345,7 +345,7 @@ object CoreQueries {
     // sized stores on g at ONE width, so the two per-action candidate
     // joins line up IMR-to-IMR on the SAME hash partitioning: zero
     // exchanges at query time, exactly the bucketed-store shape the dedup
-    // band relations use (Dedup.writeSignatureStore). Build cost is
+    // band relations use (Dedup.minhashSigRelation). Build cost is
     // amortized session state, like j4's cust_geo dim; rows whose rarest
     // gram has no carrier at all on the other side are dropped at build
     // (freq 0 proves non-containment).

@@ -10,12 +10,10 @@ import org.apache.spark.sql.functions._
   * SimHash. First-class components of the engine (builder brief) layered on
   * the reference's dedup idioms (W1/W2/E3, SURVEY.md §2.5/§2.7).
   *
-  * Two shingle-id variants, both pure per-row expressions (no vocabulary
-  * join, no global ordering — the shape that scales to 100 TB):
-  *  - production path (`*Scalable`): ids from `xxhash64` (fastest, codegen).
-  *  - oracle-parity path (used by the declared queries): a positional
-  *    character-polynomial hash spelled out arithmetically so DuckDB
-  *    computes bit-identical ids with plain `ascii`/`substring` calls.
+  * Shingle ids are pure per-row expressions (no vocabulary join, no
+  * global ordering — the shape that scales to 100 TB): a positional
+  * character-polynomial hash spelled out arithmetically so DuckDB computes
+  * bit-identical ids with plain `ascii`/`substring` calls.
   */
 object Dedup {
 
@@ -77,22 +75,6 @@ object Dedup {
       .otherwise(array().cast("array<string>"))
   }
 
-  /** (doc_id, shingle) exploded, distinct per doc. */
-  def docShingles(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), explode(shinglesOf(col("text"))).as("shingle"))
-
-  // ---- production-scale shingle ids (no vocab, no global sort) ----
-  def shingleIdScalable(shingle: Column): Column = pmod(xxhash64(shingle), lit(P))
-
-  /** Production MinHash signatures: one narrow scan + one groupBy shuffle. */
-  def minhashScalable(docs: DataFrame): DataFrame = {
-    val dw = docShingles(docs).select(col("doc_id"), shingleIdScalable(col("shingle")).as("wid"))
-    val mins = As.zip(Bs).zipWithIndex.map { case ((a, b), i) =>
-      min((lit(a) * col("wid") + lit(b)) % lit(P)).as(s"mh$i")
-    }
-    dw.groupBy("doc_id").agg(mins.head, mins.tail: _*)
-  }
-
   // ---- oracle-parity shingle ids: positional char-polynomial hash ----
   /** Width of the hashed prefix; shingles agreeing on their first 24 chars
     * collide (acceptable for a sketch id). */
@@ -116,9 +98,6 @@ object Dedup {
       s"CAST(${Coef(i - 1)} AS BIGINT)*ascii(substring(rpad(shingle, $HashWidth, '@'), $i, 1))")
     s"(${terms.mkString(" + ")} + 31*length(shingle)) % $P"
   }
-
-  def docShingleIds(docs: DataFrame): DataFrame =
-    docShingles(docs).select(col("doc_id"), shingleIdChar(col("shingle")).as("wid"))
 
   // ---- word-hash shingle ids: hash each word once (12-char poly), combine
   // three word hashes per shingle — ~3x less string work than hashing the
@@ -200,23 +179,14 @@ object Dedup {
       .select(col("doc_id") +:
         (0 until As.length).map(i => element_at(col("mhsig"), i + 1).as(s"mh$i")): _*)
 
-  /** In-session MinHash signature store over the documents table of `d` —
-    * the Persisted twin of [[writeSignatureStore]]: every MinHash consumer
-    * (signatures, LSH buckets) reads ONE materialized sketch pass, which is
-    * the 100 TB shape (the sketch scan dominates; the store is
-    * ~16 bytes/doc). */
+  /** In-session MinHash signature store over the documents table of `d`:
+    * every MinHash consumer (signatures, LSH buckets) reads ONE
+    * materialized sketch pass, which is the 100 TB shape (the sketch scan
+    * dominates; the store is ~16 bytes/doc). */
   def minhashSigRelation(spark: org.apache.spark.sql.SparkSession, d: String): DataFrame =
     graft.Persisted.of(spark, s"$d#minhash_sigs") {
       minhashNativeDF(Tables.documents(spark, d))
     }
-
-  /** MinHash signature columns mh0..mh7 from (doc_id, wid). */
-  def minhashAgg(dw: DataFrame): DataFrame = {
-    val mins = As.zip(Bs).zipWithIndex.map { case ((a, b), i) =>
-      min((lit(a) * col("wid") + lit(b)) % lit(P)).as(s"mh$i")
-    }
-    dw.groupBy("doc_id").agg(mins.head, mins.tail: _*)
-  }
 
   /** Packed numeric band key (VERDICT r10 #7): with mh values in [0, P)
     * and P = 2^31-1, `mh_even * P + mh_odd` is a BIJECTIVE encoding into
@@ -751,7 +721,7 @@ object Dedup {
     * touching a NEW batch — (new x store) plus (new x new) — without
     * recomputing stored signatures. Store bands join against batch bands
     * only, so work scales with batch size, not corpus size: the production
-    * ingest shape (the banded twin of [[lshCandidatesIncremental]]).
+    * ingest shape.
     * `storeBands` is the persisted/written (doc_id, simhash, band_id,
     * band_val) relation of [[simhash64Bands]].
     *
@@ -820,49 +790,6 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
   }
 
-  /** Persist the per-doc MinHash signature table. At 100 TB the sketch pass
-    * is the expensive scan — storing (doc_id, mh0..7) once amortizes it
-    * across every later dedup run, and the table is ~16 bytes/doc. */
-  def writeSignatureStore(docs: DataFrame, path: String): Unit =
-    minhashNativeDF(docs).write.mode("overwrite").parquet(path)
-
-  def readSignatureStore(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    graft.ParquetSchema.read(spark, path)
-
-  /** Incremental LSH: candidate pairs touching a NEW batch of documents —
-    * (new x store) plus (new x new) — without recomputing stored sketches.
-    * Bands of the store are joined against bands of the batch only, so
-    * work scales with batch size, not corpus size. Same ingest contract as
-    * [[simhashNearDupIncremental]]: re-ingested ids supersede their store
-    * rows (ids read from the persisted batch signatures, no second source
-    * scan), the batch sketch runs once per call, and only the LATEST
-    * batch's relation stays cached — bounded state across a long ingest
-    * session. */
-  def lshCandidatesIncremental(storeSigs: DataFrame, newDocs: DataFrame): DataFrame = {
-    def bandsOf(sigs: DataFrame): DataFrame =
-      sigs.select(col("doc_id"), explode(array((0 until 4).map { bid =>
-        struct(lit(bid).as("band_id"), packedBandSig(bid).as("band_sig"))
-      }: _*)).as("band")).select(col("doc_id"), col("band.*"))
-    val spark = newDocs.sparkSession
-    val batchKey = "minhash_batch#" + newDocs.queryExecution.analyzed.semanticHash()
-    graft.Persisted.clearExcept(spark, "minhash_batch#", batchKey)
-    val newSigs = graft.Persisted.of(spark, batchKey) {
-      minhashNativeDF(newDocs)
-    }
-    val newBands = bandsOf(newSigs)
-    val liveStore = storeSigs.join(newSigs.select("doc_id"), Seq("doc_id"), "left_anti")
-    val allBands = bandsOf(liveStore).union(newBands)
-    // right side is always the new batch; canonicalize with least/greatest
-    // so store-new pairs survive regardless of id order
-    allBands.select(col("band_id"), col("band_sig"), col("doc_id").as("ida"))
-      .join(newBands.select(col("band_id"), col("band_sig"), col("doc_id").as("idb")),
-        Seq("band_id", "band_sig"))
-      .filter(col("ida") =!= col("idb"))
-      .select(least(col("ida"), col("idb")).as("doc_a"),
-        greatest(col("ida"), col("idb")).as("doc_b"))
-      .distinct()
-  }
-
   /** The transitive-closure / component-min tail every cluster oracle
     * shares: undirected edges off a pair relation, recursive reach,
     * min-label per vertex — ONE definition so the closure semantics the
@@ -886,9 +813,9 @@ object Dedup {
     * a dedup pipeline runs between candidate generation and canonical-doc
     * selection. Size-adaptive, like Spark's own broadcast threshold: an
     * edge set small enough to collect is solved with driver union-find
-    * (one job instead of one per propagation round); above the threshold
-    * it iterates distributed min-label propagation. Both paths produce
-    * identical labels (spec-checked).
+    * ([[UnionFind]]; one job instead of one per contraction round); above
+    * the threshold it runs distributed [[starContraction]]. Both paths
+    * produce identical labels (spec-checked).
     *
     * Driver-memory ceiling: the collect path materializes `driverMaxEdges`
     * (id, id) pairs plus a parent map over their vertices — at the default
@@ -900,128 +827,35 @@ object Dedup {
     * callers never choose a path explicitly, the single `count()` on the
     * (cached, reused) edge set decides. The above-gate strategy is
     * [[starContraction]] (O(log n) rounds regardless of component shape;
-    * VERDICT r15 #7 — the ≥10-round chain synthetic showed
-    * [[labelPropagationDistributed]]'s min-label rounds are O(diameter),
-    * which a crawl-frontier-shaped or linked-list-shaped edge set turns
-    * into thousands of shuffle rounds); min-label propagation stays
-    * available as the explicit diameter-bounded alternative and the
-    * three-way label-equality spec pins all paths identical. */
+    * VERDICT r15 #7 — the ≥10-round chain synthetic showed min-label
+    * propagation's rounds are O(diameter), which a crawl-frontier-shaped
+    * or linked-list-shaped edge set turns into thousands of shuffle
+    * rounds); the label-equality spec pins both paths identical. */
   def labelPropagation(edges: DataFrame, driverMaxEdges: Long = 1000000L): DataFrame = {
     val spark = edges.sparkSession
     val cached = edges.cache()
     if (cached.count() <= driverMaxEdges) {
       val pairs = cached.collect().map(r => (r.getLong(0), r.getLong(1)))
       cached.unpersist()
-      val parent = scala.collection.mutable.Map[Long, Long]()
-      // iterative path-halving: O(1) stack depth regardless of component
-      // shape (a recursive find with path compression can overflow the stack
-      // on a long chain whose edges arrive in unlucky order)
-      def find(x0: Long): Long = {
-        var x = x0
-        var p = parent.getOrElse(x, x)
-        while (p != x) {
-          val gp = parent.getOrElse(p, p)
-          parent(x) = gp
-          x = gp
-          p = parent.getOrElse(x, x)
-        }
-        x
-      }
-      pairs.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
+      val uf = new UnionFind
+      pairs.foreach { case (a, b) => uf.union(a, b) }
       val rows = pairs.flatMap(p => Seq(p._1, p._2)).distinct
-        .map(v => (v, find(v))).toSeq
+        .map(v => (v, uf.find(v))).toSeq
       import spark.implicits._
       rows.toDF("doc_id", "cluster_id")
     } else starContraction(cached)
   }
 
-  /** Rounds the most recent [[labelPropagationDistributed]] call took to
-    * converge (including the final no-change round) — a diagnostic the
-    * decade-point probe reads; the O(diameter) claim as a number. */
-  val lastDistributedRounds = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Distributed path: each vertex repeatedly takes the minimum label among
-    * itself and its neighbors until a fixpoint — O(component diameter)
-    * shuffle rounds. Each round's labels are rebased on their own RDD
-    * ([[graft.plans.materializeIter]]), NOT just cached: a cache truncates
-    * recomputation but not the LOGICAL plan, so round k's plan nests round
-    * k−1's executed AQE plan, and Spark's per-action plan-description
-    * stringification (SQL-execution events, UI on or off) walks the whole
-    * nesting — superlinear in round count. The 3-round corpus edge sets
-    * never showed it; the first ≥10-round run (2M-edge chain/star
-    * synthetic, the above-gate probe) spent ~30 minutes single-threaded in
-    * generateTreeString before the fix — the same disease the round-15 BPE
-    * loop had, in its iterative-relation shape. Round k−1's persisted
-    * snapshot is UNPERSISTED once round k's convergence count has
-    * materialized (ADVICE r15: the first localCheckpoint version leaked
-    * every round's corpus-sized snapshot until driver GC). Lineage is
-    * TRUNCATED per round — a lineage-preserving rebase was tried and died
-    * with StackOverflowError in task serialization at ~40 rounds (the
-    * recursion walks the full history); the fault-tolerance trade and the
-    * reliable-checkpointing alternative for cluster deployments are
-    * documented at [[graft.plans.materializeIter]]. */
-  def labelPropagationDistributed(edges0: DataFrame): DataFrame = {
-    // Positional contract, matching the driver union-find path's
-    // getLong(0)/getLong(1): callers pass any two-long-column edge list
-    // (ddSemdedup uses (va, vb)); binding by NAME here made the advertised
-    // fallback throw AnalysisException the first time an edge set crossed
-    // driverMaxEdges (ADVICE r10).
-    val edges = edges0.toDF("doc_a", "doc_b")
-    // symmetric edge list (a->b and b->a), vertices from the edge set
-    val sym = edges.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(edges.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .distinct().cache()
-    val (labels0, rdd0) = graft.plans.materializeIter(
-      sym.select(col("src").as("doc_id")).distinct()
-        .select(col("doc_id"), col("doc_id").as("cluster_id")))
-    var labels = labels0
-    var labelsRdd = rdd0
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0) {
-      rounds += 1
-      val neighborMin = sym
-        .join(labels.withColumnRenamed("doc_id", "dst")
-          .withColumnRenamed("cluster_id", "n_label"), "dst")
-        .groupBy(col("src").as("doc_id"))
-        .agg(min("n_label").as("n_min"))
-      // RDD rebase, not cache: constant plan depth across rounds (see
-      // scaladoc); the convergence count below is the round's action and
-      // fills the lazy persist
-      val (next, nextRdd) = graft.plans.materializeIter(
-        labels.join(neighborMin, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            least(col("cluster_id"), coalesce(col("n_min"), col("cluster_id"))).as("cluster_id")))
-      changed = next.join(labels.withColumnRenamed("cluster_id", "old"), "doc_id")
-        .filter(col("cluster_id") =!= col("old")).count()
-      // round k−1's snapshot is dead once `changed` has materialized —
-      // release it instead of accumulating O(rounds × |labels|) storage
-      labelsRdd.unpersist(blocking = false)
-      labels = next
-      labelsRdd = nextRdd
-    }
-    lastDistributedRounds.set(rounds)
-    sym.unpersist()
-    // the final labels stay persisted for the caller's consumption; the
-    // handle goes out of scope and the ContextCleaner reclaims it with the
-    // DataFrame, same lifetime as the localCheckpoint version's last round
-    labels
-  }
-
   /** Rounds the most recent [[starContraction]] call took to converge
     * (including the final no-change round) — the O(log n) claim as a
-    * number, read by the chain-synthetic probe next to
-    * [[lastDistributedRounds]]. */
+    * number, read by the chain-synthetic probe. */
   val lastStarRounds = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Connected components by LARGE-STAR/SMALL-STAR contraction (Kiveris,
     * Lattanzi, Mirrokni, Rastogi, Vassilvitskii — "Connected Components in
     * MapReduce and Beyond", SoCC'14): the above-gate strategy for
-    * CHAIN-SHAPED edge sets, where [[labelPropagationDistributed]]'s
-    * min-label rounds = O(component diameter) (the ≥10-round 2M-edge chain
+    * CHAIN-SHAPED edge sets, where min-label propagation's rounds =
+    * O(component diameter) (the ≥10-round 2M-edge chain
     * synthetic measured exactly that hazard; VERDICT r15 #7). Alternating
     * the two star operations contracts every component onto its minimum
     * vertex in O(log n) rounds REGARDLESS of diameter:
@@ -1050,7 +884,6 @@ object Dedup {
     * with the previous round unpersisted — the constant-plan-depth,
     * bounded-storage discipline every iterative relation here follows. */
   def starContraction(edges0: DataFrame): DataFrame = {
-    val spark = edges0.sparkSession
     val edges = edges0.toDF("doc_a", "doc_b")
     val verts = edges.select(col("doc_a").as("doc_id"))
       .union(edges.select(col("doc_b").as("doc_id"))).distinct().cache()
@@ -1618,4 +1451,33 @@ object Dedup {
     ddSimhashNearDup64, ddSimhashNearDup128, ddIncrementalPairs, ddDupClusters,
     ddFuzzyKeep, ddCrossDoc, ddCrossDocScrub, ddSpanRuns, ddSpanScrub,
     ddContainment, ddBoilerplate, ddEstEval)
+}
+
+/** Driver union-find over long ids, the one home of the path-halving find
+  * and the min-union that [[Dedup.labelPropagation]]'s driver path and the
+  * rolling components store share. Min-union puts the larger root under
+  * the smaller, so a component's representative is its min id — the
+  * "label = component min" convention every components spec checks. The
+  * find is iterative path halving: O(1) stack depth on any component shape
+  * (a recursive find with path compression overflows the stack on a long
+  * chain whose edges arrive in unlucky order). */
+private[graft] final class UnionFind {
+  private val parent = scala.collection.mutable.Map.empty[Long, Long]
+
+  def find(x0: Long): Long = {
+    var x = x0
+    var p = parent.getOrElse(x, x)
+    while (p != x) {
+      val gp = parent.getOrElse(p, p)
+      parent(x) = gp
+      x = gp
+      p = parent.getOrElse(x, x)
+    }
+    x
+  }
+
+  def union(a: Long, b: Long): Unit = {
+    val (ra, rb) = (find(a), find(b))
+    if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+  }
 }

@@ -330,12 +330,7 @@ object EventAnalytics {
     * which RANGE guarantees and which also makes the result
     * order-deterministic under equal timestamps (a ROWS frame would count
     * a nondeterministic subset of ties). One user-keyed shuffle + linear
-    * sweep. The STREAMING twin is real:
-    * [[graft.streaming.StreamingEvents.rateLimit]] keeps the per-user
-    * in-window timestamp ring in flatMapGroupsWithState state (evicted as
-    * the window slides) and reproduces the RANGE tie semantics by
-    * deciding each tie group together — spec-matched against the same
-    * brute-force reference across micro-batches. */
+    * sweep. */
   val waRateLimit = QueryDef("wa_rate_limit",
     """WITH t AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events)
       |SELECT event_id, user_id,

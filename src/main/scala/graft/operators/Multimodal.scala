@@ -1,9 +1,8 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing (builder brief): media as opaque `binary`
   * columns plus typed metadata, with decode/feature-extraction staged as
@@ -133,7 +132,7 @@ object Multimodal {
     * binary payload into per-frame rows with no shuffle — what a video
     * pipeline does between decode and per-frame featurization. Framing is
     * character-based in the oracle-checked query (both engines' substring
-    * is character-indexed; the byte-exact path is [[frameSampleBatch]]).
+    * is character-indexed).
     * Payload source resolves through [[frameSourceDocs]] (re-uploads
     * sample the leader's content). */
   val mmFrameSample = QueryDef("mm_frame_sample",
@@ -159,28 +158,6 @@ object Multimodal {
         col("fs").cast("long").as("frame_chars"),
         md5(encode(expr("substring(text, cast(frame_idx * fs + 1 as int), cast(fs as int))"),
           "UTF-8")).as("frame_md5"))
-  }
-
-  /** Byte-exact frame sampling as a per-partition batch stage (the shape a
-    * real codec integration uses; STUB framing = equal byte chunks from the
-    * stub metadata). Equality with the expression path on ASCII payloads is
-    * asserted by spec. */
-  def frameSampleBatch(docs: DataFrame, every: Int = 2): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id"), encode(col("text"), "UTF-8").as("media_bytes"))
-      .as[(Long, Array[Byte])].mapPartitions { it =>
-        it.flatMap { case (id, bytes) =>
-          val nFrames = decodeStub(bytes)._3
-          val fs = bytes.length / nFrames
-          if (fs == 0) Iterator.empty
-          else (0 until nFrames by every).iterator.map { i =>
-            val frame = java.util.Arrays.copyOfRange(bytes, i * fs, i * fs + fs)
-            val digest = java.security.MessageDigest.getInstance("MD5").digest(frame)
-            (id, i, fs.toLong, digest.map("%02x".format(_)).mkString)
-          }
-        }
-      }.toDF("doc_id", "frame_idx", "frame_chars", "frame_md5")
   }
 
   /** Resize planning: aspect-preserving scale of each media item to a max
@@ -211,34 +188,6 @@ object Multimodal {
         floor(col("h") * col("scale")).cast("int").as("out_h"),
         (floor(col("w") * col("scale")) * floor(col("h") * col("scale")) * 3L)
           .cast("long").as("out_bytes"))
-  }
-
-  /** Byte-level resize as a batch stage: decodes the REAL header dims, then
-    * allocates the out_w*out_h*3 RGB buffer a real resampler would fill
-    * (STUB fill: repeating source bytes — resampling kernels are the one
-    * part that stays faked without a codec). Buffer shapes are spec-checked
-    * against the expression plan above. */
-  def resizeBatch(docs: DataFrame, maxSide: Int = 224): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id"), col("n_chars"))
-      .as[(Long, Long)].mapPartitions { it =>
-        it.map { case (id, nc) =>
-          val bytes = mediaBytes(id, nc)
-          val (w, h) = MediaCodec.decode(bytes) match {
-            case Some((_, dw, dh)) => (dw, dh)
-            case None => val s = decodeStub(bytes); (s._1, s._2)
-          }
-          // same rounding as the expression side (Spark round = HALF_UP)
-          val scale = BigDecimal(maxSide.toDouble / math.max(w, h))
-            .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-          val (ow, oh) = (math.floor(w * scale).toInt, math.floor(h * scale).toInt)
-          val out = new Array[Byte](ow * oh * 3)
-          var i = 0
-          while (i < out.length && bytes.nonEmpty) { out(i) = bytes(i % bytes.length); i += 1 }
-          (id, ow, oh, out)
-        }
-      }.toDF("doc_id", "out_w", "out_h", "resized")
   }
 
   /** Perceptual average-hash over the REAL pixel raster — the image-dedup
@@ -635,16 +584,12 @@ object Multimodal {
     * formulas, runs the DCT as two joins against the embedded basis
     * matrix, and takes the median as ROW_NUMBER = 32 — any disagreement
     * in any pixel, cell, coefficient, or rank fails the driver hash. */
-  val mmPhash: QueryDef = {
-    val tRows = (for {
-      u <- 0 until 8; i <- 0 until 8
-    } yield s"($u, $i, ${MediaCodec.DctT(u)(i)})").mkString(", ")
+  val mmPhash: QueryDef =
     QueryDef("mm_phash",
       s"""WITH $phashCtes
         |SELECT doc_id, phash FROM ph""".stripMargin) { (spark, d) =>
       phashRelation(spark, d).select("doc_id", "phash")
     }
-  }
 
   /** The mm_phash oracle's DCT CTE chain (cell means, integer DCT against
     * the embedded basis, AC-median bits), ending with `ph(doc_id, phash)`.

@@ -21,8 +21,9 @@ object PortCoPipeline {
   // ---- single scan of the page corpus (VERDICT r5 #4) ----
 
   /** ONE pass over the page corpus computing BOTH per-page element arrays —
-    * the classed-element structs feeding [[cards]] and the ld+json script
-    * bodies feeding [[entities]] — shared via [[graft.Persisted]], so the
+    * the classed-element structs feeding [[cardsRelation]] and the
+    * ld+json script bodies feeding [[entities]] — shared via
+    * [[graft.Persisted]], so the
     * two relations are two explodes off the same materialized projection
     * instead of two independent scans of `html`. At 100 TB of HTML the scan
     * IS the pipeline cost; the join in [[scoredEntities]] previously paid
@@ -81,11 +82,9 @@ object PortCoPipeline {
     * and card-internal wrappers survive (a flat regex would truncate or
     * swallow them), and the class value is the scanner's own attribute
     * extraction — quote-style agnostic like the reference's
-    * soup.get("class") (ADVICE r5). */
-  def cards(pages: DataFrame): DataFrame =
-    cardsFromArtifacts(pageArtifacts(pages))
-
-  /** Persisted ENRICHED card relation: the explode + rank/blacklist filters
+    * soup.get("class") (ADVICE r5).
+    *
+    * Persisted ENRICHED card relation: the explode + rank/blacklist filters
     * + per-card signals (domains, X22 hint) materialized once per
     * (session, pages plan) — feature extraction is compute-once, the same
     * store design as the term/sketch relations. Consumers (scoring,

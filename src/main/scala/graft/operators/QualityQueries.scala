@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Data-quality / validation operators — the monitoring half of a
@@ -193,36 +192,6 @@ object QualityQueries {
           .cast("long").as("r2_ppm"),
         when(col("cov") > 0, 1L).when(col("cov") < 0, -1L).otherwise(0L)
           .as("sign"))
-  }
-
-  /** Production-speed twin of [[aggCorr]] (VERDICT r11 #7, the
-    * dotD-vs-dotQNative pattern): Spark's codegen'd double `corr` —
-    * one partial-agg'd scan of primitive doubles, no DECIMAL(38)
-    * accumulators — emitting the same (flag, n, r2_ppm, sign) shape.
-    * NOT oracle-declared (double moment sums are summation-order-
-    * dependent, the classic cross-engine mismatch); instead spec-pinned
-    * to the exact DECIMAL form within a ppm tolerance, which is the
-    * honest contract: the deployment runs this, the gate certifies the
-    * exact form it approximates. */
-  def corrDouble(spark: SparkSession, d: String): DataFrame = {
-    val t = Tables.lineitem(spark, d).select(col("l_returnflag").as("flag"),
-      round(col("l_quantity") * 100).cast("double").as("x"),
-      round(col("l_extendedprice") * 100).cast("double").as("y"))
-    // the SAME split-floor statistic as the exact form (the declared
-    // downward truncation bias included), with the n² factor cancelled:
-    // cov = n·Σxy − ΣxΣy = n²·covar_pop and vx = n²·var_pop, so
-    // f = |cov|·10⁶ div vx = floor(|covar_pop|·10⁶ / var_pop) — a plain
-    // corr()² would disagree with the declared query by the bias itself
-    t.groupBy("flag")
-      .agg(count(lit(1)).as("n"),
-        covar_pop(col("x"), col("y")).as("cv"),
-        var_pop(col("x")).as("vx"), var_pop(col("y")).as("vy"))
-      .filter(col("vx") > 0 && col("vy") > 0)
-      .select(col("flag"), col("n"),
-        floor(floor(abs(col("cv")) * 1e6 / col("vx")) *
-          floor(abs(col("cv")) * 1e6 / col("vy")) / 1e6)
-          .cast("long").as("r2_ppm"),
-        signum(col("cv")).cast("long").as("sign"))
   }
 
   /** Vocabulary coverage curve: the share of all token occurrences (in

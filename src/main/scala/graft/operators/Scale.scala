@@ -3,9 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Scale utilities: skew-salted joins and bucketed co-located joins — the
-  * knobs a 100 TB run needs when AQE's automatic skew handling isn't enough
-  * or when a join key is reused across many queries.
+/** Scale utilities: skew-salted joins and partition fan-out — the knobs a
+  * 100 TB run needs when AQE's automatic skew handling isn't enough.
   */
 object Scale {
 
@@ -46,14 +45,4 @@ object Scale {
     else if (key.isEmpty) df.repartition(width)
     else df.repartition(width, key: _*)
   }
-
-  /** Write a DataFrame bucketed+sorted by `key` as a managed table. Two
-    * tables bucketed the same way join WITHOUT a shuffle (co-located
-    * sort-merge join) — the 100 TB answer to repeated large-large joins on
-    * one key. */
-  def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(buckets, key).sortBy(key)
-      .format("parquet")
-      .saveAsTable(table)
 }

@@ -100,8 +100,4 @@ object SeedPipeline {
   def detailedProjection(firms: DataFrame): DataFrame =
     firms.select("FullName", "Website", "Phone", "Email",
       "Latitude", "Longitude", "LongLatAddress")
-
-  /** K1 CSV sink. */
-  def writeCsv(df: DataFrame, path: String): Unit =
-    df.coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
 }

@@ -43,8 +43,8 @@ object Similarity {
     * on is exact and order-independent, so Spark and DuckDB agree bit-for-bit.
     * round() is half-away-from-zero in both engines.
     *
-    * Deliberately the DECLARATIVE form: a native codegen'd twin exists
-    * (graft.plans.quantizeVec, equality spec-checked) but measured 2x
+    * Deliberately the DECLARATIVE form: a native codegen'd twin (one
+    * BigDecimal HALF_UP pass per element, equal to this form) measured 2x
     * SLOWER inside the cosine queries — the interpreted-fallback lambda
     * forces a materialization boundary (q computed once per row), while the
     * codegen-capable expression inlines into the fused consuming stage and
@@ -100,7 +100,7 @@ object Similarity {
     * PERSISTED once per session — every similarity query consumes this
     * relation on both join sides (probe + corpus), and at 100 TB the
     * quantize+norm pass is the expensive scan a vector store amortizes,
-    * exactly like the MinHash signature store (Dedup.writeSignatureStore). */
+    * exactly like the MinHash signature store ([[Dedup.minhashSigRelation]]). */
   def qnormRelation(spark: SparkSession, d: String): DataFrame =
     graft.Persisted.of(spark, s"$d#emb_qnorm") {
       Tables.embeddings(spark, d)
@@ -1181,7 +1181,7 @@ object Similarity {
     * seed = the k lowest-id vectors, assign (zero-shuffle literal-argmin
     * projection), per-codeword integer mean floor((Σq + n·OFF)/n) − OFF.
     * The driver holds (and round-trips) only k·dim longs — the
-    * [[Clustering.lloyd]] contract — shared by the PQ subspace books AND
+    * [[Clustering]] contract — shared by the PQ subspace books AND
     * the IVF coarse quantizer (round 13: the coarse cells are trained by
     * the same update, not borrowed from the fixture's label column).
     * Empty codewords drop out of the book (deterministic k-means

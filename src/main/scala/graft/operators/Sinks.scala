@@ -3,15 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
-/** Sinks K1–K4 (SURVEY.md §2.1): CSV projection sinks, the JSONL envelope
-  * append sink, the nested per-firm JSON document sink, and run-partitioned
-  * output paths.
+/** Sinks K2–K4 (SURVEY.md §2.1): the JSONL envelope append sink, the
+  * nested per-firm JSON document sink, and run-partitioned output paths.
   */
 object Sinks {
-
-  /** K1: header CSV (export_PE_firms, seed_aic.py:356-366). */
-  def writeCsv(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
 
   /** K2: JSONL append with the capture envelope
     * {datetime,url,status,headers,JSON} (seed_aic.py:146-155). `datetime` is
@@ -39,10 +34,4 @@ object Sinks {
   def writeRunPartitioned(df: DataFrame, path: String, runTs: String): Unit =
     df.withColumn("run_ts", lit(runTs))
       .write.mode(SaveMode.Append).partitionBy("run_ts").parquet(path)
-
-  /** Columnar interchange beyond parquet: ORC with the same
-    * predicate-pushdown/column-pruning behavior (`spark.read.orc` shows
-    * PushedFilters in the scan like parquet does). */
-  def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).orc(path)
 }

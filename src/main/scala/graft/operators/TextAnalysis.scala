@@ -181,7 +181,7 @@ object TextAnalysis {
     // The (doc, term, tf, dl) relation feeds TWO consumers (weights and
     // document frequencies) — persisted once per session, it is the
     // inverted-index/term-store a 100 TB pipeline materializes anyway
-    // (cf. Dedup.writeSignatureStore). Per-document tokenize + count + doc
+    // (cf. Dedup.minhashSigRelation). Per-document tokenize + count + doc
     // length all happen INSIDE the scan row (graft.plans.wordCounts, a
     // codegen'd one-byte-walk expression): only distinct (word, tf) pairs
     // ever leave the row, so the former explode -> groupBy(doc_id, word)
@@ -1134,7 +1134,7 @@ object TextAnalysis {
   /** The FULL BPE-training loop to a vocab budget: [[taBpePairs]]'s
     * count→argmax→merge round iterated [[bpeTrainRounds]] times, emitting
     * the learned merge table (iter, pair, corpus pair count). Loop state
-    * follows the [[Clustering.lloyd]] pattern — the driver holds ONLY the
+    * follows the [[Clustering]] Lloyd pattern — the driver holds ONLY the
     * merge table (one 2-symbol pair per round, collected via a bounded
     * 1-row action), while the evolving vocabulary stays a distributed
     * relation, persisted per round so each iteration re-reads the merged

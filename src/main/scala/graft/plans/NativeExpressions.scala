@@ -294,71 +294,6 @@ object SketchUtil {
   }
 }
 
-/** `graft_qvec(embedding)`: quantize an `array<float>` vector to 1e-8-unit
-  * longs in one codegen'd pass. Replaces the declarative
-  * `transform(v, x -> cast(round(x*1e8) as long))`, whose lambda runs on
-  * the interpreted evaluator. Rounding is the SAME BigDecimal HALF_UP Spark's
-  * `Round` uses, so results are identical to the declarative form by
-  * construction (and to DuckDB's round on this data, as the oracle gate
-  * verifies). */
-case class QuantizeVec(child: Expression, unit: Double) extends UnaryExpression {
-  /** NULL elements pass through as NULL elements, exactly as the declarative
-    * transform's cast(round(...)) lambda maps them — so containsNull follows
-    * the input array's. */
-  override def dataType: DataType = child.dataType match {
-    case ArrayType(_, cn) => ArrayType(LongType, containsNull = cn)
-    case _ => ArrayType(LongType, containsNull = true)
-  }
-  override def prettyName: String = "graft_qvec"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<float>, got ${t.simpleString}")
-  }
-
-  override protected def nullSafeEval(v: Any): Any =
-    QuantizeVec.quantize(v.asInstanceOf[ArrayData], unit)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.QuantizeVec.quantize($c, ${unit}d);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object QuantizeVec {
-  // identical to Spark's Round(double, 0): BigDecimal HALF_UP, then the
-  // long cast of the integral double
-  @inline private def q1(f: Float, unit: Double): Long =
-    java.math.BigDecimal.valueOf(f.toDouble * unit)
-      .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue().toLong
-
-  def quantize(v: ArrayData, unit: Double): ArrayData = {
-    val n = v.numElements()
-    var hasNull = false
-    var i = 0
-    while (i < n && !hasNull) { hasNull = v.isNullAt(i); i += 1 }
-    if (!hasNull) {
-      val out = new Array[Long](n)
-      i = 0
-      while (i < n) { out(i) = q1(v.getFloat(i), unit); i += 1 }
-      UnsafeArrayData.fromPrimitiveArray(out)
-    } else {
-      // slow path only for rows that actually carry NULL elements: box and
-      // keep the NULLs in place, as the declarative transform does
-      val out = new Array[Any](n)
-      i = 0
-      while (i < n) {
-        out(i) = if (v.isNullAt(i)) null else java.lang.Long.valueOf(q1(v.getFloat(i), unit))
-        i += 1
-      }
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-    }
-  }
-}
-
 /** Base for the one-pass sketch expressions over `array<bigint>` shingle
   * ids, parameterized by seed tables.
   *

@@ -144,10 +144,6 @@ package object plans {
   def scrubWords(ws: Column, sortedCps: Column): Column =
     ColumnBridge.column(ScrubWords(expr(ws), expr(sortedCps)))
 
-  /** One-pass float-vector quantization to `unit`-scaled longs. */
-  def quantizeVec(v: Column, unit: Double = 1e8): Column =
-    ColumnBridge.column(QuantizeVec(expr(v), unit))
-
   /** JSON-LD node generator (`_iter_jsonld_nodes` as a table function):
     * use in `select(..., jsonLdNodes(col).as("node"))` like `explode`. */
   def jsonLdNodes(script: Column): Column =

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ParquetSchema
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, Similarity, UnionFind}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, max, min, row_number, xxhash64}
@@ -1305,7 +1305,11 @@ object RollingIngest {
       val docSide = dedupSide(dedupStoreDir, wideSig, maxHamming)(spark, id)
       val annSide = annSideFor(spark, id)
       val batch0 = dedupDeterministic(b, "doc_id").persist()
-      val batch = preGate(spark, id, batch0).persist()
+      // one cache entry per distinct plan: the identity gate (every caller
+      // but curatedIngest) hands back batch0 itself, and persisting it again
+      // would share batch0's entry and drop it at the first unpersist
+      val gated = preGate(spark, id, batch0)
+      val batch = if (gated eq batch0) batch0 else gated.persist()
       try storeStep(dedupStoreDir, "doc_id", docSide, Nil, compactEvery, id,
           batch.select("doc_id", "text")) { (pairs, docBands, commitDedup) =>
         // Components over the batch-touching pairs; labels is at most
@@ -1352,7 +1356,11 @@ object RollingIngest {
               }
           }
         } finally decisions.unpersist()
-      } finally { batch.unpersist(); batch0.unpersist() }
+      } finally {
+        // reverse order of persist
+        if (batch ne batch0) batch.unpersist()
+        batch0.unpersist()
+      }
     }
 
   /** The FULL curation funnel as one rolling micro-batch loop — the shape
@@ -1497,36 +1505,11 @@ object RollingIngest {
       ParquetSchema.read(spark, p).collect().map(r => (r.getLong(0), r.getLong(1)))
     }
 
-  /** Iterative path-halving find over a parent map (the [[Dedup]]
-    * union-find discipline: O(1) stack depth on any chain shape). */
-  private def pathFind(parent: scala.collection.mutable.Map[Long, Long])
-                      (x0: Long): Long = {
-    var x = x0
-    var p = parent.getOrElse(x, x)
-    while (p != x) {
-      val gp = parent.getOrElse(p, p)
-      parent(x) = gp
-      x = gp
-      p = parent.getOrElse(x, x)
-    }
-    x
-  }
-
-  /** Min-union over a parent map: the larger root goes under the smaller,
-    * so a component's representative stays its min id (the
-    * [[Dedup.labelPropagation]] convention). */
-  private def union(parent: scala.collection.mutable.Map[Long, Long])
-                   (a: Long, b: Long): Unit = {
-    val (ra, rb) = (pathFind(parent)(a), pathFind(parent)(b))
-    if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-  }
-
-  /** The ledger's renames folded into one union-find parent map. */
-  private def ledgerParent(ledger: Seq[(Long, Long)])
-      : scala.collection.mutable.Map[Long, Long] = {
-    val parent = scala.collection.mutable.Map.empty[Long, Long]
-    ledger.foreach { case (f, t) => union(parent)(f, t) }
-    parent
+  /** The ledger's renames folded into one min-union union-find. */
+  private def ledgerUnionFind(ledger: Seq[(Long, Long)]): UnionFind = {
+    val uf = new UnionFind
+    ledger.foreach { case (f, t) => uf.union(f, t) }
+    uf
   }
 
   /** Resolve a label DataFrame through the ledger: entries become a
@@ -1537,9 +1520,9 @@ object RollingIngest {
     else {
       val spark = labels.sparkSession
       import spark.implicits._
-      val parent = ledgerParent(ledger)
+      val ledgerUf = ledgerUnionFind(ledger)
       val renames = ledger.map(_._1).distinct
-        .map(l => (l, pathFind(parent)(l))).toDF("label", "__canon")
+        .map(l => (l, ledgerUf.find(l))).toDF("label", "__canon")
       labels.join(broadcast(renames), Seq("label"), "left")
         .select(col("node"),
           coalesce(col("__canon"), col("label")).as("label"))
@@ -1623,23 +1606,23 @@ object RollingIngest {
         val ledger = mergeLedger(spark, storeDir, upTo = id)
         // prior labels of touched nodes: batch-sized result, resolved
         // through the ledger on the driver
-        val parent = ledgerParent(ledger)
+        val ledgerUf = ledgerUnionFind(ledger)
         val prior: Map[Long, Long] =
           storeView(spark, storeDir, labelSchema, "node", upTo = id)
             .map(_.join(broadcast(touched), Seq("node"))
-              .collect().map(r => r.getLong(0) -> pathFind(parent)(r.getLong(1)))
+              .collect().map(r => r.getLong(0) -> ledgerUf.find(r.getLong(1)))
               .toMap)
             .getOrElse(Map.empty)
         // driver union-find (min-union): batch edges + prior-label bindings
-        val uf = scala.collection.mutable.Map.empty[Long, Long]
-        ePairs.foreach { case (a, b) => union(uf)(a, b) }
-        prior.foreach { case (n, l) => union(uf)(n, l) }
+        val uf = new UnionFind
+        ePairs.foreach { case (a, b) => uf.union(a, b) }
+        prior.foreach { case (n, l) => uf.union(n, l) }
         val touchedIds = prior.keySet ++ ePairs.flatMap(p => Seq(p._1, p._2))
         val newLabels = touchedIds.toSeq.sorted
-          .map(n => (n, pathFind(uf)(n)))
+          .map(n => (n, uf.find(n)))
         // retired labels: a prior label whose canon moved
         val retired = prior.values.toSeq.distinct
-          .map(l => (l, pathFind(uf)(l))).filter { case (f, t) => f != t }
+          .map(l => (l, uf.find(l))).filter { case (f, t) => f != t }
         val labelsDf = newLabels.toDF("node", "label")
         // the ledger element first, then the one commit: the compacted
         // base is written with every label resolved through the ledger

@@ -162,51 +162,6 @@ object StreamingEvents {
                      watermark: String = "10 minutes"): DataFrame =
     events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
 
-  case class IdEvent(event_id: Long, user_id: Long, ts_us: Long)
-  case class RateDecision(event_id: Long, user_id: Long, n_win: Long, throttled: Boolean)
-
-  /** Streaming sliding-window rate limiter — the stateful twin of the
-    * batch `wa_rate_limit` RANGE window (EventAnalytics): each event's
-    * decision counts same-user events in the trailing `windowUs`
-    * INCLUSIVE of all events at its own timestamp, exactly the RANGE
-    * frame's tie semantics (every member of a tie group shares one frame,
-    * so the whole group is counted before any member is decided). State
-    * per user is the timestamp ring inside the current window — evicted
-    * as the window slides, so state tracks the rate bound, not the stream
-    * history. Matches the batch query whenever a tie group does not split
-    * across micro-batches (an already-emitted decision cannot be revised
-    * to count a later-arriving equal-timestamp event — the one place the
-    * streaming contract is weaker than batch, and the reason the batch
-    * twin is the oracle-adjudicated form). */
-  def rateLimit(events: Dataset[IdEvent], windowUs: Long = 300000000L,
-                limit: Long = 5L): Dataset[RateDecision] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[List[Long], RateDecision](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (userId: Long, batch: Iterator[IdEvent], state: GroupState[List[Long]]) =>
-          var ring = state.getOption.getOrElse(Nil) // ascending ts within window
-          val out = Seq.newBuilder[RateDecision]
-          val sorted = batch.toSeq.sortBy(e => (e.ts_us, e.event_id))
-          var i = 0
-          while (i < sorted.length) {
-            val t = sorted(i).ts_us
-            var j = i
-            while (j < sorted.length && sorted(j).ts_us == t) j += 1
-            val group = sorted.slice(i, j) // the tie group decides together
-            ring = ring.dropWhile(_ < t - windowUs)
-            val n = ring.size.toLong + group.size
-            group.foreach(e => out += RateDecision(e.event_id, userId, n, n > limit))
-            ring = ring ++ group.map(_.ts_us)
-            i = j
-          }
-          state.update(ring)
-          out.result().iterator
-      }
-  }
-
   /** Watermarked STREAM-STREAM interval join — the attribution shape: each
     * click joined to the same user's purchases within the next 10 minutes.
     * Both sides carry watermarks and the join condition time-bounds the

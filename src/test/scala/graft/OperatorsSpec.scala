@@ -226,25 +226,6 @@ class OperatorsSpec extends SparkSpec {
     assert(sa === sb)
   }
 
-  test("corrDouble production twin tracks the exact-moment agg_corr within 10 ppm") {
-    // the dotD-vs-dotQNative contract: the deployment runs the codegen'd
-    // double corr; the oracle-declared DECIMAL moment form certifies it
-    val exact = graft.operators.QualityQueries.aggCorr.fn(spark, sf0001)
-      .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-    val fast = graft.operators.QualityQueries.corrDouble(spark, sf0001)
-      .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-    assert(exact.nonEmpty && fast.keySet === exact.keySet)
-    exact.foreach { case (flag, (n, r2, sign)) =>
-      val (fn2, fr2, fsign) = fast(flag)
-      assert(fn2 === n, s"flag $flag n")
-      assert(fsign === sign, s"flag $flag sign")
-      // same split-floor statistic, double vs exact arithmetic: a floor
-      // can flip only when the true ratio sits within double error of an
-      // integer, moving r2_ppm by well under 1 ppm per factor
-      assert(math.abs(fr2 - r2) <= 5, s"flag $flag r2_ppm: exact $r2 vs double $fr2")
-    }
-  }
-
   test("agg_corr long-product moments equal the per-row DECIMAL-product form") {
     // round-17 optimization pin: the declared query now computes x·y, x²,
     // y² as LONGs (domain-bounded: x ≤ 5e3, y ≤ ~1.1e7 cents) and widens
@@ -332,29 +313,6 @@ class OperatorsSpec extends SparkSpec {
       assert(r.getInt(3) === 16 + (id % 32).toInt, s"width of doc $id")
       assert(r.getInt(4) === 16 + (nChars(id) % 32).toInt, s"height of doc $id")
       assert(r.getLong(2) === Multimodal.mediaBytes(id, nChars(id)).length.toLong)
-    }
-  }
-
-  test("multimodal frame sampling: batch path agrees with the expression path") {
-    // the batch stage is generic over its (doc_id, text) input; the
-    // declared query feeds it the re-upload-resolved source docs
-    val viaBatch = Multimodal.frameSampleBatch(
-      Multimodal.frameSourceDocs(Tables.documents(spark, sf0001)))
-    val viaExpr = Multimodal.mmFrameSample.fn(spark, sf0001)
-    assert(viaExpr.count() > 0)
-    assert(viaBatch.exceptAll(viaExpr).count() == 0)
-    assert(viaExpr.exceptAll(viaBatch).count() == 0)
-  }
-
-  test("multimodal resize: batch buffers match the expression plan's shapes") {
-    val plan = Multimodal.mmResize.fn(spark, sf0001).collect()
-      .map(r => r.getLong(0) -> (r.getInt(4), r.getInt(5), r.getLong(6))).toMap
-    val batch = Multimodal.resizeBatch(Tables.documents(spark, sf0001)).collect()
-    assert(batch.nonEmpty)
-    batch.foreach { r =>
-      val (ow, oh, ob) = plan(r.getLong(0))
-      assert(r.getInt(1) === ow && r.getInt(2) === oh)
-      assert(r.getAs[Array[Byte]](3).length.toLong === ob)
     }
   }
 

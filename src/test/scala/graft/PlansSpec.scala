@@ -52,18 +52,6 @@ class PlansSpec extends SparkSpec {
     assert(decl.toSeq === native.toSeq)
   }
 
-  test("graft_qvec preserves null elements like the declarative transform") {
-    import spark.implicits._
-    val df = Seq(Seq[java.lang.Float](1.5f, null, -2.25f)).toDF("embedding")
-    val native = df.select(graft.plans.quantizeVec(col("embedding")).as("q"))
-      .collect().head.getSeq[Any](0)
-    val decl = df.select(
-      transform(col("embedding"), x => round(x * lit(1e8)).cast("long")).as("q"))
-      .collect().head.getSeq[Any](0)
-    assert(native === decl)
-    assert(native(1) == null)
-  }
-
   test("RewriteDotProduct rewrites the declarative long form to DotProductQ") {
     // Must be a non-local source: over literal rows the optimizer constant-
     // folds the whole projection into a LocalRelation before we could look.
@@ -318,15 +306,6 @@ class PlansSpec extends SparkSpec {
     val n = Tables.events(spark, sf0001).select(
       graft.plans.jsonLong(col("props"), "k").as("a"),
       get_json_object(col("props"), "$.k").cast("long").as("b"))
-      .filter(!(col("a") <=> col("b"))).count()
-    assert(n === 0)
-  }
-
-  test("native quantization equals the declarative round path on all embeddings") {
-    val emb = Tables.embeddings(spark, sf0001)
-    val n = emb.select(
-      graft.plans.quantizeVec(col("embedding")).as("a"),
-      Similarity.qvec(col("embedding")).as("b"))
       .filter(!(col("a") <=> col("b"))).count()
     assert(n === 0)
   }

@@ -231,22 +231,4 @@ class ScaleSpec extends SparkSpec {
     // are a subset of the narrow tier's
     assert(wide.map(t => (t._1, t._2)).subsetOf(narrow.map(t => (t._1, t._2))))
   }
-
-  test("bucketed tables join without a shuffle exchange") {
-    val o = Tables.orders(spark, sf0001).select("o_orderkey", "o_custkey", "o_totalprice")
-    val l = Tables.lineitem(spark, sf0001).select("l_orderkey", "l_quantity")
-      .withColumnRenamed("l_orderkey", "o_orderkey")
-    Scale.writeBucketed(o, "b_orders", "o_orderkey", 4)
-    Scale.writeBucketed(l, "b_lineitem", "o_orderkey", 4)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
-      val joined = spark.table("b_orders").join(spark.table("b_lineitem"), "o_orderkey")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), s"expected SMJ:\n$plan")
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"expected shuffle-free bucketed join, got:\n$plan")
-      assert(joined.count() == Tables.lineitem(spark, sf0001).count())
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
 }

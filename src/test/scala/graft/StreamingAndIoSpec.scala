@@ -93,17 +93,6 @@ class StreamingAndIoSpec extends SparkSpec {
     assert(spark.read.json(dir).count() == 2)
   }
 
-  test("ORC sink round-trips with pushdown on read") {
-    val dir = Files.createTempDirectory("graft_orc").toString + "/orc"
-    Sinks.writeOrc(Tables.customer(spark, sf0001), dir)
-    val back = spark.read.orc(dir).filter($"c_custkey" < 50)
-    assert(back.count() ==
-      Tables.customer(spark, sf0001).filter($"c_custkey" < 50).count())
-    val scan = back.queryExecution.executedPlan.toString
-    assert(scan.contains("PushedFilters") && scan.contains("LessThan(c_custkey,50)"),
-      s"expected ORC pushdown:\n$scan")
-  }
-
   test("K4 run-partitioned sink prunes by run_ts on read") {
     val dir = Files.createTempDirectory("graft_k4").toString + "/runs"
     val df = Seq((1, "a"), (2, "b")).toDF("id", "v")
