@@ -162,8 +162,8 @@ object Clustering {
     * post-join filter (measured 44 s at sf10 on the duplicate-skewed
     * inflated corpus); with (cell, band) as the key, candidate volume is
     * ∝ true window pairs (1.6 s — 28x). Components route through the
-    * size-gated driver union-find with the distributed min-label fallback
-    * ([[Dedup.labelPropagation]]). */
+    * size-gated driver union-find with the distributed star-contraction
+    * fallback ([[Dedup.labelPropagation]]). */
   val ddSemdedup: QueryDef = QueryDef("dd_semdedup",
     s"""WITH RECURSIVE $oracleCte,
       |norms AS (SELECT vec_id, sqrt(CAST(CAST(SUM(v * v) AS BIGINT) AS DOUBLE)) AS norm

@@ -5,6 +5,7 @@ import graft.functions.Exprs._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Large-scale deduplication operators: exact, n-gram Jaccard, MinHash+LSH,
   * SimHash. First-class components of the engine (builder brief) layered on
@@ -249,8 +250,8 @@ object Dedup {
     * per 24 docs) — never a function of corpus size, so no band bucket
     * grows with the corpus. */
   /** Corpus-convention boundary, stated explicitly (ADVICE r14): the
-    * SIMHASH near-dup families (32/64/128-bit tiers, their cluster/
-    * incremental/auto forms) certify on THIS near-copy-RESOLVED corpus —
+    * SIMHASH near-dup families (32/64/128-bit tiers, their cluster and
+    * incremental forms) certify on THIS near-copy-RESOLVED corpus —
     * they exist to find re-uploads, so their fixtures must contain some.
     * The MinHash/Jaccard/fuzzy families and the exact-substring
     * scrub/span machinery ([[widArrayRelation]] and everything built on
@@ -598,72 +599,22 @@ object Dedup {
     * corpus size at n ≈ 2 x bucket space = 131,072 documents. Below it the
     * narrow tier is strictly cheaper (half the sketch lanes, half the
     * signature bytes through the shuffle); past it candidate volume grows
-    * super-linearly while the 32-bit-band tier stays sparse to n ~ 4e9. */
+    * super-linearly while the 32-bit-band tier stays sparse to n ~ 4e9.
+    * The image-hash and hyperplane band tiers share the same 16-bit bucket
+    * space and so the same knee (see [[Multimodal.mmImageIncremental128]]
+    * and [[Similarity.simKnnGraphWide]]); the one rule that applies it is
+    * the rolling dedup store's migration trigger,
+    * [[graft.streaming.RollingIngest.dedupTierMigrationDue]]. */
   val SimhashBandKnee: Long = 2L * 65536
 
-  /** Signature width (bits) for a corpus of `nDocs` — the pure tier rule
-    * [[simhashNearDupAuto]] applies, factored out so the choice is
-    * spec-checkable without materializing 131k documents. */
-  def simhashTier(nDocs: Long, knee: Long = SimhashBandKnee): Int =
-    if (nDocs < knee) 64 else 128
-
-  /** AUTO-TIER near-dup pairs (VERDICT r7 #5): one entry point that routes
-    * between the 64-bit/16-bit-band and 128-bit/32-bit-band tiers on
-    * corpus size vs the measured knee, so a caller whose corpus grows past
-    * saturation does not silently keep the drowning tier. One count()
-    * gates the choice — the same size-adaptive pattern as
-    * [[dupClusters]]' driver/distributed routing. Note the tiers are
-    * different points on the precision curve (3 flipped bits against a
-    * 128-bit budget is stricter than against 64), which is exactly why the
-    * engine must flip: past the knee the narrow tier's extra candidates
-    * are band noise, not near-duplicates. The declared oracle queries pin
-    * their tiers explicitly (dd_simhash_neardup64 / ...128) so the gate
-    * stays deterministic at every SF. */
-  def simhashNearDupAuto(docs: DataFrame, maxHamming: Int = 3,
-                         knee: Long = SimhashBandKnee): DataFrame = {
-    val spark = docs.sparkSession
-    // Bands are persisted per (corpus plan, tier) — simhashNearDupPairs
-    // self-joins its input, so an un-persisted relation would run the
-    // whole sketch pass twice per action (its documented compute-once
-    // contract). Same one-batch state bound as the incremental entries:
-    // only the latest auto corpus stays cached.
-    val tier = simhashTier(docs.count(), knee)
-    val key = "simhash_auto#" + docs.queryExecution.analyzed.semanticHash() + ":" + tier
-    graft.Persisted.clearExcept(spark, "simhash_auto#", key)
-    if (tier == 64)
-      simhashNearDupPairs(
-        graft.Persisted.of(spark, key) { simhash64Bands(docs) }, maxHamming)
-    else
-      simhashNearDupPairs(
-        graft.Persisted.of(spark, key) { simhash128Bands(docs) }, maxHamming,
-        sigCols = Seq("sig_lo", "sig_hi"))
-  }
-
-  /** Memoized per-(session, dir) document count for the auto gates — the
-    * value is constant per session (Tables are frozen), so later calls pay
-    * no job. Shared across every documents-table knee router (simhash here,
-    * the image tiers in [[Multimodal.mmImageIncrementalAuto]]) so one
-    * session never runs the same full-corpus count twice
-    * (code-review r13). */
+  /** Memoized per-(session, dir) document count — the value is constant
+    * per session (Tables are frozen), so later calls pay no job. It sizes
+    * the per-document stores' `Persisted.sized` row estimates (the text
+    * and image families), so one session never runs the same full-corpus
+    * count twice (code-review r13). */
   private val autoCount = new graft.SessionMemo[java.lang.Long]
   def corpusDocCount(spark: org.apache.spark.sql.SparkSession, d: String): Long =
     autoCount.of(spark, d)(Long.box(Tables.documents(spark, d).count()))
-  private def docCount(spark: org.apache.spark.sql.SparkSession, d: String): Long =
-    corpusDocCount(spark, d)
-
-  /** [[simhashNearDupAuto]] over the documents table of `d`, routed through
-    * the SESSION band stores (`simhash64BandsRelation` /
-    * `simhash128BandsRelation`) so repeated calls share one materialized
-    * sketch pass per tier, with the gating count memoized per (session,
-    * dir). The generic DataFrame overload above serves arbitrary relations
-    * (and parameterized knees in specs); this is the production entry. */
-  def simhashNearDupAuto(spark: org.apache.spark.sql.SparkSession,
-                         d: String): DataFrame =
-    if (simhashTier(docCount(spark, d)) == 64)
-      simhashNearDupPairs(simhash64BandsRelation(spark, d))
-    else
-      simhashNearDupPairs(simhash128BandsRelation(spark, d),
-        sigCols = Seq("sig_lo", "sig_hi"))
 
   /** Oracle-checked INCREMENTAL ingest query (VERDICT r6 #4): the
     * production store+batch entry point [[simhashNearDupIncremental]]
@@ -825,7 +776,10 @@ object Dedup {
     * driver memory / 120. At 100 TB the candidate edge set after LSH
     * banding exceeds any driver heap and this gate MUST route distributed —
     * callers never choose a path explicitly, the single `count()` on the
-    * (cached, reused) edge set decides. The above-gate strategy is
+    * (cached, reused) edge set decides. The edge set is cached only if the
+    * caller has not cached it, and only that entry is dropped on return:
+    * unpersisting a caller's entry would make its next action recompute
+    * the relation. The above-gate strategy is
     * [[starContraction]] (O(log n) rounds regardless of component shape;
     * VERDICT r15 #7 — the ≥10-round chain synthetic showed min-label
     * propagation's rounds are O(diameter), which a crawl-frontier-shaped
@@ -833,17 +787,21 @@ object Dedup {
     * rounds); the label-equality spec pins both paths identical. */
   def labelPropagation(edges: DataFrame, driverMaxEdges: Long = 1000000L): DataFrame = {
     val spark = edges.sparkSession
-    val cached = edges.cache()
-    if (cached.count() <= driverMaxEdges) {
-      val pairs = cached.collect().map(r => (r.getLong(0), r.getLong(1)))
-      cached.unpersist()
-      val uf = new UnionFind
-      pairs.foreach { case (a, b) => uf.union(a, b) }
-      val rows = pairs.flatMap(p => Seq(p._1, p._2)).distinct
-        .map(v => (v, uf.find(v))).toSeq
-      import spark.implicits._
-      rows.toDF("doc_id", "cluster_id")
-    } else starContraction(cached)
+    val owned = edges.storageLevel == StorageLevel.NONE
+    if (owned) edges.cache()
+    // starContraction materializes its result before returning, so the
+    // entry this call owns is no longer read once either path is done
+    try {
+      if (edges.count() <= driverMaxEdges) {
+        val pairs = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
+        val uf = new UnionFind
+        pairs.foreach { case (a, b) => uf.union(a, b) }
+        val rows = pairs.flatMap(p => Seq(p._1, p._2)).distinct
+          .map(v => (v, uf.find(v))).toSeq
+        import spark.implicits._
+        rows.toDF("doc_id", "cluster_id")
+      } else starContraction(edges)
+    } finally if (owned) edges.unpersist()
   }
 
   /** Rounds the most recent [[starContraction]] call took to converge
@@ -953,8 +911,8 @@ object Dedup {
     out.count()
     eRdd.unpersist(blocking = false)
     verts.unpersist()
-    // `out` stays persisted for the caller's consumption, the same
-    // lifetime contract as the min-label path's final round
+    // `out` stays persisted for the caller's consumption: its actions read
+    // the materialized RDD, never the contraction rounds' lineage
     out
   }
 

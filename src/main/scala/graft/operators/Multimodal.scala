@@ -785,11 +785,15 @@ object Multimodal {
   /** The WIDE-tier incremental image ingest: [[mmImageIncremental]]'s
     * batch-vs-store contract over the 128-bit combined bands. This is the
     * tier a continuously-ingesting store runs PAST the 16-bit occupancy
-    * knee: the narrow incremental measured 2.7 s -> 38 s sf1 -> sf10 on
-    * the replica-heavy inflated corpus (structured aHash bits concentrate
-    * the 64k-value band space into hot buckets) while the 4x32-bit bands
-    * keep candidates ∝ genuinely-close pairs — the same remedy, same
-    * pigeonhole guarantee, as the declared wide full-corpus tier.
+    * knee (n ≈ 2 × 65536 documents, [[Dedup.SimhashBandKnee]]): the
+    * narrow incremental measured 2.7 s -> 38 s sf1 -> sf10 on the
+    * replica-heavy inflated corpus (structured aHash bits concentrate the
+    * 64k-value band space into hot buckets), against 9.5 s for this tier
+    * at sf10, while the 4x32-bit bands keep candidates ∝ genuinely-close
+    * pairs and stay sparse to n ~ 4e9 — the same remedy, same pigeonhole
+    * guarantee, as the declared wide full-corpus tier. Its 128-bit
+    * hamming ≤ 3 is the stricter operating point: its pairs are a subset
+    * of the narrow tier's.
     * [[imageNearDupIncremental]] is generic over the band relation, so
     * ONE definition serves both tiers. */
   val mmImageIncremental128: QueryDef = QueryDef("mm_image_incremental128", {
@@ -817,49 +821,12 @@ object Multimodal {
     imageNearDupIncremental(store, batch)
   }
 
-  /** Band-occupancy knee of the image-hash tiers, measured at the sf10
-    * decade point (scale lessons / ARCHITECTURE round-11): the 16-bit
-    * aHash bands saturate past n ≈ 2 × 65536 documents — structured hash
-    * bits concentrate the 64k-value space into hot buckets (incremental
-    * probe 2.7 s at sf1's 60k docs → 38 s at sf10's 600k) — while the
-    * 4×32-bit combined bands stay sparse to n ~ 4e9. The same knee
-    * arithmetic as [[Dedup.SimhashBandKnee]]. */
-  val ImageBandKnee: Long = 2L * 65536
-
-  /** Band bits for a corpus of `nDocs` — the pure tier rule
-    * [[mmImageIncrementalAuto]] applies, spec-checkable without
-    * materializing 131k documents. */
-  def imageTier(nDocs: Long, knee: Long = ImageBandKnee): Int =
-    if (nDocs < knee) 16 else 32
-
-  /** AUTO-TIER incremental image ingest (VERDICT r12 #2, closing its one
-    * `weak`): route between the declared 16-bit aHash tier
-    * ([[mmImageIncremental]]) and the 128-bit combined ahash||phash tier
-    * ([[mmImageIncremental128]]) on corpus size vs the measured occupancy
-    * knee — the [[Dedup.simhashNearDupAuto]] / [[Similarity.knnGraphAuto]]
-    * pattern applied to the image store: an ingest pipeline whose corpus
-    * grows past saturation must not silently keep the drowning tier
-    * (sf10: 38 s narrow vs 9.5 s wide), and a small corpus must not pay
-    * the wide tier's second hash pass. As with those routers the tiers
-    * are different operating points on the precision curve (128-bit
-    * hamming ≤ 3 is the stricter, lower-false-positive point), which is
-    * exactly why flipping is the engine's job: past the knee the narrow
-    * tier's extra candidates are hot-bucket noise, not near-duplicates.
-    * The declared oracle queries pin their tiers so the gate stays
-    * deterministic at every SF. One memoized count() gates the choice. */
-  def mmImageIncrementalAuto(spark: org.apache.spark.sql.SparkSession,
-                             d: String, knee: Long = ImageBandKnee): DataFrame = {
-    val n: Long = Dedup.corpusDocCount(spark, d) // shared memoized gate count
-    if (imageTier(n, knee) == 16) mmImageIncremental.fn(spark, d)
-    else mmImageIncremental128.fn(spark, d)
-  }
-
   /** Image dedup with keeper assignment — the [[Dedup.ddFuzzyKeep]]
     * composition applied to the image family: pigeonhole-banded aHash
     * near-dup pairs → connected components (the size-gated driver
-    * union-find with the distributed min-label fallback) → cluster-min
-    * keeper. Output rows = images that BELONG to a near-dup group,
-    * tagged with the doc a curation pipeline keeps. The full-chain
+    * union-find with the distributed star-contraction fallback) →
+    * cluster-min keeper. Output rows = images that BELONG to a near-dup
+    * group, tagged with the doc a curation pipeline keeps. The full-chain
     * recursive oracle composes the verified near-dup oracle as a
     * subquery, so the two cannot drift. */
   val mmImageDedupKeep: QueryDef = QueryDef("mm_image_dedup_keep",

@@ -246,9 +246,8 @@ object Similarity {
     * sketch): the rolling-ingest entry for stores past the band knee —
     * tier choice is a BOOTSTRAP parameter of a rolling store (its bands
     * are at rest; re-tiering is an offline re-encode, like IVF
-    * retraining), so the streaming loops take it as a flag where the
-    * batch side routes per-call ([[knnGraphAuto]]). Same relation shape
-    * as the narrow tier — every consumer takes either. */
+    * retraining), so the streaming loops take it as a flag. Same relation
+    * shape as the narrow tier — every consumer takes either. */
   def hyperBandsWide(vecs: DataFrame): DataFrame =
     hyperBandsWideOfQNorm(qnormOfVecs(vecs))
 
@@ -681,7 +680,7 @@ object Similarity {
   }
 
   /** Session-persisted narrow (2 x 8-bit) band store over the corpus —
-    * shared by sim_lsh_ann, sim_knn_graph, and the auto tier router.
+    * shared by sim_lsh_ann, sim_knn_graph and the routed graphs.
     * Carries the TRAINED IVF cell as routing metadata (see
     * [[wideBandsRelation]]): unrouted consumers project it away, the
     * routed graph joins on it — one sketch pass either way. */
@@ -754,7 +753,12 @@ object Similarity {
     * bands: expected collisions 4 p^16 >= 2 p^8 once p >= 2^(-1/8) ≈ 0.92
     * (cosine ≳ 0.97), so the wide tier keeps the closest edges — the ones
     * a top-3 list is made of — and sheds the moderate-similarity band
-    * noise the narrow tier drowns in past the knee.
+    * noise the narrow tier drowns in past the knee. That knee is
+    * n ≈ 2 × 65536 ([[Dedup.SimhashBandKnee]]): expected candidates per
+    * node are b·n/space — narrow n/128, wide n/16384 — so the wide tier
+    * has enough bucket-mates to fill a top-k list only once
+    * n/16384 ≥ ~8, where the narrow tier's raw pair volume
+    * (2 n² / 256 ≈ 1.3e8) has long left the linear regime.
     * Same banded shape end-to-end: equi-join on (band_id, band_val), exact
     * rescoring of candidates only, per-node top-k window. */
   /** The default quantized-source CTE of the graph oracles. */
@@ -831,19 +835,14 @@ object Similarity {
     * edges at every scale the oracle runs (the wide∧cell composition at
     * 500 vectors produces zero candidates — an empty-output oracle
     * certifies nothing, the r12 frame-family lesson); the wide∧cell point
-    * the census recommends past the knee is [[knnGraphRoutedWide]],
-    * A/B-measured at sf10 via the probe harness. */
+    * the census recommends past the knee is declared as
+    * [[simKnnGraphRoutedWide]] over the re-upload-resolved corpus. */
   val simKnnGraphRouted: QueryDef = {
     val k = 3
     QueryDef("sim_knn_graph_routed", narrowKnnOracleSql(cellEq = true, k)) { (spark, d) =>
       knnGraphFromBands(narrowBandsRelation(spark, d), k, routeCols = Seq("cell"))
     }
   }
-
-  /** The wide∧cell graph — the operating point a post-knee corpus runs
-    * (same contract as [[simKnnGraphRouted]] over the wide store). */
-  def knnGraphRoutedWide(spark: SparkSession, d: String, k: Int = 3): DataFrame =
-    knnGraphFromBands(wideBandsRelation(spark, d), k, routeCols = Seq("cell"))
 
   /** Re-upload-resolved embeddings — the certification corpus of the
     * routed WIDE graph (VERDICT r13 #1): vec_id % 24 ∈ {7, 15} carry their
@@ -884,14 +883,15 @@ object Similarity {
     }
   }
 
-  /** DECLARED wide∧cell routed graph — [[knnGraphRoutedWide]]'s exact plan
-    * shape (wide 4×16-bit bands, trained-cell equality composed into the
-    * join key, same-cell contract) run over the re-upload-resolved
-    * certification corpus, so the oracle carries rows at every SF
-    * (VERDICT r13 #1: the production wide tier was probe-only because the
-    * raw gate corpus has zero wide∧cell candidates — this declares it).
-    * The raw-corpus operating point stays A/B-measured at the sf10 decade
-    * via the `knn_routed_wide` probe variant. */
+  /** DECLARED wide∧cell routed graph — [[simKnnGraphRouted]]'s contract
+    * over the wide store (wide 4×16-bit bands, trained-cell equality
+    * composed into the join key, same-cell contract) run over the
+    * re-upload-resolved certification corpus, so the oracle carries rows
+    * at every SF (VERDICT r13 #1: the production wide tier was probe-only
+    * because the raw gate corpus has zero wide∧cell candidates — this
+    * declares it). The raw-corpus operating point was A/B-measured at the
+    * sf10 decade with the `knn_routed_wide` variant of the since-deleted
+    * probe harness. */
   val simKnnGraphRoutedWide: QueryDef = {
     val k = 3
     QueryDef("sim_knn_graph_routed_wide",
@@ -933,20 +933,6 @@ object Similarity {
           expr("(hits * 1000000) div 3").as("recall_ppm"))
     }
 
-  /** AUTO-TIER routed graph: [[knnGraphAuto]]'s knee rule with the cell
-    * composed into the join key at BOTH tiers — the entry a consumer that
-    * accepts the same-cell contract rides at any corpus size (below the
-    * knee the narrow∧cell point is where routing pays most: 6.1×
-    * candidate cut at sf1; above it wide∧cell trims the residual
-    * cross-cell noise off the saturation-safe tier). Same band stores,
-    * same spec-checkable tier rule. */
-  def knnGraphRoutedAuto(spark: SparkSession, d: String, k: Int = 3,
-                         knee: Long = KnnBandKnee): DataFrame =
-    if (knnGraphTier(vecCount(spark, d), knee) == 8)
-      knnGraphFromBands(narrowBandsRelation(spark, d), k, routeCols = Seq("cell"))
-    else
-      knnGraphFromBands(wideBandsRelation(spark, d), k, routeCols = Seq("cell"))
-
   /** Session-persisted knn-graph edge set (qid, nid, cosine) — the
     * materialized graph every graph-analytics consumer derives from
     * (gr_pagerank's degree-attached adjacency, gr_triangles' undirected
@@ -958,36 +944,9 @@ object Similarity {
     // (Persisted.of); the sized stores are the adjacencies derived from it
     graft.Persisted.of(spark, s"$d#knn_edges")(simKnnGraph.fn(spark, d))
 
-  /** Band-occupancy knee for the graph tier rule: expected candidates per
-    * node are b*n/space — narrow n/128, wide n/16384. The wide tier only
-    * has enough bucket-mates to fill a top-k list once n/16384 >= ~8, i.e.
-    * n ≈ 2 * 65536 — the SAME knee arithmetic as the simhash tiers
-    * (Dedup.SimhashBandKnee), where the narrow tier's raw pair volume
-    * (2 n^2 / 256 ≈ 1.3e8 at the knee) has long left the linear regime. */
-  val KnnBandKnee: Long = 2L * 65536
-
-  /** Band bits for a corpus of `nVecs` — the pure tier rule
-    * [[knnGraphAuto]] applies, factored out for spec checks. */
-  def knnGraphTier(nVecs: Long, knee: Long = KnnBandKnee): Int =
-    if (nVecs < knee) 8 else 16
-
   private val vecCountMemo = new graft.SessionMemo[java.lang.Long]
   private[operators] def vecCount(spark: SparkSession, d: String): Long =
     vecCountMemo.of(spark, d)(Long.box(Tables.embeddings(spark, d).count()))
-
-  /** AUTO-TIER k-NN graph: routes between the band tiers on corpus size vs
-    * the occupancy knee, the [[graft.operators.Dedup.simhashNearDupAuto]]
-    * pattern — a caller whose corpus grows past saturation does not
-    * silently keep the drowning tier, and a small corpus does not get the
-    * wide tier's near-empty buckets (graph recall collapses below the
-    * knee). The declared oracle queries pin their tiers explicitly so the
-    * gate stays deterministic at every SF. */
-  def knnGraphAuto(spark: SparkSession, d: String, k: Int = 3,
-                   knee: Long = KnnBandKnee): DataFrame =
-    if (knnGraphTier(vecCount(spark, d), knee) == 8)
-      knnGraphFromBands(narrowBandsRelation(spark, d), k)
-    else
-      knnGraphFromBands(wideBandsRelation(spark, d), k)
 
   /** Index-quality evaluation: recall@3 of the LSH ANN path against the
     * exact brute-force top-3, per probe — the standard acceptance check an
@@ -1607,7 +1566,10 @@ object Similarity {
     * the gate fixtures the survivor set is nearly the corpus and the
     * query degenerates gracefully to the plain graph. The oracle nests
     * the full recursive SemDeDup chain as the survivor filter of the
-    * knn chain, so the two stages cannot drift. */
+    * knn chain, so the two stages cannot drift. The narrow tier saturates
+    * past the band knee like every narrow-pinned graph: measured 314 s at
+    * sf10, where the gate fixture's id-window dedup convention cannot see
+    * Inflate's far-id replicas and survivors ≈ corpus. */
   lazy val simDedupIndex: QueryDef = {
     val k = 3
     QueryDef("sim_dedup_index",
@@ -1633,46 +1595,7 @@ object Similarity {
     }
   }
 
-  /** Production form of the dedup-then-index composition: the survivor
-    * graph rides the KNEE-ROUTED band tier ([[knnGraphTier]] on the
-    * survivor count) — the declared [[simDedupIndex]] pins the narrow
-    * tier for oracle determinism, which saturates past the band knee
-    * like every narrow-pinned graph (measured 314 s at sf10, where the
-    * gate fixture's id-window dedup convention cannot see Inflate's
-    * far-id replicas and survivors ≈ corpus). Survivor bands persist
-    * per tier; one count() gates the choice. */
-  private val survivorCountMemo = new graft.SessionMemo[java.lang.Long]
-
-  def dedupThenIndexAuto(spark: SparkSession, d: String, k: Int = 3,
-                         knee: Long = KnnBandKnee): DataFrame = {
-    // survivors is a DEF: the SemDeDup chain's logical plan costs ~1 s of
-    // Catalyst to construct (JFR, round 17), so it is only built where a
-    // memo/store MISS actually needs it — a warm session's repeat call
-    // touches neither the chain nor its analysis
-    def survivors = {
-      val removed = Clustering.ddSemdedup.fn(spark, d)
-        .filter(col("vec_id") =!= col("keeper_id")).select("vec_id")
-      qnormRelation(spark, d)
-        .join(removed, Seq("vec_id"), "left_anti")
-        .select("vec_id", "q", "norm")
-    }
-    // gate count memoized per (session, dir): recomputing it would replay
-    // the whole SemDeDup chain on every invocation (code-review r13)
-    val n: Long = survivorCountMemo.of(spark, s"$d#dedup_survivors")(
-      Long.box(survivors.count()))
-    if (knnGraphTier(n, knee) == 8)
-      // the declared composition's store — one survivor band relation
-      // per session, never a tier-8 twin under a second key
-      knnGraphFromBands(graft.Persisted.of(spark, s"$d#dedup_index_bands") {
-        hyperBandsOfQNorm(survivors)
-      }, k)
-    else
-      knnGraphFromBands(graft.Persisted.of(spark, s"$d#dedup_index_bands_auto32") {
-        hyperBandsWideOfQNorm(survivors)
-      }, k)
-  }
-
-  // ---- kc auto-router (VERDICT r14 #2) ----
+  // ---- kc routing rule (VERDICT r14 #2) ----
 
   /** Routed IVF cell count — kc ~ √n on the power-of-2 grid, the remedy
     * ARCHITECTURE's ingest decade points name for the fixture's hand-set
@@ -1684,50 +1607,16 @@ object Similarity {
     * cells than seed vectors, and the declared oracles pin kc = 8); cap =
     * 4096 (beyond it the assignment projection's literal centroid table
     * stops being a sensible single-stage expression — a 100 TB deployment
-    * shards the coarse book before it gets there). Same knee-router
-    * pattern as [[knnGraphTier]] / [[Dedup.simhashNearDupAuto]]:
-    * declared queries pin the fixture constant for oracle determinism,
-    * the auto entry points route, and a spec pins routed ≡ declared at
-    * the forced fixture kc. */
+    * shards the coarse book before it gets there). The declared queries
+    * pin the fixture constant for oracle determinism; the routed IVF-PQ
+    * ingest applies this rule when its store census moves the cell
+    * count ([[graft.streaming.RollingIngest.ivfPqIngestRouted]]). */
   def ivfPqKcRouted(n: Long): Int = {
     val exp = math.round(
       math.log(math.sqrt(math.max(1L, n).toDouble)) / math.log(2.0)).toInt
     // clamp the exponent BEFORE shifting: 1 << 31 wraps negative and a
     // huge corpus would silently route to the floor instead of the cap
     math.max(IvfPqCells, 1 << math.min(12, math.max(0, exp)))
-  }
-
-  private val pqPairMemo =
-    new graft.SessionMemo[(Seq[(Int, Array[Long])], Seq[Seq[(Int, Array[Long])]])]
-
-  /** Frozen books trained at an explicit kc, memoized per (session, d, kc)
-    * — the training step of [[ivfPqAuto]] and the kc-routed ingest. */
-  def ivfPqBooksAt(spark: SparkSession, d: String,
-                   kc: Int): (Seq[(Int, Array[Long])], Seq[Seq[(Int, Array[Long])]]) =
-    pqPairMemo.of(spark, s"$d#ivfpq_auto_books_k$kc") {
-      ivfPqTrain(Tables.embeddings(spark, d).select("vec_id", "embedding"), kc)
-    }
-
-  /** kc-ROUTED trained IVF-PQ batch retrieval — the production twin of the
-    * declared [[simIvfPq]] (which pins kc = [[IvfPqCells]] for oracle
-    * determinism): the coarse cell count comes from the corpus census via
-    * [[ivfPqKcRouted]], everything else — trained books, persisted
-    * cell-tagged code store, nprobe routing with the probed-cell IN-filter
-    * pushed onto the store, broadcast ADC tables, cand-50 exact-rerank
-    * funnel — is the same chain. `kcOverride` exists for the equality
-    * spec (forced fixture kc must reproduce the declared rows) and for
-    * probe A/Bs. */
-  def ivfPqAuto(spark: SparkSession, d: String, probeMax: Int = 50,
-                k: Int = 3, nprobe: Int = IvfPqNprobe,
-                kcOverride: Option[Int] = None): DataFrame = {
-    val kc = kcOverride.getOrElse(ivfPqKcRouted(vecCount(spark, d)))
-    val (coarse, books) = ivfPqBooksAt(spark, d, kc)
-    val codes = graft.Persisted.of(spark, s"$d#ivfpq_codes_auto_k$kc") {
-      ivfPqEncode(Tables.embeddings(spark, d).select("vec_id", "embedding"),
-        coarse, books)
-    }
-    val probes = codes.filter(col("vec_id") < probeMax)
-    ivfPqIncrementalCodes(codes, probes, coarse, books, k, nprobe)
   }
 
   // ---- frozen-book IVF-PQ as STREAMING-ingest building blocks ----

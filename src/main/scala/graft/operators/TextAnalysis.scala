@@ -571,9 +571,8 @@ object TextAnalysis {
   /** Size-tiered decontamination entry: broadcast dictionary up to
     * `broadcastMaxIds` distinct shingle ids (default 4M ≈ 200 MB as a
     * broadcast hash relation — the practical executor ceiling), bloom +
-    * exact re-check beyond. Same auto-tier pattern as
-    * [[Dedup.simhashNearDupAuto]]: the caller passes the dictionary size
-    * (or an upper bound) so the gate itself runs no job. */
+    * exact re-check beyond. The caller passes the dictionary size (or an
+    * upper bound) so the gate itself runs no job. */
   def decontaminate(corpusWids: DataFrame, benchWids: DataFrame,
                     dictIds: Long, broadcastMaxIds: Long = 4000000L,
                     fpp: Double = 0.01): DataFrame =

@@ -752,9 +752,10 @@ object RollingIngest {
     * how many per-batch deltas accumulate before they fold into the
     * compacted base. `wideBands` picks the 64-lane wide band tier at
     * BOOTSTRAP — a rolling store's bands are at rest, so the tier is a
-    * deployment parameter chosen from the expected store census (the
-    * same knee the batch side routes per-call), and changing it later is
-    * an offline re-encode, like IVF retraining. */
+    * deployment parameter chosen from the expected store census against
+    * [[graft.operators.Dedup.SimhashBandKnee]] (the knee the dedup
+    * store's migration trigger applies), and changing it later is an
+    * offline re-encode, like IVF retraining. */
   def annIngest(vecs: DataFrame, storeDir: String, k: Int = 3,
                 routeCols: Seq[String] = Nil, compactEvery: Int = 8,
                 wideBands: Boolean = false,
@@ -795,7 +796,8 @@ object RollingIngest {
   // ---- retrain/re-encode cadence for the rolling IVF-PQ store ----
   // (VERDICT r15 #1: ivfPqIngest freezes bootstrap books forever, so a
   // store growing past its training slice re-enters the linear-probe-cost
-  // regime the kc router was built to kill — the same disease one level up)
+  // regime the √n kc rule (Similarity.ivfPqKcRouted) was built to kill —
+  // the same disease one level up)
 
   /** Serialize (coarse, pq books) as one parquet directory. `ord` records
     * each codeword's position in its book: assignment tie-breaks are
@@ -1001,8 +1003,7 @@ object RollingIngest {
     * picks the 128-bit/32-bit-band tier at BOOTSTRAP (VERDICT r15 #3 —
     * the text-side twin of [[annIngest]]'s `wideBands`), chosen from the
     * expected store census against the
-    * [[graft.operators.Dedup.SimhashBandKnee]] occupancy knee (the knee
-    * the batch side routes per-call via `simhashNearDupAuto`). The store
+    * [[graft.operators.Dedup.SimhashBandKnee]] occupancy knee. The store
     * OWNS its tier thereafter: a `tier<v>` marker written by the offline
     * [[migrateDedupTier]] event (VERDICT r16 #1) overrides the bootstrap
     * parameter at the next batch boundary, so a store that outgrows the
@@ -1153,11 +1154,11 @@ object RollingIngest {
   }
 
   /** COMPOSED rolling dedup-then-index — the streaming twin of the batch
-    * composition ([[graft.operators.Similarity.simDedupIndex]] /
-    * `dedupThenIndexAuto`), and the shape a continuously crawled 100 TB
-    * corpus actually runs: the dedup store's keeper decision GATES what
-    * the ANN store ingests, so retrieval structures only ever index the
-    * canonical (near-dup-free) corpus. Input is a streaming relation of
+    * composition ([[graft.operators.Similarity.simDedupIndex]]), and the
+    * shape a continuously crawled 100 TB corpus actually runs: the dedup
+    * store's keeper decision GATES what the ANN store ingests, so
+    * retrieval structures only ever index the canonical (near-dup-free)
+    * corpus. Input is a streaming relation of
     * (doc_id, text, embedding[, routeCols…]). Each micro-batch:
     *
     *   1. sketches simhash bands ONCE (probe + dedup-store append) — the

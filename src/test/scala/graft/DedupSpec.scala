@@ -357,6 +357,22 @@ class DedupSpec extends SparkSpec {
       small.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
   }
 
+  test("labelPropagation leaves a caller's cache entry in place (driver path)") {
+    val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b").cache()
+    try {
+      Dedup.labelPropagation(edges).collect()
+      assert(edges.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+        "labelPropagation dropped the caller's cached relation")
+    } finally edges.unpersist()
+  }
+
+  test("labelPropagation leaves an uncached input uncached (distributed path)") {
+    val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
+    Dedup.labelPropagation(edges, driverMaxEdges = 0L).collect()
+    assert(edges.storageLevel === org.apache.spark.storage.StorageLevel.NONE,
+      "labelPropagation left the caller's uncached relation cached")
+  }
+
   test("driver union-find survives a long chain in adversarial edge order") {
     // 100k-vertex chain, edges high-to-low so naive path compression would
     // build a deep parent chain; the iterative find must stay O(1) stack

@@ -89,29 +89,19 @@ class ScaleSpec extends SparkSpec {
       s"production bands must cut raw candidates >=10x at 3000 docs (c32=$c32, c64=$c64)")
   }
 
-  test("auto-tier simhash flips 64 -> 128 bit exactly at the saturation knee") {
+  test("the 128-bit simhash tier's pairs are a subset of the 64-bit tier's") {
     import graft.operators.Dedup
-    // the pure rule at the real knee (2 x 16-bit bucket space)
+    // the one band knee: 2 x the 16-bit bucket space
     assert(Dedup.SimhashBandKnee === 131072L)
-    assert(Dedup.simhashTier(Dedup.SimhashBandKnee - 1) === 64)
-    assert(Dedup.simhashTier(Dedup.SimhashBandKnee) === 128)
-    assert(Dedup.simhashTier(500) === 64)       // every test SF
-    assert(Dedup.simhashTier(500000) === 128)   // the sf10 decade point
-    // end-to-end with an overridden knee so both tiers run on 500 docs:
-    // below the knee the auto path must equal the declared 64-bit query's
-    // pairs; above it the declared 128-bit query's
-    val docs = Tables.documents(spark, sf0001)
     def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val narrow = pairs(Dedup.simhashNearDupAuto(docs, knee = Long.MaxValue))
-    val wide = pairs(Dedup.simhashNearDupAuto(docs, knee = 1L))
-    assert(narrow === pairs(Dedup.simhashNearDupPairs(Dedup.simhash64Bands(docs))))
-    assert(wide === pairs(Dedup.simhashNearDupPairs(Dedup.simhash128Bands(docs),
-      sigCols = Seq("sig_lo", "sig_hi"))))
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val narrow = pairs(Dedup.ddSimhashNearDup64.fn(spark, sf0001))
+    val wide = pairs(Dedup.ddSimhashNearDup128.fn(spark, sf0001))
     // the wide tier is the stricter point on the precision curve: a pair at
     // 128-bit hamming <= 3 has lo-half hamming <= 3 (the lo half IS the
     // 64-bit signature) and by pigeonhole still shares a 16-bit band
-    assert(wide.map(t => (t._1, t._2)).subsetOf(narrow.map(t => (t._1, t._2))))
+    assert(wide.nonEmpty, "wide tier has no pairs at gate SF")
+    assert(wide.subsetOf(narrow))
   }
 
   test("wide hyperplane bands keep buckets sparse where the narrow tier saturates") {
@@ -138,70 +128,8 @@ class ScaleSpec extends SparkSpec {
       s"wide bands must cut raw candidates >=10x at 3000 vectors (narrow=$cNarrow, wide=$cWide)")
   }
 
-  test("auto-tier knn graph flips 8 -> 16 bit bands at the occupancy knee") {
+  test("ivfPqKcRouted: sqrt(n) on the power-of-2 grid, fixture-kc floor, 4096 cap") {
     import graft.operators.Similarity
-    assert(Similarity.KnnBandKnee === 131072L)
-    assert(Similarity.knnGraphTier(Similarity.KnnBandKnee - 1) === 8)
-    assert(Similarity.knnGraphTier(Similarity.KnnBandKnee) === 16)
-    assert(Similarity.knnGraphTier(5000) === 8)     // every test SF
-    assert(Similarity.knnGraphTier(500000) === 16)  // the sf10 decade point
-    // end-to-end with an overridden knee so both tiers run on the small SF:
-    // the auto path must equal the declared tier queries' edge sets
-    def edges(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val narrow = edges(Similarity.knnGraphAuto(spark, sf0001, knee = Long.MaxValue))
-    val wide = edges(Similarity.knnGraphAuto(spark, sf0001, knee = 1L))
-    assert(narrow === edges(Similarity.simKnnGraph.fn(spark, sf0001)))
-    assert(wide === edges(Similarity.simKnnGraphWide.fn(spark, sf0001)))
-    // the ROUTED auto entry must equal the routed tier queries the same way
-    val routedNarrow =
-      edges(Similarity.knnGraphRoutedAuto(spark, sf0001, knee = Long.MaxValue))
-    val routedWide = edges(Similarity.knnGraphRoutedAuto(spark, sf0001, knee = 1L))
-    assert(routedNarrow === edges(Similarity.simKnnGraphRouted.fn(spark, sf0001)))
-    assert(routedWide === edges(Similarity.knnGraphRoutedWide(spark, sf0001)))
-    assert(routedNarrow.nonEmpty, "routed narrow graph must have edges at gate SF")
-  }
-
-  test("dedup-then-index auto entry equals the declared narrow composition below the knee") {
-    import graft.operators.Similarity
-    def edges(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val narrow =
-      edges(Similarity.dedupThenIndexAuto(spark, sf0001, knee = Long.MaxValue))
-    assert(narrow === edges(Similarity.simDedupIndex.fn(spark, sf0001)))
-    assert(narrow.nonEmpty)
-    // past the (overridden) knee the survivor graph rides the wide bands —
-    // still a valid graph over the same survivor set (ids ⊆ narrow's ids
-    // need not hold for edges, but every endpoint must be a survivor)
-    val wide = edges(Similarity.dedupThenIndexAuto(spark, sf0001, knee = 1L))
-    val survivors = narrow.flatMap(e => Seq(e._1, e._2))
-    val removedIds = graft.operators.Clustering.ddSemdedup.fn(spark, sf0001)
-      .collect().filter(r => r.getLong(0) != r.getLong(1)).map(_.getLong(0)).toSet
-    wide.foreach { e =>
-      assert(!removedIds.contains(e._1) && !removedIds.contains(e._2),
-        s"wide survivor graph leaked a removed id: $e")
-    }
-    assert(survivors.nonEmpty)
-  }
-
-  test("kc-routed IVF-PQ at the forced fixture kc equals the declared sim_ivf_pq") {
-    import graft.operators.Similarity
-    def edges(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    // routing equality at a fixed kc (VERDICT r14 #2): the auto entry with
-    // kc forced to the fixture constant must reproduce the declared rows
-    val forced = edges(Similarity.ivfPqAuto(spark, sf0001,
-      kcOverride = Some(Similarity.IvfPqCells)))
-    assert(forced === edges(Similarity.simIvfPq.fn(spark, sf0001)))
-    assert(forced.nonEmpty, "forced-kc IVF-PQ returned no neighbors at gate SF")
-    // the routed point itself must still emit k neighbors per probe (cells
-    // differ, results may legitimately differ — recall is priced by the
-    // sim_pq_recall harness, not this equality spec)
-    val routed = Similarity.ivfPqAuto(spark, sf0001)
-    assert(routed.groupBy("qid").count().collect().forall(_.getLong(1) <= 3))
-    assert(routed.count() > 0)
-    // the router's law: √n on the power-of-2 grid, floored at the fixture
-    // constant, capped at 4096
     assert(Similarity.ivfPqKcRouted(1) === Similarity.IvfPqCells)
     assert(Similarity.ivfPqKcRouted(500) === 16)
     assert(Similarity.ivfPqKcRouted(5000) === 64)
@@ -210,25 +138,16 @@ class ScaleSpec extends SparkSpec {
     assert(Similarity.ivfPqKcRouted(Long.MaxValue) === 4096)
   }
 
-  test("auto-tier incremental image ingest flips 16 -> 32 bit bands at the occupancy knee") {
+  test("the 128-bit incremental image tier's pairs are a subset of the 16-bit tier's") {
     import graft.operators.Multimodal
-    assert(Multimodal.ImageBandKnee === 131072L)
-    assert(Multimodal.imageTier(Multimodal.ImageBandKnee - 1) === 16)
-    assert(Multimodal.imageTier(Multimodal.ImageBandKnee) === 32)
-    assert(Multimodal.imageTier(60000) === 16)   // sf1
-    assert(Multimodal.imageTier(600000) === 32)  // the sf10 decade point
-    // end-to-end with an overridden knee so both tiers run on the small
-    // SF: the auto path must equal the declared tier queries' pairs
     def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val narrow = pairs(Multimodal.mmImageIncrementalAuto(spark, sf0001,
-      knee = Long.MaxValue))
-    val wide = pairs(Multimodal.mmImageIncrementalAuto(spark, sf0001, knee = 1L))
-    assert(narrow === pairs(Multimodal.mmImageIncremental.fn(spark, sf0001)))
-    assert(wide === pairs(Multimodal.mmImageIncremental128.fn(spark, sf0001)))
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val narrow = pairs(Multimodal.mmImageIncremental.fn(spark, sf0001))
+    val wide = pairs(Multimodal.mmImageIncremental128.fn(spark, sf0001))
     // the combined 128-bit tier is the stricter operating point: its
     // hamming <= 3 pairs have ahash-half hamming <= 3, so its pair ids
     // are a subset of the narrow tier's
-    assert(wide.map(t => (t._1, t._2)).subsetOf(narrow.map(t => (t._1, t._2))))
+    assert(wide.nonEmpty, "wide tier has no pairs at gate SF")
+    assert(wide.subsetOf(narrow))
   }
 }
