@@ -87,6 +87,19 @@ object Persisted {
       }
     }
 
+  /** Run a transient step's `body` with `dfs` cached, the one home of the
+    * ownership rule: a relation whose plan is already cached (by the caller,
+    * a session store, or an earlier argument, as in `scoped(x, x)`) is read
+    * through that entry and left alone, and only the entries this call
+    * creates are dropped, in reverse order, on return or throw. */
+  def scoped[A](dfs: DataFrame*)(body: => A): A = {
+    var owned = List.empty[DataFrame]
+    try {
+      for (df <- dfs if df.storageLevel == StorageLevel.NONE) { df.persist(); owned ::= df }
+      body
+    } finally owned.foreach(_.unpersist())
+  }
+
   /** The store width rule: one partition per 256k rows, clamped to
     * [4, 4096]. A shuffle-built store otherwise inherits
     * shuffle.partitions and taxes every consumer stage with a task floor

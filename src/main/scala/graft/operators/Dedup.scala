@@ -1,11 +1,10 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{Persisted, QueryDef, Tables}
 import graft.functions.Exprs._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Large-scale deduplication operators: exact, n-gram Jaccard, MinHash+LSH,
   * SimHash. First-class components of the engine (builder brief) layered on
@@ -776,10 +775,8 @@ object Dedup {
     * driver memory / 120. At 100 TB the candidate edge set after LSH
     * banding exceeds any driver heap and this gate MUST route distributed —
     * callers never choose a path explicitly, the single `count()` on the
-    * (cached, reused) edge set decides. The edge set is cached only if the
-    * caller has not cached it, and only that entry is dropped on return:
-    * unpersisting a caller's entry would make its next action recompute
-    * the relation. The above-gate strategy is
+    * (cached, reused) edge set decides; the edge set is cached for the
+    * call by [[Persisted.scoped]]. The above-gate strategy is
     * [[starContraction]] (O(log n) rounds regardless of component shape;
     * VERDICT r15 #7 — the ≥10-round chain synthetic showed min-label
     * propagation's rounds are O(diameter), which a crawl-frontier-shaped
@@ -787,11 +784,9 @@ object Dedup {
     * rounds); the label-equality spec pins both paths identical. */
   def labelPropagation(edges: DataFrame, driverMaxEdges: Long = 1000000L): DataFrame = {
     val spark = edges.sparkSession
-    val owned = edges.storageLevel == StorageLevel.NONE
-    if (owned) edges.cache()
     // starContraction materializes its result before returning, so the
     // entry this call owns is no longer read once either path is done
-    try {
+    Persisted.scoped(edges) {
       if (edges.count() <= driverMaxEdges) {
         val pairs = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
         val uf = new UnionFind
@@ -801,7 +796,7 @@ object Dedup {
         import spark.implicits._
         rows.toDF("doc_id", "cluster_id")
       } else starContraction(edges)
-    } finally if (owned) edges.unpersist()
+    }
   }
 
   /** Rounds the most recent [[starContraction]] call took to converge
@@ -843,8 +838,6 @@ object Dedup {
     * bounded-storage discipline every iterative relation here follows. */
   def starContraction(edges0: DataFrame): DataFrame = {
     val edges = edges0.toDF("doc_a", "doc_b")
-    val verts = edges.select(col("doc_a").as("doc_id"))
-      .union(edges.select(col("doc_b").as("doc_id"))).distinct().cache()
     def canon(df: DataFrame): DataFrame = df
       .filter(col("u") =!= col("v"))
       .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
@@ -905,15 +898,18 @@ object Dedup {
     // Materialize BEFORE releasing the fixpoint edges — the returned
     // relation is lazy, and unpersisting first would make the caller's
     // action recompute every round through the RDD lineage.
-    val (out, _) = graft.plans.materializeIter(verts
-      .join(e.select(col("v").as("doc_id"), col("u").as("root")), Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("root"), col("doc_id")).as("cluster_id")))
-    out.count()
-    eRdd.unpersist(blocking = false)
-    verts.unpersist()
-    // `out` stays persisted for the caller's consumption: its actions read
-    // the materialized RDD, never the contraction rounds' lineage
-    out
+    val verts = edges.select(col("doc_a").as("doc_id"))
+      .union(edges.select(col("doc_b").as("doc_id"))).distinct()
+    Persisted.scoped(verts) {
+      val (out, _) = graft.plans.materializeIter(verts
+        .join(e.select(col("v").as("doc_id"), col("u").as("root")), Seq("doc_id"), "left")
+        .select(col("doc_id"), coalesce(col("root"), col("doc_id")).as("cluster_id")))
+      out.count()
+      eRdd.unpersist(blocking = false)
+      // `out` stays persisted for the caller's consumption: its actions
+      // read the materialized RDD, never the contraction rounds' lineage
+      out
+    }
   }
 
   /** Near-duplicate clusters: connected components over the PRODUCTION

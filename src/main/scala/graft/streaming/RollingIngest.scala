@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ParquetSchema
+import graft.{ParquetSchema, Persisted}
 import graft.operators.{Dedup, Similarity, UnionFind}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession, Row}
 import org.apache.spark.sql.expressions.Window
@@ -711,15 +711,15 @@ object RollingIngest {
     val spark = rows.sparkSession
     val (bandsOf, probe, append) = side
     val empty = bandsOf(rows.limit(0))
-    val bands = bandsOf(rows).persist()
-    try {
+    val bands = bandsOf(rows)
+    Persisted.scoped(bands) {
       val store = probedStore(spark, storeDir, idCol, partitionCols, bands, id, empty)
       use(probe(store, bands), bands, { kept =>
         append(kept)
         commitDelta(spark, storeDir, kept, empty.schema, idCol,
           partitionCols, compactEvery, id)
       })
-    } finally bands.unpersist()
+    }
   }
 
   /** The single-store stream: one [[storeStep]] per batch, its result
@@ -943,8 +943,7 @@ object RollingIngest {
       if ((wantRetrain || needResume) && newestEl >= 0 && newestEl < id) {
         val v = newestEl
         val eff = storeView(spark, storeDir, schema, "vec_id", upTo = id).get
-          .persist()
-        try {
+        Persisted.scoped(eff) {
           val live = eff.count()
           census = live // exact at every event boundary
           val liveKc = Similarity.ivfPqKcRouted(live)
@@ -974,7 +973,7 @@ object RollingIngest {
             if (!needResume) onRetrain(trainedKc, liveKc, live)
             cur = Some((v, c2, b2))
           }
-        } finally eff.unpersist()
+        }
       }
       (cur.get._2, cur.get._3)
     }
@@ -1139,8 +1138,8 @@ object RollingIngest {
       .select("doc_id").distinct()
     val docs = dedupDeterministic(corpus.select("doc_id", "text"), "doc_id")
       .join(ids, "doc_id")
-    val wide = Dedup.simhash128Bands(docs).persist()
-    try {
+    val wide = Dedup.simhash128Bands(docs)
+    Persisted.scoped(wide) {
       val nW = wide.select("doc_id").distinct().count()
       val nIds = ids.count()
       require(nW == nIds,
@@ -1149,7 +1148,7 @@ object RollingIngest {
           s"keepers. No store change made (marker tier$v stays; re-run " +
           "with the full keeper corpus).")
       writeElement(spark, s"$storeDir/base$v", wide, partitionCols = Nil)
-    } finally wide.unpersist()
+    }
     reclaim(spark, storeDir)
   }
 
@@ -1305,14 +1304,10 @@ object RollingIngest {
       // ANN side's books
       val docSide = dedupSide(dedupStoreDir, wideSig, maxHamming)(spark, id)
       val annSide = annSideFor(spark, id)
-      val batch0 = dedupDeterministic(b, "doc_id").persist()
-      // one cache entry per distinct plan: the identity gate (every caller
-      // but curatedIngest) hands back batch0 itself, and persisting it again
-      // would share batch0's entry and drop it at the first unpersist
-      val gated = preGate(spark, id, batch0)
-      val batch = if (gated eq batch0) batch0 else gated.persist()
-      try storeStep(dedupStoreDir, "doc_id", docSide, Nil, compactEvery, id,
-          batch.select("doc_id", "text")) { (pairs, docBands, commitDedup) =>
+      val batch0 = dedupDeterministic(b, "doc_id")
+      val batch = preGate(spark, id, batch0)
+      Persisted.scoped(batch0, batch)(storeStep(dedupStoreDir, "doc_id", docSide, Nil,
+          compactEvery, id, batch.select("doc_id", "text")) { (pairs, docBands, commitDedup) =>
         // Components over the batch-touching pairs; labels is at most
         // edge-set-sized (∝ batch), so every derived relation below
         // broadcasts. Store members need NO store scan: every pair
@@ -1337,8 +1332,7 @@ object RollingIngest {
               col("doc_id")).as("keeper_id"))
           .select(col("doc_id"), col("keeper_id"),
             (col("keeper_id") === col("doc_id")).as("kept"))
-          .persist()
-        try {
+        Persisted.scoped(decisions) {
           val keptIds = decisions.filter(col("kept")).select("doc_id")
           dedupSink(decisions, id)
           storeStep(annStoreDir, "vec_id", annSide, annPartitionCols, compactEvery, id,
@@ -1356,12 +1350,8 @@ object RollingIngest {
                 commitAnn(vecBands)
               }
           }
-        } finally decisions.unpersist()
-      } finally {
-        // reverse order of persist
-        if (batch ne batch0) batch.unpersist()
-        batch0.unpersist()
-      }
+        }
+      })
     }
 
   /** The FULL curation funnel as one rolling micro-batch loop — the shape
@@ -1592,8 +1582,8 @@ object RollingIngest {
     val eb = edges0.select(
         org.apache.spark.sql.functions.least(col(cols(0)), col(cols(1))).cast("long").as("u"),
         org.apache.spark.sql.functions.greatest(col(cols(0)), col(cols(1))).cast("long").as("v"))
-      .filter(col("u") =!= col("v")).distinct().persist()
-    try {
+      .filter(col("u") =!= col("v")).distinct()
+    Persisted.scoped(eb) {
       // driver memory ∝ batch edges (the documented contract; the probe
       // batches carry the same comment) + the ledger
       val ePairs = eb.collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -1639,7 +1629,7 @@ object RollingIngest {
           ledger))
         labelsDf
       }
-    } finally eb.unpersist()
+    }
   }
 
   /** The crawl stack's cluster view in ONE micro-batch loop: simhash
@@ -1663,8 +1653,7 @@ object RollingIngest {
     ingest(docs, dedupStoreDir, "doc_id", dedupSide(dedupStoreDir, wideSig, maxHamming),
       Nil, compactEvery, configure, sinkStores = Seq(ccStoreDir)) { (pairs, id) =>
       val spark = pairs.sparkSession
-      val p = pairs.select("doc_a", "doc_b").persist()
-      try sink(componentsBatch(spark, ccStoreDir, p, compactEvery, id), id)
-      finally p.unpersist()
+      val p = pairs.select("doc_a", "doc_b")
+      Persisted.scoped(p)(sink(componentsBatch(spark, ccStoreDir, p, compactEvery, id), id))
     }
 }

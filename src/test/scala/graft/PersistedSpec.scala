@@ -16,6 +16,10 @@ class PersistedSpec extends SparkSpec {
     assert(builds == 1)
     assert(a.storageLevel != StorageLevel.NONE) // actually persisted
     assert(b.count() == 3)
+    // a transient scope over a relation the caller cached reads that entry
+    // and leaves it in place
+    assert(Persisted.scoped(a)(a.count()) == 3)
+    assert(a.storageLevel != StorageLevel.NONE, "scoped dropped the caller's entry")
   }
 
   test("different keys build independently") {
@@ -54,6 +58,29 @@ class PersistedSpec extends SparkSpec {
     assert(b eq b2, "kept entry must survive as the same cached relation")
     assert(b2.storageLevel != StorageLevel.NONE)
     Persisted.clear(spark, "spec#batch/")
+  }
+
+  test("scoped caches an uncached input once and drops it on return and on throw") {
+    val x = Seq(41, 42).toDF("scoped")
+    def rdds = spark.sparkContext.getPersistentRDDs.keySet
+    // the identity-gate shape: the second argument is the first
+    val created = Persisted.scoped(x, x) {
+      assert(x.storageLevel == StorageLevel.MEMORY_AND_DISK)
+      val before = rdds
+      assert(x.count() == 2)
+      rdds -- before
+    }
+    assert(created.size == 1, s"one entry, one cached RDD: $created")
+    assert(x.storageLevel == StorageLevel.NONE)
+    assert(!rdds.contains(created.head), "the entry's cached RDD outlived the scope")
+    val thrown = intercept[IllegalStateException] {
+      Persisted.scoped(x) {
+        assert(x.storageLevel != StorageLevel.NONE)
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(thrown.getMessage == "body failed")
+    assert(x.storageLevel == StorageLevel.NONE, "a throwing body left its entry cached")
   }
 
   test("cached relation is shared across both sides of a self-join plan") {
