@@ -22,34 +22,23 @@ object Tables {
     * call would repeat that listing and footer read, which at 100 TB scale
     * is exactly the metadata work a metastore amortizes.
     *
-    * Scoped per SparkSession; a cached DataFrame strongly references its
-    * session, so weak keys could never collect an entry — instead, entries
-    * of STOPPED sessions are evicted on the next access from any session,
-    * which releases their relations across session churn. Static-data
-    * assumption: the file listing is frozen at first read per (session,
-    * dir, table); rewriting a directory mid-session requires a new session
-    * (or `refreshByPath`), exactly like a metastore-cached relation. */
-  private val cache = new java.util.HashMap[
-    SparkSession, java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]]()
+    * Scoped per SparkSession through a [[SessionMemo]], which sweeps the
+    * entries of STOPPED sessions on access and so releases their relations
+    * across session churn. Static-data assumption: the file listing is
+    * frozen at first read per (session, dir, table); rewriting a directory
+    * mid-session requires a new session (or `refreshByPath`), exactly like
+    * a metastore-cached relation. */
+  private val resolved = new SessionMemo[DataFrame]
 
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val perSession = cache.synchronized {
-      val it = cache.keySet().iterator()
-      while (it.hasNext) if (it.next().sparkContext.isStopped) it.remove()
-      var m = cache.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-        cache.put(spark, m)
-      }
-      m
-    }
-    perSession.computeIfAbsent((sfDir, name), { _ =>
+    val path = s"$sfDir/$name.parquet"
+    resolved.of(spark, path) {
       // events.parquet carries INT64 TIMESTAMP(NANOS) which Spark 4 rejects
       // by default; read nanos as long (queries convert when needed). Set
       // before the footer is converted: the conversion reads it.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      ParquetSchema.read(spark, s"$sfDir/$name.parquet")
-    })
+      ParquetSchema.read(spark, path)
+    }
   }
 
   /** Microseconds-since-epoch for `events.ts` as a SQL fragment, dispatched

@@ -191,8 +191,8 @@ object Clustering {
     val pairs = x.join(y, Seq("cluster_id", "band"))
       .filter(col("va") < col("vb") && col("vb") - col("va") <= 200)
       .select(col("va"), col("vb"),
-        round(graft.plans.dotQNative(col("qa"), col("qb")).cast("double") /
-          (col("na") * col("nb")), 6).as("cosine"))
+        Similarity.cosine6(graft.plans.dotQNative(col("qa"), col("qb")),
+          col("na"), col("nb")).as("cosine"))
       .filter(col("cosine") >= 0.3)
       .select(col("va"), col("vb"))
     Dedup.labelPropagation(pairs)

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   *
   * - `cosineTopK` — brute-force double-precision path (codegen'd higher-order
   *   functions, broadcast probes): the baseline, O(probes x corpus).
-  * - `cosineTopKBucketed` — IVF-style path: neighbors restricted to the
+  * - `sim_ivf_bucketed` — IVF-style path: neighbors restricted to the
   *   probe's coarse cell (here the `label` column stands in for a centroid
   *   assignment), cutting the scanned fraction to ~1/cells; at 100 TB the
   *   corpus is pre-partitioned/bucketed by cell so each probe touches only
@@ -18,6 +18,12 @@ import org.apache.spark.sql.functions._
   * - declared oracle queries use exact DECIMAL dot products (cast back to
   *   double) so Spark and DuckDB agree bit-for-bit regardless of summation
   *   order — float summation order is the classic cross-engine mismatch.
+  *
+  * Every declared ANN query is candidates → exact score → per-probe top-k,
+  * and that ranking contract has one home on each side: [[cosine6]],
+  * [[topPerQid]] and [[rerankExact]] in Spark, [[normsCte]],
+  * [[topPerQidSql]] and [[rerankExactSql]] in the generated oracle SQL,
+  * and [[recallAt3]] for the recall gates over both.
   */
 object Similarity {
 
@@ -59,6 +65,38 @@ object Similarity {
   def dotQ(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
 
+  // ---- the ranking contract (Spark side) ----
+
+  /** The exact score every ANN query ranks by: an exact long dot `num` over
+    * the two norms, rounded to 6 dp as the oracle rounds it, so a 1-ulp
+    * difference in double formatting cannot surface. */
+  private[operators] def cosine6(num: Column, na: Column, nb: Column): Column =
+    round(num.cast("double") /
+      (na * nb), 6)
+
+  /** Per-probe top-k: `df`'s rows ranked within `qid` by `score` desc, ties
+    * to the lower `nid` (the total order both engines agree on), the first
+    * `k` kept. */
+  private def topPerQid(df: DataFrame, score: String, k: Int): DataFrame =
+    df.withColumn("rn", row_number().over(
+        Window.partitionBy("qid").orderBy(col(score).desc, col("nid"))))
+      .filter(col("rn") <= k).drop("rn")
+
+  /** The exact-rerank funnel: (qid, nid) candidate pairs join back to the
+    * probes' and the corpus' (vec_id, q, norm) rows, are scored by
+    * [[cosine6]] and cut to the top `k` per probe — exact work ∝
+    * candidates, not corpus. */
+  private def rerankExact(cands: DataFrame, probes: DataFrame,
+                          corpus: DataFrame, k: Int): DataFrame =
+    topPerQid(cands
+      .join(probes.select(col("vec_id").as("qid"), col("q").as("qa"),
+        col("norm").as("qna")), "qid")
+      .join(corpus.select(col("vec_id").as("nid"), col("q").as("qb"),
+        col("norm").as("qnb")), "nid")
+      .select(col("qid"), col("nid"),
+        cosine6(graft.plans.dotQNative(col("qa"), col("qb")),
+          col("qna"), col("qnb")).as("cosine")), "cosine", k)
+
   /** Brute-force cosine top-k (production): probes broadcast against the
     * corpus; per-probe heap via window over (probe) partitions. */
   def cosineTopK(probes: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
@@ -68,32 +106,54 @@ object Similarity {
       .select(col("qid"), col("nid"),
         (dotD(col("va"), col("vb")) /
           (sqrt(dotD(col("va"), col("va"))) * sqrt(dotD(col("vb"), col("vb"))))).as("cosine"))
-    val w = Window.partitionBy("qid").orderBy(col("cosine").desc, col("nid"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select("qid", "nid", "cosine")
+    topPerQid(scored, "cosine", k)
   }
 
-  // ---- oracle fragments (quantized-long arithmetic, relational unnest) ----
-  private def unnestSql(filter: String): String =
-    s"SELECT vec_id, CAST(round(CAST(unnest(embedding) AS DOUBLE)*100000000.0) AS BIGINT) AS v, " +
-      s"generate_subscripts(embedding, 1) AS i FROM embeddings$filter"
+  // ---- the ranking contract (oracle side: quantized-long list arithmetic) ----
 
-  private def topkOracle(probeFilter: String, cellJoin: String, k: Int): String =
-    s"""WITH a AS (${unnestSql(probeFilter)}),
-      |b AS (${unnestSql("")}),
-      |lbl AS (SELECT vec_id, label FROM embeddings),
-      |dots AS (SELECT a.vec_id AS qid, b.vec_id AS nid, CAST(CAST(SUM(a.v * b.v) AS BIGINT) AS DOUBLE) AS dot
-      |  FROM a JOIN b ON a.i = b.i AND a.vec_id <> b.vec_id
-      |  $cellJoin
-      |  GROUP BY a.vec_id, b.vec_id),
-      |norms AS (SELECT vec_id, sqrt(CAST(CAST(SUM(v * v) AS BIGINT) AS DOUBLE)) AS norm FROM b GROUP BY vec_id)
-      |SELECT qid, nid, cosine FROM (
-      |  SELECT qid, nid,
-      |    round(dot / (na.norm * nb.norm), 6) AS cosine,
-      |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY
-      |      round(dot / (na.norm * nb.norm), 6) DESC, nid) AS rn
-      |  FROM dots JOIN norms na ON na.vec_id = qid JOIN norms nb ON nb.vec_id = nid) t
-      |WHERE rn <= $k""".stripMargin
+  /** `q(vec_id[, cols], qv)`: the 1e8-quantized vectors of `src` ([[qvec]]'s
+    * rounding). */
+  private def qCte(cols: String = "", src: String = "embeddings"): String =
+    s"q AS (SELECT vec_id$cols, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*100000000.0) AS BIGINT)) AS qv FROM $src)"
+
+  /** `norms(vec_id, norm)` over CTE `q`. */
+  private def normsCte: String =
+    "norms AS (SELECT vec_id, sqrt(CAST(list_sum(list_transform(qv, v -> v*v)) AS DOUBLE)) AS norm FROM q)"
+
+  /** Exact long dot of two list columns. */
+  private def dotSql(a: String, b: String): String =
+    s"list_sum(list_transform(generate_series(1, len($a)), i -> $a[i] * $b[i]))"
+
+  /** [[topPerQid]]'s SQL: `from`'s rows ranked within `qid` by `score`
+    * DESC, ties to the lower `nid`, the first `k` kept, `cols` out. */
+  private def topPerQidSql(cols: String, score: String, from: String, k: Int): String =
+    s"""SELECT $cols FROM (
+      |  SELECT $cols, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY $score DESC, nid) AS rn
+      |  FROM $from) t WHERE rn <= $k""".stripMargin
+
+  /** [[rerankExact]]'s SQL: the (qid, nid) pairs of CTE `cands` scored by
+    * exact quantized cosine and cut to the top `k` per probe. Assumes CTEs
+    * `q` and `norms`; ends the statement. */
+  private def rerankExactSql(cands: String, k: Int): String =
+    s"""exact AS (
+      |  SELECT t.qid, t.nid,
+      |    round(CAST(${dotSql("x.qv", "y.qv")} AS DOUBLE)
+      |      / (na.norm * nb.norm), 6) AS cosine
+      |  FROM $cands t JOIN q x ON x.vec_id = t.qid JOIN q y ON y.vec_id = t.nid
+      |  JOIN norms na ON na.vec_id = t.qid JOIN norms nb ON nb.vec_id = t.nid)
+      |${topPerQidSql("qid, nid, cosine", "cosine", "exact", k)}""".stripMargin
+
+  /** Brute-force oracle, [[sparkTopKDec]]'s SQL: every pair of a probe
+    * (vec_id < `probeMax`) with another vector, in the probe's label cell
+    * when `sameCell`, through the exact-rerank funnel. */
+  private def topkOracle(probeMax: Int, sameCell: Boolean, k: Int): String = {
+    val cell = if (sameCell) " AND a.label = b.label" else ""
+    s"""WITH ${qCte(", label")},
+      |cand AS (SELECT a.vec_id AS qid, b.vec_id AS nid
+      |  FROM q a JOIN q b ON a.vec_id < $probeMax AND a.vec_id <> b.vec_id$cell),
+      |$normsCte,
+      |${rerankExactSql("cand", k)}""".stripMargin
+  }
 
   /** (vec_id, label, q, norm): quantized vectors + norms, computed in one
     * scan-stage projection (norm = sqrt(q.q), fused codegen'd dot) and
@@ -121,31 +181,50 @@ object Similarity {
     val joined =
       if (sameCell) broadcast(p).join(c, col("qlabel") === col("nlabel") && col("qid") =!= col("nid"))
       else broadcast(p).crossJoin(c).filter(col("qid") =!= col("nid"))
-    // round(…, 6) both here and in the oracle so 1-ulp double formatting
-    // differences can't surface (division/sqrt are IEEE-identical, but keep
-    // the guard for robustness across engines).
-    val scored = joined.select(col("qid"), col("nid"),
-      round(dotQ(col("va"), col("vb")).cast("double") /
-        (col("qnorm") * col("nnorm")), 6).as("cosine"))
-    val w = Window.partitionBy("qid").orderBy(col("cosine").desc, col("nid"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select("qid", "nid", "cosine")
+    topPerQid(joined.select(col("qid"), col("nid"),
+      cosine6(dotQ(col("va"), col("vb")), col("qnorm"), col("nnorm")).as("cosine")),
+      "cosine", k)
   }
 
   /** Brute-force cosine top-5 for probe vectors vec_id < 20 (oracle-checked,
     * exact decimal arithmetic). */
   val simCosineTopK = QueryDef("sim_cosine_topk",
-    topkOracle(" WHERE vec_id < 20", "", 5)) { (spark, d) =>
+    topkOracle(probeMax = 20, sameCell = false, k = 5)) { (spark, d) =>
     sparkTopKDec(spark, d, probeMax = 20, sameCell = false, k = 5)
   }
 
   /** IVF-bucketed variant: neighbors restricted to the probe's cell
     * (label = coarse centroid id); probes vec_id < 100. */
   val simIvfBucketed = QueryDef("sim_ivf_bucketed",
-    topkOracle(" WHERE vec_id < 100",
-      "JOIN lbl la ON la.vec_id = a.vec_id JOIN lbl lb ON lb.vec_id = b.vec_id AND la.label = lb.label", 3)) { (spark, d) =>
+    topkOracle(probeMax = 100, sameCell = true, k = 3)) { (spark, d) =>
     sparkTopKDec(spark, d, probeMax = 100, sameCell = true, k = 3)
   }
+
+  /** Recall@3 of the `approx` query against the exact brute-force top-3 on
+    * the probes vec_id < `probeMax`, per probe — the acceptance check an
+    * approximate index runs on a SAMPLED probe set (the brute-force side is
+    * O(probes x corpus), affordable exactly because the probe set is a
+    * sample; the approx side reads the stores its production query reads).
+    * Everything is integer end-to-end (hit counts, ppm via floor
+    * division), so the cross-engine hash has no tie surface; both top-3
+    * sets are deterministic by the ranking contract. */
+  private def recallAt3(name: String, probeMax: Int, approx: QueryDef): QueryDef =
+    QueryDef(name,
+      s"""SELECT e.qid, CAST(count(a.nid) AS BIGINT) AS hits,
+        |  CAST(count(a.nid) AS BIGINT) * 1000000 // 3 AS recall_ppm
+        |FROM (${topkOracle(probeMax, sameCell = false, k = 3)}) e
+        |LEFT JOIN (
+        |${approx.oracle.get}) a ON a.qid = e.qid AND a.nid = e.nid
+        |GROUP BY e.qid""".stripMargin) { (spark, d) =>
+      val exact = sparkTopKDec(spark, d, probeMax, sameCell = false, k = 3)
+        .select("qid", "nid")
+      val found = approx.fn(spark, d)
+        .select(col("qid"), col("nid"), lit(1L).as("hit"))
+      exact.join(found, Seq("qid", "nid"), "left")
+        .groupBy("qid").agg(count(col("hit")).as("hits"))
+        .select(col("qid"), col("hits"),
+          expr("(hits * 1000000) div 3").as("recall_ppm"))
+    }
 
   /** Embedding-cosine near-duplicate pairs (dedup method #5 in the brief):
     * candidate pairs (same cell, id window <= 200 — standing in for an LSH
@@ -160,13 +239,13 @@ object Similarity {
     // putting n²/20 pre-filter pairs through the window predicate, which
     // is what blew the 600 s oracle budget at sf1 (VERDICT r11 #5; the
     // result set is identical, the sf0.001..0.1 gates prove it).
-    s"""WITH q AS (SELECT vec_id, label, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*100000000.0) AS BIGINT)) AS qv FROM embeddings),
+    s"""WITH ${qCte(", label")},
       |xa AS (SELECT vec_id, label, qv, vec_id // 200 AS band FROM q
       |       UNION ALL SELECT vec_id, label, qv, vec_id // 200 + 1 FROM q),
       |cand AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.qv AS qa, b.qv AS qb
       |  FROM xa a JOIN q b ON a.label = b.label AND a.band = b.vec_id // 200
       |    AND a.vec_id < b.vec_id AND b.vec_id - a.vec_id <= 200),
-      |norms AS (SELECT vec_id, sqrt(CAST(list_sum(list_transform(qv, v -> v*v)) AS DOUBLE)) AS norm FROM q)
+      |$normsCte
       |SELECT vec_a, vec_b, cosine FROM (
       |  SELECT vec_a, vec_b,
       |    round(CAST(list_sum(list_transform(generate_series(1, len(qa)), i -> qa[i]*qb[i])) AS DOUBLE)
@@ -189,8 +268,7 @@ object Similarity {
     a.join(b, Seq("label", "band"))
       .filter(col("vec_a") < col("vec_b") && col("vec_b") - col("vec_a") <= 200)
       .select(col("vec_a"), col("vec_b"),
-        round(dotQ(col("qa"), col("qb")).cast("double") /
-          (col("na") * col("nb")), 6).as("cosine"))
+        cosine6(dotQ(col("qa"), col("qb")), col("na"), col("nb")).as("cosine"))
       .filter(col("cosine") >= 0.3)
   }
 
@@ -219,6 +297,26 @@ object Similarity {
     (0 until 16).map { j =>
       s"CASE WHEN list_sum(list_transform(generate_series(1, len($q)), i -> $q[i] * (((${HA(j)}*i + ${HB(j)}) % 7) - 3))) >= 0 THEN CAST(${1L << j} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
     }.mkString(" + ")
+
+  /** Narrow-tier sketch CTEs over `q`: `sig` (the 16-bit sign sketch) and
+    * `bands` (its two 8-bit bands), both carrying `cols`. */
+  private def narrowBandCtes(cols: String = ""): String =
+    s"""sig AS (SELECT vec_id$cols, qv, ${lshSigSql("qv")} AS sg FROM q),
+      |bands AS (SELECT vec_id$cols, band_id, (sg >> (band_id*8)) & 255 AS band_val
+      |          FROM sig CROSS JOIN (VALUES (0),(1)) b(band_id))""".stripMargin
+
+  /** The band-chain oracle of every band-candidate query: vectors sharing a
+    * band value are candidate pairs (`candCond`, appended to the candidate
+    * join, narrows them to a probe set or a cell), then the exact-rerank
+    * funnel. `ctes` defines `q` and ends with `bands(vec_id, …, band_id,
+    * band_val)`. */
+  private def bandChainSql(ctes: String, candCond: String, k: Int): String =
+    s"""WITH $ctes,
+      |cand AS (SELECT DISTINCT a.vec_id AS qid, b.vec_id AS nid
+      |  FROM bands a JOIN bands b ON a.band_id = b.band_id AND a.band_val = b.band_val
+      |    AND a.vec_id <> b.vec_id$candCond),
+      |$normsCte,
+      |${rerankExactSql("cand", k)}""".stripMargin
 
   /** Explode a (vec_id, …, q, norm) relation into hyperplane-LSH band rows
     * (vec_id, …, q, norm, band_id, band_val) — the storable vector-index
@@ -320,22 +418,7 @@ object Similarity {
   val simLshHyperplane: QueryDef = {
     val k = 3
     QueryDef("sim_lsh_ann",
-      s"""WITH q AS (SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*100000000.0) AS BIGINT)) AS qv FROM embeddings),
-        |sig AS (SELECT vec_id, qv, ${lshSigSql("qv")} AS sg FROM q),
-        |bands AS (SELECT vec_id, qv, band_id, (sg >> (band_id*8)) & 255 AS band_val
-        |          FROM sig CROSS JOIN (VALUES (0),(1)) b(band_id)),
-        |cand AS (SELECT DISTINCT a.vec_id AS qid, b.vec_id AS nid
-        |  FROM bands a JOIN bands b ON a.band_id = b.band_id AND a.band_val = b.band_val
-        |    AND a.vec_id < 100 AND a.vec_id <> b.vec_id),
-        |dots AS (SELECT c.qid, c.nid,
-        |    CAST(list_sum(list_transform(generate_series(1, len(x.qv)), i -> x.qv[i] * y.qv[i])) AS DOUBLE) AS dot
-        |  FROM cand c JOIN q x ON x.vec_id = c.qid JOIN q y ON y.vec_id = c.nid),
-        |norms AS (SELECT vec_id, sqrt(CAST(list_sum(list_transform(qv, v -> v*v)) AS DOUBLE)) AS norm FROM q)
-        |SELECT qid, nid, cosine FROM (
-        |  SELECT qid, nid, round(dot / (na.norm * nb.norm), 6) AS cosine,
-        |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY round(dot / (na.norm * nb.norm), 6) DESC, nid) AS rn
-        |  FROM dots JOIN norms na ON na.vec_id = qid JOIN norms nb ON nb.vec_id = nid) t
-        |WHERE rn <= $k""".stripMargin) { (spark, d) =>
+      bandChainSql(s"${qCte()},\n${narrowBandCtes()}", " AND a.vec_id < 100", k)) { (spark, d) =>
       // Band join over a PERSISTED bands relation (like dd_simhash_neardup):
       // persisting gives compute-once across the two join sides, and the
       // join streams bucket expansion with bounded memory (sort-merge
@@ -354,12 +437,9 @@ object Similarity {
         .filter(col("qid") =!= col("nid"))
         .select("qid", "nid", "qa", "qb", "na", "nb")
         .distinct()
-      val scored = cand.select(col("qid"), col("nid"),
-        round(graft.plans.dotQNative(col("qa"), col("qb")).cast("double") /
-          (col("na") * col("nb")), 6).as("cosine"))
-      val w = Window.partitionBy("qid").orderBy(col("cosine").desc, col("nid"))
-      scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-        .select("qid", "nid", "cosine")
+      topPerQid(cand.select(col("qid"), col("nid"),
+        cosine6(graft.plans.dotQNative(col("qa"), col("qb")),
+          col("na"), col("nb")).as("cosine")), "cosine", k)
     }
   }
 
@@ -431,13 +511,10 @@ object Similarity {
       .select(col("vec_id").as("qid"), col("q").as("qa"), col("norm").as("na"))
     val vecsAll = allBands.filter(col("band_id") === 0)
       .select(col("vec_id").as("nid"), col("q").as("qb"), col("norm").as("nb"))
-    val scored = cand.join(vecsNew, "qid").join(vecsAll, "nid")
+    topPerQid(cand.join(vecsNew, "qid").join(vecsAll, "nid")
       .select(col("qid"), col("nid"),
-        round(graft.plans.dotQNative(col("qa"), col("qb")).cast("double") /
-          (col("na") * col("nb")), 6).as("cosine"))
-    val w = Window.partitionBy("qid").orderBy(col("cosine").desc, col("nid"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select("qid", "nid", "cosine")
+        cosine6(graft.plans.dotQNative(col("qa"), col("qb")),
+          col("na"), col("nb")).as("cosine")), "cosine", k)
   }
 
   /** Oracle chain shared by the incremental-ingest queries: full-corpus
@@ -446,22 +523,8 @@ object Similarity {
   private def incrementalAnnOracle(cellEq: Boolean, k: Int): String = {
     val lbl = if (cellEq) ", label" else ""
     val cellCond = if (cellEq) " AND a.label = b.label" else ""
-    s"""WITH q AS (SELECT vec_id$lbl, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*100000000.0) AS BIGINT)) AS qv FROM embeddings),
-      |sig AS (SELECT vec_id$lbl, qv, ${lshSigSql("qv")} AS sg FROM q),
-      |bands AS (SELECT vec_id$lbl, qv, band_id, (sg >> (band_id*8)) & 255 AS band_val
-      |          FROM sig CROSS JOIN (VALUES (0),(1)) b(band_id)),
-      |cand AS (SELECT DISTINCT a.vec_id AS qid, b.vec_id AS nid
-      |  FROM bands a JOIN bands b ON a.band_id = b.band_id AND a.band_val = b.band_val$cellCond
-      |    AND a.vec_id % 20 = 0 AND a.vec_id <> b.vec_id),
-      |dots AS (SELECT c.qid, c.nid,
-      |    CAST(list_sum(list_transform(generate_series(1, len(x.qv)), i -> x.qv[i] * y.qv[i])) AS DOUBLE) AS dot
-      |  FROM cand c JOIN q x ON x.vec_id = c.qid JOIN q y ON y.vec_id = c.nid),
-      |norms AS (SELECT vec_id, sqrt(CAST(list_sum(list_transform(qv, v -> v*v)) AS DOUBLE)) AS norm FROM q)
-      |SELECT qid, nid, cosine FROM (
-      |  SELECT qid, nid, round(dot / (na.norm * nb.norm), 6) AS cosine,
-      |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY round(dot / (na.norm * nb.norm), 6) DESC, nid) AS rn
-      |  FROM dots JOIN norms na ON na.vec_id = qid JOIN norms nb ON nb.vec_id = nid) t
-      |WHERE rn <= $k""".stripMargin
+    bandChainSql(s"${qCte(lbl)},\n${narrowBandCtes(lbl)}",
+      s"$cellCond AND a.vec_id % 20 = 0", k)
   }
 
   /** ONE session band store over the mod-20 "persisted corpus"
@@ -565,27 +628,16 @@ object Similarity {
         |         THEN list_transform(e.embedding, x -> CAST(round(CAST(x AS DOUBLE) / mx.s127) AS BIGINT))
         |         ELSE list_transform(e.embedding, x -> CAST(0 AS BIGINT)) END AS code
         |  FROM e JOIN mx ON mx.vec_id = e.vec_id),
-        |q AS (SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*100000000.0) AS BIGINT)) AS qv FROM e),
-        |norms AS (SELECT vec_id, sqrt(CAST(list_sum(list_transform(qv, v -> v*v)) AS DOUBLE)) AS norm FROM q),
+        |${qCte(src = "e")},
+        |$normsCte,
         |approx AS (
         |  SELECT a.vec_id AS qid, b.vec_id AS nid,
-        |    round(CAST(list_sum(list_transform(generate_series(1, len(a.code)), i -> a.code[i] * b.code[i])) AS DOUBLE)
+        |    round(CAST(${dotSql("a.code", "b.code")} AS DOUBLE)
         |      * a.s127 * b.s127 / ((na.norm / 100000000.0) * (nb.norm / 100000000.0)), 6) AS acos
         |  FROM cd a JOIN cd b ON a.vec_id < 50 AND a.vec_id <> b.vec_id
         |  JOIN norms na ON na.vec_id = a.vec_id JOIN norms nb ON nb.vec_id = b.vec_id),
-        |top AS (SELECT qid, nid FROM (
-        |  SELECT qid, nid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY acos DESC, nid) AS rn
-        |  FROM approx) t WHERE rn <= $cand),
-        |exact AS (
-        |  SELECT t.qid, t.nid,
-        |    round(CAST(list_sum(list_transform(generate_series(1, len(x.qv)), i -> x.qv[i] * y.qv[i])) AS DOUBLE)
-        |      / (na.norm * nb.norm), 6) AS cosine
-        |  FROM top t JOIN q x ON x.vec_id = t.qid JOIN q y ON y.vec_id = t.nid
-        |  JOIN norms na ON na.vec_id = t.qid JOIN norms nb ON nb.vec_id = t.nid)
-        |SELECT qid, nid, cosine FROM (
-        |  SELECT qid, nid, cosine,
-        |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS rn
-        |  FROM exact) t WHERE rn <= $k""".stripMargin) { (spark, d) =>
+        |top AS (${topPerQidSql("qid, nid", "acos", "approx", cand)}),
+        |${rerankExactSql("top", k)}""".stripMargin) { (spark, d) =>
       val r = sq8Relation(spark, d)
       // per-side norm/1e8 FIRST, then multiply — the oracle parenthesizes
       // identically, so the IEEE doubles match bit-for-bit; the exact phase
@@ -605,24 +657,33 @@ object Similarity {
         .select(col("qid"), col("nid"),
           round(graft.plans.dotQNative(col("ca"), col("cb")).cast("double") *
             col("sa") * col("sb") / (col("na") * col("nb")), 6).as("acos"))
-      val wApprox = Window.partitionBy("qid").orderBy(col("acos").desc, col("nid"))
-      val cands = approx.withColumn("rn", row_number().over(wApprox))
-        .filter(col("rn") <= cand)
-        .select("qid", "nid")
       // phase 2: the <=10-per-probe candidates join back to the persisted
       // store for exact vectors + norms — exact work ∝ candidates, not corpus
-      val exact = cands
-        .join(r.select(col("vec_id").as("qid"), col("q").as("qa"),
-          col("norm").as("qna")), "qid")
-        .join(r.select(col("vec_id").as("nid"), col("q").as("qb"),
-          col("norm").as("qnb")), "nid")
-        .select(col("qid"), col("nid"),
-          round(graft.plans.dotQNative(col("qa"), col("qb")).cast("double") /
-            (col("qna") * col("qnb")), 6).as("cosine"))
-      val wExact = Window.partitionBy("qid").orderBy(col("cosine").desc, col("nid"))
-      exact.withColumn("rn", row_number().over(wExact)).filter(col("rn") <= k)
-        .select("qid", "nid", "cosine")
+      rerankExact(topPerQid(approx, "acos", cand).select("qid", "nid"), r, r, k)
     }
+  }
+
+  /** The graph oracle of both band tiers (`wide`: 4 x 16-bit bands, else
+    * 2 x 8-bit), with the trained-cell equality optionally composed into
+    * the candidate join (`cellEq`) and a pluggable quantized source `q`
+    * (the dedup-then-index composition filters it to SemDeDup survivors,
+    * the routed-wide query passes the re-upload-resolved corpus). */
+  private def knnOracleSql(wide: Boolean, cellEq: Boolean, k: Int,
+                           q: String = qCte()): String = {
+    val coarse = if (cellEq) coarseCellCtesSql("", "") + ",\n" else ""
+    val cellJoin = if (cellEq)
+      """
+        |    JOIN cells ca ON ca.vec_id = a.vec_id
+        |    JOIN cells cb ON cb.vec_id = b.vec_id AND cb.cell = ca.cell""".stripMargin
+    else ""
+    val bands = if (wide) {
+      val bv = (0 until 4).map(b => wideBandValSql("qv", b))
+      s"""sig AS (SELECT vec_id, qv, ${bv(0)} AS bv0, ${bv(1)} AS bv1, ${bv(2)} AS bv2, ${bv(3)} AS bv3 FROM q),
+        |bands AS (SELECT vec_id, band_id,
+        |    CASE band_id WHEN 0 THEN bv0 WHEN 1 THEN bv1 WHEN 2 THEN bv2 ELSE bv3 END AS band_val
+        |  FROM sig CROSS JOIN (VALUES (0),(1),(2),(3)) b(band_id))""".stripMargin
+    } else narrowBandCtes()
+    bandChainSql(s"$q,\n$coarse$bands", cellJoin, k)
   }
 
   /** All-pairs k-NN graph over the corpus — the SemDeDup-family building
@@ -642,39 +703,9 @@ object Similarity {
     * relation). Hot buckets (clustered corpora collapse to few sketch
     * values) are AQE skew-split; recall is the band-collision probability,
     * raised by adding bands, never by widening buckets. */
-  /** Shared oracle for the narrow-band graph tier, with the trained-cell
-    * equality optionally composed into the candidate join (`cellEq`) and
-    * an optional source restriction (`srcCond`, appended to the q CTE —
-    * the dedup-then-index composition filters to SemDeDup survivors). */
-  private def narrowKnnOracleSql(cellEq: Boolean, k: Int,
-                                 srcCond: String = ""): String = {
-    val coarse = if (cellEq) coarseCellCtesSql("", "") + ",\n" else ""
-    val cellJoin = if (cellEq)
-      """
-        |    JOIN cells ca ON ca.vec_id = a.vec_id
-        |    JOIN cells cb ON cb.vec_id = b.vec_id AND cb.cell = ca.cell""".stripMargin
-    else ""
-    s"""WITH q AS (SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*100000000.0) AS BIGINT)) AS qv FROM embeddings$srcCond),
-      |${coarse}sig AS (SELECT vec_id, qv, ${lshSigSql("qv")} AS sg FROM q),
-      |bands AS (SELECT vec_id, band_id, (sg >> (band_id*8)) & 255 AS band_val
-      |          FROM sig CROSS JOIN (VALUES (0),(1)) b(band_id)),
-      |cand AS (SELECT DISTINCT a.vec_id AS qid, b.vec_id AS nid
-      |  FROM bands a JOIN bands b ON a.band_id = b.band_id AND a.band_val = b.band_val
-      |    AND a.vec_id <> b.vec_id$cellJoin),
-      |dots AS (SELECT c.qid, c.nid,
-      |    CAST(list_sum(list_transform(generate_series(1, len(x.qv)), i -> x.qv[i] * y.qv[i])) AS DOUBLE) AS dot
-      |  FROM cand c JOIN q x ON x.vec_id = c.qid JOIN q y ON y.vec_id = c.nid),
-      |norms AS (SELECT vec_id, sqrt(CAST(list_sum(list_transform(qv, v -> v*v)) AS DOUBLE)) AS norm FROM q)
-      |SELECT qid, nid, cosine FROM (
-      |  SELECT qid, nid, round(dot / (na.norm * nb.norm), 6) AS cosine,
-      |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY round(dot / (na.norm * nb.norm), 6) DESC, nid) AS rn
-      |  FROM dots JOIN norms na ON na.vec_id = qid JOIN norms nb ON nb.vec_id = nid) t
-      |WHERE rn <= $k""".stripMargin
-  }
-
   val simKnnGraph: QueryDef = {
     val k = 3
-    QueryDef("sim_knn_graph", narrowKnnOracleSql(cellEq = false, k)) { (spark, d) =>
+    QueryDef("sim_knn_graph", knnOracleSql(wide = false, cellEq = false, k)) { (spark, d) =>
       knnGraphFromBands(narrowBandsRelation(spark, d), k)
     }
   }
@@ -735,12 +766,10 @@ object Similarity {
     val scored = a.join(b, key)
       .filter(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"),
-        round(graft.plans.dotQNative(col("qa"), col("qb")).cast("double") /
-          (col("na") * col("nb")), 6).as("cosine"))
+        cosine6(graft.plans.dotQNative(col("qa"), col("qb")),
+          col("na"), col("nb")).as("cosine"))
       .distinct()
-    val w = Window.partitionBy("qid").orderBy(col("cosine").desc, col("nid"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select("qid", "nid", "cosine")
+    topPerQid(scored, "cosine", k)
   }
 
   /** WIDE-band tier of [[simKnnGraph]] (4 x 16-bit bands, 65,536 bucket
@@ -761,53 +790,9 @@ object Similarity {
     * (2 n² / 256 ≈ 1.3e8) has long left the linear regime.
     * Same banded shape end-to-end: equi-join on (band_id, band_val), exact
     * rescoring of candidates only, per-node top-k window. */
-  /** The default quantized-source CTE of the graph oracles. */
-  private val rawQCte: String =
-    "q AS (SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*100000000.0) AS BIGINT)) AS qv FROM embeddings)"
-
-  /** Re-upload-resolved quantized source (the vector instance of the
-    * [[Reup]] convention): vec_id % 24 ∈ {7, 15} carry their block
-    * leader's embedding; the quantize rides a second CTE so the
-    * resolution itself stays the shared generated form. */
-  private val reupQCte: String =
-    s"""${Reup.srcSql("esrc", "embeddings", "vec_id", Seq("embedding" -> "embedding"))},
-      |q AS (SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*100000000.0) AS BIGINT)) AS qv FROM esrc)""".stripMargin
-
-  /** Shared oracle for the wide-band graph tier, with the trained-cell
-    * equality optionally composed into the candidate join (`cellEq`) and a
-    * pluggable quantized-source CTE (`qCte` — the routed-wide declared
-    * query passes the re-upload-resolved corpus). */
-  private def wideKnnOracleSql(cellEq: Boolean, k: Int,
-                               qCte: String = rawQCte): String = {
-    val bv = (0 until 4).map(b => wideBandValSql("qv", b))
-    val coarse = if (cellEq) coarseCellCtesSql("", "") + ",\n" else ""
-    val cellJoin = if (cellEq)
-      """
-        |    JOIN cells ca ON ca.vec_id = a.vec_id
-        |    JOIN cells cb ON cb.vec_id = b.vec_id AND cb.cell = ca.cell""".stripMargin
-    else ""
-    s"""WITH $qCte,
-      |${coarse}sig AS (SELECT vec_id, qv, ${bv(0)} AS bv0, ${bv(1)} AS bv1, ${bv(2)} AS bv2, ${bv(3)} AS bv3 FROM q),
-      |bands AS (SELECT vec_id, band_id,
-      |    CASE band_id WHEN 0 THEN bv0 WHEN 1 THEN bv1 WHEN 2 THEN bv2 ELSE bv3 END AS band_val
-      |  FROM sig CROSS JOIN (VALUES (0),(1),(2),(3)) b(band_id)),
-      |cand AS (SELECT DISTINCT a.vec_id AS qid, b.vec_id AS nid
-      |  FROM bands a JOIN bands b ON a.band_id = b.band_id AND a.band_val = b.band_val
-      |    AND a.vec_id <> b.vec_id$cellJoin),
-      |dots AS (SELECT c.qid, c.nid,
-      |    CAST(list_sum(list_transform(generate_series(1, len(x.qv)), i -> x.qv[i] * y.qv[i])) AS DOUBLE) AS dot
-      |  FROM cand c JOIN q x ON x.vec_id = c.qid JOIN q y ON y.vec_id = c.nid),
-      |norms AS (SELECT vec_id, sqrt(CAST(list_sum(list_transform(qv, v -> v*v)) AS DOUBLE)) AS norm FROM q)
-      |SELECT qid, nid, cosine FROM (
-      |  SELECT qid, nid, round(dot / (na.norm * nb.norm), 6) AS cosine,
-      |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY round(dot / (na.norm * nb.norm), 6) DESC, nid) AS rn
-      |  FROM dots JOIN norms na ON na.vec_id = qid JOIN norms nb ON nb.vec_id = nid) t
-      |WHERE rn <= $k""".stripMargin
-  }
-
   val simKnnGraphWide: QueryDef = {
     val k = 3
-    QueryDef("sim_knn_graph_wide", wideKnnOracleSql(cellEq = false, k)) { (spark, d) =>
+    QueryDef("sim_knn_graph_wide", knnOracleSql(wide = true, cellEq = false, k)) { (spark, d) =>
       knnGraphFromBands(wideBandsRelation(spark, d), k)
     }
   }
@@ -839,7 +824,7 @@ object Similarity {
     * [[simKnnGraphRoutedWide]] over the re-upload-resolved corpus. */
   val simKnnGraphRouted: QueryDef = {
     val k = 3
-    QueryDef("sim_knn_graph_routed", narrowKnnOracleSql(cellEq = true, k)) { (spark, d) =>
+    QueryDef("sim_knn_graph_routed", knnOracleSql(wide = false, cellEq = true, k)) { (spark, d) =>
       knnGraphFromBands(narrowBandsRelation(spark, d), k, routeCols = Seq("cell"))
     }
   }
@@ -894,8 +879,14 @@ object Similarity {
     * probe harness. */
   val simKnnGraphRoutedWide: QueryDef = {
     val k = 3
+    // the re-upload-resolved source (the vector instance of the `Reup`
+    // convention): vec_id % 24 ∈ {7, 15} carry their block leader's
+    // embedding; the quantize rides a second CTE so the resolution itself
+    // stays the shared generated form
+    val reupQ = Reup.srcSql("esrc", "embeddings", "vec_id",
+      Seq("embedding" -> "embedding")) + ",\n" + qCte(src = "esrc")
     QueryDef("sim_knn_graph_routed_wide",
-      wideKnnOracleSql(cellEq = true, k, qCte = reupQCte)) { (spark, d) =>
+      knnOracleSql(wide = true, cellEq = true, k, q = reupQ)) { (spark, d) =>
       knnGraphFromBands(reupWideBandsRelation(spark, d), k, routeCols = Seq("cell"))
     }
   }
@@ -916,22 +907,7 @@ object Similarity {
     * collision probability, raised by band count) before it widens
     * anything else. */
   val simGraphRecall: QueryDef =
-    QueryDef("sim_graph_recall",
-      s"""SELECT e.qid, CAST(count(a.nid) AS BIGINT) AS hits,
-        |  CAST(count(a.nid) AS BIGINT) * 1000000 // 3 AS recall_ppm
-        |FROM (${topkOracle(" WHERE vec_id < 20", "", 3)}) e
-        |LEFT JOIN (
-        |${narrowKnnOracleSql(cellEq = true, 3)}) a ON a.qid = e.qid AND a.nid = e.nid
-        |GROUP BY e.qid""".stripMargin) { (spark, d) =>
-      val exact = sparkTopKDec(spark, d, 20, sameCell = false, k = 3)
-        .select("qid", "nid")
-      val approx = simKnnGraphRouted.fn(spark, d)
-        .select(col("qid"), col("nid"), lit(1L).as("hit"))
-      exact.join(approx, Seq("qid", "nid"), "left")
-        .groupBy("qid").agg(count(col("hit")).as("hits"))
-        .select(col("qid"), col("hits"),
-          expr("(hits * 1000000) div 3").as("recall_ppm"))
-    }
+    recallAt3("sim_graph_recall", probeMax = 20, simKnnGraphRouted)
 
   /** Session-persisted knn-graph edge set (qid, nid, cosine) — the
     * materialized graph every graph-analytics consumer derives from
@@ -948,33 +924,23 @@ object Similarity {
   private[operators] def vecCount(spark: SparkSession, d: String): Long =
     vecCountMemo.of(spark, d)(Long.box(Tables.embeddings(spark, d).count()))
 
-  /** Index-quality evaluation: recall@3 of the LSH ANN path against the
-    * exact brute-force top-3, per probe — the standard acceptance check an
-    * approximate index runs on a SAMPLED probe set before serving a 100 TB
-    * corpus (the brute-force side is O(probes x corpus), affordable
-    * exactly because the probe set is a sample; the LSH side reads the
-    * persisted band store the production queries share). Everything is
-    * integer end-to-end (hit counts, ppm via floor division), so the
-    * cross-engine hash has no tie surface; the underlying top-3 sets are
-    * deterministic by the 6-dp round + nid tiebreak both engines already
-    * agree on (sim_cosine_topk / sim_lsh_ann green). */
+  /** Index-quality evaluation: [[recallAt3]] of the LSH ANN path
+    * ([[simLshHyperplane]], which reads the persisted band store the
+    * production queries share) on 20 probes. */
   val simRecallEval: QueryDef =
-    QueryDef("sim_recall_eval",
-      s"""SELECT e.qid, CAST(count(a.nid) AS BIGINT) AS hits,
-        |  CAST(count(a.nid) AS BIGINT) * 1000000 // 3 AS recall_ppm
-        |FROM (${topkOracle(" WHERE vec_id < 20", "", 3)}) e
-        |LEFT JOIN (
-        |${simLshHyperplane.oracle.get}) a ON a.qid = e.qid AND a.nid = e.nid
-        |GROUP BY e.qid""".stripMargin) { (spark, d) =>
-      val exact = sparkTopKDec(spark, d, 20, sameCell = false, k = 3)
-        .select("qid", "nid")
-      val approx = simLshHyperplane.fn(spark, d)
-        .select(col("qid"), col("nid"), lit(1L).as("hit"))
-      exact.join(approx, Seq("qid", "nid"), "left")
-        .groupBy("qid").agg(count(col("hit")).as("hits"))
-        .select(col("qid"), col("hits"),
-          expr("(hits * 1000000) div 3").as("recall_ppm"))
-    }
+    recallAt3("sim_recall_eval", probeMax = 20, simLshHyperplane)
+
+  /** The PQ encode CTEs of subspace `s` (`dh` dims): each vector's
+    * exact-integer L2 distance `d<s>` to every codeword of book `cb<s>`,
+    * and its nearest codeword `e<s>(vec_id, c<s>)`, ties to the lower
+    * codeword. Assumes CTE `s(vec_id, q1, …)`. */
+  private def pqEncCtes(s: Int, dh: Int): String =
+    s"""d$s AS (SELECT v.vec_id, c.cw,
+      |    CAST(list_sum(list_transform(generate_series(1, $dh), i -> (v.q$s[i] - c.cv[i]) * (v.q$s[i] - c.cv[i]))) AS BIGINT) AS d2
+      |  FROM s v CROSS JOIN cb$s c),
+      |e$s AS (SELECT vec_id, cw AS c$s FROM (
+      |    SELECT vec_id, cw, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cw) AS rn FROM d$s) t
+      |  WHERE rn = 1)""".stripMargin
 
   /** Product quantization + asymmetric-distance top-k — the UNROUTED
     * seed-codebook A/B BASELINE for the production path [[simIvfPq]]
@@ -1003,25 +969,18 @@ object Similarity {
     * candidates only, top-3 out. */
   val simPqAdc: QueryDef = {
     val (dh, kcw, probes, cand, k) = (32, 8, 50, 10, 3)
-    def encCte(s: Int) =
-      s"""d$s AS (SELECT v.vec_id, c.cw,
-        |    CAST(list_sum(list_transform(generate_series(1, $dh), i -> (v.q$s[i] - c.cv[i]) * (v.q$s[i] - c.cv[i]))) AS BIGINT) AS d2
-        |  FROM s v CROSS JOIN cb$s c),
-        |e$s AS (SELECT vec_id, cw AS c$s FROM (
-        |    SELECT vec_id, cw, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cw) AS rn FROM d$s) t
-        |  WHERE rn = 1)""".stripMargin
     def adcCte(s: Int) =
       s"""t$s AS (SELECT p.vec_id AS qid, c.cw,
         |    CAST(list_sum(list_transform(generate_series(1, $dh), i -> p.q$s[i] * c.cv[i])) AS BIGINT) AS t
         |  FROM s p CROSS JOIN cb$s c WHERE p.vec_id < $probes)""".stripMargin
     QueryDef("sim_pq_adc",
-      s"""WITH q AS (SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*100000000.0) AS BIGINT)) AS qv FROM embeddings),
+      s"""WITH ${qCte()},
         |s AS (SELECT vec_id, qv[1:$dh] AS q1, qv[${dh + 1}:${2 * dh}] AS q2 FROM q),
-        |norms AS (SELECT vec_id, sqrt(CAST(list_sum(list_transform(qv, v -> v*v)) AS DOUBLE)) AS norm FROM q),
+        |$normsCte,
         |cb1 AS (SELECT vec_id AS cw, q1 AS cv FROM s WHERE vec_id < $kcw),
         |cb2 AS (SELECT vec_id AS cw, q2 AS cv FROM s WHERE vec_id < $kcw),
-        |${encCte(1)},
-        |${encCte(2)},
+        |${pqEncCtes(1, dh)},
+        |${pqEncCtes(2, dh)},
         |${adcCte(1)},
         |${adcCte(2)},
         |codes AS (SELECT e1.vec_id, e1.c1, e2.c2 FROM e1 JOIN e2 ON e2.vec_id = e1.vec_id),
@@ -1031,19 +990,8 @@ object Similarity {
         |  JOIN t1 ON t1.cw = c.c1 JOIN t2 ON t2.cw = c.c2 AND t2.qid = t1.qid
         |  JOIN norms na ON na.vec_id = t1.qid JOIN norms nb ON nb.vec_id = c.vec_id
         |  WHERE t1.qid <> c.vec_id),
-        |top AS (SELECT qid, nid FROM (
-        |  SELECT qid, nid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY acos DESC, nid) AS rn
-        |  FROM approx) t WHERE rn <= $cand),
-        |exact AS (
-        |  SELECT t.qid, t.nid,
-        |    round(CAST(list_sum(list_transform(generate_series(1, ${2 * dh}), i -> x.qv[i] * y.qv[i])) AS DOUBLE)
-        |      / (na.norm * nb.norm), 6) AS cosine
-        |  FROM top t JOIN q x ON x.vec_id = t.qid JOIN q y ON y.vec_id = t.nid
-        |  JOIN norms na ON na.vec_id = t.qid JOIN norms nb ON nb.vec_id = t.nid)
-        |SELECT qid, nid, cosine FROM (
-        |  SELECT qid, nid, cosine,
-        |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS rn
-        |  FROM exact) t WHERE rn <= $k""".stripMargin) { (spark, d) =>
+        |top AS (${topPerQidSql("qid, nid", "acos", "approx", cand)}),
+        |${rerankExactSql("top", k)}""".stripMargin) { (spark, d) =>
       val r = qnormRelation(spark, d)
       val sub = r.select(col("vec_id"),
         slice(col("q"), 1, dh).as("q1"), slice(col("q"), dh + 1, dh).as("q2"),
@@ -1081,22 +1029,8 @@ object Similarity {
         .filter(col("qid") =!= col("vec_id"))
         .join(broadcast(probeNorm), "qid")
         .select(col("qid"), col("vec_id").as("nid"),
-          round((col("t1") + col("t2")).cast("double") /
-            (col("na") * col("nb")), 6).as("acos"))
-      val wApprox = Window.partitionBy("qid").orderBy(col("acos").desc, col("nid"))
-      val cands = approx.withColumn("rn", row_number().over(wApprox))
-        .filter(col("rn") <= cand).select("qid", "nid")
-      val exact = cands
-        .join(r.select(col("vec_id").as("qid"), col("q").as("qa"),
-          col("norm").as("qna")), "qid")
-        .join(r.select(col("vec_id").as("nid"), col("q").as("qb"),
-          col("norm").as("qnb")), "nid")
-        .select(col("qid"), col("nid"),
-          round(graft.plans.dotQNative(col("qa"), col("qb")).cast("double") /
-            (col("qna") * col("qnb")), 6).as("cosine"))
-      val wExact = Window.partitionBy("qid").orderBy(col("cosine").desc, col("nid"))
-      exact.withColumn("rn", row_number().over(wExact)).filter(col("rn") <= k)
-        .select("qid", "nid", "cosine")
+          cosine6(col("t1") + col("t2"), col("na"), col("nb")).as("acos"))
+      rerankExact(topPerQid(approx, "acos", cand).select("qid", "nid"), r, r, k)
     }
   }
 
@@ -1301,13 +1235,6 @@ object Similarity {
         |    FROM a${s}0 a JOIN s v ON v.vec_id = a.vec_id
         |    CROSS JOIN generate_series(1, $dh) g(i)
         |    GROUP BY a.cw, g.i) t GROUP BY cw)""".stripMargin
-    def encCte(s: Int) =
-      s"""d$s AS (SELECT v.vec_id, c.cw,
-        |    CAST(list_sum(list_transform(generate_series(1, $dh), i -> (v.q$s[i] - c.cv[i]) * (v.q$s[i] - c.cv[i]))) AS BIGINT) AS d2
-        |  FROM s v CROSS JOIN cb$s c),
-        |e$s AS (SELECT vec_id, cw AS c$s FROM (
-        |    SELECT vec_id, cw, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cw) AS rn FROM d$s) t
-        |  WHERE rn = 1)""".stripMargin
     // ADC oracle tables are ONE ROW PER PROBE (codeword-ordered value +
     // id lists), so every t-join is 1:1 on qid: with per-(qid, cw) rows
     // and m = 4, DuckDB's optimizer could join the four t-tables together
@@ -1331,7 +1258,7 @@ object Similarity {
         |  WHERE rn <= $nprobe)""".stripMargin
     val subspaceCols =
       (1 to m).map(s => s"qv[${(s - 1) * dh + 1}:${s * dh}] AS q$s").mkString(", ")
-    val pqCtes = (1 to m).map(s => s"${trainCte(s)},\n${encCte(s)},\n${adcCte(s)}")
+    val pqCtes = (1 to m).map(s => s"${trainCte(s)},\n${pqEncCtes(s, dh)},\n${adcCte(s)}")
       .mkString(",\n")
     val codesJoin = (2 to m).map(s => s"JOIN e$s ON e$s.vec_id = e1.vec_id")
       .mkString(" ")
@@ -1342,9 +1269,9 @@ object Similarity {
       .map(s => s"JOIN t$s ON t$s.qid = pc.qid")
       .mkString("\n  ")
     QueryDef(name,
-      s"""WITH q AS (SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*100000000.0) AS BIGINT)) AS qv FROM embeddings),
+      s"""WITH ${qCte()},
         |s AS (SELECT vec_id, $subspaceCols FROM q),
-        |norms AS (SELECT vec_id, sqrt(CAST(list_sum(list_transform(qv, v -> v*v)) AS DOUBLE)) AS norm FROM q),
+        |$normsCte,
         |$coarseCtes,
         |$pqCtes,
         |codes AS (SELECT e1.vec_id, ce.cell, $codeCols
@@ -1356,19 +1283,8 @@ object Similarity {
         |  $tJoins
         |  JOIN norms na ON na.vec_id = pc.qid JOIN norms nb ON nb.vec_id = c.vec_id
         |  WHERE pc.qid <> c.vec_id),
-        |top AS (SELECT qid, nid FROM (
-        |  SELECT qid, nid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY acos DESC, nid) AS rn
-        |  FROM approx) t WHERE rn <= $cand),
-        |exact AS (
-        |  SELECT t.qid, t.nid,
-        |    round(CAST(list_sum(list_transform(generate_series(1, $Dim), i -> x.qv[i] * y.qv[i])) AS DOUBLE)
-        |      / (na.norm * nb.norm), 6) AS cosine
-        |  FROM top t JOIN q x ON x.vec_id = t.qid JOIN q y ON y.vec_id = t.nid
-        |  JOIN norms na ON na.vec_id = t.qid JOIN norms nb ON nb.vec_id = t.nid)
-        |SELECT qid, nid, cosine FROM (
-        |  SELECT qid, nid, cosine,
-        |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS rn
-        |  FROM exact) t WHERE rn <= $k""".stripMargin) { (spark, d) =>
+        |top AS (${topPerQidSql("qid, nid", "acos", "approx", cand)}),
+        |${rerankExactSql("top", k)}""".stripMargin) { (spark, d) =>
       import spark.implicits._
       val r = qnormRelation(spark, d)
       // trained coarse quantizer: one Lloyd update over the TRAINING
@@ -1448,22 +1364,9 @@ object Similarity {
         acc.join(adc(s, books(s - 1), keepNorm = s == 1), Seq("qid", s"c$s"))
       }
       val approx = withTs.select(col("qid"), col("vec_id").as("nid"),
-        round((1 to m).map(s => col(s"t$s")).reduce(_ + _).cast("double") /
-          (col("na") * col("nb")), 6).as("acos"))
-      val wApprox = Window.partitionBy("qid").orderBy(col("acos").desc, col("nid"))
-      val cands = approx.withColumn("rn", row_number().over(wApprox))
-        .filter(col("rn") <= cand).select("qid", "nid")
-      val exact = cands
-        .join(r.select(col("vec_id").as("qid"), col("q").as("qa"),
-          col("norm").as("qna")), "qid")
-        .join(r.select(col("vec_id").as("nid"), col("q").as("qb"),
-          col("norm").as("qnb")), "nid")
-        .select(col("qid"), col("nid"),
-          round(graft.plans.dotQNative(col("qa"), col("qb")).cast("double") /
-            (col("qna") * col("qnb")), 6).as("cosine"))
-      val wExact = Window.partitionBy("qid").orderBy(col("cosine").desc, col("nid"))
-      exact.withColumn("rn", row_number().over(wExact)).filter(col("rn") <= k)
-        .select("qid", "nid", "cosine")
+        cosine6((1 to m).map(s => col(s"t$s")).reduce(_ + _),
+          col("na"), col("nb")).as("acos"))
+      rerankExact(topPerQid(approx, "acos", cand).select("qid", "nid"), r, r, k)
     }
   }
 
@@ -1534,22 +1437,7 @@ object Similarity {
     * over near-unclustered fixture vectors; production raises kc and
     * nprobe together, not the funnel. */
   val simIvfPqRecall: QueryDef =
-    QueryDef("sim_pq_recall",
-      s"""SELECT e.qid, CAST(count(a.nid) AS BIGINT) AS hits,
-        |  CAST(count(a.nid) AS BIGINT) * 1000000 // 3 AS recall_ppm
-        |FROM (${topkOracle(" WHERE vec_id < 50", "", 3)}) e
-        |LEFT JOIN (
-        |${simIvfPq.oracle.get}) a ON a.qid = e.qid AND a.nid = e.nid
-        |GROUP BY e.qid""".stripMargin) { (spark, d) =>
-      val exact = sparkTopKDec(spark, d, 50, sameCell = false, k = 3)
-        .select("qid", "nid")
-      val approx = simIvfPq.fn(spark, d)
-        .select(col("qid"), col("nid"), lit(1L).as("hit"))
-      exact.join(approx, Seq("qid", "nid"), "left")
-        .groupBy("qid").agg(count(col("hit")).as("hits"))
-        .select(col("qid"), col("hits"),
-          expr("(hits * 1000000) div 3").as("recall_ppm"))
-    }
+    recallAt3("sim_pq_recall", probeMax = 50, simIvfPq)
 
   /** DEDUP-THEN-INDEX — the pipeline composition the 2M-vector censuses
     * concluded with: no candidate-generation lever (band width, cell
@@ -1577,8 +1465,8 @@ object Similarity {
         |${Clustering.ddSemdedup.oracle.get}
         |) sdt),
         |removed AS (SELECT vec_id FROM sd WHERE vec_id <> keeper_id),
-        |${narrowKnnOracleSql(cellEq = false, k,
-             srcCond = " WHERE vec_id NOT IN (SELECT vec_id FROM removed)")
+        |${knnOracleSql(wide = false, cellEq = false, k,
+             q = qCte(src = "embeddings WHERE vec_id NOT IN (SELECT vec_id FROM removed)"))
              .stripPrefix("WITH ")}""".stripMargin) { (spark, d) =>
       // the SemDeDup chain is constructed INSIDE the Persisted block: its
       // logical plan alone costs ~1 s of Catalyst per construction (JFR,
@@ -1724,22 +1612,10 @@ object Similarity {
       acc.join(adc(s, keepNorm = s == 1), Seq("qid", s"c$s"))
     }
     val approx = withTs.select(col("qid"), col("vec_id").as("nid"),
-      round((1 to m).map(s => col(s"t$s")).reduce(_ + _).cast("double") /
-        (col("na") * col("nb")), 6).as("acos"))
-    val wApprox = Window.partitionBy("qid").orderBy(col("acos").desc, col("nid"))
-    val cands = approx.withColumn("rn", row_number().over(wApprox))
-      .filter(col("rn") <= rerank).select("qid", "nid")
-    val exact = cands
-      .join(batch.select(col("vec_id").as("qid"), col("q").as("qa"),
-        col("norm").as("qna")), "qid")
-      .join(all.select(col("vec_id").as("nid"), col("q").as("qb"),
-        col("norm").as("qnb")), "nid")
-      .select(col("qid"), col("nid"),
-        round(graft.plans.dotQNative(col("qa"), col("qb")).cast("double") /
-          (col("qna") * col("qnb")), 6).as("cosine"))
-    val wExact = Window.partitionBy("qid").orderBy(col("cosine").desc, col("nid"))
-    exact.withColumn("rn", row_number().over(wExact)).filter(col("rn") <= k)
-      .select("qid", "nid", "cosine")
+      cosine6((1 to m).map(s => col(s"t$s")).reduce(_ + _),
+        col("na"), col("nb")).as("acos"))
+    rerankExact(topPerQid(approx, "acos", rerank).select("qid", "nid"),
+      batch, all, k)
   }
 
   /** Maximum-inner-product top-5 — the dual-encoder retrieval metric
@@ -1759,17 +1635,11 @@ object Similarity {
     * the exact broadcast-probe baseline, the same contract as
     * sim_cosine_topk. */
   val simMipsTopK = QueryDef("sim_mips_topk",
-    s"""WITH a AS (${unnestSql(" WHERE vec_id < 20")}),
-      |b AS (${unnestSql("")}),
+    s"""WITH ${qCte()},
       |dots AS (SELECT a.vec_id AS qid, b.vec_id AS nid,
-      |    CAST(SUM(a.v * b.v) AS BIGINT) AS dot
-      |  FROM a JOIN b ON a.i = b.i AND a.vec_id <> b.vec_id
-      |  GROUP BY a.vec_id, b.vec_id)
-      |SELECT qid, nid, dot FROM (
-      |  SELECT qid, nid, dot,
-      |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY dot DESC, nid) AS rn
-      |  FROM dots) t
-      |WHERE rn <= 5""".stripMargin) { (spark, d) =>
+      |    CAST(${dotSql("a.qv", "b.qv")} AS BIGINT) AS dot
+      |  FROM q a JOIN q b ON a.vec_id < 20 AND a.vec_id <> b.vec_id)
+      |${topPerQidSql("qid, nid, dot", "dot", "dots", 5)}""".stripMargin) { (spark, d) =>
     val withNorm = qnormRelation(spark, d)
     val p = withNorm.filter(col("vec_id") < 20)
       .select(col("vec_id").as("qid"), col("q").as("va"))

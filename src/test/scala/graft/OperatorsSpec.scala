@@ -28,7 +28,7 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("A1 consensus value is seen by every method of its user") {
-    val cand = Consensus.candidates(spark, sf0001).cache()
+    val cand = Consensus.candidates(spark, sf0001)
     val res = Consensus.a1Consensus.fn(spark, sf0001).collect()
     val byUser = cand.collect().groupBy(_.getLong(0))
     res.foreach { r =>
@@ -37,7 +37,6 @@ class OperatorsSpec extends SparkSpec {
       val methodsWithK = byUser(u).filter(_.getInt(2) == k).map(_.getString(1)).toSet
       assert(methodsWithK == methods, s"user $u consensus $k")
     }
-    cand.unpersist()
   }
 
   test("A2 weighted vote only emits candidates backed by purchase + another") {
