@@ -203,13 +203,19 @@ object Dedup {
   private def packedBandSig(bid: Int): Column =
     col(s"mh${2 * bid}") * lit(P) + col(s"mh${2 * bid + 1}")
 
+  /** (doc_id, band_id, band_sig): the 4 two-lane bands of a signature
+    * relation, exploded in the scan stage — the bands the bucket stats and
+    * the candidate join share. */
+  private def minhashBands(sigs: DataFrame): DataFrame =
+    sigs.select(col("doc_id"), explode(array((0 until 4).map { bid =>
+      struct(lit(bid).as("band_id"), packedBandSig(bid).as("band_sig"))
+    }: _*)).as("band")).select(col("doc_id"), col("band.*"))
+
   /** LSH candidate pairs (production API): docs sharing any of the 4
     * two-row bands. Pairs are (a < b) distinct — the pre-filter before an
     * exact-Jaccard verify at scale. */
   def lshCandidatePairs(sigs: DataFrame): DataFrame = {
-    val bands = sigs.select(col("doc_id"), explode(array((0 until 4).map { bid =>
-      struct(lit(bid).as("band_id"), packedBandSig(bid).as("band_sig"))
-    }: _*)).as("band")).select(col("doc_id"), col("band.*"))
+    val bands = minhashBands(sigs)
     val a = bands.select(col("band_id"), col("band_sig"), col("doc_id").as("doc_a"))
     val b = bands.select(col("band_id"), col("band_sig"), col("doc_id").as("doc_b"))
     a.join(b, Seq("band_id", "band_sig")).filter(col("doc_a") < col("doc_b"))
@@ -339,6 +345,26 @@ object Dedup {
   private def mhListSql(a: Long, b: Long): String =
     s"list_min(list_transform(wids, w -> (CAST($a AS BIGINT)*w+$b)%$P))"
 
+  /** The MinHash candidate chain over `widl` ([[shingleListCtes]]): `sig`
+    * (the 8 lanes), `bands` (4 two-lane bands, `band_sig` the packed key
+    * of [[packedBandSig]]) and `cand` (distinct a < b pairs sharing a
+    * band) — the SQL twin of [[lshCandidatePairs]], one home for the
+    * dd_lsh_buckets, dd_fuzzy_keep, dd_containment and dd_est_eval
+    * oracles. */
+  private val minhashCandCtes: String = {
+    val mhSql = As.zip(Bs).zipWithIndex.map { case ((a, b), i) =>
+      s"${mhListSql(a, b)} AS mh$i"
+    }.mkString(", ")
+    val bandSelects = (0 until 4).map { bid =>
+      s"SELECT doc_id, $bid AS band_id, CAST(mh${2 * bid} AS BIGINT) * $P + mh${2 * bid + 1} AS band_sig FROM sig"
+    }.mkString("\n  UNION ALL ")
+    s"""sig AS (SELECT doc_id, $mhSql FROM widl),
+       |bands AS ($bandSelects),
+       |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+       |  FROM bands a JOIN bands b ON a.band_id = b.band_id
+       |    AND a.band_sig = b.band_sig AND a.doc_id < b.doc_id)""".stripMargin
+  }
+
   /** MinHash signatures — shuffle-free array pipeline on both sides. */
   val ddMinhash: QueryDef = {
     val minsSql = As.zip(Bs).map { case (a, b) =>
@@ -355,33 +381,20 @@ object Dedup {
   }
 
   /** LSH banding: 4 bands x 2 rows; buckets with >1 doc are the candidate
-    * groups. Output stays bounded (bucket stats, not the pair explosion). */
-  val ddLshBuckets: QueryDef = {
-    val mhSql = As.zip(Bs).zipWithIndex.map { case ((a, b), i) =>
-      s"${mhListSql(a, b)} AS mh$i"
-    }.mkString(", ")
-    // band_sig is the packed numeric key ([[packedBandSig]]) in both
-    // engines — same bijective encoding, so bucket membership is identical
-    // to the former "%d,%d" string and the groupBy shuffles 8-byte longs
-    val bandSelects = (0 until 4).map { bid =>
-      s"SELECT $bid AS band_id, CAST(mh${2 * bid} AS BIGINT) * 2147483647 + mh${2 * bid + 1} AS band_sig, doc_id FROM sig"
-    }.mkString("\n  UNION ALL ")
+    * groups. Output stays bounded (bucket stats, not the pair explosion).
+    * band_sig is the packed key ([[packedBandSig]]) in both engines, so
+    * the groupBy shuffles 8-byte longs. */
+  val ddLshBuckets: QueryDef =
     QueryDef("dd_lsh_buckets",
       s"""WITH $shingleListCtes,
-        |sig AS (SELECT doc_id, $mhSql FROM widl),
-        |bands AS ($bandSelects)
+        |$minhashCandCtes
         |SELECT band_id, band_sig, COUNT(*) AS n_docs, CAST(MIN(doc_id) AS BIGINT) AS min_doc
         |FROM bands GROUP BY band_id, band_sig HAVING COUNT(*) > 1""".stripMargin) { (spark, d) =>
-      minhashSigRelation(spark, d)
-        .select(col("doc_id"), explode(array((0 until 4).map { bid =>
-          struct(lit(bid).as("band_id"), packedBandSig(bid).as("band_sig"))
-        }: _*)).as("band"))
-        .select(col("doc_id"), col("band.*"))
+      minhashBands(minhashSigRelation(spark, d))
         .groupBy("band_id", "band_sig")
         .agg(count(lit(1)).as("n_docs"), min("doc_id").as("min_doc"))
         .filter(col("n_docs") > 1)
     }
-  }
 
   /** DuckDB lane SQL shared by every simhash width: per-lane signed sums
     * over the `wids` list (from [[shingleListCtes]]), then the bit
@@ -634,10 +647,7 @@ object Dedup {
     * batch-touching pairs. */
   val ddIncrementalPairs: QueryDef =
     QueryDef("dd_incremental_pairs",
-      s"""WITH $neardup64Ctes
-        |SELECT doc_a, doc_b, CAST(bit_count(xor(ha, hb)) AS INTEGER) AS hamming
-        |FROM pairs
-        |WHERE bit_count(xor(ha, hb)) <= 3 AND (doc_a % 4 = 0 OR doc_b % 4 = 0)""".stripMargin) { (spark, d) =>
+      batchTouching(ddSimhashNearDup64.oracle.get)) { (spark, d) =>
       // near-copy resolution BEFORE the store/batch split: a re-upload in
       // the store resolves against a leader that lands in the batch
       val docs = nearCopyDocs(Tables.documents(spark, d))
@@ -661,34 +671,77 @@ object Dedup {
       col("doc_id").as("doc_a")) ++ sigCols.map(c => col(c).as(s"${c}_a")): _*)
     val b = bands.select(Seq(col("band_id"), col("band_val"),
       col("doc_id").as("doc_b")) ++ sigCols.map(c => col(c).as(s"${c}_b")): _*)
-    val hamming = sigCols
-      .map(c => bit_count(col(s"${c}_a").bitwiseXOR(col(s"${c}_b"))))
-      .reduce(_ + _)
     a.join(b, Seq("band_id", "band_val"))
       .filter(col("doc_a") < col("doc_b"))
       .select(Seq(col("doc_a"), col("doc_b")) ++
         sigCols.flatMap(c => Seq(col(s"${c}_a"), col(s"${c}_b"))): _*)
       .distinct()
-      .select(col("doc_a"), col("doc_b"), hamming.as("hamming"))
+      .select(col("doc_a"), col("doc_b"), sigHamming(sigCols).as("hamming"))
       .filter(col("hamming") <= maxHamming)
   }
 
+  /** Hamming distance of a pair's multi-word signature: the sum over the
+    * words `c` of bit_count(`${c}_a` xor `${c}_b`). */
+  private def sigHamming(sigCols: Seq[String]): Column =
+    sigCols.map(c => bit_count(col(s"${c}_a").bitwiseXOR(col(s"${c}_b")))).reduce(_ + _)
+
+  /** The batch supersedes the store: `store`'s rows whose `id` occurs in
+    * the batch are anti-joined away (against the batch's distinct ids, not
+    * a second scan of its source) and the batch's rows are unioned in, so
+    * a re-ingested id (a recrawl) pairs off its fresh row only — a stale
+    * and a fresh row would emit conflicting duplicate pairs. By name: a
+    * store written with a different column order must not match ids
+    * against band values the way a positional union would. Every
+    * incremental twin (simhash, image, frame, hyperplane, IVF-PQ) reads its
+    * live corpus through this. */
+  private[operators] def supersede(store: DataFrame, batch: DataFrame, id: String,
+                                   cols: Seq[String]): DataFrame =
+    store.select(cols.map(col): _*)
+      .join(batch.select(id).distinct(), Seq(id), "left_anti")
+      .unionByName(batch.select(cols.map(col): _*))
+
+  /** The batch-touch probe over (doc_id, carry…, band_id, band_val) band
+    * relations: the [[supersede]]d corpus (store ∪ batch) joined to the
+    * batch on (band_id, band_val) — only batch bands sit on the probe side,
+    * so work scales with the batch, not the corpus. Self-pairs drop, each
+    * pair is canonicalized to doc_a < doc_b with every carried column `c`
+    * swapped in lockstep to `${c}_a`/`${c}_b`, and the distinct collapses
+    * a pair found through several bands or from both batch sides. */
+  private[operators] def batchTouchPairs(storeBands: DataFrame, newBands: DataFrame,
+                                         carry: Seq[String]): DataFrame = {
+    val allBands = supersede(storeBands, newBands, "doc_id",
+      Seq("doc_id") ++ carry ++ Seq("band_id", "band_val"))
+    allBands.select(Seq(col("band_id"), col("band_val"),
+        col("doc_id").as("ida")) ++ carry.map(c => col(c).as(s"${c}_ia")): _*)
+      .join(newBands.select(Seq(col("band_id"), col("band_val"),
+        col("doc_id").as("idb")) ++ carry.map(c => col(c).as(s"${c}_ib")): _*),
+        Seq("band_id", "band_val"))
+      .filter(col("ida") =!= col("idb"))
+      .select(Seq(least(col("ida"), col("idb")).as("doc_a"),
+        greatest(col("ida"), col("idb")).as("doc_b")) ++
+        carry.flatMap(c => Seq(
+          when(col("ida") < col("idb"), col(s"${c}_ia")).otherwise(col(s"${c}_ib")).as(s"${c}_a"),
+          when(col("ida") < col("idb"), col(s"${c}_ib")).otherwise(col(s"${c}_ia")).as(s"${c}_b"))): _*)
+      .distinct()
+  }
+
+  /** An incremental twin's oracle under the mod-4 seeding: the full-corpus
+    * oracle `base` restricted to the pairs touching the batch
+    * (doc_id % 4 == 0) — see [[ddIncrementalPairs]] for why that is exact. */
+  private[operators] def batchTouching(base: String): String =
+    s"SELECT * FROM ($base) t WHERE doc_a % 4 = 0 OR doc_b % 4 = 0"
+
   /** Incremental 64-bit-band near-dup: pairs at Hamming <= `maxHamming`
     * touching a NEW batch — (new x store) plus (new x new) — without
-    * recomputing stored signatures. Store bands join against batch bands
-    * only, so work scales with batch size, not corpus size: the production
-    * ingest shape.
+    * recomputing stored signatures: the [[batchTouchPairs]] probe, so work
+    * scales with batch size, not corpus size: the production ingest shape.
     * `storeBands` is the persisted/written (doc_id, simhash, band_id,
-    * band_val) relation of [[simhash64Bands]].
+    * band_val) relation of [[simhash64Bands]]; a doc_id present in BOTH
+    * store and batch (a recrawl) is [[supersede]]d.
     *
-    * Re-ingested ids: a doc_id present in BOTH store and batch (a recrawl)
-    * is superseded — its store rows are anti-joined away (against the ids
-    * of the persisted batch relation, not a second scan of the batch
-    * source), so the batch's fresh signature is the only one that pairs
-    * (otherwise the stale and fresh signatures would emit conflicting
-    * duplicate pair rows). The batch bands are persisted because the plan
-    * references them on both join sides AND in the anti-join — without the
-    * persist the sketch pass would run three times per call; the cache
+    * The batch bands are persisted because the plan references them on
+    * both join sides AND in the anti-join — without the persist the
+    * sketch pass would run three times per call; the cache
     * holds ONLY the current batch (every OTHER batch entry is evicted on
     * entry — ADVICE r6: keyed eviction, so re-running the same batch keeps
     * its persisted sketch), bounding a long ingest session's state at one
@@ -711,40 +764,15 @@ object Dedup {
     * wide tier a post-knee rolling store bootstraps on, VERDICT r15 #3),
     * already persisted by the caller — the entry a driver that also
     * WRITES the batch bands uses ([[graft.streaming.RollingIngest]]), so
-    * the sketch computes once for probe and append. Hamming is the sum of
-    * per-word bit_count(xor), the same multi-word generalization as
+    * the sketch computes once for probe and append. Hamming is
+    * [[sigHamming]], the same multi-word generalization as
     * [[simhashNearDupPairs]]. */
   def simhashNearDupIncrementalBands(storeBands: DataFrame, newBands: DataFrame,
                                      maxHamming: Int = 3,
-                                     sigCols: Seq[String] = Seq("simhash")): DataFrame = {
-    val cols = Seq("doc_id") ++ sigCols ++ Seq("band_id", "band_val")
-    // unionByName: a store that was written/projected with a different
-    // column order (e.g. partitioned by band) must not silently match
-    // doc ids against band ids the way a positional union would;
-    // left_anti: batch supersedes store for re-ingested ids
-    val liveStore = storeBands.select(cols.map(col): _*)
-      .join(newBands.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
-    val allBands = liveStore
-      .unionByName(newBands.select(cols.map(col): _*))
-    val hamming = sigCols
-      .map(c => bit_count(col(s"${c}_a").bitwiseXOR(col(s"${c}_b"))))
-      .reduce(_ + _)
-    allBands.select(Seq(col("band_id"), col("band_val"),
-        col("doc_id").as("ida")) ++ sigCols.map(c => col(c).as(s"${c}_ia")): _*)
-      .join(newBands.select(Seq(col("band_id"), col("band_val"),
-        col("doc_id").as("idb")) ++ sigCols.map(c => col(c).as(s"${c}_ib")): _*),
-        Seq("band_id", "band_val"))
-      .filter(col("ida") =!= col("idb"))
-      .select(Seq(least(col("ida"), col("idb")).as("doc_a"),
-        greatest(col("ida"), col("idb")).as("doc_b")) ++
-        // signatures of the pair in (doc_a, doc_b) order for the verify
-        sigCols.flatMap(c => Seq(
-          when(col("ida") < col("idb"), col(s"${c}_ia")).otherwise(col(s"${c}_ib")).as(s"${c}_a"),
-          when(col("ida") < col("idb"), col(s"${c}_ib")).otherwise(col(s"${c}_ia")).as(s"${c}_b"))): _*)
-      .distinct()
-      .select(col("doc_a"), col("doc_b"), hamming.as("hamming"))
+                                     sigCols: Seq[String] = Seq("simhash")): DataFrame =
+    batchTouchPairs(storeBands, newBands, sigCols)
+      .select(col("doc_a"), col("doc_b"), sigHamming(sigCols).as("hamming"))
       .filter(col("hamming") <= maxHamming)
-  }
 
   /** The transitive-closure / component-min tail every cluster oracle
     * shares: undirected edges off a pair relation, recursive reach,
@@ -950,20 +978,10 @@ object Dedup {
     * so the gate is bit-identical on any engine — no float division on
     * the hot path. Empty-shingle docs (the degenerate all-match band) die
     * at the |union| > 0 guard on both engines. */
-  val ddFuzzyKeep: QueryDef = {
-    val mhSql = As.zip(Bs).zipWithIndex.map { case ((a, b), i) =>
-      s"${mhListSql(a, b)} AS mh$i"
-    }.mkString(", ")
-    val bandSelects = (0 until 4).map { bid =>
-      s"SELECT doc_id, $bid AS band_id, CAST(mh${2 * bid} AS VARCHAR) || ',' || CAST(mh${2 * bid + 1} AS VARCHAR) AS band_sig FROM sig"
-    }.mkString("\n  UNION ALL ")
+  val ddFuzzyKeep: QueryDef =
     QueryDef("dd_fuzzy_keep",
       s"""WITH RECURSIVE $shingleListCtes,
-        |sig AS (SELECT doc_id, $mhSql FROM widl),
-        |bands AS ($bandSelects),
-        |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM bands a JOIN bands b ON a.band_id = b.band_id
-        |    AND a.band_sig = b.band_sig AND a.doc_id < b.doc_id),
+        |$minhashCandCtes,
         |ver AS (SELECT doc_a, doc_b FROM (
         |  SELECT c.doc_a, c.doc_b,
         |    len(list_filter(wa.wids, w -> list_contains(wb.wids, w))) AS inter,
@@ -985,7 +1003,6 @@ object Dedup {
       labelPropagation(verified)
         .select(col("doc_id"), col("cluster_id").as("keeper_id"))
     }
-  }
 
   /** Cross-document duplicated-span coverage — the n-gram-granularity form
     * of exact substring dedup (Lee et al., "Deduplicating Training Data
@@ -1266,20 +1283,10 @@ object Dedup {
     * Scale shape: identical to the fuzzy verify — banded equi-join
     * candidates (never all-pairs), wid arrays read twice from the
     * session-persisted relation, work ∝ candidate count. */
-  val ddContainment: QueryDef = {
-    val mhSql = As.zip(Bs).zipWithIndex.map { case ((a, b), i) =>
-      s"${mhListSql(a, b)} AS mh$i"
-    }.mkString(", ")
-    val bandSelects = (0 until 4).map { bid =>
-      s"SELECT doc_id, $bid AS band_id, CAST(mh${2 * bid} AS VARCHAR) || ',' || CAST(mh${2 * bid + 1} AS VARCHAR) AS band_sig FROM sig"
-    }.mkString("\n  UNION ALL ")
+  val ddContainment: QueryDef =
     QueryDef("dd_containment",
       s"""WITH $shingleListCtes,
-        |sig AS (SELECT doc_id, $mhSql FROM widl),
-        |bands AS ($bandSelects),
-        |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM bands a JOIN bands b ON a.band_id = b.band_id
-        |    AND a.band_sig = b.band_sig AND a.doc_id < b.doc_id),
+        |$minhashCandCtes,
         |ver AS (SELECT c.doc_a, c.doc_b,
         |    len(list_filter(wa.wids, w -> list_contains(wb.wids, w))) AS inter,
         |    len(wa.wids) AS na, len(wb.wids) AS nb
@@ -1302,7 +1309,6 @@ object Dedup {
         .select(col("doc_a"), col("doc_b"), col("inter").cast("long").as("inter"),
           col("na").cast("long").as("n_a"), col("nb").cast("long").as("n_b"))
     }
-  }
 
   /** Boilerplate n-gram detection — the heavy-hitter SHINGLES: the top-20
     * 3-gram shingle ids by containing-document count. Cross-document
@@ -1347,20 +1353,11 @@ object Dedup {
     * side joins the persisted wid arrays only for candidate rows — exact
     * work ∝ candidates, the same funnel discipline as the rerank family. */
   val ddEstEval: QueryDef = {
-    val mhSql = As.zip(Bs).zipWithIndex.map { case ((a, b), i) =>
-      s"${mhListSql(a, b)} AS mh$i"
-    }.mkString(", ")
-    val bandSelects = (0 until 4).map { bid =>
-      s"SELECT doc_id, CAST(mh${2 * bid} AS BIGINT) * 2147483647 + mh${2 * bid + 1} AS band_sig, $bid AS band_id FROM sig"
-    }.mkString("\n  UNION ALL ")
     val lanesSql = (0 until 8)
       .map(i => s"(CASE WHEN x.mh$i = y.mh$i THEN 1 ELSE 0 END)").mkString(" + ")
     QueryDef("dd_est_eval",
       s"""WITH $shingleListCtes,
-        |sig AS (SELECT doc_id, $mhSql FROM widl),
-        |bands AS ($bandSelects),
-        |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM bands a JOIN bands b ON a.band_id = b.band_id AND a.band_sig = b.band_sig AND a.doc_id < b.doc_id),
+        |$minhashCandCtes,
         |est AS (SELECT c.doc_a, c.doc_b, $lanesSql AS lanes
         |  FROM cand c JOIN sig x ON x.doc_id = c.doc_a JOIN sig y ON y.doc_id = c.doc_b),
         |ex AS (SELECT c.doc_a, c.doc_b,

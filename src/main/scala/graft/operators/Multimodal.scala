@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing (builder brief): media as opaque `binary`
@@ -273,27 +273,27 @@ object Multimodal {
     * analysis there transfers unchanged. */
   val mmImageNeardup: QueryDef = QueryDef("mm_image_neardup",
     s"""WITH $ahashCtes,
-      |bv AS MATERIALIZED (SELECT doc_id,
-      |  CAST(('0b' || substring(ahash, 1, 16))::BIGINT AS BIGINT) AS b0,
-      |  CAST(('0b' || substring(ahash, 17, 16))::BIGINT AS BIGINT) AS b1,
-      |  CAST(('0b' || substring(ahash, 33, 16))::BIGINT AS BIGINT) AS b2,
-      |  CAST(('0b' || substring(ahash, 49, 16))::BIGINT AS BIGINT) AS b3
-      |  FROM hh),
-      |band AS (SELECT doc_id, 0 AS b, b0 AS v FROM bv
-      |  UNION ALL SELECT doc_id, 1, b1 FROM bv
-      |  UNION ALL SELECT doc_id, 2, b2 FROM bv
-      |  UNION ALL SELECT doc_id, 3, b3 FROM bv),
-      |cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-      |  FROM band x JOIN band y ON y.b = x.b AND y.v = x.v AND x.doc_id < y.doc_id)
-      |SELECT doc_a, doc_b, hamming FROM (
-      |  SELECT doc_a, doc_b,
-      |    CAST(bit_count(xor(a.b0, b.b0)) + bit_count(xor(a.b1, b.b1))
-      |       + bit_count(xor(a.b2, b.b2)) + bit_count(xor(a.b3, b.b3)) AS BIGINT) AS hamming
-      |  FROM cand JOIN bv a ON a.doc_id = doc_a JOIN bv b ON b.doc_id = doc_b) t
-      |WHERE hamming <= 3""".stripMargin) { (spark, d) =>
-    val hv = ahashRelation(spark, d).select(col("doc_id"), expr(
-      "transform(sequence(0, 3), b -> cast(conv(substring(ahash, b*16+1, 16), 2, 10) as bigint))")
-      .as("bv"))
+      |${imageBandChainSql("hh", "ahash", 16)}""".stripMargin) { (spark, d) =>
+    imageBandPairs(ahashRelation(spark, d).select(col("doc_id"), bandVals("ahash", 16)))
+  }
+
+  /** The 4-band value array `bv` of a bit-string hash: its four `width`-bit
+    * substrings of `hashSql`, parsed base 2. */
+  private def bandVals(hashSql: String, width: Int): Column = expr(
+    s"transform(sequence(0, 3), b -> cast(conv(substring($hashSql, b*$width+1, $width), 2, 10) as bigint))")
+    .as("bv")
+
+  /** Hamming distance of two band value arrays: the summed per-band
+    * bit_count(xor). */
+  private def imageHamming(a: String, b: String): Column =
+    expr(s"aggregate(zip_with($a, $b, (x, y) -> bit_count(x ^ y)), 0, (acc, x) -> acc + x)")
+      .cast("long").as("hamming")
+
+  /** Full-corpus image near-dup pairs over a (doc_id, bv) relation, for
+    * both the 64-bit and the 128-bit tier: the band self-join carries ids
+    * only (candidates distinct on (doc_a, doc_b)), and the value arrays
+    * join back for the Hamming <= 3 verify. */
+  private def imageBandPairs(hv: DataFrame): DataFrame = {
     val bands = hv.select(col("doc_id"), posexplode(col("bv")))
     val cand = bands.select(col("doc_id").as("doc_a"), col("pos"), col("col"))
       .join(bands.select(col("doc_id").as("doc_b"), col("pos"), col("col")),
@@ -303,10 +303,33 @@ object Multimodal {
     cand
       .join(hv.select(col("doc_id").as("doc_a"), col("bv").as("ba")), "doc_a")
       .join(hv.select(col("doc_id").as("doc_b"), col("bv").as("bb")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        expr("aggregate(zip_with(ba, bb, (x, y) -> bit_count(x ^ y)), 0, (acc, x) -> acc + x)")
-          .cast("long").as("hamming"))
+      .select(col("doc_a"), col("doc_b"), imageHamming("ba", "bb"))
       .filter(col("hamming") <= 3)
+  }
+
+  /** The oracle tail both image tiers share, after a WITH clause whose
+    * relation `src` has the (4·`width`)-bit string column `hash`: the
+    * four band values `bv`, the band relation, distinct a < b candidates
+    * sharing a band, and the Hamming <= 3 verify over the band values. */
+  private def imageBandChainSql(src: String, hash: String, width: Int): String = {
+    val bvs = (0 until 4).map { i =>
+      s"  CAST(('0b' || substring($hash, ${i * width + 1}, $width))::BIGINT AS BIGINT) AS b$i"
+    }.mkString(",\n")
+    s"""bv AS MATERIALIZED (SELECT doc_id,
+       |$bvs
+       |  FROM $src),
+       |band AS (SELECT doc_id, 0 AS b, b0 AS v FROM bv
+       |  UNION ALL SELECT doc_id, 1, b1 FROM bv
+       |  UNION ALL SELECT doc_id, 2, b2 FROM bv
+       |  UNION ALL SELECT doc_id, 3, b3 FROM bv),
+       |cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
+       |  FROM band x JOIN band y ON y.b = x.b AND y.v = x.v AND x.doc_id < y.doc_id)
+       |SELECT doc_a, doc_b, hamming FROM (
+       |  SELECT doc_a, doc_b,
+       |    CAST(bit_count(xor(a.b0, b.b0)) + bit_count(xor(a.b1, b.b1))
+       |       + bit_count(xor(a.b2, b.b2)) + bit_count(xor(a.b3, b.b3)) AS BIGINT) AS hamming
+       |  FROM cand JOIN bv a ON a.doc_id = doc_a JOIN bv b ON b.doc_id = doc_b) t
+       |WHERE hamming <= 3""".stripMargin
   }
 
   /** Gated frame relation: `fr` minus the hot digests — PERSISTED
@@ -428,14 +451,12 @@ object Multimodal {
     * frames sit on the probe side; the df gate is ONE vocabulary-sized
     * aggregate off the persisted store (incrementally maintainable at
     * ingest — it's a counter per digest). Re-ingested doc ids are
-    * superseded store-side (left_anti), and the digest-level distinct
-    * collapses the double emission of batch-batch pairs. */
+    * [[Dedup.supersede]]d, and the digest-level distinct collapses the
+    * double emission of batch-batch pairs. */
   def frameOverlapIncremental(storeFr: DataFrame, batchFr: DataFrame,
                               parts: Int,
                               dfGate: Int = FrameDfGate): DataFrame = {
-    val live = storeFr.select("doc_id", "frame_md5")
-      .join(batchFr.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
-    val corpus = live.unionByName(batchFr.select("doc_id", "frame_md5"))
+    val corpus = Dedup.supersede(storeFr, batchFr, "doc_id", Seq("doc_id", "frame_md5"))
     // one persisted gated relation serves the probe side, the corpus side,
     // and the per-doc counts (the keptFrames compute-once contract); the
     // batch slice is a semi-join against it, never a second gate pass
@@ -468,20 +489,7 @@ object Multimodal {
     * over store ∪ batch IS the full-corpus gate. */
   val mmFrameIncremental: QueryDef =
     QueryDef("mm_frame_incremental",
-      s"""WITH fr0 AS (SELECT DISTINCT doc_id, frame_md5 FROM (
-        |${mmFrameSample.oracle.get}) t),
-        |hot AS (SELECT frame_md5 FROM fr0 GROUP BY frame_md5 HAVING COUNT(*) > $FrameDfGate),
-        |fr AS (SELECT doc_id, frame_md5 FROM fr0
-        |       WHERE frame_md5 NOT IN (SELECT frame_md5 FROM hot)),
-        |cnt AS (SELECT doc_id, COUNT(*) AS nf FROM fr GROUP BY doc_id),
-        |pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    CAST(COUNT(*) AS BIGINT) AS n_shared
-        |  FROM fr a JOIN fr b ON a.frame_md5 = b.frame_md5 AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT doc_a, doc_b, n_shared,
-        |  n_shared * 1000000 // least(ca.nf, cb.nf) AS overlap_ppm
-        |FROM pairs JOIN cnt ca ON ca.doc_id = doc_a JOIN cnt cb ON cb.doc_id = doc_b
-        |WHERE n_shared >= 2 AND (doc_a % 4 = 0 OR doc_b % 4 = 0)""".stripMargin) { (spark, d) =>
+      Dedup.batchTouching(mmFrameOverlap.oracle.get)) { (spark, d) =>
       val fr = framesRelation(spark, d)
       val store = graft.Persisted.of(spark, s"$d#mm_frames_store_mod4") {
         fr.filter(col("doc_id") % 4 =!= 0)
@@ -494,40 +502,20 @@ object Multimodal {
     * VALUE ARRAY for the hamming verify — the image twin of
     * [[Dedup.simhash64Bands]]'s (doc_id, sig, band_id, band_val) shape. */
   def ahashBandsOf(rel: DataFrame): DataFrame =
-    rel.select(col("doc_id"), expr(
-      "transform(sequence(0, 3), b -> cast(conv(substring(ahash, b*16+1, 16), 2, 10) as bigint))")
-      .as("bv"))
+    rel.select(col("doc_id"), bandVals("ahash", 16))
       .select(col("doc_id"), col("bv"),
         posexplode(col("bv")).as(Seq("band_id", "band_val")))
 
   /** Incremental image-hash near-dup: Hamming <= 3 pairs touching a NEW
     * image batch — (batch x store) plus (batch x batch) — off the written
-    * band store, without recomputing stored hashes. Work ∝ batch (batch
-    * bands on the probe side of the band equi-join); supersede semantics
-    * for re-ingested ids via left_anti, the [[Dedup
-    * .simhashNearDupIncrementalBands]] contract applied to image bands. */
+    * band store, without recomputing stored hashes: the
+    * [[Dedup.batchTouchPairs]] probe (supersede included) carrying the
+    * band value array. */
   def imageNearDupIncremental(storeBands: DataFrame, newBands: DataFrame,
-                              maxHamming: Int = 3): DataFrame = {
-    val live = storeBands.select("doc_id", "bv", "band_id", "band_val")
-      .join(newBands.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
-    val allBands = live.unionByName(
-      newBands.select("doc_id", "bv", "band_id", "band_val"))
-    allBands.select(col("band_id"), col("band_val"),
-        col("doc_id").as("ida"), col("bv").as("ba"))
-      .join(newBands.select(col("band_id"), col("band_val"),
-        col("doc_id").as("idb"), col("bv").as("bb")),
-        Seq("band_id", "band_val"))
-      .filter(col("ida") =!= col("idb"))
-      .select(least(col("ida"), col("idb")).as("doc_a"),
-        greatest(col("ida"), col("idb")).as("doc_b"),
-        when(col("ida") < col("idb"), col("ba")).otherwise(col("bb")).as("ba"),
-        when(col("ida") < col("idb"), col("bb")).otherwise(col("ba")).as("bb"))
-      .distinct()
-      .select(col("doc_a"), col("doc_b"),
-        expr("aggregate(zip_with(ba, bb, (x, y) -> bit_count(x ^ y)), 0, (acc, x) -> acc + x)")
-          .cast("long").as("hamming"))
+                              maxHamming: Int = 3): DataFrame =
+    Dedup.batchTouchPairs(storeBands, newBands, Seq("bv"))
+      .select(col("doc_a"), col("doc_b"), imageHamming("bv_a", "bv_b"))
       .filter(col("hamming") <= maxHamming)
-  }
 
   /** Oracle-checked incremental image ingest (the dd_incremental_pairs
     * seeding, VERDICT r11 #3): doc_id % 4 == 0 is the NEW batch, the rest
@@ -538,25 +526,7 @@ object Multimodal {
     * full chain's batch-touching pairs) and the overlap-free mod-4
     * split. */
   val mmImageIncremental: QueryDef = QueryDef("mm_image_incremental",
-    s"""WITH $ahashCtes,
-      |bv AS MATERIALIZED (SELECT doc_id,
-      |  CAST(('0b' || substring(ahash, 1, 16))::BIGINT AS BIGINT) AS b0,
-      |  CAST(('0b' || substring(ahash, 17, 16))::BIGINT AS BIGINT) AS b1,
-      |  CAST(('0b' || substring(ahash, 33, 16))::BIGINT AS BIGINT) AS b2,
-      |  CAST(('0b' || substring(ahash, 49, 16))::BIGINT AS BIGINT) AS b3
-      |  FROM hh),
-      |band AS (SELECT doc_id, 0 AS b, b0 AS v FROM bv
-      |  UNION ALL SELECT doc_id, 1, b1 FROM bv
-      |  UNION ALL SELECT doc_id, 2, b2 FROM bv
-      |  UNION ALL SELECT doc_id, 3, b3 FROM bv),
-      |cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-      |  FROM band x JOIN band y ON y.b = x.b AND y.v = x.v AND x.doc_id < y.doc_id)
-      |SELECT doc_a, doc_b, hamming FROM (
-      |  SELECT doc_a, doc_b,
-      |    CAST(bit_count(xor(a.b0, b.b0)) + bit_count(xor(a.b1, b.b1))
-      |       + bit_count(xor(a.b2, b.b2)) + bit_count(xor(a.b3, b.b3)) AS BIGINT) AS hamming
-      |  FROM cand JOIN bv a ON a.doc_id = doc_a JOIN bv b ON b.doc_id = doc_b) t
-      |WHERE hamming <= 3 AND (doc_a % 4 = 0 OR doc_b % 4 = 0)""".stripMargin) { (spark, d) =>
+    Dedup.batchTouching(mmImageNeardup.oracle.get)) { (spark, d) =>
     val store = graft.Persisted.of(spark, s"$d#ahash_bands_store_mod4") {
       ahashBandsOf(ahashRelation(spark, d).filter(col("doc_id") % 4 =!= 0))
     }
@@ -675,42 +645,10 @@ object Multimodal {
       |${phashFromCell("cellv")},
       |ch AS (SELECT hh.doc_id, hh.ahash || ph.phash AS c
       |       FROM hh JOIN ph ON ph.doc_id = hh.doc_id),
-      |bv AS MATERIALIZED (SELECT doc_id,
-      |  CAST(('0b' || substring(c, 1, 32))::BIGINT AS BIGINT) AS b0,
-      |  CAST(('0b' || substring(c, 33, 32))::BIGINT AS BIGINT) AS b1,
-      |  CAST(('0b' || substring(c, 65, 32))::BIGINT AS BIGINT) AS b2,
-      |  CAST(('0b' || substring(c, 97, 32))::BIGINT AS BIGINT) AS b3
-      |  FROM ch),
-      |band AS (SELECT doc_id, 0 AS b, b0 AS v FROM bv
-      |  UNION ALL SELECT doc_id, 1, b1 FROM bv
-      |  UNION ALL SELECT doc_id, 2, b2 FROM bv
-      |  UNION ALL SELECT doc_id, 3, b3 FROM bv),
-      |cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-      |  FROM band x JOIN band y ON y.b = x.b AND y.v = x.v AND x.doc_id < y.doc_id)
-      |SELECT doc_a, doc_b, hamming FROM (
-      |  SELECT doc_a, doc_b,
-      |    CAST(bit_count(xor(a.b0, b.b0)) + bit_count(xor(a.b1, b.b1))
-      |       + bit_count(xor(a.b2, b.b2)) + bit_count(xor(a.b3, b.b3)) AS BIGINT) AS hamming
-      |  FROM cand JOIN bv a ON a.doc_id = doc_a JOIN bv b ON b.doc_id = doc_b) t
-      |WHERE hamming <= 3""".stripMargin) { (spark, d) =>
-    val hv = ahashRelation(spark, d)
+      |${imageBandChainSql("ch", "c", 32)}""".stripMargin) { (spark, d) =>
+    imageBandPairs(ahashRelation(spark, d)
       .join(phashRelation(spark, d), "doc_id")
-      .select(col("doc_id"), expr(
-        "transform(sequence(0, 3), b -> cast(conv(substring(concat(ahash, phash), b*32+1, 32), 2, 10) as bigint))")
-        .as("bv"))
-    val bands = hv.select(col("doc_id"), posexplode(col("bv")))
-    val cand = bands.select(col("doc_id").as("doc_a"), col("pos"), col("col"))
-      .join(bands.select(col("doc_id").as("doc_b"), col("pos"), col("col")),
-        Seq("pos", "col"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
-    cand
-      .join(hv.select(col("doc_id").as("doc_a"), col("bv").as("ba")), "doc_a")
-      .join(hv.select(col("doc_id").as("doc_b"), col("bv").as("bb")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        expr("aggregate(zip_with(ba, bb, (x, y) -> bit_count(x ^ y)), 0, (acc, x) -> acc + x)")
-          .cast("long").as("hamming"))
-      .filter(col("hamming") <= 3)
+      .select(col("doc_id"), bandVals("concat(ahash, phash)", 32)))
   }
 
   /** Deterministic audio synthesis: every doc gets a REAL 8-bit mono PCM
@@ -776,9 +714,7 @@ object Multimodal {
     * the wide-tier band shape of [[mmImageNeardup128]], as a store
     * relation for incremental ingest. */
   def combinedBandsOf(rel: DataFrame): DataFrame =
-    rel.select(col("doc_id"), expr(
-      "transform(sequence(0, 3), b -> cast(conv(substring(concat(ahash, phash), b*32+1, 32), 2, 10) as bigint))")
-      .as("bv"))
+    rel.select(col("doc_id"), bandVals("concat(ahash, phash)", 32))
       .select(col("doc_id"), col("bv"),
         posexplode(col("bv")).as(Seq("band_id", "band_val")))
 
@@ -796,18 +732,8 @@ object Multimodal {
     * of the narrow tier's.
     * [[imageNearDupIncremental]] is generic over the band relation, so
     * ONE definition serves both tiers. */
-  val mmImageIncremental128: QueryDef = QueryDef("mm_image_incremental128", {
-    // derive the oracle from the full-corpus oracle by appending the
-    // batch-touch predicate to its FINAL filter; assert the marker is
-    // unique first — String.replace hits every occurrence, so a second
-    // hamming filter appearing in the base oracle would silently inject
-    // the predicate into the wrong scope (code-review r12)
-    val marker = "WHERE hamming <= 3"
-    val base = mmImageNeardup128.oracle.get
-    require(base.indexOf(marker) == base.lastIndexOf(marker) && base.contains(marker),
-      "mm_image_neardup128 oracle no longer has a unique final hamming filter")
-    base.replace(marker, s"$marker AND (doc_a % 4 = 0 OR doc_b % 4 = 0)")
-  }) { (spark, d) =>
+  val mmImageIncremental128: QueryDef = QueryDef("mm_image_incremental128",
+    Dedup.batchTouching(mmImageNeardup128.oracle.get)) { (spark, d) =>
     def hashes(pred: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
       combinedBandsOf(
         ahashRelation(spark, d).join(phashRelation(spark, d), "doc_id")

@@ -489,10 +489,7 @@ object Similarity {
       s"routeCols $routeCols must be columns of the batch bands")
     val bandCols = Seq("vec_id", "q", "norm", "band_id", "band_val") ++ routeCols
     val bandKey = Seq("band_id", "band_val") ++ routeCols
-    val liveStore = storeBands.select(bandCols.map(col): _*)
-      .join(newBands.select("vec_id").distinct(), Seq("vec_id"), "left_anti")
-    val allBands = liveStore
-      .unionByName(newBands.select(bandCols.map(col): _*))
+    val allBands = Dedup.supersede(storeBands, newBands, "vec_id", bandCols)
     // Candidates carry IDS ONLY through the band join and its dedup — at
     // sf1 the 8-bit bands put ~80 vectors in a bucket, and shipping the
     // 64-element quantized arrays through that expansion + distinct was
@@ -1348,18 +1345,20 @@ object Similarity {
             graft.plans.dotQNative(col("pv"), col("cv")).as(s"t$s")) ++
             (if (keepNorm) Seq(col("na")) else Nil): _*))
       // nprobe routing relation: each probe's nprobe nearest trained
-      // cells, tiny and broadcast (probes x nprobe rows)
-      val pCells = broadcast(graft.Persisted.of(spark, s"$d#ivfpq_pcells$tag") {
+      // cells, tiny (probes x nprobe rows) and broadcast at its join — the
+      // hint goes on the join side only, since on the cell collect below
+      // (no join) Spark would log a HintErrorLogger WARN
+      val pCells = graft.Persisted.of(spark, s"$d#ivfpq_pcells$tag") {
         probeCellsOf(r.filter(probePred(col("vec_id"))).select("vec_id", "q"),
           coarse, nprobe)
-      })
+      }
       // IVF routing, scan-level: only the PROBED cells leave the code
       // store (the IN-list is bounded by the coarse-cell count; at 100 TB
       // the codes are cell-partitioned and this is partition pruning)
       val cells = pCells.select("pcell").distinct().collect().map(_.getInt(0)).toSeq
       val withTs = (1 to m).foldLeft(
         codes.filter(col("cell").isin(cells: _*))
-          .join(pCells, col("pcell") === col("cell"))
+          .join(broadcast(pCells), col("pcell") === col("cell"))
           .filter(col("qid") =!= col("vec_id"))) { (acc, s) =>
         acc.join(adc(s, books(s - 1), keepNorm = s == 1), Seq("qid", s"c$s"))
       }
@@ -1575,8 +1574,8 @@ object Similarity {
 
   /** Batch-vs-store routed-ADC probe over ENCODED code relations — the
     * IVF-PQ twin of [[lshAnnIncrementalBands]], and the probe the rolling
-    * ingest runs per micro-batch: supersede the store against the batch's
-    * ids, route each probe to its nprobe nearest frozen cells, ADC-score
+    * ingest runs per micro-batch: [[Dedup.supersede]] the store against
+    * the batch's ids, route each probe to its nprobe nearest frozen cells, ADC-score
     * the routed codes (broadcast per-probe tables), rerank the top
     * `rerank` candidates exactly. Work ∝ batch on the probe side; the
     * store side is the routed scan (cell partition pruning at rest). */
@@ -1590,11 +1589,8 @@ object Similarity {
     val m = books.size
     val dh = Dim / m
     val codeCols = (1 to m).map(s => s"c$s")
-    val live = store
-      .join(batch.select("vec_id").distinct(), Seq("vec_id"), "left_anti")
-    val all = live.select(store.columns.map(col): _*)
-      .unionByName(batch.select(store.columns.map(col): _*))
-    val pCells = broadcast(probeCellsOf(batch.select("vec_id", "q"), coarse, nprobe))
+    val all = Dedup.supersede(store, batch, "vec_id", store.columns.toSeq)
+    val pCells = probeCellsOf(batch.select("vec_id", "q"), coarse, nprobe)
     val cells = pCells.select("pcell").distinct().collect().map(_.getInt(0)).toSeq
     def adc(s: Int, keepNorm: Boolean) = broadcast(
       batch.select(col("vec_id").as("qid"),
@@ -1607,7 +1603,7 @@ object Similarity {
       all.select((Seq("vec_id", "cell") ++ codeCols).map(col) :+
           col("norm").as("nb"): _*)
         .filter(col("cell").isin(cells: _*))
-        .join(pCells, col("pcell") === col("cell"))
+        .join(broadcast(pCells), col("pcell") === col("cell"))
         .filter(col("qid") =!= col("vec_id"))) { (acc, s) =>
       acc.join(adc(s, keepNorm = s == 1), Seq("qid", s"c$s"))
     }

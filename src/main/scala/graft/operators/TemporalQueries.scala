@@ -70,15 +70,7 @@ object TemporalQueries {
     * identical oracle, so the custom operator is driver-adjudicated
     * row-for-row against DuckDB every round, and spec-pinned equal to the
     * union+window composition. */
-  val ajAsofNative = QueryDef("aj_asof_native",
-    """WITH p AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id FROM events WHERE event_type = 'purchase'),
-      |e AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id FROM events WHERE event_type = 'error'),
-      |j AS (SELECT p.event_id, p.user_id, p.ts_us, e.event_id AS err_id, e.ts_us AS err_ts,
-      |        ROW_NUMBER() OVER (PARTITION BY p.event_id ORDER BY e.ts_us DESC, e.event_id DESC) AS rn
-      |      FROM p LEFT JOIN e ON e.user_id = p.user_id AND e.ts_us <= p.ts_us)
-      |SELECT event_id, user_id, err_id AS last_err_id,
-      |  CAST(ts_us - err_ts AS BIGINT) AS gap_us
-      |FROM j WHERE rn = 1""".stripMargin) { (spark, d) =>
+  val ajAsofNative = QueryDef("aj_asof_native", ajAsof.oracle.get) { (spark, d) =>
     val raw = Tables.events(spark, d)
     val ev = raw
       .select(col("event_id"), col("user_id"), tsUs(raw).as("ts_us"), col("event_type"))

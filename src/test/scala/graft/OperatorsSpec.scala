@@ -169,14 +169,26 @@ class OperatorsSpec extends SparkSpec {
     import spark.implicits._
     val hv = graft.operators.Multimodal.ahashBandsOf(
       graft.operators.Multimodal.ahashRelation(spark, sf0001))
-    val inc = graft.operators.Multimodal.imageNearDupIncremental(
-        hv.filter($"doc_id" % 4 =!= 0), hv.filter($"doc_id" % 4 === 0))
+    val store = hv.filter($"doc_id" % 4 =!= 0)
+    val batch = hv.filter($"doc_id" % 4 === 0)
+    val inc = graft.operators.Multimodal.imageNearDupIncremental(store, batch)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val full = graft.operators.Multimodal.mmImageNeardup.fn(spark, sf0001)
       .filter($"doc_a" % 4 === 0 || $"doc_b" % 4 === 0)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(inc === full)
     assert(inc.nonEmpty)
+    // supersede: a re-ingested id pairs off its FRESH hash only — a stale
+    // store row for batch doc x carrying batch doc z's hash would pair
+    // (x, z) at Hamming 0
+    val firsts = batch.filter($"band_id" === 0).orderBy("doc_id")
+      .select("doc_id", "bv").collect()
+    val x = firsts.head.getLong(0)
+    val z = firsts.find(_.getSeq[Any](1) != firsts.head.getSeq[Any](1)).get.getLong(0)
+    val store2 = store.unionByName(batch.filter($"doc_id" === z).withColumn("doc_id", lit(x)))
+    val inc2 = graft.operators.Multimodal.imageNearDupIncremental(store2, batch)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(inc2 === inc)
   }
 
   test("approx_stats: a group whose distinct key is all NULL survives with exact_customers = 0") {
