@@ -47,6 +47,23 @@ object Exprs {
   // ---- X1: whitespace normalization (step3_attempt1.py:36-41) ----
   def normText(c: Column): Column = trim(regexp_replace(c, "\\s+", " "))
 
+  /** DuckDB twin of [[normText]] over the SQL expression `c`. */
+  def normTextSql(c: String): String = s"trim(regexp_replace($c, '\\s+', ' ', 'g'))"
+
+  // ---- X19: a document's words (step3_attempt1.py:250-254) ----
+  /** The pieces of [[normText]] split on the space: the one word list of
+    * every tokenizing query, shingle and class-token rank. A blank string
+    * yields one empty word, as `split("", " ")` does. The native passes in
+    * `graft.plans.SketchUtil` tokenize to the same words. */
+  def words(c: Column): Column = split(normText(c), " ")
+
+  /** DuckDB twin of [[words]] over the column `text`:
+    * `string_split(trim(regexp_replace(text, …)), ' ')`. RE2, the oracle's
+    * regex engine, omits vertical tab 0x0B from `\s`, where Java's regex
+    * (the Spark side and the native tokenizer) includes it; the parquet
+    * testdata the oracle gate reads contains no 0x0B. */
+  val wordsSql: String = s"string_split(${normTextSql("text")}, ' ')"
+
   // ---- X2: URL -> lowercased host sans leading www (step3_attempt1.py:43-57)
   /** Regex variant — identical semantics in DuckDB for the oracle. */
   def urlDomain(c: Column): Column =
@@ -175,9 +192,6 @@ object Exprs {
   // ---- X16: href slug extraction (step3_attempt4.py:32-61 spec) ----
   def hrefSlug(href: Column): Column =
     regexp_extract(href, "(?i)(?:investments|portfolio|companies|company|funds)/([^/?#]+)", 1)
-
-  // ---- X19: class tokenization (step3_attempt1.py:250-254) ----
-  def classTokens(cls: Column): Column = split(normText(cls), " ")
 
   // ---- X20: has-all-words rank match (step2_attempt1.py:44-52,69-77) ----
   /** True iff every word in `words` is a substring of some token. */

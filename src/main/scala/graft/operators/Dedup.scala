@@ -64,11 +64,9 @@ object Dedup {
     "128-bit upper lanes must be distinct from the lower lanes")
 
   // ---- shingling ----
-  def wordsOf(text: Column): Column = split(normText(text), " ")
-
   /** Distinct word n-gram shingles of a document. */
   def shinglesOf(text: Column, n: Int = 3): Column = {
-    val ws = wordsOf(text)
+    val ws = words(text)
     when(size(ws) >= n,
       array_distinct(transform(sequence(lit(0), size(ws) - n),
         i => concat_ws(" ", slice(ws, i + lit(1), lit(n))))))
@@ -83,21 +81,29 @@ object Dedup {
   val Coef: IndexedSeq[Long] =
     (1 to HashWidth).scanLeft(31L)((c, _) => c * 31L % P).init.toIndexedSeq
 
-  /** wid(s) = (sum_i Coef(i) * ascii(rpad(s,24,'@')[i]) + 31*length(s)) % P
-    * — deterministic, expression-only, identical in Spark and DuckDB. */
-  def shingleIdChar(s: Column): Column = {
-    val padded = rpad(s, HashWidth, "@")
-    val terms = (1 to HashWidth).map(i =>
+  /** The one positional polynomial hash of a string over its first `width`
+    * chars: (sum_i Coef(i) * ascii(rpad(s,width,'@')[i]) + 31*length(s)) % P
+    * — deterministic, expression-only, identical in Spark, DuckDB
+    * ([[polyHashSql]]) and the native word passes. */
+  private def polyHash(s: Column, width: Int): Column = {
+    val padded = rpad(s, width, "@")
+    val terms = (1 to width).map(i =>
       lit(Coef(i - 1)) * ascii(substring(padded, i, 1)))
     (terms.reduce(_ + _) + lit(31L) * length(s)) % lit(P)
   }
 
-  /** DuckDB twin of [[shingleIdChar]] over a column named `shingle`. */
-  val shingleIdCharSql: String = {
-    val terms = (1 to HashWidth).map(i =>
-      s"CAST(${Coef(i - 1)} AS BIGINT)*ascii(substring(rpad(shingle, $HashWidth, '@'), $i, 1))")
-    s"(${terms.mkString(" + ")} + 31*length(shingle)) % $P"
+  /** DuckDB twin of [[polyHash]] over the SQL name `s`. */
+  private def polyHashSql(s: String, width: Int): String = {
+    val terms = (1 to width).map(i =>
+      s"CAST(${Coef(i - 1)} AS BIGINT)*ascii(substring(rpad($s, $width, '@'), $i, 1))")
+    s"(${terms.mkString(" + ")} + 31*length($s)) % $P"
   }
+
+  /** wid(s): [[polyHash]] at width 24. */
+  def shingleIdChar(s: Column): Column = polyHash(s, HashWidth)
+
+  /** DuckDB twin of [[shingleIdChar]] over a column named `shingle`. */
+  val shingleIdCharSql: String = polyHashSql("shingle", HashWidth)
 
   // ---- word-hash shingle ids: hash each word once (12-char poly), combine
   // three word hashes per shingle — ~3x less string work than hashing the
@@ -106,19 +112,20 @@ object Dedup {
   val K2 = 4097L
   val K3 = 16785409L
 
-  def wordHash(w: Column): Column = {
-    val padded = rpad(w, WordHashWidth, "@")
-    val terms = (1 to WordHashWidth).map(i =>
-      lit(Coef(i - 1)) * ascii(substring(padded, i, 1)))
-    (terms.reduce(_ + _) + lit(31L) * length(w)) % lit(P)
-  }
+  def wordHash(w: Column): Column = polyHash(w, WordHashWidth)
 
   /** DuckDB twin of [[wordHash]] over a lambda variable named `w`. */
-  val wordHashSql: String = {
-    val terms = (1 to WordHashWidth).map(i =>
-      s"CAST(${Coef(i - 1)} AS BIGINT)*ascii(substring(rpad(w, $WordHashWidth, '@'), $i, 1))")
-    s"(${terms.mkString(" + ")} + 31*length(w)) % $P"
-  }
+  val wordHashSql: String = polyHashSql("w", WordHashWidth)
+
+  /** The 3-gram id of the words at 1-based `i`, `i+1`, `i+2` of the word
+    * hash array `hw`: (hw[i] + K2*hw[i+1] + K3*hw[i+2]) % P. */
+  private[operators] def gramId(hw: Column, i: Column): Column =
+    (element_at(hw, i) + lit(K2) * element_at(hw, i + 1) +
+      lit(K3) * element_at(hw, i + 2)) % lit(P)
+
+  /** DuckDB twin of [[gramId]] over a list `hw` and a lambda variable `i`. */
+  private val gramIdSql: String =
+    s"(hw[i] + CAST($K2 AS BIGINT)*hw[i+1] + CAST($K3 AS BIGINT)*hw[i+2]) % $P"
 
   /** Per-doc shingle-id arrays — one native codegen'd pass per row, zero
     * shuffle. This is the scale shape: sketches computed in the scan stage.
@@ -138,14 +145,13 @@ object Dedup {
     * was a 30x slowdown). */
   def docWidArraysDecl(docs: DataFrame): DataFrame =
     docs
-      .select(col("doc_id"), wordsOf(col("text")).as("ws"))
+      .select(col("doc_id"), words(col("text")).as("ws"))
       .select(col("doc_id"), size(col("ws")).as("nw"),
         transform(col("ws"), w => wordHash(w)).as("hw"))
       .select(col("doc_id"),
         when(col("nw") >= 3,
           array_distinct(transform(sequence(lit(1), col("nw") - 2),
-            i => (element_at(col("hw"), i) + lit(K2) * element_at(col("hw"), i + 1) +
-              lit(K3) * element_at(col("hw"), i + 2)) % lit(P))))
+            i => gramId(col("hw"), i))))
           .otherwise(array().cast("array<long>")).as("wids"))
 
   /** In-session persisted [[docWidArrays]] over the documents table of
@@ -223,8 +229,6 @@ object Dedup {
   }
 
   // ---- shared oracle SQL fragments (DuckDB dialect of the same pipeline) ----
-  private val wordsSql =
-    "string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')"
   /** CTEs: w(doc_id,w,pos) -> sh(doc_id,shingle) -> vocab -> dw(doc_id,wid). */
   // NOTE: embedded into outer stripMargin strings — no line here may start
   // with '|' (a leading '||' would lose its first char to the outer strip).
@@ -245,7 +249,7 @@ object Dedup {
     s"""tl AS (SELECT doc_id, $wordsSql AS ws FROM $src),
        |hwl AS (SELECT doc_id, len(ws) AS nw, list_transform(ws, w -> $wordHashSql) AS hw FROM tl),
        |widl AS (SELECT doc_id, list_distinct(list_transform(generate_series(1, nw-2),
-       |        i -> (hw[i] + CAST($K2 AS BIGINT)*hw[i+1] + CAST($K3 AS BIGINT)*hw[i+2]) % $P)) AS wids FROM hwl)""".stripMargin
+       |        i -> $gramIdSql)) AS wids FROM hwl)""".stripMargin
   val shingleListCtes: String = shingleListCtesFrom("documents")
 
   /** Near-copy (re-upload) resolution — the density convention of the
@@ -1073,7 +1077,7 @@ object Dedup {
   def scrubPosRelation(spark: org.apache.spark.sql.SparkSession, d: String): DataFrame =
     graft.Persisted.of(spark, s"$d#scrub_pos") {
       Tables.documents(spark, d).select(col("doc_id"),
-        wordsOf(col("text")).as("ws"),
+        words(col("text")).as("ws"),
         graft.plans.wordShinglePos(col("text"), Coef.take(WordHashWidth), K2, K3, P).as("wp"))
     }
 
@@ -1125,7 +1129,7 @@ object Dedup {
     s"""e AS (SELECT doc_id, unnest(wids) AS wid FROM widl),
       |g AS (SELECT wid FROM e GROUP BY wid HAVING COUNT(*) >= 2),
       |wp AS (SELECT doc_id, list_transform(generate_series(1, nw-2),
-      |    i -> (hw[i] + CAST($K2 AS BIGINT)*hw[i+1] + CAST($K3 AS BIGINT)*hw[i+2]) % $P) AS wp FROM hwl),
+      |    i -> $gramIdSql) AS wp FROM hwl),
       |ep AS (SELECT doc_id, unnest(wp) AS wid, generate_subscripts(wp, 1) AS p FROM wp),
       |cov AS (SELECT DISTINCT doc_id, cp FROM (
       |    SELECT ep.doc_id, unnest([ep.p, ep.p + 1, ep.p + 2]) AS cp

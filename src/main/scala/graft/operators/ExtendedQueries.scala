@@ -152,11 +152,11 @@ object ExtendedQueries {
 
   /** X9 generator shape: explode to words, top-20 frequency. */
   val x9WordCount = QueryDef("x9_word_count",
-    """SELECT w AS word, COUNT(*) AS n_occ
-      |FROM (SELECT unnest(string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ')) AS w FROM documents) t
+    s"""SELECT w AS word, COUNT(*) AS n_occ
+      |FROM (SELECT unnest($wordsSql) AS w FROM documents) t
       |GROUP BY w ORDER BY n_occ DESC, word LIMIT 20""".stripMargin) { (spark, d) =>
     Tables.documents(spark, d)
-      .select(explode(split(normText(col("text")), " ")).as("word"))
+      .select(explode(words(col("text"))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("n_occ"))
       .orderBy(col("n_occ").desc, col("word")).limit(20)
   }

@@ -65,7 +65,7 @@ object PortCoPipeline {
     pageArtifacts(pages)
       .select(col("firm_name"), explode(col("els")).as("e"))
       .select(col("firm_name"), normText(col("e.cls")).as("cls"))
-      .select(col("firm_name"), col("cls"), classTokens(col("cls")).as("tokens"))
+      .select(col("firm_name"), col("cls"), words(col("cls")).as("tokens"))
       .filter(!classBlacklisted(col("tokens")))
       .withColumn("rank", classRank(col("tokens")))
       .filter(col("rank").isNotNull)
@@ -100,7 +100,7 @@ object PortCoPipeline {
     arts.select(col("firm_name"), explode(col("els")).as("e"))
       .select(col("firm_name"), col("e.el").as("el"),
         normText(col("e.cls")).as("cls"))
-      .withColumn("tokens", classTokens(col("cls")))
+      .withColumn("tokens", words(col("cls")))
       .filter(!classBlacklisted(col("tokens")))
       .withColumn("rank", classRank(col("tokens")))
       .filter(col("rank").isNotNull)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import graft.functions.Exprs.wordsSql
 import org.apache.spark.sql.functions._
 
 /** Data-quality / validation operators — the monitoring half of a
@@ -202,7 +203,7 @@ object QualityQueries {
     * the shared term store's one shuffle. Rank ties break by word so both
     * engines cut the curve identically. */
   val taVocabCoverage = QueryDef("ta_vocab_coverage",
-    """WITH w AS (SELECT unnest(string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ')) AS w FROM documents),
+    s"""WITH w AS (SELECT unnest($wordsSql) AS w FROM documents),
       |c AS (SELECT w, COUNT(*) AS cnt FROM w GROUP BY w),
       |r AS (SELECT cnt, ROW_NUMBER() OVER (ORDER BY cnt DESC, w) AS rnk FROM c),
       |tot AS (SELECT SUM(cnt) AS n FROM c),

@@ -23,18 +23,17 @@ object TextAnalysis {
   private object Metrics {
     import org.apache.spark.sql.Column
     def norm: Column = normText(col("text"))
-    def words: Column = split(norm, " ")
-    def nTok: Column = size(words)
-    def stopCnt: Column = size(filter(words, x => x.isin(Stopwords: _*)))
+    def nTok: Column = size(words(col("text")))
+    def stopCnt: Column = size(filter(words(col("text")), x => x.isin(Stopwords: _*)))
     def stopRatio: Column = stopCnt.cast("double") / nTok
     def awl: Column = (length(norm) - (nTok - 1)).cast("double") / nTok
 
     val stopOrSql: String = Stopwords.map(s => s"x = '$s'").mkString(" OR ")
     /** CTE body: (doc_id, norm, words) from documents. */
     val normCteSql: String =
-      """SELECT doc_id, md5(text) AS h,
-        |    trim(regexp_replace(text, '\s+', ' ', 'g')) AS norm,
-        |    string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ') AS words
+      s"""SELECT doc_id, md5(text) AS h,
+        |    ${normTextSql("text")} AS norm,
+        |    $wordsSql AS words
         |  FROM documents""".stripMargin
     val stopCntSql: String = s"len(list_filter(words, x -> $stopOrSql))"
     val stopRatioSql: String = s"CAST($stopCntSql AS DOUBLE) / len(words)"
@@ -61,7 +60,7 @@ object TextAnalysis {
       s"""WITH prof AS (SELECT * FROM (VALUES $valuesSql) p(cand_lang, marker)),
         |hits AS (
         |  SELECT d.doc_id, d.lang, p.cand_lang,
-        |    SUM(CASE WHEN contains(' ' || trim(regexp_replace(d.text, '\\s+', ' ', 'g')) || ' ', ' ' || p.marker || ' ') THEN 1 ELSE 0 END) AS n_hits
+        |    SUM(CASE WHEN contains(' ' || ${normTextSql("d.text")} || ' ', ' ' || p.marker || ' ') THEN 1 ELSE 0 END) AS n_hits
         |  FROM documents d CROSS JOIN prof p
         |  GROUP BY d.doc_id, d.lang, p.cand_lang)
         |SELECT doc_id, cand_lang AS pred_lang, CAST(n_hits AS BIGINT) AS n_hits,
@@ -128,12 +127,12 @@ object TextAnalysis {
     val pat = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
     QueryDef("ta_token_count",
       s"""SELECT doc_id,
-        |  CAST(len(string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')) AS BIGINT) AS ws_tokens,
+        |  CAST(len($wordsSql) AS BIGINT) AS ws_tokens,
         |  CAST(len(regexp_extract_all(text, '$pat')) AS BIGINT) AS bpe_tokens
         |FROM documents""".stripMargin) { (spark, d) =>
       Tables.documents(spark, d).select(
         col("doc_id"),
-        size(split(normText(col("text")), " ")).cast("long").as("ws_tokens"),
+        size(words(col("text"))).cast("long").as("ws_tokens"),
         size(regexp_extract_all(col("text"), lit(pat), lit(0))).cast("long").as("bpe_tokens"))
     }
   }
@@ -142,16 +141,16 @@ object TextAnalysis {
     * mod 1e9+7 — an order-sensitive rolling-hash analogue that stays
     * relational (no fold) so the oracle can replay it. */
   val taFingerprint = QueryDef("ta_fingerprint",
-    """WITH w AS (
+    s"""WITH w AS (
       |  SELECT doc_id,
-      |    unnest(string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ')) AS w,
-      |    generate_subscripts(string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' '), 1) AS pos
+      |    unnest($wordsSql) AS w,
+      |    generate_subscripts($wordsSql, 1) AS pos
       |  FROM documents)
       |SELECT doc_id,
       |  CAST(SUM(CAST(pos AS BIGINT) * (256 * length(w) + ascii(substring(w, 1, 1)))) % 1000000007 AS BIGINT) AS fingerprint
       |FROM w GROUP BY doc_id""".stripMargin) { (spark, d) =>
     Tables.documents(spark, d)
-      .select(col("doc_id"), posexplode(split(normText(col("text")), " ")).as(Seq("pos", "w")))
+      .select(col("doc_id"), posexplode(words(col("text"))).as(Seq("pos", "w")))
       .groupBy("doc_id")
       .agg((sum((col("pos") + 1).cast("long") *
         (lit(256) * length(col("w")) + ascii(substring(col("w"), 1, 1)))) % 1000000007L)
@@ -165,7 +164,7 @@ object TextAnalysis {
     * document frequencies both DERIVE from that aggregate (sum / count per
     * side) instead of re-exploding — one wide shuffle, two narrow ones. */
   val taTermWeight = QueryDef("ta_term_weight",
-    """WITH w AS (SELECT doc_id, unnest(string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ')) AS w FROM documents),
+    s"""WITH w AS (SELECT doc_id, unnest($wordsSql) AS w FROM documents),
       |tf AS (SELECT doc_id, w, COUNT(*) AS tf FROM w GROUP BY doc_id, w),
       |dl AS (SELECT doc_id, SUM(tf) AS dl FROM tf GROUP BY doc_id),
       |df AS (SELECT w, COUNT(*) AS df FROM tf GROUP BY w),
@@ -218,7 +217,7 @@ object TextAnalysis {
     * All metrics are per-doc aggregates of the counts relation:
     * order-independent, exactly replayable as grouped SQL. */
   val taRepetition = QueryDef("ta_repetition",
-    """WITH w AS (SELECT doc_id, unnest(string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ')) AS w FROM documents),
+    s"""WITH w AS (SELECT doc_id, unnest($wordsSql) AS w FROM documents),
       |tf AS (SELECT doc_id, w, COUNT(*) AS tf FROM w GROUP BY doc_id, w)
       |SELECT doc_id,
       |  CAST(SUM(tf) AS BIGINT) AS n_words,
@@ -311,7 +310,7 @@ object TextAnalysis {
   private def tokenStarts(spark: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
     val toks = Tables.documents(spark, d)
       .select(col("doc_id"),
-        size(split(normText(col("text")), " ")).cast("long").as("n_tok"),
+        size(words(col("text"))).cast("long").as("n_tok"),
         expr("doc_id div 1000").as("bucket"))
     val localW = Window.partitionBy("bucket").orderBy("doc_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -337,7 +336,7 @@ object TextAnalysis {
     val Budget = 4096L
     QueryDef("ta_shard_pack",
       s"""WITH t AS (SELECT doc_id,
-        |    CAST(len(string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')) AS BIGINT) AS n_tok
+        |    CAST(len($wordsSql) AS BIGINT) AS n_tok
         |  FROM documents),
         |s AS (SELECT doc_id, n_tok,
         |    SUM(n_tok) OVER (ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
@@ -701,7 +700,7 @@ object TextAnalysis {
     val S = 48
     QueryDef("ta_chunk",
       s"""WITH t AS (
-        |  SELECT doc_id, string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ') AS ws
+        |  SELECT doc_id, $wordsSql AS ws
         |  FROM documents),
         |n AS (SELECT doc_id, ws, len(ws) AS nw FROM t),
         |c AS (
@@ -721,7 +720,7 @@ object TextAnalysis {
     * [[taChunk]] for the window/stride contract and oracle). */
   def chunk(docs: DataFrame, w: Int = 64, s: Int = 48): DataFrame =
     docs
-      .select(col("doc_id"), split(normText(col("text")), " ").as("ws"))
+      .select(col("doc_id"), words(col("text")).as("ws"))
       .select(col("doc_id"), col("ws"), size(col("ws")).as("nw"))
       .select(col("doc_id"), col("ws"), col("nw"),
         explode(sequence(lit(0),
@@ -810,7 +809,7 @@ object TextAnalysis {
     val terms = Seq("scan", "merge", "window", "spark")
     val inList = terms.map(t => s"'$t'").mkString(", ")
     QueryDef("ta_bm25",
-      s"""WITH w AS (SELECT doc_id, unnest(string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')) AS w FROM documents),
+      s"""WITH w AS (SELECT doc_id, unnest($wordsSql) AS w FROM documents),
         |tf AS (SELECT doc_id, w, COUNT(*) AS tf FROM w GROUP BY doc_id, w),
         |st AS (SELECT (SELECT COUNT(*) FROM documents) AS n,
         |  CAST(SUM(tf) AS DOUBLE) / (SELECT COUNT(*) FROM documents) AS avgdl FROM tf),
@@ -916,7 +915,7 @@ object TextAnalysis {
     * the scalar (C, V) pair is a broadcast cross join. One shuffle for
     * c(w), one for the per-doc mean — both partial-agg'd. */
   val taRarity: QueryDef = QueryDef("ta_rarity",
-    """WITH w AS (SELECT doc_id, unnest(string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ')) AS w FROM documents),
+    s"""WITH w AS (SELECT doc_id, unnest($wordsSql) AS w FROM documents),
       |tf AS (SELECT doc_id, w, COUNT(*) AS tf FROM w GROUP BY doc_id, w),
       |c AS (SELECT w, SUM(tf) AS c FROM tf GROUP BY w),
       |st AS (SELECT CAST(SUM(c) AS BIGINT) AS ctot, COUNT(*) AS v FROM c),
@@ -965,7 +964,7 @@ object TextAnalysis {
     * heaps, no global sort). At 100 TB the per-round cost is a vocab scan,
     * which is why BPE training is tractable at all. */
   val taBpePairs: QueryDef = QueryDef("ta_bpe_pairs",
-    """WITH w AS (SELECT unnest(string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ')) AS w FROM documents),
+    s"""WITH w AS (SELECT unnest($wordsSql) AS w FROM documents),
       |p AS (SELECT substring(w, i, 2) AS pair
       |      FROM (SELECT w, unnest(generate_series(1, length(w) - 1)) AS i FROM w) t)
       |SELECT pair, COUNT(*) AS n FROM p GROUP BY pair
@@ -998,8 +997,8 @@ object TextAnalysis {
     * Scale shape: identical to [[taBpePairs]] plus a 1-row broadcast (the
     * argmax merge) joined onto the vocab before the re-explode. */
   val taBpeMerge2: QueryDef = QueryDef("ta_bpe_merge2",
-    """WITH v AS (SELECT w, COUNT(*) AS wn FROM (
-      |    SELECT unnest(string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ')) AS w FROM documents) t
+    s"""WITH v AS (SELECT w, COUNT(*) AS wn FROM (
+      |    SELECT unnest($wordsSql) AS w FROM documents) t
       |  GROUP BY w),
       |p1 AS (SELECT substring(w, i, 2) AS pair, SUM(wn) AS n
       |       FROM (SELECT w, wn, unnest(generate_series(1, length(w) - 1)) AS i FROM v) t
@@ -1062,8 +1061,8 @@ object TextAnalysis {
     * train and encode oracles cannot drift. */
   private def bpeTrainCtes(n: Int): String = {
     val b = new StringBuilder(
-      """v0 AS (SELECT w, COUNT(*) AS wn FROM (
-        |    SELECT unnest(string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ')) AS w FROM documents) t
+      s"""v0 AS (SELECT w, COUNT(*) AS wn FROM (
+        |    SELECT unnest($wordsSql) AS w FROM documents) t
         |  GROUP BY w)""".stripMargin)
     for (k <- 1 to n) b ++=
       s""",
@@ -1187,7 +1186,7 @@ object TextAnalysis {
     QueryDef("ta_bpe_encode",
       s"""WITH ${bpeTrainCtes(n)},
         |wd AS (SELECT doc_id, w, COUNT(*) AS tf FROM (
-        |    SELECT doc_id, unnest(string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')) AS w FROM documents) t
+        |    SELECT doc_id, unnest($wordsSql) AS w FROM documents) t
         |  WHERE w <> '' GROUP BY doc_id, w),
         |e AS (SELECT w, length($chain) AS tl
         |      FROM (SELECT DISTINCT w FROM wd) vw $crossT)
@@ -1244,7 +1243,7 @@ object TextAnalysis {
     * the scan projection (no window, no positional self-join);
     * greatest(·, 0) keeps 0/1-token documents legal (empty array out). */
   def bigramPairs(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val ws = split(normText(text), " ")
+    val ws = words(text)
     zip_with(
       slice(ws, lit(1), greatest(size(ws) - 1, lit(0))),
       slice(ws, lit(2), greatest(size(ws) - 1, lit(0))),
@@ -1284,7 +1283,7 @@ object TextAnalysis {
     }
 
   val taBigramLm: QueryDef = QueryDef("ta_bigram_lm",
-    """WITH t AS (SELECT doc_id, string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ') AS ws FROM documents),
+    s"""WITH t AS (SELECT doc_id, $wordsSql AS ws FROM documents),
       |w AS (SELECT doc_id, unnest(ws) AS w FROM t),
       |bg AS (SELECT doc_id, ws[i] AS w1, ws[i + 1] AS w2
       |       FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 1)) AS i FROM t) x),
@@ -1335,7 +1334,7 @@ object TextAnalysis {
     * marginals and N are vocabulary-sized aggregates of it, broadcast
     * back by AQE. No token-stream shuffle anywhere. */
   val taCollocations: QueryDef = QueryDef("ta_collocations",
-    """WITH t AS (SELECT doc_id, string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ') AS ws FROM documents),
+    s"""WITH t AS (SELECT doc_id, $wordsSql AS ws FROM documents),
       |bg AS (SELECT ws[i] AS w1, ws[i + 1] AS w2
       |       FROM (SELECT ws, unnest(generate_series(1, len(ws) - 1)) AS i FROM t) x),
       |big AS (SELECT w1, w2, COUNT(*) AS c12 FROM bg GROUP BY 1, 2),
@@ -1374,7 +1373,7 @@ object TextAnalysis {
     val L = 512L
     QueryDef("ta_seq_pack",
       s"""WITH t AS (SELECT doc_id,
-        |    CAST(len(string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')) AS BIGINT) AS n_tok
+        |    CAST(len($wordsSql) AS BIGINT) AS n_tok
         |  FROM documents),
         |s AS (SELECT doc_id, n_tok,
         |    CAST(SUM(n_tok) OVER (ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tok AS BIGINT) AS st
@@ -1428,8 +1427,8 @@ object TextAnalysis {
     val sql =
       s"""WITH w AS (
         |  SELECT doc_id,
-        |    unnest(string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')) AS w,
-        |    generate_subscripts(string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' '), 1) AS pos
+        |    unnest($wordsSql) AS w,
+        |    generate_subscripts($wordsSql, 1) AS pos
         |  FROM documents),
         |h AS (SELECT doc_id, pos, ${Dedup.wordHashSql} AS wh FROM w),
         |g AS (SELECT a.doc_id, a.pos - 1 AS gpos,
@@ -1473,15 +1472,12 @@ object TextAnalysis {
     * cross-checked against the native expression in PlansSpec. */
   def winnowSelsDecl(docs: DataFrame, M: Long = 1048576L): DataFrame =
     docs
-      .select(col("doc_id"), transform(Dedup.wordsOf(col("text")),
+      .select(col("doc_id"), transform(words(col("text")),
         w => Dedup.wordHash(w)).as("wh"))
-      // encoded gram hashes: ((wh[i] + K2·wh[i+1] + K3·wh[i+2]) % P)·M − i
+      // encoded gram hashes: gram id of the 0-based gram i, times M, minus i
       .select(col("doc_id"), when(size(col("wh")) >= 3,
         transform(sequence(lit(0), size(col("wh")) - 3), i =>
-          (element_at(col("wh"), i + 1) +
-            lit(Dedup.K2) * element_at(col("wh"), i + 2) +
-            lit(Dedup.K3) * element_at(col("wh"), i + 3)) % lit(Dedup.P) *
-            lit(M) - i))
+          Dedup.gramId(col("wh"), i + 1) * lit(M) - i))
         .otherwise(array().cast("array<bigint>")).as("gv"))
       // ONE fold over the gram array: the accumulator carries the ring of
       // the last 3 encoded values and appends each full window's min. A
@@ -1529,7 +1525,7 @@ object TextAnalysis {
   val taHeavyHitters: QueryDef = {
     val K = 32
     QueryDef("ta_heavy_hitters",
-      s"""WITH w AS (SELECT unnest(string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')) AS w FROM documents),
+      s"""WITH w AS (SELECT unnest($wordsSql) AS w FROM documents),
         |c AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS cnt FROM w GROUP BY w),
         |t AS (SELECT SUM(cnt) AS wt FROM c)
         |SELECT c.w AS w, c.cnt AS cnt, TRUE AS in_sketch

@@ -64,25 +64,56 @@ object SketchUtil {
     sig
   }
 
-  /** Polynomial hash of one word: sum over the first `width` codepoints
-    * (padded with '@') of coef(i)*cp(i), plus 31*charlen, mod p. Exactly
-    * mirrors the declarative rpad/substring/ascii pipeline (and its DuckDB
-    * twin) in graft.operators.Dedup. */
-  private def wordHash(cps: Array[Int], len: Int, coef: Array[Long], p: Long): Long = {
-    val width = coef.length
-    var h = 0L
+  /** Java-regex `\s`: exactly the whitespace set [[graft.functions.Exprs
+    * .normText]] collapses. `Character.isWhitespace` would differ: it also
+    * takes the separators 0x1C-0x1F. */
+  @inline def isWs(c: Int): Boolean =
+    c == ' ' || c == '\t' || c == '\n' || c == 0x0B || c == '\f' || c == '\r'
+
+  /** The words of a document, the native twin of [[graft.functions.Exprs
+    * .words]]: the maximal runs of non-[[isWs]] chars, in order. A blank
+    * text has no words here where `words` yields one empty word; every
+    * pass below emits nothing below 3 words, so the two agree. */
+  def words(s: String): java.util.ArrayList[String] = {
+    val out = new java.util.ArrayList[String]()
     var i = 0
-    while (i < width) {
-      val c = if (i < len) cps(i) else '@'.toInt
-      h += coef(i) * c
-      i += 1
+    while (i < s.length) {
+      while (i < s.length && isWs(s.charAt(i))) i += 1
+      val start = i
+      while (i < s.length && !isWs(s.charAt(i))) i += 1
+      if (i > start) out.add(s.substring(start, i))
     }
-    (h + 31L * len) % p
+    out
   }
 
-  /** Distinct 3-gram shingle ids of a document in ONE pass: whitespace
-    * tokenize, per-word polynomial hash, combine consecutive word hashes as
-    * (h0 + k2*h1 + k3*h2) mod p, distinct preserving first occurrence.
+  /** Polynomial hash of each word: sum over the first `coef.length`
+    * codepoints (padded with '@') of coef(i)*cp(i), plus 31*charlen, mod
+    * p. Exactly mirrors the declarative rpad/substring/ascii pipeline (and
+    * its DuckDB twin), `Dedup.wordHash`. */
+  def wordHashes(words: java.util.ArrayList[String], coef: Array[Long], p: Long): Array[Long] = {
+    val width = coef.length
+    val hs = new Array[Long](words.size())
+    var w = 0
+    while (w < hs.length) {
+      val cps = words.get(w).codePoints().toArray
+      var h = 0L
+      var i = 0
+      while (i < width) {
+        h += coef(i) * (if (i < cps.length) cps(i) else '@'.toInt)
+        i += 1
+      }
+      hs(w) = (h + 31L * cps.length) % p
+      w += 1
+    }
+    hs
+  }
+
+  /** Id of the 3-gram starting at word `j`: (h0 + k2*h1 + k3*h2) mod p. */
+  @inline def gram(hs: Array[Long], j: Int, k2: Long, k3: Long, p: Long): Long =
+    (hs(j) + k2 * hs(j + 1) + k3 * hs(j + 2)) % p
+
+  /** Distinct 3-gram shingle ids of a document in ONE pass: [[words]],
+    * [[wordHashes]], [[gram]], distinct preserving first occurrence.
     * Semantics identical to the staged declarative pipeline
     * (Dedup.docWidArrays) and its DuckDB list CTE twin — this exists because
     * the declarative form runs on the interpreted expression evaluator
@@ -92,32 +123,14 @@ object SketchUtil {
   def wordShingleIds(text: UTF8String, coef: Array[Long], k2: Long, k3: Long,
                      p: Long): ArrayData = {
     if (text == null) return null
-    val s = text.toString
-    // tokenize on regex-\s runs (the exact set normText collapses on;
-    // Character.isWhitespace would differ on exotic separators)
-    @inline def isWs(c: Char): Boolean =
-      c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
-    val words = new java.util.ArrayList[String]()
-    var i = 0
-    while (i < s.length) {
-      while (i < s.length && isWs(s.charAt(i))) i += 1
-      val start = i
-      while (i < s.length && !isWs(s.charAt(i))) i += 1
-      if (i > start) words.add(s.substring(start, i))
-    }
-    val n = words.size()
+    val ws = words(text.toString)
+    val n = ws.size()
     if (n < 3) return UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
-    val hs = new Array[Long](n)
-    var w = 0
-    while (w < n) {
-      val cps = words.get(w).codePoints().toArray
-      hs(w) = wordHash(cps, cps.length, coef, p)
-      w += 1
-    }
+    val hs = wordHashes(ws, coef, p)
     val seen = new java.util.LinkedHashSet[java.lang.Long]()
     var j = 0
     while (j + 2 < n) {
-      seen.add(java.lang.Long.valueOf((hs(j) + k2 * hs(j + 1) + k3 * hs(j + 2)) % p))
+      seen.add(java.lang.Long.valueOf(gram(hs, j, k2, k3, p)))
       j += 1
     }
     val out = new Array[Long](seen.size())
@@ -129,28 +142,17 @@ object SketchUtil {
 
   /** Distinct 3-gram word shingle STRINGS in one pass — the native twin of
     * `array_distinct(transform(sequence(...), i -> concat_ws(' ',
-    * slice(split(normText(text), ' '), i+1, 3))))` (Dedup.shinglesOf).
-    * Same regex-\s tokenization as [[wordShingleIds]]; shingle text is the
-    * three words joined by single spaces (exactly what concat_ws over the
-    * normText-split words yields); first-occurrence order like
+    * slice(words(text), i+1, 3))))` (Dedup.shinglesOf). Shingle text is
+    * the three [[words]] joined by single spaces (exactly what concat_ws
+    * over the normText-split words yields); first-occurrence order like
     * array_distinct. The declarative form evaluates three interpreted
     * lambda/array passes PER DOCUMENT (transform + slice allocations +
     * array_distinct's pairwise walk) — one shingle pass over the sf0.1
     * corpus measured 3.0 s vs ~0.05 s for this loop (round 18). */
   def wordShingleStrings(text: UTF8String): ArrayData = {
     if (text == null) return null
-    val s = text.toString
-    @inline def isWs(c: Char): Boolean =
-      c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
-    val words = new java.util.ArrayList[String]()
-    var i = 0
-    while (i < s.length) {
-      while (i < s.length && isWs(s.charAt(i))) i += 1
-      val start = i
-      while (i < s.length && !isWs(s.charAt(i))) i += 1
-      if (i > start) words.add(s.substring(start, i))
-    }
-    val n = words.size()
+    val ws = words(text.toString)
+    val n = ws.size()
     if (n < 3)
       return new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
     val seen = new java.util.LinkedHashSet[String]()
@@ -158,9 +160,9 @@ object SketchUtil {
     var j = 0
     while (j + 2 < n) {
       sb.setLength(0)
-      sb.append(words.get(j)).append(' ')
-        .append(words.get(j + 1)).append(' ')
-        .append(words.get(j + 2))
+      sb.append(ws.get(j)).append(' ')
+        .append(ws.get(j + 1)).append(' ')
+        .append(ws.get(j + 2))
       seen.add(sb.toString)
       j += 1
     }
@@ -174,43 +176,25 @@ object SketchUtil {
   /** POSITIONAL 3-gram shingle ids in ONE pass — [[wordShingleIds]] without
     * the distinct: element j (0-based) is the shingle id of the gram
     * starting at word j+1 (1-based), so a consumer can map a duplicated id
-    * back to the word positions it covers (the exact-substring scrub).
-    * Same tokenizer, same word hash, same combine — only the
-    * LinkedHashSet is gone. */
+    * back to the word positions it covers (the exact-substring scrub). */
   def wordShinglePos(text: UTF8String, coef: Array[Long], k2: Long, k3: Long,
                      p: Long): ArrayData = {
     if (text == null) return null
-    val s = text.toString
-    @inline def isWs(c: Char): Boolean =
-      c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
-    val words = new java.util.ArrayList[String]()
-    var i = 0
-    while (i < s.length) {
-      while (i < s.length && isWs(s.charAt(i))) i += 1
-      val start = i
-      while (i < s.length && !isWs(s.charAt(i))) i += 1
-      if (i > start) words.add(s.substring(start, i))
-    }
-    val n = words.size()
+    val ws = words(text.toString)
+    val n = ws.size()
     if (n < 3) return UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
-    val hs = new Array[Long](n)
-    var w = 0
-    while (w < n) {
-      val cps = words.get(w).codePoints().toArray
-      hs(w) = wordHash(cps, cps.length, coef, p)
-      w += 1
-    }
+    val hs = wordHashes(ws, coef, p)
     val out = new Array[Long](n - 2)
     var j = 0
     while (j + 2 < n) {
-      out(j) = (hs(j) + k2 * hs(j + 1) + k3 * hs(j + 2)) % p
+      out(j) = gram(hs, j, k2, k3, p)
       j += 1
     }
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  /** Winnowing fingerprint selection (MOSS) in ONE fused pass: tokenize,
-    * per-word polynomial hash, 3-word gram hashes encoded as
+  /** Winnowing fingerprint selection (MOSS) in ONE fused pass: [[words]],
+    * [[wordHashes]], 3-word [[gram]] ids encoded as
     * v = h*m - gramPos (order-isomorphic to (h asc, pos desc) — rightmost
     * tie-break for free), sliding 4-gram window minimum with
     * consecutive-duplicate suppression. Same-value selections are always
@@ -225,32 +209,16 @@ object SketchUtil {
   def winnowSelect(text: UTF8String, coef: Array[Long], k2: Long, k3: Long,
                    p: Long, m: Long): ArrayData = {
     if (text == null) return null
-    val s = text.toString
-    @inline def isWs(c: Char): Boolean =
-      c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
-    val words = new java.util.ArrayList[String]()
-    var i = 0
-    while (i < s.length) {
-      while (i < s.length && isWs(s.charAt(i))) i += 1
-      val start = i
-      while (i < s.length && !isWs(s.charAt(i))) i += 1
-      if (i > start) words.add(s.substring(start, i))
-    }
-    val n = words.size()
+    val ws = words(text.toString)
+    val n = ws.size()
     // < 6 words -> < 4 grams -> no full window -> empty fingerprint
     if (n < 6) return UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
-    val hs = new Array[Long](n)
-    var w = 0
-    while (w < n) {
-      val cps = words.get(w).codePoints().toArray
-      hs(w) = wordHash(cps, cps.length, coef, p)
-      w += 1
-    }
+    val hs = wordHashes(ws, coef, p)
     val ng = n - 2
     val g = new Array[Long](ng)
     var j = 0
     while (j < ng) {
-      g(j) = ((hs(j) + k2 * hs(j + 1) + k3 * hs(j + 2)) % p) * m - j
+      g(j) = gram(hs, j, k2, k3, p) * m - j
       j += 1
     }
     val out = new Array[Long](ng - 3)
@@ -371,20 +339,23 @@ case class MinHashSig(child: Expression, seedsA: Seq[Long], seedsB: Seq[Long],
     copy(child = newChild)
 }
 
-/** `graft_word_shingles(text)`: distinct 3-gram word-hash shingle ids in a
-  * single codegen'd pass (see [[SketchUtil.wordShingleIds]]). */
-case class WordShingleIds(child: Expression, coef: Seq[Long], k2: Long, k3: Long,
-                          modulus: Long) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_word_shingles"
-
-  private lazy val coefArr: Array[Long] = coef.toArray
-
+/** The input check of the native expressions over one string column. */
+trait StringInput extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType => TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(
       s"$prettyName expects string, got ${t.simpleString}")
   }
+}
+
+/** `graft_word_shingles(text)`: distinct 3-gram word-hash shingle ids in a
+  * single codegen'd pass (see [[SketchUtil.wordShingleIds]]). */
+case class WordShingleIds(child: Expression, coef: Seq[Long], k2: Long, k3: Long,
+                          modulus: Long) extends UnaryExpression with StringInput {
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "graft_word_shingles"
+
+  private lazy val coefArr: Array[Long] = coef.toArray
 
   override protected def nullSafeEval(v: Any): Any =
     SketchUtil.wordShingleIds(v.asInstanceOf[UTF8String], coefArr, k2, k3, modulus)
@@ -403,17 +374,11 @@ case class WordShingleIds(child: Expression, coef: Seq[Long], k2: Long, k3: Long
   * ids in a single codegen'd pass (see [[SketchUtil.wordShinglePos]]) —
   * the span-addressable form the exact-substring scrub consumes. */
 case class WordShinglePos(child: Expression, coef: Seq[Long], k2: Long, k3: Long,
-                          modulus: Long) extends UnaryExpression {
+                          modulus: Long) extends UnaryExpression with StringInput {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_word_shingle_pos"
 
   private lazy val coefArr: Array[Long] = coef.toArray
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${t.simpleString}")
-  }
 
   override protected def nullSafeEval(v: Any): Any =
     SketchUtil.wordShinglePos(v.asInstanceOf[UTF8String], coefArr, k2, k3, modulus)
@@ -432,15 +397,9 @@ case class WordShinglePos(child: Expression, coef: Seq[Long], k2: Long, k3: Long
   * in a single codegen'd pass (see [[SketchUtil.wordShingleStrings]]) —
   * the native twin of Dedup.shinglesOf for consumers that need the actual
   * shingle text (dd_ngram_jaccard's set sizes over string shingles). */
-case class WordShingleStrings(child: Expression) extends UnaryExpression {
+case class WordShingleStrings(child: Expression) extends UnaryExpression with StringInput {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "graft_word_shingle_strings"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${t.simpleString}")
-  }
 
   override protected def nullSafeEval(v: Any): Any =
     SketchUtil.wordShingleStrings(v.asInstanceOf[UTF8String])
@@ -456,17 +415,11 @@ case class WordShingleStrings(child: Expression) extends UnaryExpression {
 /** `graft_winnow(text)`: winnowing fingerprint selection values in a
   * single codegen'd pass (see [[SketchUtil.winnowSelect]]). */
 case class WinnowSelect(child: Expression, coef: Seq[Long], k2: Long, k3: Long,
-                        modulus: Long, posCap: Long) extends UnaryExpression {
+                        modulus: Long, posCap: Long) extends UnaryExpression with StringInput {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_winnow"
 
   private lazy val coefArr: Array[Long] = coef.toArray
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${t.simpleString}")
-  }
 
   override protected def nullSafeEval(v: Any): Any =
     SketchUtil.winnowSelect(v.asInstanceOf[UTF8String], coefArr, k2, k3,
@@ -856,19 +809,13 @@ object HtmlUtil {
   * (see [[HtmlUtil.classElements]]). The class value comes from the
   * scanner's own quote-tracking attribute walk, not a downstream regex, so
   * single-quoted and unquoted `class` attributes carry their value too. */
-case class HtmlClassElements(child: Expression) extends UnaryExpression {
+case class HtmlClassElements(child: Expression) extends UnaryExpression with StringInput {
   override def dataType: DataType = ArrayType(
     StructType(Seq(
       StructField("el", StringType, nullable = false),
       StructField("cls", StringType, nullable = false))),
     containsNull = false)
   override def prettyName: String = "graft_html_class_elements"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${t.simpleString}")
-  }
 
   override protected def nullSafeEval(v: Any): Any =
     HtmlUtil.classElements(v.asInstanceOf[UTF8String])
@@ -887,7 +834,7 @@ case class HtmlClassElements(child: Expression) extends UnaryExpression {
   * [[HtmlClassElements]] + the ld+json `regexp_extract_all` twin: at 100 TB
   * of HTML the per-byte page walk is the pipeline's dominant cost, and the
   * unfused pair pays it twice. */
-case class HtmlPageScan(child: Expression) extends UnaryExpression {
+case class HtmlPageScan(child: Expression) extends UnaryExpression with StringInput {
   override def dataType: DataType = StructType(Seq(
     StructField("els", ArrayType(
       StructType(Seq(
@@ -897,12 +844,6 @@ case class HtmlPageScan(child: Expression) extends UnaryExpression {
     StructField("scripts", ArrayType(StringType, containsNull = false),
       nullable = false)))
   override def prettyName: String = "graft_html_page_scan"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${t.simpleString}")
-  }
 
   override protected def nullSafeEval(v: Any): Any =
     HtmlUtil.pageScan(v.asInstanceOf[UTF8String])
@@ -1197,26 +1138,22 @@ case class DotProductF(left: Expression, right: Expression) extends ArrayDotBase
 }
 
 /** Static tokenize+count pass behind [[WordCounts]]. One byte walk over the
-  * document: whitespace-run boundaries matching JAVA's `\s` set exactly
-  * — the contract is byte-identity with the Spark twin
-  * `split(trim(regexp_replace(text, "\\s+", " ")), " ")`, which is Java
-  * regex. (RE2, the oracle engine, omits vertical tab 0x0B from `\s`; that
-  * divergence predates this expression — every normText query shares it —
-  * and the generated testdata contains no 0x0B. Multibyte UTF-8 never
-  * collides with ASCII bytes, so byte-level splitting is exact.) A hash
-  * count per distinct token, and the document length folded into every
-  * element. Replaces the former explode -> groupBy(doc_id, word) pipeline
-  * whose wide shuffle carried every token occurrence of the corpus
+  * document, splitting on [[SketchUtil.isWs]] runs: the contract is
+  * byte-identity with [[graft.functions.Exprs.words]]. The walk stays on
+  * the UTF-8 bytes, with no `UTF8String.toString` decode, and is exact:
+  * every `\s` char is ASCII, and multibyte UTF-8 never contains an ASCII
+  * byte. A hash count per distinct token, and the document length folded
+  * into every element. Replaces the former explode -> groupBy(doc_id, word)
+  * pipeline whose wide shuffle carried every token occurrence of the corpus
   * (TextAnalysis.taTermWeight) — here the per-document counting happens
   * inside the scan row and only distinct (word, tf) pairs leave it. */
 object WordCountUtil {
-  private def isWs(b: Byte): Boolean =
-    b == ' ' || b == '\t' || b == '\n' || b == 0x0B || b == '\f' || b == '\r'
+  import SketchUtil.isWs
 
   /** `array<struct<w,tf,dl>>` of one document; tf = in-doc occurrences,
-    * dl = total token count. Matches `split(trim(regexp_replace(text,
-    * "\\s+", " ")), " ")` semantics exactly, including the empty/blank
-    * document yielding ONE empty-string token (split of "" is [""]). */
+    * dl = total token count. Matches `Exprs.words` semantics exactly,
+    * including the empty/blank document yielding ONE empty-string token
+    * (split of "" is [""]). */
   def wordCounts(text: UTF8String): ArrayData = {
     val bytes = text.getBytes
     val n = bytes.length
@@ -1253,18 +1190,12 @@ object WordCountUtil {
 /** `graft_word_counts(text)`: per-document distinct (token, tf) pairs with
   * the document length dl folded into each element — the scan-stage form of
   * tokenize + count(*) GROUP BY (doc, word) + sum(tf) OVER (doc). */
-case class WordCounts(child: Expression) extends UnaryExpression {
+case class WordCounts(child: Expression) extends UnaryExpression with StringInput {
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("w", StringType, nullable = false),
     StructField("tf", LongType, nullable = false),
     StructField("dl", LongType, nullable = false))), containsNull = false)
   override def prettyName: String = "graft_word_counts"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${t.simpleString}")
-  }
 
   override protected def nullSafeEval(v: Any): Any =
     WordCountUtil.wordCounts(v.asInstanceOf[UTF8String])

@@ -94,7 +94,7 @@ class ExprsSpec extends SparkSpec {
 
   test("X20 classRank A/B/C per step2_attempt1.py RANK_SETS") {
     def rank(cls: String): String =
-      Seq(cls).toDF("c").select(classRank(classTokens($"c")))
+      Seq(cls).toDF("c").select(classRank(words($"c")))
         .collect().head.getString(0)
     assert(rank("portfolio-card grid") == "A")
     assert(rank("investment item") == "A")
@@ -105,7 +105,7 @@ class ExprsSpec extends SparkSpec {
 
   test("F11 classBlacklisted rejects noise containers") {
     def bl(cls: String): Boolean =
-      Seq(cls).toDF("c").select(classBlacklisted(classTokens($"c")))
+      Seq(cls).toDF("c").select(classBlacklisted(words($"c")))
         .collect().head.getBoolean(0)
     assert(bl("site-footer dark"))
     assert(bl("cookieBanner"))

@@ -15,9 +15,14 @@ class GeneratedPropertiesSpec extends SparkSpec {
   private def sample[T](g: Gen[T], n: Int): Seq[T] =
     (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(i.toLong)))
 
+  // Every char Java's `\s` collapses, plus chars it keeps inside a word:
+  // 0x1C (Character.isWhitespace accepts it), non-breaking space, line
+  // separator, and multibyte words (one outside the BMP).
   private val wsGen: Gen[String] = for {
-    parts <- Gen.listOfN(6, Gen.oneOf("a", "bb", "c d", "", " ", "\t", "\n\n", "e  f"))
-    sep <- Gen.oneOf(" ", "  ", "\t", "\n")
+    parts <- Gen.listOfN(6, Gen.oneOf("a", "bb", "c d", "", " ", "\t", "\n\n", "e  f",
+      "\u000B", "\f", "\r\n", "g\u001Ch", "i\u00A0j", "k\u2028l", "über", "日本語",
+      "x\uD83D\uDE00y"))
+    sep <- Gen.oneOf(" ", "  ", "\t", "\n", "\u000B", "\f", "\r")
   } yield parts.mkString(sep)
 
   private val nameGen: Gen[String] = for {
@@ -174,18 +179,32 @@ class GeneratedPropertiesSpec extends SparkSpec {
   }
 
   test("native word-shingle pass equals the declarative pipeline on generated text") {
+    import graft.operators.{Dedup, TextAnalysis}
     val docs = sample(wsGen, 200).zipWithIndex
       .map { case (s, i) => (i.toLong, s + " alpha beta gamma " + s) }
       .toDF("doc_id", "text")
-    val native = graft.operators.Dedup.docWidArrays(docs)
-      .orderBy("doc_id").collect().map(_.getSeq[Long](1))
-    val decl = graft.operators.Dedup.docWidArraysDecl(docs)
-      .orderBy("doc_id").collect().map(_.getSeq[Long](1))
-    assert(native.toSeq === decl.toSeq)
+    def arrays[T](df: org.apache.spark.sql.DataFrame): Seq[Seq[T]] =
+      df.orderBy("doc_id").collect().map(_.getSeq[T](1)).toSeq
+    val native = arrays[Long](Dedup.docWidArrays(docs))
+    assert(native === arrays[Long](Dedup.docWidArraysDecl(docs)))
+    assert(arrays[String](docs.select($"doc_id", graft.plans.wordShingleStrings($"text"))) ===
+      arrays[String](docs.select($"doc_id", Dedup.shinglesOf($"text"))))
+    def sels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    assert(sels(docs.select($"doc_id", explode(graft.plans.winnowSelect($"text",
+      Dedup.Coef.take(Dedup.WordHashWidth), Dedup.K2, Dedup.K3, Dedup.P, 1048576L)))) ===
+      sels(TextAnalysis.winnowSelsDecl(docs)))
+    // the word/position alignment the scrub relies on: gram j of the
+    // positional pass starts at word j+1 of `words`
+    val pos = docs.select($"doc_id",
+      graft.plans.wordShinglePos($"text", Dedup.Coef.take(Dedup.WordHashWidth),
+        Dedup.K2, Dedup.K3, Dedup.P).as("wp"))
+    assert(arrays[Long](pos.select($"doc_id", array_distinct($"wp"))) === native)
+    assert(pos.join(docs, "doc_id")
+      .filter(size($"wp") =!= greatest(size(words($"text")) - 2, lit(0))).count() == 0)
   }
 
   test("graft_word_counts equals the explode+groupBy twin over generated whitespace text") {
-    import graft.functions.Exprs.normText
     // wsGen emits runs of mixed separators, empty parts, and blank strings —
     // the edges the byte-walk must match Java-\s split semantics on
     val docs = sample(wsGen, 300).zipWithIndex
@@ -197,7 +216,7 @@ class GeneratedPropertiesSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
     val twin = {
       val tf = docs
-        .select(col("doc_id"), explode(split(normText(col("text")), " ")).as("w"))
+        .select(col("doc_id"), explode(words(col("text"))).as("w"))
         .groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
       val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
       tf.join(dl, "doc_id").select("doc_id", "w", "tf", "dl")

@@ -158,8 +158,14 @@ class OperatorsSpec extends SparkSpec {
       .filter($"doc_a" % 4 === 0 || $"doc_b" % 4 === 0)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     assert(inc === full)
-    // supersede: a re-ingested id pairs off its FRESH frames only
-    val store2 = store.unionByName(Seq((4L, "stale")).toDF("doc_id", "frame_md5"))
+    // supersede: a re-ingested id pairs off its FRESH frames only — a stale
+    // store row set for batch doc x carrying batch doc z's frames would
+    // pair (x, z) on every digest z keeps
+    val frames = batch.collect().groupBy(_.getLong(0))
+      .map { case (id, rs) => id -> rs.map(_.getString(1)).toSet }
+    val x = frames.keys.min
+    val z = frames.keys.toSeq.sorted.find(id => (frames(id) -- frames(x)).size >= 2).get
+    val store2 = store.unionByName(batch.filter($"doc_id" === z).withColumn("doc_id", lit(x)))
     val inc2 = graft.operators.Multimodal.frameOverlapIncremental(store2, batch, 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     assert(inc2 === inc)
