@@ -55,26 +55,29 @@ object RewriteDotProduct extends Rule[LogicalPlan] {
 }
 
 /** Session extensions: SQL-callable native functions, the rewrite rule,
-  * the asof-join strategy, session broadcast reuse, and the Spark settings
+  * the asof-join strategy, session broadcast reuse, the Spark settings
   * of [[GraftExtensions.SparkSettings]] (generated classes compiled once per
-  * JVM).
+  * JVM) and the Hadoop settings of [[GraftExtensions.HadoopSettings]] (the
+  * engine's `file:` file system).
   *
   * Two install routes:
   *  - `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`, as
   *    [[graft.Session]] and perfbench do. Spark applies the extension after
   *    it has started the SparkContext and before it builds the session's SQL
-  *    conf, so `apply` adds the settings to the live context's conf, except
-  *    those the caller configured.
+  *    conf and its shared state, so `apply` adds the settings to the live
+  *    context's conf and Hadoop configuration, except those the caller
+  *    configured, before the session first opens a `file:` path.
   *  - `SparkSession.builder().withExtensions(new GraftExtensions)`. The
   *    builder runs `apply` at the start of `getOrCreate`, before it starts
   *    a context, so the session gets the functions and rules but not the
   *    settings (unless a context was already running); set them with
-  *    `.config` on that route. `apply` neither creates a context nor
-  *    throws there.
+  *    `.config` on that route (`spark.hadoop.`-prefixed for the Hadoop
+  *    ones). `apply` neither creates a context nor throws there.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ContextBridge.setIfMissing(GraftExtensions.SparkSettings)
+    ContextBridge.setHadoopIfDefault(GraftExtensions.HadoopSettings)
     ext.injectFunction((
       FunctionIdentifier("graft_dot_q"),
       new ExpressionInfo(classOf[DotProductQ].getName, "graft_dot_q"),
@@ -155,4 +158,17 @@ object GraftExtensions {
     "spark.sql.codegen.cache.maxEntries" -> "1000",
     "spark.sql.artifact.isolation.enabled" -> "false",
     "spark.sql.codegen.useIdInClassName" -> "false")
+
+  /** Hadoop settings a session gets from its extensions: `file:` paths go
+    * through [[GraftLocalFileSystem]] (FileSystem API: parquet reads and
+    * writes, store listings) and [[GraftLocalFs]] (FileContext API: the
+    * streaming checkpoint), which set permissions and read link status in
+    * the JVM. Without the native Hadoop library, the stock classes fork
+    * `chmod` per created file or directory and `readlink` per checkpoint
+    * rename: 277 processes per warm pass of perfbench's ingest workload.
+    * Hadoop caches one FileSystem per scheme for the JVM's life, so the
+    * setting holds from the session that first opens a `file:` path. */
+  val HadoopSettings: Map[String, String] = Map(
+    "fs.file.impl" -> classOf[GraftLocalFileSystem].getName,
+    "fs.AbstractFileSystem.file.impl" -> classOf[GraftLocalFs].getName)
 }

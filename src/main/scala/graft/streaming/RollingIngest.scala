@@ -17,9 +17,12 @@ import org.apache.spark.sql.types.StructType
   * store's part of a micro-batch is the one [[storeStep]], which
   *
   *   1. sketches ONCE (the persisted batch band relation serves the probe
-  *      and the store append);
+  *      and the store append) and materializes the bands with one count
+  *      before the probe is planned, so the planner knows the batch's
+  *      real size;
   *   2. probes the band store built from every batch BEFORE it — work ∝
-  *      batch, never ∝ corpus;
+  *      batch, never ∝ corpus: every probe join broadcasts its batch side
+  *      from the initial plan, and the store streams through it;
   *   3. hands its result rows to `sink` (the caller's output contract),
   *      synchronously within the micro-batch;
   *   4. appends its bands to the store as a DELTA, re-ingested ids
@@ -47,10 +50,12 @@ import org.apache.spark.sql.types.StructType
   * The EFFECTIVE store before batch B = live(base) ∪ live(deltas in
   * (baseVersion, B)), where supersede resolves newest-delta-wins per id:
   * the base anti-joins the union of delta ids (batch-sized, broadcast —
-  * the corpus-sized base never shuffles), and delta rows keep only each
-  * id's newest batch (a groupBy over batch-sized relations). Re-reading
-  * that resolution per probe costs K broadcast anti-joins of small sets —
-  * the read-side price of not rewriting the corpus per commit.
+  * the corpus-sized base never shuffles, in the resolution or in the
+  * probe, whose joins broadcast the materialized batch bands), and delta
+  * rows keep only each id's newest batch (a groupBy, hence a shuffle,
+  * over batch-sized relations). Re-reading that resolution per probe
+  * costs K broadcast anti-joins of small sets — the read-side price of
+  * not rewriting the corpus per commit.
   *
   * == Replay idempotence and crash recovery ==
   *
@@ -700,10 +705,19 @@ object RollingIngest {
   }
 
   /** One band store's step of batch `id`: sketch `rows` ONCE (persisted
-    * until `use` returns), probe the store before the batch, and hand
-    * `use` the result rows, the bands and the commit — `append` plus
-    * [[commitDelta]] of the bands or of the subset the caller keeps. The
-    * band schema and the empty store are `bandsOf` over `rows.limit(0)`. */
+    * until `use` returns and materialized before anything reads it),
+    * probe the store before the batch, and hand `use` the result rows, the
+    * bands and the commit — `append` plus [[commitDelta]] of the bands or
+    * of the subset the caller keeps. The band schema and the empty store
+    * are `bandsOf` over `rows.limit(0)`.
+    *
+    * The materializing count gives the planner the batch's real size. A
+    * micro-batch's source reports none, so without it the cached bands
+    * read as larger than the store, and the probe joins plan as
+    * sort-merge joins that shuffle the store until AQE demotes them.
+    * Materialized, the bands are the smaller side of every probe join, so
+    * the batch side is broadcast from the initial plan and the store
+    * streams through unshuffled. */
   private def storeStep[A](storeDir: String, idCol: String, side: Side,
                            partitionCols: Seq[String], compactEvery: Int,
                            id: Long, rows: DataFrame)
@@ -713,6 +727,7 @@ object RollingIngest {
     val empty = bandsOf(rows.limit(0))
     val bands = bandsOf(rows)
     Persisted.scoped(bands) {
+      bands.count()
       val store = probedStore(spark, storeDir, idCol, partitionCols, bands, id, empty)
       use(probe(store, bands), bands, { kept =>
         append(kept)

@@ -14,4 +14,17 @@ object ContextBridge {
     SparkContext.getActive.foreach { sc =>
       settings.foreach { case (k, v) => sc.conf.setIfMissing(k, v) }
     }
+
+  /** Sets each key of the active context's Hadoop configuration that is
+    * unset or holds only Hadoop's own default (from `core-default.xml`), so
+    * a value from `spark.hadoop.*` or a site file wins. With no active
+    * context it does nothing and creates none. */
+  def setHadoopIfDefault(settings: Map[String, String]): Unit =
+    SparkContext.getActive.foreach { sc =>
+      val hc = sc.hadoopConfiguration
+      settings.foreach { case (k, v) =>
+        if (Option(hc.getPropertySources(k)).forall(_.forall(_ == "core-default.xml")))
+          hc.set(k, v)
+      }
+    }
 }

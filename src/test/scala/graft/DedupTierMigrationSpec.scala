@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.Dedup
 import graft.streaming.RollingIngest
-import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 /** The offline narrow→wide tier-migration event for the rolling dedup

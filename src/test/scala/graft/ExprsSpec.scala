@@ -1,7 +1,6 @@
 package graft
 
 import graft.functions.Exprs._
-import org.apache.spark.sql.functions._
 
 /** Unit tests for the scalar expression library (SURVEY.md §2.8). */
 class ExprsSpec extends SparkSpec {

@@ -961,6 +961,58 @@ class RollingIngestSpec extends SparkSpec {
       "the planted dup must pair at Hamming 0 on the wide tier")
   }
 
+  test("dedupIngest: every batch's initial probe plan broadcasts the batch and shuffles no base row") {
+    // the batch bands are materialized before the probe is planned, so the
+    // planner sees their real size from the first plan: no sort-merge join
+    // for AQE to demote, and no exchange fed by a base scan (shuffled or
+    // broadcast) — the base streams through the broadcast joins
+    implicit val sc = spark.sqlContext
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec, SortMergeJoinExec}
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    val dir = Files.createTempDirectory("graft_ri_plan").toString + "/store"
+    def text(i: Long) = s"plan doc $i on topic${i % 7} with token u$i and tag g${i % 5}"
+    val steps = (0 until 5).map(b => (b * 40L until (b + 1) * 40L).map(i => (i, text(i))))
+    val plans = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
+    val in = MemoryStream[(Long, String)]
+    val q = RollingIngest.dedupIngest(in.toDF().toDF("doc_id", "text"), dir,
+      compactEvery = 2) { (p, _) =>
+      plans += (p.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case other => other
+      })
+      p.collect(): Unit
+    }
+    try steps.foreach { b => in.addData(b); q.processAllAvailable() }
+    finally q.stop()
+    def scansOf(prefix: String)(p: SparkPlan): Boolean = p match {
+      case s: FileSourceScanExec => s.relation.location.rootPaths.exists(_.getName.startsWith(prefix))
+      case _ => false
+    }
+    // the nodes whose rows reach `p` as rows: through a broadcast join's
+    // streamed side, not through an aggregate or another join
+    def streamed(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case j: BroadcastHashJoinExec =>
+        streamed(if (j.buildSide == BuildRight) j.left else j.right)
+      case _: BaseJoinExec | _: BaseAggregateExec => Nil
+      case _ => p.children.flatMap(streamed)
+    })
+    assert(plans.size == steps.size)
+    assert(plans.exists(p => p.exists(scansOf("base")) && p.exists(scansOf("d"))),
+      "a batch must probe a base and a delta together")
+    plans.zipWithIndex.foreach { case (p, i) =>
+      assert(p.collect { case j: SortMergeJoinExec => j }.isEmpty,
+        s"batch $i plans a sort-merge join:\n$p")
+      val fed = p.collect { case e: Exchange => e }
+        .flatMap(_.children.flatMap(streamed)).filter(scansOf("base"))
+      assert(fed.isEmpty, s"batch $i exchanges base rows:\n$p")
+    }
+  }
+
   test("dedupIndexIngest: delta bytes ∝ batch across >= 2 compactions on both stores") {
     def text(i: Long) = s"doc $i of topic${i % 11} with unique token q$i " +
       s"and marker m${i * 17 % 19} plus padding words here"

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{SeedPipeline, Sinks}
+import graft.operators.Sinks
 import graft.sources.Connectors
 import graft.streaming.{RollingIngest, StreamingSeed}
 import org.apache.spark.sql.functions._
